@@ -60,7 +60,6 @@ def main() -> None:
             df = qs[name](spark, sf_dir)
             os.makedirs("plans/r06", exist_ok=True)
             with open(f"plans/r06/{name}_{args.suffix}.txt", "w") as fh:
-                fh.write(df._sc is not None and "" or "")
                 fh.write(df._jdf.queryExecution().explainString(
                     spark._jvm.org.apache.spark.sql.execution.ExplainMode
                     .fromString("formatted")))

@@ -8,12 +8,18 @@ leakage by construction.
 Two physical strategies, same semantics:
 
 ``asof_join``(default) — **union + window**, 100% JVM-side:
-    tag and union both sides on a common schema, then one window
-    ``last(col, ignoreNulls) over (partition by key order by ts, tag
-    rows unbounded preceding .. current row)`` per right payload column,
-    then keep left rows. One shuffle for the window partitioning (plus one
-    map-side-combined exchange for the deterministic tie dedupe, skippable
-    via ``deterministic_ties=False``), whole-stage codegen, no Python.
+    tag and union both sides on a common schema, with the whole right row
+    (payload + right ts) packed into ONE struct column (NULL on left rows);
+    then one ``last(struct, ignoreNulls) over (partition by key order by ts,
+    tag rows unbounded preceding .. current row)`` (``first`` over the
+    future frame for 'forward', both for 'nearest'), keep left rows and
+    expand the struct. The plan holds one window expression per direction
+    whatever the payload width, and a matched right row's NULL payload
+    value stays NULL (a per-column ``last(ignoreNulls)`` would fill it from
+    an OLDER row while ``right_ts`` points at the matched one). One shuffle
+    for the window partitioning (plus one map-side-combined exchange for
+    the deterministic tie dedupe, skippable via
+    ``deterministic_ties=False``), whole-stage codegen, no Python.
     Tie discipline: right rows sort BEFORE left rows at equal ts when
     ``allow_exact_matches`` (tag 0 < 1), AFTER otherwise (tag 2 > 1);
     right rows tying on (key, ts) collapse to the max payload tuple
@@ -21,8 +27,8 @@ Two physical strategies, same semantics:
 
 ``asof_join_merge`` — **cogroup + pandas.merge_asof**: sort-merge kernel per
     key group (Arrow boundary), matching the reference-era design of
-    secondary-sorted salted range partitions. Useful when the right payload
-    is very wide (one window-last per column would bloat the JVM plan).
+    secondary-sorted salted range partitions. Useful when per-key groups are
+    very large (one Arrow pass per group beats a long window sort).
 
 Skew: both forms shuffle by the entity key; hot hosts are handled by AQE
 skew handling plus the explicit ``salt_hot_keys`` helper in
@@ -38,14 +44,11 @@ from pyspark.sql import functions as F
 
 _TAG = "__asof_tag"
 _TS = "__asof_ts"
+_R = "__r"
 
 
 def _as_list(x) -> list:
     return [x] if isinstance(x, str) else list(x)
-
-
-def fill_cols_of(right_payload: list, right_ts: str) -> list:
-    return [f"__r_{c}" for c in right_payload] + [f"__r_{right_ts}"]
 
 
 def _orderable(dt) -> bool:
@@ -105,8 +108,9 @@ def asof_join_auto(
     avg_group_rows: int | None = None,
 ) -> DataFrame:
     """Physical-strategy dispatch. Measured head-to-head (BENCH context):
-    the union+window form wins across payload widths up to ~100 columns —
-    one window pass, whole-stage codegen, no per-group Python overhead. The
+    the union+window form wins across payload widths (the right row rides
+    as one struct, so the plan does not grow with them) — one window pass,
+    whole-stage codegen, no per-group Python overhead. The
     cogrouped merge_asof kernel only wins when per-key groups are LARGE
     (≥ ~10k rows/key), where one Arrow pass beats many window fills; with
     small groups its per-group pandas overhead (~10 ms × n_keys) dominates.
@@ -154,7 +158,9 @@ def asof_join(
         raise ValueError(
             "direction='nearest' requires allow_exact_matches=True")
     keys = _as_list(on)
-    left_payload = [c for c in left.columns if c not in keys and c != left_ts]
+    l_schema = left.schema
+    left_payload = [f.name for f in l_schema.fields
+                    if f.name not in keys and f.name != left_ts]
     right_payload = [c for c in right.columns if c not in keys and c != right_ts]
     if deterministic_ties:
         right = _dedupe_right_ties(right, keys, right_ts, right_payload)
@@ -170,46 +176,41 @@ def asof_join(
         # AFTER the left row to be included when exact matches are allowed
         right_tag = 2 if allow_exact_matches else 0
 
-    l_tagged = left.select(
-        *keys,
-        F.col(left_ts).alias(_TS),
-        F.lit(1).alias(_TAG),
-        *[F.col(c) for c in left_payload],
-        *[F.lit(None).cast(right.schema[c].dataType).alias(f"__r_{c}") for c in right_payload],
-        F.lit(None).cast(right.schema[right_ts].dataType).alias(f"__r_{right_ts}"),
-    )
+    # the right row travels as ONE struct whose field names are the output
+    # names: one window expression per frame whatever the payload width
     r_tagged = right.select(
         *keys,
         F.col(right_ts).alias(_TS),
         F.lit(right_tag).alias(_TAG),
-        *[F.lit(None).cast(left.schema[c].dataType).alias(c) for c in left_payload],
-        *[F.col(c).alias(f"__r_{c}") for c in right_payload],
-        F.col(right_ts).alias(f"__r_{right_ts}"),
+        *[F.lit(None).cast(l_schema[c].dataType).alias(c) for c in left_payload],
+        F.struct(*right_payload, right_ts).alias(_R),
+    )
+    l_tagged = left.select(
+        *keys,
+        F.col(left_ts).alias(_TS),
+        F.lit(1).alias(_TAG),
+        *left_payload,
+        F.lit(None).cast(r_tagged.schema[_R].dataType).alias(_R),
     )
 
     unioned = l_tagged.unionByName(r_tagged)
-    fill_cols = fill_cols_of(right_payload, right_ts)
     # Ties among right rows are already resolved by _dedupe_right_ties, so
-    # (ts, tag) is a TOTAL order over rows that can influence a fill.
+    # (ts, tag) is a TOTAL order over rows that can influence a fill. Only
+    # left rows carry a NULL struct, so ignorenulls skips exactly them — a
+    # matched right row's NULL payload values come through as NULL.
     base = Window.partitionBy(*keys).orderBy(_TS, _TAG)
-    bw = base.rowsBetween(Window.unboundedPreceding, 0)
-    fw = base.rowsBetween(0, Window.unboundedFollowing)
-    # ONE select for every fill (not a withColumn chain): N chained window
-    # projections make Catalyst re-derive constraints N times over a
-    # growing alias set — quadratic plan time on wide payloads.
+    last_r = F.last(_R, ignorenulls=True).over(
+        base.rowsBetween(Window.unboundedPreceding, 0))
+    first_r = F.first(_R, ignorenulls=True).over(
+        base.rowsBetween(0, Window.unboundedFollowing))
+    cols = [*keys, _TS, _TAG, *left_payload]
     if direction == "nearest":
         # BOTH fills over the SAME sorted window — one shuffle, two
         # frames; pick the nearer side per row, ties → backward (pandas
         # merge_asof nearest tie semantics, pinned by the parity test)
-        filled = unioned.select(
-            *keys, _TS, _TAG, *left_payload,
-            *[F.last(c, ignorenulls=True).over(bw).alias(f"__b_{c}")
-              for c in fill_cols],
-            *[F.first(c, ignorenulls=True).over(fw).alias(f"__f_{c}")
-              for c in fill_cols],
-        )
-        b_ts = F.col(f"__b___r_{right_ts}")
-        f_ts = F.col(f"__f___r_{right_ts}")
+        filled = unioned.select(*cols, last_r.alias("__b"), first_r.alias("__f"))
+        b_ts = F.col("__b").getField(right_ts)
+        f_ts = F.col("__f").getField(right_ts)
         # TIMESTAMP_NTZ refuses a direct double cast — hop through
         # timestamp (a no-op for tz-aware/numeric ts columns)
         as_num = lambda c: c.cast("timestamp").cast("double")  # noqa: E731
@@ -217,44 +218,25 @@ def asof_join(
         gap_f = as_num(f_ts) - as_num(F.col(_TS))
         take_f = f_ts.isNotNull() & (b_ts.isNull() | (gap_f < gap_b))
         filled = filled.select(
-            *keys, _TS, _TAG, *left_payload,
-            *[F.when(take_f, F.col(f"__f_{c}")).otherwise(F.col(f"__b_{c}"))
-              .alias(c) for c in fill_cols],
-        )
+            *cols, F.when(take_f, F.col("__f")).otherwise(F.col("__b")).alias(_R))
     else:
-        if direction == "backward":
-            w, fill = bw, (lambda c: F.last(c, ignorenulls=True))
-        else:
-            w, fill = fw, (lambda c: F.first(c, ignorenulls=True))
         filled = unioned.select(
-            *keys, _TS, _TAG, *left_payload,
-            *[fill(c).over(w).alias(c) for c in fill_cols],
-        )
+            *cols, (last_r if direction == "backward" else first_r).alias(_R))
 
     out = filled.where(F.col(_TAG) == 1)
 
+    matched = F.col(_R)
     if tolerance_seconds is not None:
-        gap = F.col(_TS).cast("double") - F.col(f"__r_{right_ts}").cast("double")
+        gap = F.col(_TS).cast("double") - matched.getField(right_ts).cast("double")
         if direction == "forward":
             gap = -gap
         elif direction == "nearest":
             gap = F.abs(gap)
-        in_tol = gap <= tolerance_seconds
-        out = out.select(
-            *keys, _TS, *left_payload,
-            *[F.when(in_tol, F.col(f"__r_{c}")).alias(f"__r_{c}") for c in right_payload],
-            F.when(in_tol, F.col(f"__r_{right_ts}")).alias(f"__r_{right_ts}"),
-        )
+        matched = F.when(gap <= tolerance_seconds, matched)
 
-    renames = {f"__r_{c}": c for c in right_payload}
-    renames[f"__r_{right_ts}"] = right_ts
-    out = out.select(
-        *keys,
-        F.col(_TS).alias(left_ts),
-        *left_payload,
-        *[F.col(old).alias(new) for old, new in renames.items()],
-    )
-    return out
+    return (out.select(*keys, F.col(_TS).alias(left_ts), *left_payload,
+                       matched.alias(_R))
+            .select(*keys, left_ts, *left_payload, f"{_R}.*"))
 
 
 def asof_join_merge(

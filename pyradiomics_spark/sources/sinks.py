@@ -9,9 +9,12 @@ The Spark-scale analog (SURVEY.md §2.1 "Per-case checkpoint sink/source"):
 * a resume run computes the **left-anti join** of input keys vs
   already-committed keys and processes only the remainder — a killed job
   rerun converges to the identical final table;
-* every commit also appends a **lineage row** per partition (rows, bytes,
-  min/max key timestamp) to ``<path>/_lineage`` so late-data recomputes can
-  target exactly the affected partitions.
+* every commit also appends a **lineage row** per data file it committed
+  (writer partition id, rows, on-disk bytes, min/max key timestamp) to
+  ``<path>/_lineage`` so late-data recomputes can target exactly the
+  affected partitions. The rows are read back from the committed files
+  themselves, so the stage's DataFrame runs once and the lineage describes
+  what is on disk, not what a recompute might have produced.
 
 Parquet's job-commit protocol makes each append atomic at task granularity,
 so "committed" keys are exactly the keys of fully-written files.
@@ -83,19 +86,48 @@ def table_exists(spark: SparkSession, path: str) -> bool:
         return False
 
 
-def partition_metrics(df: DataFrame, ts_col: str | None = None) -> DataFrame:
-    """Per-partition lineage: partition id, row count, approx byte size,
-    ts bounds. One narrow aggregation, no extra shuffle beyond the agg."""
-    base = df.withColumn("__pid", F.spark_partition_id())
-    aggs = [
-        F.count("*").alias("rows"),
-        F.sum(F.length(F.to_json(F.struct(*[F.col(c) for c in df.columns])))).alias(
-            "approx_bytes"
-        ),
-    ]
+def _data_files(spark: SparkSession, path: str) -> set:
+    """Data files under ``path``, hive partition dirs included; entries
+    starting with ``_`` or ``.`` (``_lineage``, ``_SUCCESS``, checksums)
+    are skipped, as Spark's own file listing does."""
+    sc = spark.sparkContext
+    root = sc._jvm.org.apache.hadoop.fs.Path(path)
+    fs = root.getFileSystem(sc._jsc.hadoopConfiguration())
+    if not fs.exists(root):
+        return set()
+    files, dirs = set(), [root]
+    while dirs:
+        for st in fs.listStatus(dirs.pop()):
+            p = st.getPath()
+            if p.getName().startswith(("_", ".")):
+                continue
+            if st.isDirectory():
+                dirs.append(p)
+            else:
+                files.add(p.toString())
+    return files
+
+
+def _file_metrics(df: DataFrame, path: str, files,
+                  ts_col: str | None = None) -> DataFrame:
+    """Per-file lineage of the parquet ``files`` ``df`` committed under
+    ``path``: writer partition id (the ``part-NNNNN`` number), row count,
+    on-disk bytes and ts bounds. Reads only ``ts_col`` and the file
+    metadata; ``df``'s schema spares the schema-inference job."""
+    meta = (df.sparkSession.read.schema(df.schema).option("basePath", path)
+            .parquet(*sorted(files)))
+    aggs = [F.count("*").alias("rows")]
     if ts_col is not None:
         aggs += [F.min(ts_col).alias("min_ts"), F.max(ts_col).alias("max_ts")]
-    return base.groupBy("__pid").agg(*aggs).withColumnRenamed("__pid", "partition_id")
+    per_file = meta.groupBy("_metadata.file_path", "_metadata.file_name",
+                            "_metadata.file_size").agg(*aggs)
+    return per_file.select(
+        F.regexp_extract("file_name", r"^part-(\d+)", 1).cast("int")
+        .alias("partition_id"),
+        "rows",
+        F.col("file_size").alias("approx_bytes"),
+        *(["min_ts", "max_ts"] if ts_col is not None else []),
+    )
 
 
 def append_stage(
@@ -108,16 +140,24 @@ def append_stage(
     """Append a stage output + its lineage snapshot. ``partition_by``
     hive-partitions the layout (e.g. by lang or date) so downstream reads
     with a predicate on those columns prune whole directories — asserted in
-    tests/test_plans.py::test_partition_pruning."""
+    tests/test_plans.py::test_partition_pruning.
+
+    ``df`` executes once, for the write. The lineage comes from the files
+    this call committed (the listing diff of ``path`` around the write):
+    one row per file, ``approx_bytes`` being its committed on-disk size."""
+    spark = df.sparkSession
+    before = _data_files(spark, path) if write_lineage else set()
     w = df.write.mode("append")
     if partition_by:
         cols = [partition_by] if isinstance(partition_by, str) else list(partition_by)
         w = w.partitionBy(*cols)
     w.parquet(path)
-    if write_lineage:
-        metrics = partition_metrics(df, ts_col).withColumn(
-            "committed_at", F.lit(int(time.time())).cast("long")
-        )
+    if not write_lineage:
+        return
+    new = _data_files(spark, path) - before
+    if new:
+        metrics = _file_metrics(df, path, new, ts_col).withColumn(
+            "committed_at", F.lit(int(time.time())).cast("long"))
         metrics.write.mode("append").parquet(f"{path}/_lineage")
 
 

@@ -309,3 +309,65 @@ def test_asof_nearest_tolerance_and_no_exact_guard(frames, spark):
     with _pytest.raises(ValueError, match="allow_exact_matches"):
         asof_join(ldf, rdf, on="ent", left_ts="ts", right_ts="rts",
                   direction="nearest", allow_exact_matches=False)
+
+
+@pytest.mark.parametrize("direction,tolerance", [
+    ("backward", None), ("forward", None), ("nearest", None),
+    ("backward", 2 * 86400.0)])
+def test_asof_matched_null_payload_stays_null(spark, direction, tolerance):
+    """A NULL payload value of the MATCHED right row comes through as NULL —
+    never filled from another right row while ``rts`` points at the match
+    (pandas.merge_asof / cogrouped-merge semantics)."""
+    left = pd.DataFrame({
+        "ent": ["a", "a", "a"],
+        "ts": [_ts("2024-01-02 12:00"), _ts("2024-01-03 12:00"),
+               _ts("2024-01-06 00:00")],
+        "lval": [1, 2, 3]})
+    right = pd.DataFrame({
+        "ent": ["a"] * 4,
+        "rts": [_ts("2024-01-01"), _ts("2024-01-02"), _ts("2024-01-04"),
+                _ts("2024-01-05")],
+        "v": [5.0, None, None, 7.0],
+        "w": [1.0, 2.0, 3.0, 4.0]})
+    ldf, rdf = spark.createDataFrame(left), spark.createDataFrame(right)
+    kw = {} if tolerance is None else {"tolerance": pd.Timedelta(seconds=tolerance)}
+    expected = pd.merge_asof(left, right, left_on="ts", right_on="rts",
+                             by="ent", direction=direction, **kw)
+    impls = [asof_join] if tolerance is not None else [asof_join, asof_join_merge]
+    cols = ["lval", "rts", "v", "w"]
+    want = expected[cols].sort_values("lval").reset_index(drop=True)
+    assert want["v"].isna().sum() >= 2   # the case is really exercised
+    for fn in impls:
+        extra = {} if tolerance is None else {"tolerance_seconds": tolerance}
+        got = fn(ldf, rdf, on="ent", left_ts="ts", right_ts="rts",
+                 direction=direction, **extra).toPandas()
+        got = got[cols].sort_values("lval").reset_index(drop=True)
+        pd.testing.assert_frame_equal(got, want, check_dtype=False,
+                                      obj=fn.__name__)
+
+
+@pytest.mark.parametrize("direction", ["backward", "forward", "nearest"])
+def test_asof_plan_width_independent(spark, direction):
+    """A 120-column right payload still yields ONE window expression (two
+    for nearest) and the single-shuffle plan."""
+    from pyspark.sql import functions as F
+
+    right = spark.range(4).select(
+        F.lit("a").alias("ent"),
+        F.timestamp_seconds(F.col("id") * 10).alias("rts"),
+        *[(F.col("id") + i).alias(f"p{i}") for i in range(120)])
+    left = spark.range(3).select(
+        F.lit("a").alias("ent"),
+        F.timestamp_seconds(F.col("id") * 10 + 5).alias("ts"))
+    out = asof_join(left, right, on="ent", left_ts="ts", right_ts="rts",
+                    deterministic_ties=False, direction=direction)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("windowspecdefinition") == (
+        2 if direction == "nearest" else 1)
+    assert plan.count("Exchange hashpartitioning") == 1
+    assert out.columns == ["ent", "ts"] + [f"p{i}" for i in range(120)] + ["rts"]
+    # ts=15 sits 5 s after rts=10 (id 1) and 5 s before rts=20 (id 2);
+    # the nearest tie goes backward
+    row = out.where(F.col("ts") == F.timestamp_seconds(F.lit(15))).first()
+    want = {"backward": 1, "forward": 2, "nearest": 1}[direction]
+    assert row["p0"] == want and row["p119"] == want + 119

@@ -127,3 +127,79 @@ def test_recompute_affected_partitions_only(spark, tmp_path):
     # no-op when nothing is late
     assert recompute_affected_partitions(
         src2, late.where("v < 0"), out, "day", daily) == []
+
+
+def _part_files(root):
+    """(partition id, rows, bytes, min ts, max ts) of every committed data
+    file under ``root``, read straight off the filesystem."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    out = []
+    for d, dirs, files in os.walk(root):
+        dirs[:] = [x for x in dirs if not x.startswith(("_", "."))]
+        for f in files:
+            if f.startswith("part-"):
+                t = pq.read_table(f"{d}/{f}").to_pandas()
+                out.append((int(f[5:10]), len(t),
+                            os.path.getsize(f"{d}/{f}"),
+                            t["ts"].min() if len(t) else None,
+                            t["ts"].max() if len(t) else None))
+    return sorted(out)
+
+
+def _lineage_rows(spark, path):
+    lin = read_lineage(spark, path).toPandas()
+    return sorted(zip(lin.partition_id, lin.rows, lin.approx_bytes,
+                      lin.min_ts, lin.max_ts))
+
+
+def test_append_stage_runs_source_once(spark, tmppath):
+    """The write and the lineage together execute the stage DataFrame
+    once: a pass-through Python stage counts every row it sees."""
+    seen = spark.sparkContext.accumulator(0)
+
+    def count_rows(batches):
+        for b in batches:
+            seen.add(len(b))
+            yield b
+
+    src = _src(spark)
+    append_stage(src.mapInPandas(count_rows, schema=src.schema), tmppath,
+                 ts_col="ts")
+    assert seen.value == 20
+    assert read_lineage(spark, tmppath).agg(F.sum("rows")).first()[0] == 20
+
+
+def test_lineage_maps_to_committed_files(spark, tmppath):
+    append_stage(_transform(_src(spark).repartition(3)), tmppath, ts_col="ts")
+    files = _part_files(tmppath)
+    assert len(files) >= 2
+    assert _lineage_rows(spark, tmppath) == [
+        f for f in files if f[1] > 0]
+    lin = read_lineage(spark, tmppath)
+    assert lin.columns == ["partition_id", "rows", "approx_bytes", "min_ts",
+                           "max_ts", "committed_at"]
+
+
+def test_lineage_second_append_covers_only_its_files(spark, tmppath):
+    append_stage(_transform(_src(spark).repartition(2)), tmppath, ts_col="ts")
+    first = _part_files(tmppath)
+    append_stage(_transform(_src(spark, 7).repartition(3)), tmppath,
+                 ts_col="ts")
+    both = _part_files(tmppath)
+    assert len(both) > len(first)
+    # a re-listed first commit would show up twice
+    lin = _lineage_rows(spark, tmppath)
+    assert lin == [f for f in both if f[1] > 0]
+    assert sum(r[1] for r in lin) == 27
+
+
+def test_lineage_partition_by(spark, tmppath):
+    src = _transform(_src(spark)).withColumn("day", F.dayofmonth("ts"))
+    append_stage(src.repartition(2), tmppath, ts_col="ts", partition_by="day")
+    files = _part_files(tmppath)
+    assert len(files) >= 9   # every day dir holds at least one file
+    assert _lineage_rows(spark, tmppath) == [f for f in files if f[1] > 0]
+    assert spark.read.parquet(tmppath).count() == 20
