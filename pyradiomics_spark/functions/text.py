@@ -27,6 +27,8 @@ import re
 import numpy as np
 import pandas as pd
 
+from pyradiomics_spark.kernels.batch import Ragged
+
 _SCRIPT_RE = re.compile(
     r"<(script|style|noscript)\b[^>]*>.*?</\1\s*>", re.IGNORECASE | re.DOTALL
 )
@@ -290,3 +292,24 @@ def arrow_token_lens(text_array):
     if sus_pos.size:
         return None
     return tok_len, counts
+
+
+def arrow_intensity(text_array, settings) -> Ragged:
+    """Float64 intensity sequences of one Arrow batch of docs — the single
+    decode every extraction operator runs before its batched kernels.
+
+    Default settings (whitespace tokenizer, token_len) decode zero-copy
+    through ``arrow_token_lens``. A batch holding a unicode-whitespace
+    suspect, and every other tokenizer or intensity mode, goes through
+    ``batch_text_to_intensity``, where only the suspect docs leave the byte
+    tokenizer. Null docs decode as empty.
+    """
+    if settings.tokenizer == "whitespace" and settings.intensity_mode == "token_len":
+        parsed = arrow_token_lens(text_array)
+        if parsed is not None:
+            tok_len, counts = parsed
+            return Ragged.from_concat(tok_len.astype(np.float64), counts)
+    arrays = batch_text_to_intensity(
+        text_array.to_pylist(), settings.tokenizer, settings.intensity_mode,
+        settings.intensity_buckets)
+    return Ragged([a.astype(np.float64) for a in arrays])

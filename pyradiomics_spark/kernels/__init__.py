@@ -1,7 +1,10 @@
 """Pure-numpy feature kernels.
 
-These are the executor-side compute cores, invoked from Arrow-vectorized
-pandas UDFs (``applyInPandas``). They are the analog of the reference's C
+These are the per-doc compute cores: the ground truth that the batched
+kernels (``kernels/batch.py``, run inside the mapInArrow extraction
+operators) are parity-tested against, and the per-doc matrix builders
+``extract_matrices`` and ``rolling_texture`` call.
+They are the analog of the reference's C
 extensions (/root/reference/radiomics/src/cmatrices.c) + per-class numpy
 feature getters — reimplemented from the published formulas, not translated.
 

@@ -34,13 +34,6 @@ import numpy as np
 from pyradiomics_spark.config import EPS
 
 
-def batch_supported(settings) -> bool:
-    """Round 2: the batched kernels cover the full validated settings
-    surface (ExtractionSettings.__post_init__ already rejects anything the
-    kernels can't see identically on both paths)."""
-    return True
-
-
 # ----------------------------------------------------------------- layout
 
 class Ragged:
@@ -261,15 +254,6 @@ def resegment_batch(r: Ragged, rng: tuple, mode: str = "absolute") -> np.ndarray
 
 
 # ----------------------------------------------------- derived image types
-
-#: image types with a batched transform — round 2: ALL of them (wavelet
-#: subbands + LoG run as batched per-tap circular convolutions below)
-BATCH_TRANSFORMS = (
-    "original", "square", "squareroot", "logarithm", "exponential", "gradient",
-    "wavelet-L", "wavelet-H", "wavelet-L2", "wavelet-H2", "log-sigma-2",
-    "lbp-r1", "lbp-r2",
-)
-
 
 def lbp_batch(r: Ragged, radius: int = 1) -> np.ndarray:
     """functions.intensity.lbp_transform vectorized: per-position count of

@@ -5,11 +5,12 @@ Execution model
 ---------------
 One input row = one case (url × warc_ts × its text). Because the full token
 sequence lives in a single row, per-document extraction needs **no shuffle at
-all**: ``mapInPandas`` streams Arrow batches through the numpy kernels —
-embarrassingly parallel, scan-local, the plan is a single
-WholeStageCodegen(scan) → ArrowEvalPython stage. The reference's
-1-case-per-process Pool (scripts/__init__.py:393-416) maps to Spark task
-parallelism over parquet splits.
+all**: one ``mapInArrow`` stage decodes each Arrow batch into token
+intensities (``functions.text.arrow_intensity``) and runs the batched numpy
+kernels over it — embarrassingly parallel, scan-local, the plan is a single
+scan → MapInArrow stage for every tokenizer and intensity setting. The
+reference's 1-case-per-process Pool (scripts/__init__.py:393-416) maps to
+Spark task parallelism over parquet splits.
 
 Pipeline per case (order mirrors featureextractor.execute):
 normalize → (resegment mask from original intensities) → per image type:
@@ -18,12 +19,9 @@ transform → per feature class: discretize → kernel features.
 
 from __future__ import annotations
 
-from typing import Iterable, Iterator
-
-import os
+from typing import Iterable
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -34,7 +32,7 @@ from pyradiomics_spark.functions.intensity import (
     normalize,
     resegment_bounds,
 )
-from pyradiomics_spark.functions.text import text_to_intensity
+from pyradiomics_spark.functions.text import arrow_intensity
 from pyradiomics_spark.kernels import (
     discretize,
     firstorder_features,
@@ -72,7 +70,10 @@ def feature_columns(settings: ExtractionSettings) -> list:
 
 
 def _extract_one(values: np.ndarray, settings: ExtractionSettings) -> dict:
-    """All enabled features for one case. Returns {col: float} + diagnostics."""
+    """All enabled features for one case, computed by the per-doc kernels.
+    Returns {col: float} + diagnostics. This is the per-doc oracle the
+    tests and ``tools/make_goldens.py`` check the batched path against;
+    ``extract_features`` never calls it."""
     out: dict = {}
     np_total = int(values.size)
     out["diag_n_tokens"] = np_total
@@ -168,49 +169,24 @@ def _extract_one(values: np.ndarray, settings: ExtractionSettings) -> dict:
     return out
 
 
-def _batch_fast_path(settings: ExtractionSettings) -> bool:
-    """Round 2: the batched kernels cover the full validated settings
-    surface (normalize, FBW/FBN, resegmentation, weighting, every image
-    type). The per-doc kernels remain the ground-truth parity twin and the
-    fallback for anything a future setting adds outside the envelope."""
-    from pyradiomics_spark.functions.intensity import parse_image_type
-    from pyradiomics_spark.kernels.batch import BATCH_TRANSFORMS, batch_supported
-
-    return (
-        batch_supported(settings)
-        and all(it in BATCH_TRANSFORMS or parse_image_type(it) is not None
-                for it in settings.image_types)
-    )
-
-
 def _extract_batch(texts, settings: ExtractionSettings, image_type: str = "original") -> dict:
-    """All features of one image type for a batch of documents at once
+    """``extract_features``' decode + kernel stage for a list of docs:
+    {column: (B,) array} including diagnostics."""
+    import pyarrow as pa
+
+    r0 = arrow_intensity(pa.array(texts, type=pa.string()), settings)
+    return _extract_from_ragged(r0, settings, image_type)
+
+
+def _extract_from_ragged(r0, settings: ExtractionSettings,
+                         image_type: str = "original") -> dict:
+    """All features of one image type for a decoded batch
     (kernels.batch). Returns {column: (B,) array} including diagnostics.
 
     Pipeline order mirrors _extract_one / featureextractor.execute:
     normalize → resegment mask (from post-normalize ORIGINAL intensities)
     → transform whole sequence → discretize ROI → kernels.
     """
-    from pyradiomics_spark.kernels.batch import (
-        Ragged, discretize_batch, firstorder_batch, glcm_batch,
-        gldm_batch, ngtdm_batch, normalize_batch, resegment_batch,
-        runs_batch_features, seqshape_batch, transform_batch)
-
-    from pyradiomics_spark.functions.text import batch_text_to_intensity
-
-    arrays = [
-        a.astype(np.float64)
-        for a in batch_text_to_intensity(
-            texts, settings.tokenizer, settings.intensity_mode,
-            settings.intensity_buckets)
-    ]
-    return _extract_from_ragged(Ragged(arrays), settings, image_type)
-
-
-def _extract_from_ragged(r0, settings: ExtractionSettings,
-                         image_type: str = "original") -> dict:
-    """Kernel stage of _extract_batch over a prebuilt Ragged (the Arrow
-    zero-copy path feeds this directly — no per-doc python arrays)."""
     from pyradiomics_spark.kernels.batch import (
         discretize_batch, firstorder_batch, glcm_batch,
         gldm_batch, ngtdm_batch, normalize_batch, resegment_batch,
@@ -324,8 +300,9 @@ def extract_features(
 ) -> DataFrame:
     """Wide feature table: one output row per input row per image type.
 
-    Shuffle-free: pure mapInPandas over the scan. Column pruning matters —
-    we select only keys + text before the Arrow boundary.
+    Shuffle-free on inputs with enough splits: one mapInArrow over the
+    scan, whatever the tokenizer or intensity mode. Column pruning matters
+    — we select only keys + text before the Arrow boundary.
     """
     if settings is None:
         settings = ExtractionSettings()
@@ -354,61 +331,17 @@ def extract_features(
     image_types = settings.image_types
 
     out_cols = list(keys) + ["image_type", "diag_n_tokens", "diag_n_valid"] + fcols
-    fast = _batch_fast_path(settings)
-    # zero-copy Arrow path: the string column's value buffer IS the
-    # concatenated UTF-8 corpus the byte tokenizer wants — mapInArrow skips
-    # the Arrow→pandas python-string materialization entirely (the largest
-    # non-kernel cost of the extraction stage). Falls back to the pandas
-    # path per batch when a unicode-whitespace suspect is present, and
-    # wholesale for non-default tokenizer/intensity settings.
-    use_arrow = (fast and settings.tokenizer == "whitespace"
-                 and settings.intensity_mode == "token_len"
-                 and not os.environ.get("PYRS_NO_ARROW"))
-
-    def _pandas_frames(pdf: pd.DataFrame):
-        frames = []
-        texts = pdf[text_col].tolist()
-        for it in image_types:
-            cols = _extract_batch(texts, settings, image_type=it)
-            data = {k: pdf[k].to_numpy() for k in keys}
-            data["image_type"] = it
-            data["diag_n_tokens"] = cols["diag_n_tokens"]
-            data["diag_n_valid"] = cols["diag_n_valid"]
-            for c in fcols:
-                data[c] = cols.get(c, np.nan)
-            frames.append(pd.DataFrame(data, columns=out_cols))
-        return frames
+    ti = len(keys)  # src column order: keys…, text
 
     def run_arrow(batches):
         import pyarrow as pa
 
-        from pyradiomics_spark.functions.text import arrow_token_lens
-        from pyradiomics_spark.kernels.batch import Ragged
-
-        out_schema = None
         for rb in batches:
-            if out_schema is None:
-                names = [f.name for f in rb.schema]
-                ti = names.index(text_col)
-                key_idx = [names.index(k) for k in keys]
-                out_schema = pa.schema(
-                    [(k, rb.schema.field(k).type) for k in keys]
-                    + [("image_type", pa.string()),
-                       ("diag_n_tokens", pa.int32()),
-                       ("diag_n_valid", pa.int32())]
-                    + [(c, pa.float64()) for c in fcols])
-            parsed = arrow_token_lens(rb.column(ti))
-            if parsed is None:  # unicode-ws suspect in batch → pandas path
-                for f in _pandas_frames(rb.to_pandas()):
-                    yield pa.RecordBatch.from_pandas(
-                        f, schema=out_schema, preserve_index=False)
-                continue
-            tok_len, counts = parsed
-            r0 = Ragged.from_concat(tok_len.astype(np.float64), counts)
+            r0 = arrow_intensity(rb.column(ti), settings)
             n = rb.num_rows
             for it in image_types:
                 cols = _extract_from_ragged(r0, settings, image_type=it)
-                arrays = [rb.column(i) for i in key_idx]
+                arrays = [rb.column(i) for i in range(ti)]
                 arrays.append(pa.array([it] * n, type=pa.string()))
                 arrays.append(pa.array(
                     np.asarray(cols["diag_n_tokens"], dtype=np.int32)))
@@ -423,34 +356,7 @@ def extract_features(
                             np.asarray(v, dtype=np.float64)))
                 yield pa.RecordBatch.from_arrays(arrays, names=out_cols)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if fast:
-                # one dict → one DataFrame per image type (no column-by-
-                # column inserts: avoids pandas block fragmentation churn)
-                frames = _pandas_frames(pdf)
-                yield frames[0] if len(frames) == 1 else pd.concat(
-                    frames, ignore_index=True)
-                continue
-            rows = []
-            for tup in pdf.itertuples(index=False):
-                keyvals = tup[: len(keys)]
-                text = tup[len(keys)]
-                vals = text_to_intensity(
-                    text or "", settings.tokenizer,
-                    settings.intensity_mode, settings.intensity_buckets,
-                ).astype(np.float64)
-                feats = _extract_one(vals, settings)
-                for it in image_types:
-                    row = list(keyvals) + [
-                        it, feats["diag_n_tokens"], feats["diag_n_valid"]]
-                    row += [feats.get(f"{it}:{c}", float("nan")) for c in fcols]
-                    rows.append(row)
-            yield pd.DataFrame(rows, columns=out_cols)
-
-    if use_arrow:
-        return src.mapInArrow(run_arrow, schema=schema)
-    return src.mapInPandas(run, schema=schema)
+    return src.mapInArrow(run_arrow, schema=schema)
 
 
 def pivot_wide(

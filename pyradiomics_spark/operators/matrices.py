@@ -12,16 +12,12 @@ keeps the schema fixed across documents (matrix shapes vary per case).
 
 from __future__ import annotations
 
-import os
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
 
 from pyradiomics_spark.config import ExtractionSettings
-from pyradiomics_spark.functions.text import text_to_intensity
+from pyradiomics_spark.functions.text import arrow_intensity
 from pyradiomics_spark.kernels import (
     discretize, glcm_matrix, gldm_matrix, glrlm_matrix, glszm_matrix,
     ngtdm_matrix)
@@ -117,11 +113,11 @@ def extract_matrices(
     settings: ExtractionSettings | None = None,
     classes=MATRIX_CLASSES,
 ) -> DataFrame:
-    """Long-form texture matrices per input row. Shuffle-free; on default
-    text settings the input crosses the same zero-copy mapInArrow boundary
-    as extract_features / voxel_feature_maps (string buffers → byte
-    tokenizer, keys carried by Arrow ``take`` — no python strings, no
-    pandas), with the pandas path as the fallback arm."""
+    """Long-form texture matrices per input row. Shuffle-free: one
+    mapInArrow stage with the same per-batch decode as extract_features /
+    voxel_feature_maps (``functions.text.arrow_intensity``), keys carried
+    by Arrow ``take`` — no pandas, for every tokenizer and intensity
+    setting."""
     if settings is None:
         settings = ExtractionSettings()
     keys = tuple(keys)
@@ -133,64 +129,20 @@ def extract_matrices(
     src = df.select(*keys, text_col)
     classes = tuple(classes)
     cols = list(keys) + ["matrix", "i", "j", "value", "angle"]
-    use_arrow = (settings.tokenizer == "whitespace"
-                 and settings.intensity_mode == "token_len"
-                 and not os.environ.get("PYRS_NO_ARROW"))
-
-    def _pandas_frame(pdf: pd.DataFrame) -> pd.DataFrame:
-        vals = [
-            text_to_intensity(
-                t or "", settings.tokenizer, settings.intensity_mode,
-                settings.intensity_buckets).astype(np.float64)
-            for t in pdf[text_col].tolist()
-        ]
-        blocks = _cell_blocks(vals, settings, classes)
-        if blocks is None:
-            return pd.DataFrame(columns=cols)
-        d, m, iv, jv, vv, av = blocks
-        data = {k: pdf[k].to_numpy()[d] for k in keys}
-        data["matrix"] = m
-        data["i"] = iv
-        data["j"] = jv
-        data["value"] = vv
-        data["angle"] = av
-        return pd.DataFrame(data, columns=cols)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _pandas_frame(pdf)
+    nk = len(keys)  # src column order: keys…, text
 
     def run_arrow(batches):
         import pyarrow as pa
 
-        from pyradiomics_spark.functions.text import arrow_token_lens
-
-        out_schema = None
         for rb in batches:
-            if out_schema is None:
-                names = [f.name for f in rb.schema]
-                ti = names.index(text_col)
-                key_idx = [names.index(k) for k in keys]
-                out_schema = pa.schema(
-                    [(k, rb.schema.field(k).type) for k in keys]
-                    + [("matrix", pa.string()), ("i", pa.float64()),
-                       ("j", pa.float64()), ("value", pa.float64()),
-                       ("angle", pa.int32())])
-            parsed = arrow_token_lens(rb.column(ti))
-            if parsed is None:  # unicode-ws suspect in batch → pandas path
-                yield pa.RecordBatch.from_pandas(
-                    _pandas_frame(rb.to_pandas()), schema=out_schema,
-                    preserve_index=False)
-                continue
-            tok_len, counts = parsed
-            vals = np.split(tok_len.astype(np.float64),
-                            np.cumsum(counts)[:-1])
-            blocks = _cell_blocks(vals, settings, classes)
+            r = arrow_intensity(rb.column(nk), settings)
+            blocks = _cell_blocks(np.split(r.x, r.starts[1:]), settings,
+                                  classes)
             if blocks is None:
                 continue
             d, m, iv, jv, vv, av = blocks
             take = pa.array(d, type=pa.int64())
-            arrays = [rb.column(i).take(take) for i in key_idx]
+            arrays = [rb.column(i).take(take) for i in range(nk)]
             arrays.append(pa.array(m, type=pa.string()))
             arrays.append(pa.array(iv, type=pa.float64()))
             arrays.append(pa.array(jv, type=pa.float64()))
@@ -198,6 +150,4 @@ def extract_matrices(
             arrays.append(pa.array(av, type=pa.int32()))
             yield pa.RecordBatch.from_arrays(arrays, names=cols)
 
-    if use_arrow:
-        return src.mapInArrow(run_arrow, schema=schema)
-    return src.mapInPandas(run, schema=schema)
+    return src.mapInArrow(run_arrow, schema=schema)

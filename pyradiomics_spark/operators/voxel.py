@@ -4,15 +4,15 @@ every position, features over the kernel neighborhood rowsBetween(−r, +r),
 truncated at sequence edges (masked kernel, base.py:99-111).
 
 First-order rolling stats are pure window functions
-(``operators.windows.rolling_firstorder``). The histogram/texture maps here
-(entropy, uniformity, GLCM contrast per position) need a per-window
-histogram, so they run as a numpy kernel inside mapInPandas — batched, like
-the reference's ``voxelBatch`` (base.py:214-237).
+(``operators.windows.rolling_firstorder``). The full feature maps here
+(``voxel_feature_maps``) run every window through the batched kernels
+inside one mapInArrow stage, fed by the same per-batch decode as
+``extract_features`` and chunked like the reference's ``voxelBatch``
+(base.py:214-237). ``rolling_texture`` keeps its per-doc mapInPandas loop.
 """
 
 from __future__ import annotations
 
-import os
 from typing import Iterator
 
 import numpy as np
@@ -21,8 +21,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from pyradiomics_spark.config import EPS, ExtractionSettings
-from pyradiomics_spark.functions.text import (batch_text_to_intensity,
-                                              text_to_intensity)
+from pyradiomics_spark.functions.text import arrow_intensity, text_to_intensity
 from pyradiomics_spark.kernels import discretize
 
 
@@ -100,7 +99,7 @@ def voxel_feature_maps(
 
     def core(r0: "Ragged"):
         """(d_lens, out_pos, cols) for one decoded batch, or None when no
-        doc survives — shared by the pandas and zero-copy Arrow paths."""
+        doc survives."""
         r_img = r0 if image_type == "original" else r0.with_x(
             transform_batch(r0, image_type, settings))
         keep = r0.lens > 0
@@ -201,68 +200,21 @@ def voxel_feature_maps(
                  for k in parts[0]} if len(parts) > 1 else parts[0])
         return d_lens, out_pos, cols
 
-    use_arrow = (settings.tokenizer == "whitespace"
-                 and settings.intensity_mode == "token_len"
-                 and not os.environ.get("PYRS_NO_ARROW"))
-
-    def _decode_pandas(texts):
-        arrays = [
-            a.astype(np.float64)
-            for a in batch_text_to_intensity(
-                texts, settings.tokenizer,
-                settings.intensity_mode, settings.intensity_buckets)
-        ]
-        return Ragged(arrays)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        empty = pd.DataFrame(
-            columns=list(keys) + ["image_type", "pos"] + fcols)
-        for pdf in batches:
-            res = core(_decode_pandas(pdf[text_col].tolist()))
-            if res is None:
-                yield empty
-                continue
-            d_lens, out_pos, cols = res
-            data = {
-                k: np.repeat(pdf[k].to_numpy(), d_lens) for k in keys
-            }
-            data["image_type"] = image_type
-            data["pos"] = out_pos.astype(np.int32)
-            for c in fcols:
-                data[c] = cols.get(c, np.nan)
-            yield pd.DataFrame(data, columns=list(keys) + ["image_type", "pos"] + fcols)
+    nk = len(keys)  # src column order: keys…, text
+    names = list(keys) + ["image_type", "pos"] + fcols
 
     def run_arrow(batches):
-        """Zero-copy boundary (mirrors features.extract_features): token
-        arrays straight from the Arrow string buffers in, RecordBatches
-        from numpy out; keys repeated per token position via Arrow take."""
+        """Token arrays decoded from the Arrow batch in, RecordBatches from
+        numpy out; keys repeated per token position via Arrow take."""
         import pyarrow as pa
 
-        from pyradiomics_spark.functions.text import arrow_token_lens
-
-        out_schema = None
         for rb in batches:
-            if out_schema is None:
-                names = [f.name for f in rb.schema]
-                ti = names.index(text_col)
-                key_idx = [names.index(k) for k in keys]
-                out_schema = pa.schema(
-                    [(k, rb.schema.field(k).type) for k in keys]
-                    + [("image_type", pa.string()), ("pos", pa.int32())]
-                    + [(c, pa.float64()) for c in fcols])
-            parsed = arrow_token_lens(rb.column(ti))
-            if parsed is None:  # unicode-ws suspect → pandas fallback
-                pdf = rb.to_pandas()
-                res = core(_decode_pandas(pdf[text_col].tolist()))
-            else:
-                tok_len, counts = parsed
-                res = core(Ragged.from_concat(
-                    tok_len.astype(np.float64), counts))
+            res = core(arrow_intensity(rb.column(nk), settings))
             if res is None:
                 continue
             d_lens, out_pos, cols = res
             rep = pa.array(np.repeat(np.arange(rb.num_rows), d_lens))
-            arrays = [rb.column(i).take(rep) for i in key_idx]
+            arrays = [rb.column(i).take(rep) for i in range(nk)]
             n_out = out_pos.size
             arrays.append(pa.array([image_type] * n_out, type=pa.string()))
             arrays.append(pa.array(out_pos.astype(np.int32)))
@@ -271,11 +223,9 @@ def voxel_feature_maps(
                 arrays.append(pa.array(
                     np.full(n_out, np.nan) if v is None
                     else np.asarray(v, dtype=np.float64)))
-            yield pa.RecordBatch.from_arrays(arrays, schema=out_schema)
+            yield pa.RecordBatch.from_arrays(arrays, names=names)
 
-    if use_arrow:
-        return src.mapInArrow(run_arrow, schema=schema)
-    return src.mapInPandas(run, schema=schema)
+    return src.mapInArrow(run_arrow, schema=schema)
 
 
 def rolling_texture(

@@ -8,7 +8,7 @@ These wrappers put the batch semantics on a stream:
 * ``stream_tumbling``     — tumbling window aggregate
 * ``stream_extract``      — per-microbatch feature extraction (the
   extraction operator is stateless per row, so it lifts to streams as-is
-  via the same mapInPandas)
+  via the same mapInArrow)
 
 All return streaming DataFrames; callers attach ``writeStream`` (tests use
 ``trigger(availableNow=True)`` + memory sink). The same functions accept
@@ -112,7 +112,7 @@ def stream_sliding(
 
 
 def stream_extract(df: DataFrame, keys, text_col: str = "text", settings=None) -> DataFrame:
-    """Feature extraction on a stream: stateless mapInPandas lifts directly."""
+    """Feature extraction on a stream: stateless mapInArrow lifts directly."""
     from pyradiomics_spark.operators.features import extract_features
 
     return extract_features(df, tuple(keys), text_col, settings)

@@ -7,7 +7,7 @@ import pytest
 
 from pyradiomics_spark.config import ExtractionSettings
 from pyradiomics_spark.operators.features import (
-    _extract_one, _extract_batch, _batch_fast_path, feature_columns)
+    _extract_one, _extract_batch, feature_columns)
 from pyradiomics_spark.functions.text import text_to_intensity
 
 
@@ -43,7 +43,6 @@ def _texts():
         "reseg_rel", "asym_glcm", "weight_euclid", "weight_none",
         "norm_scale_reseg"])
 def test_batch_matches_per_doc(settings):
-    assert _batch_fast_path(settings)
     texts = _texts()
     batch = _extract_batch(texts, settings)
     fcols = feature_columns(settings)
@@ -84,16 +83,14 @@ def test_batch_random_docs(rng):
 
 
 def test_spark_batched_equals_golden(spark):
-    """End-to-end: the batched mapInPandas path reproduces the committed
+    """End-to-end: the mapInArrow batched path reproduces the committed
     goldens (generated by the per-doc kernels)."""
-    import os
     from pyradiomics_spark.operators.features import extract_features
 
     golden = pd.read_parquet("tests/goldens/golden_doc_plain.parquet")
     pdf = pd.read_parquet("tests/goldens/fixture_pages.parquet")
     df = spark.createDataFrame(pdf)
     settings = ExtractionSettings(bin_width=1.0)
-    assert _batch_fast_path(settings)
     got = extract_features(df, keys=("url", "warc_ts"), settings=settings).toPandas()
     key = ["url", "warc_ts", "image_type"]
     g = golden.sort_values(key).reset_index(drop=True)
@@ -161,7 +158,6 @@ def test_batch_matches_per_doc_parameterized_types():
     settings = ExtractionSettings(
         bin_width=0.5, wavelet="db3", wavelet_start_level=1,
         image_types=("wavelet-L", "wavelet-H3", "log-sigma-3.5", "lbp-r3"))
-    assert _batch_fast_path(settings)
     texts = _texts()[:30]
     fcols = feature_columns(settings)
     for it in settings.image_types:
@@ -184,7 +180,6 @@ def test_batch_matches_per_doc_wavelet_log():
     settings = ExtractionSettings(
         bin_width=0.5,
         image_types=("wavelet-L", "wavelet-H", "log-sigma-2"))
-    assert _batch_fast_path(settings)
     texts = _texts()
     fcols = feature_columns(settings)
     for it in settings.image_types:
@@ -234,7 +229,6 @@ def test_batched_multi_image_types_match_golden(spark):
     golden = golden[golden.image_type.isin(supported)]
     pdf = pd.read_parquet("tests/goldens/fixture_pages.parquet")
     settings = ExtractionSettings(bin_width=1.0, image_types=tuple(supported))
-    assert _batch_fast_path(settings)
     got = extract_features(
         spark.createDataFrame(pdf), keys=("url", "warc_ts"),
         settings=settings).toPandas()
@@ -255,7 +249,6 @@ def test_batched_multi_image_types_match_golden(spark):
     ExtractionSettings(bin_width=1.0, distances=(1, 2, 3), gldm_a=1.0),
 ], ids=["d12", "d2", "d123_a1"])
 def test_batch_multi_distance_matches_per_doc(settings):
-    assert _batch_fast_path(settings)
     texts = _texts()
     batch = _extract_batch(texts, settings)
     fcols = feature_columns(settings)
@@ -278,7 +271,6 @@ def test_batch_matches_per_doc_bior_wavelet():
         settings = ExtractionSettings(
             bin_width=0.5, wavelet=wav,
             image_types=("wavelet-L", "wavelet-H"))
-        assert _batch_fast_path(settings)
         texts = _texts()
         fcols = feature_columns(settings)
         for it in settings.image_types:

@@ -1,5 +1,6 @@
-"""End-to-end extraction over Spark: mapInPandas kernel vs driver-side
-direct kernel calls on the same synthetic pages (golden cross-check)."""
+"""End-to-end extraction over Spark: the mapInArrow operators
+(extract_features, extract_matrices, voxel_feature_maps) vs driver-side
+per-doc kernel calls on the same docs (golden cross-check)."""
 
 import numpy as np
 import pandas as pd
@@ -75,55 +76,125 @@ def test_extraction_plan_is_shuffle_free(spark, pages):
     assert "Exchange" not in plan  # no shuffle for per-doc extraction
 
 
-def test_extraction_arrow_suspect_and_null_fallback(spark):
-    """The mapInArrow zero-copy path must agree with the per-doc kernels
-    even when a batch contains unicode-whitespace docs (per-batch pandas
-    fallback) or nulls (zero-length segments)."""
-    from pyradiomics_spark.functions.text import text_to_intensity
-    from pyradiomics_spark.operators.features import (_extract_one,
-                                                      extract_features)
+def _one_batch(spark, rows):
+    """(url, text) rows hash-partitioned into one partition out of
+    defaultParallelism: the operators see them in ONE Arrow batch, and
+    extract_features' fan-out leaves the split count alone."""
+    from pyspark.sql import functions as F
 
+    slots = spark.sparkContext.defaultParallelism
+    df = spark.createDataFrame(rows, "url string, text string")
+    return df.withColumn("g", F.lit(0)).repartition(slots, "g").drop("g")
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_extraction_arrow_suspect_and_null_fallback(spark):
+    """extract_features must agree with the per-doc kernels on every
+    feature column when a batch mixes clean docs with unicode-whitespace
+    suspects (decoded per doc) and nulls (zero-length segments)."""
     rows = [("u1", "normal doc text here with several words"),
             ("u2", "nbsp\xa0joined words plus more"),
             ("u3", None),
-            ("u4", "中文 文本 测试 ok fine")]
-    df = spark.createDataFrame(rows, "url string, text string")
+            ("u4", "中文 文本 测试 ok fine"),
+            ("u5", "clean words beside the suspect in one batch")]
     st = ExtractionSettings(bin_width=1.0)
-    out = extract_features(df, keys=("url",), settings=st).toPandas()
-    assert len(out) == 4
-    got = dict(zip(out.url, out.firstorder_Mean))
+    out = extract_features(_one_batch(spark, rows), keys=("url",),
+                           settings=st).toPandas().set_index("url")
+    assert len(out) == len(rows)
+    checked = 0
     for u, t in rows:
         feats = _extract_one(text_to_intensity(t or "").astype(float), st)
-        want = feats.get("original:firstorder_Mean", float("nan"))
-        if np.isnan(want):
-            assert np.isnan(got[u]), u
-        else:
-            assert got[u] == pytest.approx(want, rel=1e-12), u
+        assert out.loc[u, "diag_n_tokens"] == feats["diag_n_tokens"], u
+        for c in feature_columns(st):
+            want = feats.get(f"original:{c}", float("nan"))
+            got = out.loc[u, c]
+            if np.isnan(want):
+                assert np.isnan(got), (u, c)
+            else:
+                assert got == pytest.approx(want, rel=1e-9, abs=1e-12), (u, c)
+            checked += 1
+    assert checked == len(rows) * len(feature_columns(st))
 
 
-def test_matrices_arrow_matches_pandas(spark, monkeypatch):
-    """extract_matrices' zero-copy mapInArrow arm must be cell-identical to
-    the pandas arm, including unicode-whitespace fallback batches, null and
+_SETTINGS = {
+    "default": ExtractionSettings(bin_width=1.0),
+    "bpe_regex": ExtractionSettings(bin_width=1.0, tokenizer="bpe_regex"),
+    "hash_bucket": ExtractionSettings(bin_width=1.0,
+                                      intensity_mode="hash_bucket"),
+}
+
+_MIXED_ROWS = [("u1", "aa bbb c dddd ee fff aa bbb"),
+               ("u2", "nbsp\xa0joined words plus more extra tokens"),
+               ("u3", "dash \u2013 and em\u2014dash, quoted \u201cwords\u201d"),
+               ("u4", None),
+               ("u5", ""),
+               ("u6", "中文 文本 测试。 ok fine again")]
+
+
+@pytest.mark.parametrize("name", list(_SETTINGS))
+def test_matrices_and_voxel_match_per_doc(spark, name):
+    """extract_matrices and voxel_feature_maps run one mapInArrow arm for
+    every tokenizer / intensity setting and equal the per-doc kernels over
+    a batch mixing unicode-whitespace, typographic-dash, CJK, null and
     empty docs."""
-    import pandas as pd
+    from pyradiomics_spark.kernels import (
+        discretize, firstorder_features, glcm_features, gldm_features,
+        glrlm_features, glszm_features, ngtdm_features)
+    from pyradiomics_spark.operators.matrices import (
+        MATRIX_CLASSES, _cell_blocks, extract_matrices)
+    from pyradiomics_spark.operators.voxel import voxel_feature_maps
 
-    from pyradiomics_spark.operators.matrices import extract_matrices
+    st = _SETTINGS[name]
+    df = _one_batch(spark, _MIXED_ROWS)
+    vals = [text_to_intensity(t or "", st.tokenizer, st.intensity_mode,
+                              st.intensity_buckets).astype(np.float64)
+            for _, t in _MIXED_ROWS]
+    urls = np.array([u for u, _ in _MIXED_ROWS])
 
-    rows = [("u1", "aa bbb c dddd ee fff aa bbb"),
-            ("u2", "nbsp\xa0joined words plus more extra tokens"),
-            ("u3", None),
-            ("u4", ""),
-            ("u5", "中文 文本 测试 ok fine again")]
-    df = spark.createDataFrame(rows, "url string, text string")
-    st = ExtractionSettings(bin_width=1.0)
+    mat = extract_matrices(df, keys=("url",), settings=st)
+    vox = voxel_feature_maps(df, keys=("url",), radius=1, settings=st)
+    feat = extract_features(df, keys=("url",), settings=st)
+    for plan in (_plan(mat), _plan(vox), _plan(feat)):
+        assert "MapInArrow" in plan and "MapInPandas" not in plan
+
+    d, m, iv, jv, vv, av = _cell_blocks(vals, st, MATRIX_CLASSES)
+    want = pd.DataFrame({"url": urls[d], "matrix": m, "i": iv, "j": jv,
+                         "value": vv, "angle": av})
     key = ["url", "matrix", "i", "j", "angle"]
-    a = extract_matrices(df, keys=("url",), settings=st).toPandas()
-    monkeypatch.setenv("PYRS_NO_ARROW", "1")
-    b = extract_matrices(df, keys=("url",), settings=st).toPandas()
-    assert len(a) == len(b) and len(a) > 0
-    a = a.sort_values(key).reset_index(drop=True)
-    b = b.sort_values(key).reset_index(drop=True)
-    pd.testing.assert_frame_equal(a, b)
+    got = mat.toPandas().sort_values(key).reset_index(drop=True)
+    want = want.sort_values(key).reset_index(drop=True)
+    assert len(got) > 0
+    pd.testing.assert_frame_equal(got, want)
+
+    out = vox.toPandas().set_index(["url", "pos"]).sort_index()
+    assert len(out) == sum(v.size for v in vals)
+    checked = 0
+    for u, v in zip(urls, vals):
+        if v.size == 0:
+            continue
+        levels = discretize(v, st.bin_width)
+        for p in range(v.size):
+            lo, hi = max(0, p - 1), min(v.size, p + 2)
+            wv, wl = v[lo:hi], levels[lo:hi]
+            row = out.loc[(u, p)]
+            for cls, feats in (("firstorder", firstorder_features(wv, discretized=wl)),
+                               ("glcm", glcm_features(wl)),
+                               ("glrlm", glrlm_features(wl)),
+                               ("glszm", glszm_features(wl)),
+                               ("ngtdm", ngtdm_features(wl)),
+                               ("gldm", gldm_features(wl))):
+                for f, expect in feats.items():
+                    g = row[f"{cls}_{f}"]
+                    if np.isnan(expect):
+                        assert np.isnan(g), (u, p, cls, f, g)
+                    else:
+                        assert g == pytest.approx(
+                            expect, rel=1e-9, abs=1e-12), (u, p, cls, f)
+                    checked += 1
+    assert checked > 1000
 
 
 def test_pivot_wide_counts_and_fill(spark):

@@ -143,7 +143,7 @@ def test_frame_sample_plan(spark):
 
 
 def test_stream_extract(spark, event_dir, tmp_path):
-    """Feature extraction lifts to streams unchanged (stateless mapInPandas)."""
+    """Feature extraction lifts to streams unchanged (stateless mapInArrow)."""
     import pandas as pd
     from pyradiomics_spark.config import ExtractionSettings
     from pyradiomics_spark.streaming.sessions import stream_extract
