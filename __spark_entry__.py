@@ -1121,10 +1121,9 @@ def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash signatures with engine-agnostic md5 hashing (4 permutations,
     lexicographic-min of md5 hex) so DuckDB reproduces them exactly."""
     docs = _read(spark, sf_dir, "documents", fan=True)
-    toks = F.split(F.col("text"), " ")
-    from pyradiomics_spark.operators.dedup import _gram_array
+    from pyradiomics_spark.operators.dedup import word_ngrams
 
-    grams = _gram_array(toks, 3)
+    grams = word_ngrams(F.col("text"), 3)
     sh = docs.select(
         "doc_id", F.explode(grams).alias("g")
     ).where(F.col("g") != "").distinct()
@@ -1140,10 +1139,9 @@ def q_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing fingerprints (rolling min over k-gram hashes) with md5
     hashing for oracle parity; counts distinct fingerprints per doc."""
     docs = _read(spark, sf_dir, "documents")
-    toks = F.split(F.col("text"), " ")
-    from pyradiomics_spark.operators.dedup import _gram_array
+    from pyradiomics_spark.operators.dedup import word_ngrams
 
-    grams = _gram_array(toks, 5)
+    grams = word_ngrams(F.col("text"), 5)
     g = docs.select("doc_id", F.posexplode(grams).alias("pos", "g")).withColumn(
         "gh", F.md5("g")
     )
@@ -2424,10 +2422,9 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     new = docs.where(F.col("doc_id") >= half).unionByName(clones)
 
     def sigs(side):
-        toks = F.split(F.col("text"), " ")
-        from pyradiomics_spark.operators.dedup import _gram_array
+        from pyradiomics_spark.operators.dedup import word_ngrams
 
-        grams = _gram_array(toks, 3)
+        grams = word_ngrams(F.col("text"), 3)
         sh = side.select("doc_id", F.explode(grams).alias("g")).where(
             F.col("g") != "")
         s = sh.groupBy("doc_id").agg(*[

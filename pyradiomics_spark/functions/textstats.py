@@ -7,7 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from pyradiomics_spark.operators.dedup import _gram_array
+from pyradiomics_spark.operators.dedup import word_ngrams
 
 #: tiny stopword marker profiles for the n-gram/stopword language heuristic
 LANG_MARKERS = {
@@ -167,11 +167,12 @@ def repetition_ratio(text_col, n: int = 3):
     """Duplicate word-n-gram fraction per doc — the Gopher-style repetition
     quality filter (fraction of n-grams that are repeats of an earlier
     n-gram): 1 − distinct/total, 0.0 for docs with < n tokens. Pure builtin
-    expressions (split → slice n-grams → array_distinct), no UDF; exact
-    DuckDB twin in the `repetition` gate query."""
+    expressions (``word_ngrams`` → array_distinct), no UDF; exact DuckDB
+    twin in the `repetition` gate query. The gram array is built once:
+    ``total`` comes from the token count, not from a second gram array."""
     toks = F.filter(F.split(text_col, " "), lambda t: t != "")
-    grams = _gram_array(toks, n)
-    total = F.size(grams)
+    total = F.greatest(F.size(toks) - (n - 1), F.lit(0))
+    grams = word_ngrams(text_col, n, drop_empty=True)
     return F.when(
         total > 0, 1.0 - F.size(F.array_distinct(grams)) / total
     ).otherwise(F.lit(0.0))
@@ -218,9 +219,7 @@ def winnowing_fingerprints(
     keep the min hash of each sliding window of ``window`` consecutive
     k-grams (distinct). Relational: explode k-grams → window min → distinct.
     The standard local document fingerprint for plagiarism/near-dup."""
-    toks = F.split(F.col(text_col), " ")
-    # guard short docs: sequence(0, size-k) would turn descending
-    grams = _gram_array(toks, kgram)
+    grams = word_ngrams(F.col(text_col), kgram)
     g = df.select(
         F.col(id_col), F.posexplode(grams).alias("pos", "gram")
     ).withColumn("gh", F.xxhash64("gram"))
@@ -245,8 +244,7 @@ def ngram_topk(
     turns orderBy+limit into per-partition top-k + driver merge), never a
     full sort of the distinct-ngram table; hot n-grams skew the AGG, not
     a join, and partial aggregation absorbs them before the shuffle."""
-    toks = F.split(F.col(text_col), " ")
-    grams = _gram_array(toks, n)
+    grams = word_ngrams(F.col(text_col), n)
     exploded = df.select(F.explode(grams).alias("ngram")).where(
         F.col("ngram") != "")
     return (

@@ -16,6 +16,8 @@ no Python on the hot path:
 * ``dup_ngram_coverage`` — per-doc fraction of n-gram occurrences shared
   with other docs (gram census + AQE-splittable many-to-one join)
 
+Every word n-gram in the package comes from ``word_ngrams`` (one regex).
+
 Determinism: every hash is ``xxhash64`` with an integer seed column baked
 into the input — reproducible across runs/executors/cluster sizes.
 """
@@ -43,31 +45,29 @@ def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 # ---------------------------------------------------------------- minhash
 
-def _gram_array(toks, n: int):
-    """Array of word n-grams from a token-array column — built by
-    zip_with over n shifted views of the array instead of a
-    slice-per-position transform: the transform re-evaluates the token
-    subexpression inside every lambda call, which profiles ~4x slower
-    per row (guide §1: measured, r06). Identical output strings
-    (concat_ws over the same elements)."""
-    size = F.size(toks)
-    arr = toks
-    for i in range(1, n):
-        shifted = F.slice(toks, i + 1, F.greatest(size - i, F.lit(0)))
-        arr = F.zip_with(arr, shifted, lambda a, b: F.concat_ws(" ", a, b))
-    # entries past size-n+1 were built against null-padded tails — drop
-    return F.when(
-        size >= n, F.slice(arr, 1, F.greatest(size - n + 1, F.lit(0)))
-    ).otherwise(F.array().cast("array<string>"))
+def word_ngrams(text, n: int, drop_empty: bool = False):
+    """Word n-grams of the string column ``text`` in token order: element
+    i is ``" ".join(toks[i:i+n])`` with ``toks = split(text, " ")``, or
+    its non-empty tokens with ``drop_empty``. NULL or < n tokens → [].
+
+    One compiled ``regexp_extract_all`` (no interpreted per-token lambda):
+    a zero-width match at every token start whose lookahead captures the
+    next n space-joined tokens. ``drop_empty`` first collapses space runs
+    and trims, so every token is non-empty."""
+    if drop_empty:
+        text = F.trim(F.regexp_replace(text, " +", " "))
+    tok = "[^ ]++" if drop_empty else "[^ ]*+"
+    pattern = f"(?:^|(?<= ))(?=({tok}(?: {tok}){{{n - 1}}}))"
+    return F.coalesce(F.regexp_extract_all(text, F.lit(pattern), 1),
+                      F.array().cast("array<string>"))
 
 
 def _shingles(df: DataFrame, id_col: str, text_col: str, n: int,
               dedupe: bool = True) -> DataFrame:
-    """Word n-gram shingles per doc — JVM-side via split + zip_with
-    + explode (no UDF). ``dedupe=False`` skips the distinct SHUFFLE for
+    """Word n-gram shingles per doc (``word_ngrams`` + explode, no UDF),
+    empty shingles dropped. ``dedupe=False`` skips the distinct for
     consumers whose aggregation is multiset-invariant (min-hash)."""
-    toks = F.split(F.col(text_col), " ")
-    grams = _gram_array(toks, n)
+    grams = word_ngrams(F.col(text_col), n)
     # within-doc dedupe is FREE (array_distinct, no shuffle); the global
     # .distinct() would be a full shuffle of the exploded shingle table
     if dedupe:
@@ -196,22 +196,27 @@ def ngram_jaccard_pairs(
     containment) — the quote/partial-inclusion detector Jaccard misses:
     a short doc fully embedded in a long one has high containment but
     low Jaccard, so symmetric dedup keeps the near-plagiarized pair."""
-    sh = _shingles(df, id_col, text_col, shingle_n)
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("n"))
-    pair_sh = sh
+    docs = df.select(id_col, text_col)
     if candidates is not None:
-        # Restrict shingles to candidate docs BEFORE the self-join: a
+        # Restrict to candidate docs BEFORE shingling and the self-join: a
         # stop-word-like hot shingle shared by millions of non-candidate
         # docs would otherwise explode quadratically inside the join, and
         # the pair filter after the aggregate would never see it.
         cand_ids = (
             candidates.select(F.col("id_a").alias(id_col))
             .unionByName(candidates.select(F.col("id_b").alias(id_col)))
-            .distinct()
         )
-        pair_sh = sh.join(cand_ids, id_col, "left_semi")
-    a = pair_sh.alias("a")
-    b = pair_sh.alias("b")
+        docs = docs.join(cand_ids, id_col, "left_semi")
+    # one shingle SET per doc, its size on every exploded row (no per-doc
+    # count aggregate). explode_outer: explode would make Catalyst push an
+    # inferred size(__set) > 0 below the semi-join and build every set
+    # twice; an empty set's NULL shingle never passes the equi-join.
+    sets = docs.select(F.col(id_col), F.array_remove(F.array_distinct(
+        word_ngrams(F.col(text_col), shingle_n)), "").alias("__set"))
+    sh = sets.select(F.col(id_col), F.size("__set").alias("n"),
+                     F.explode_outer("__set").alias("shingle"))
+    a = sh.alias("a")
+    b = sh.alias("b")
     common = (
         a.join(
             b,
@@ -219,15 +224,14 @@ def ngram_jaccard_pairs(
             & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
         )
         .groupBy(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
+            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"),
+            F.col("a.n").alias("na"), F.col("b.n").alias("nb"),
         )
         .agg(F.count("*").alias("common"))
     )
     if candidates is not None:
         # still needed: candidate PAIRS, not all pairs among candidate docs
         common = common.join(candidates, ["id_a", "id_b"], "inner")
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n").alias("na"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n").alias("nb"))
     cols = [
         F.col("id_a"), F.col("id_b"),
         (F.col("common")
@@ -238,7 +242,7 @@ def ngram_jaccard_pairs(
             (F.col("common") / F.col("na")).alias("containment_a"),
             (F.col("common") / F.col("nb")).alias("containment_b"),
         ]
-    return common.join(sa, "id_a").join(sb, "id_b").select(*cols)
+    return common.select(*cols)
 
 
 def dup_ngram_coverage(
@@ -890,10 +894,7 @@ def jaccard_join(
     no windows over hot keys; no Python. Verification cost is
     |candidates|·avg|set| — prefix + positional filtering exists
     precisely to keep |candidates| near the output size."""
-    toks = F.filter(F.split(F.lower(F.col(text_col)), " "),
-                    lambda x: x != "")
-    n = shingle_tokens
-    sh = _gram_array(toks, n)
+    sh = word_ngrams(F.lower(F.col(text_col)), shingle_tokens, drop_empty=True)
     sets = (df.select(F.col(id_col).alias("__id"),
                       F.array_distinct(sh).alias("__sh"))
             .where(F.size("__sh") > 0))

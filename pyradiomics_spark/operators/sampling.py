@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from pyradiomics_spark.operators.dedup import word_ngrams
+
 #: 16^8 — the md5-prefix fraction denominator
 _DENOM = float(1 << 32)
 
@@ -454,21 +456,16 @@ def ngram_decontaminate(
     Output: (doc_id, n_shared_grams) per contaminated train doc.
     Downstream either drops these ids (anti-join) or masks the spans.
 
-    Scale shape: n-gram generation is JVM-side (``transform`` over a
-    ``sequence`` of start positions + ``slice``/``concat_ws`` — no
-    Python); keys are md5 digests so the join shuffles 16-byte keys,
-    never text. The eval side is distinct-reduced first — at web scale
-    eval sets are tiny, so AQE turns the join broadcast; the census is
-    then a map-side lookup against a ~|eval n-grams| hash set, one scan
-    of train.
+    Scale shape: n-gram generation is JVM-side (``dedup.word_ngrams``,
+    one regex — no Python); keys are md5 digests so the join shuffles
+    16-byte keys, never text. The eval side is distinct-reduced first —
+    at web scale eval sets are tiny, so AQE turns the join broadcast; the
+    census is then a map-side lookup against a ~|eval n-grams| hash set,
+    one scan of train.
     """
     if n < 1:
         raise ValueError("n must be >= 1")
-    toks = F.split(F.col(text_col), " ")
-    # sequence(1, 0) counts DOWN in Spark — guard short docs explicitly
-    from pyradiomics_spark.operators.dedup import _gram_array
-
-    grams = F.transform(_gram_array(toks, n), lambda g: F.md5(g))
+    grams = F.transform(word_ngrams(F.col(text_col), n), lambda g: F.md5(g))
     is_eval = F.col(split_col).isin(*eval_splits)
     exploded = df.select(
         F.col(id_col), is_eval.alias("__ev"),
