@@ -676,6 +676,22 @@ def q_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _event_stream(spark: SparkSession, sf_dir: str, prefix: str) -> tuple:
+    """(events, stream, tmp) for a streaming gate row: the events table, a
+    file-source stream over a private copy of its parquet, and the fresh
+    temp dir holding that copy (the row's sink and checkpoint go there)."""
+    import shutil
+    import tempfile
+
+    ev = _read(spark, sf_dir, "events")
+    tmp = tempfile.mkdtemp(prefix=prefix)
+    src = os.path.join(tmp, "src")
+    os.makedirs(src)
+    shutil.copy(os.path.join(sf_dir, "events.parquet"),
+                os.path.join(src, "events.parquet"))
+    return ev, spark.readStream.schema(ev.schema).parquet(src), tmp
+
+
 def q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING gate row: the tumbling-window aggregate run through the
     REAL Structured Streaming engine — file source over the same events
@@ -684,19 +700,11 @@ def q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin; stream ≡ batch on a bounded input is Structured Streaming's
     exactness contract, and this row makes the driver gate verify it
     cross-engine instead of only batch-parity pytest."""
-    import shutil
-    import tempfile
     import uuid
 
     from pyradiomics_spark.streaming.sessions import stream_tumbling
 
-    ev = _read(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="pyrs_stream_gate_")
-    src = os.path.join(tmp, "src")
-    os.makedirs(src)
-    shutil.copy(os.path.join(sf_dir, "events.parquet"),
-                os.path.join(src, "events.parquet"))
-    stream = spark.readStream.schema(ev.schema).parquet(src)
+    _, stream, tmp = _event_stream(spark, sf_dir, "pyrs_stream_gate_")
     # watermarks require TIMESTAMP (ltz); the parquet is ntz — cast in
     # (session tz is UTC) and cast the window start back to ntz on output
     # so the gate schema matches the batch twin and the DuckDB oracle.
@@ -728,19 +736,11 @@ def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     through the REAL streaming engine (file source, availableNow,
     complete-mode memory sink). Oracle replays the slide-aligned window
     assignment as time_bucket(1h) - k·1h for k in {0,1}."""
-    import shutil
-    import tempfile
     import uuid
 
     from pyradiomics_spark.streaming.sessions import stream_sliding
 
-    ev = _read(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="pyrs_stream_gate_")
-    src = os.path.join(tmp, "src")
-    os.makedirs(src)
-    shutil.copy(os.path.join(sf_dir, "events.parquet"),
-                os.path.join(src, "events.parquet"))
-    stream = spark.readStream.schema(ev.schema).parquet(src)
+    _, stream, tmp = _event_stream(spark, sf_dir, "pyrs_stream_gate_")
     stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
     agg = stream_sliding(
         stream, "user_id", "ts", width="2 hours", slide="1 hour",
@@ -771,20 +771,10 @@ def q_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     because its plan is stateless (bin projection + equi-join +
     residual); stream-static equi-joins need no watermark state. Oracle:
     the same inequality-join SQL as the batch `interval_join` row."""
-    import shutil
-    import tempfile
-    import uuid
-
     from pyradiomics_spark.operators.intervals import interval_join
 
-    ev = _read(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="pyrs_stream_gate_")
-    src = os.path.join(tmp, "src")
-    os.makedirs(src)
-    shutil.copy(os.path.join(sf_dir, "events.parquet"),
-                os.path.join(src, "events.parquet"))
-    stream = (spark.readStream.schema(ev.schema).parquet(src)
-              .select("event_id", "ts"))
+    ev, stream, tmp = _event_stream(spark, sf_dir, "pyrs_stream_gate_")
+    stream = stream.select("event_id", "ts")
     anchors = ev.where(F.col("event_id") % 97 == 0).select(
         F.col("event_id").alias("iv_id"),
         F.col("ts").alias("iv_lo"),
@@ -804,7 +794,9 @@ def q_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
              .option("path", opath)
              .option("checkpointLocation", os.path.join(tmp, "ckpt")).start())
         q.awaitTermination()
-    return (spark.read.parquet(opath).select("event_id", "iv_id")
+    # explicit schema: the read never infers from the sink's files, so a
+    # sink that committed no data file still reads as an empty typed frame
+    return (spark.read.schema("event_id long, iv_id long").parquet(opath)
             .orderBy("event_id", "iv_id"))
 
 
@@ -816,19 +808,12 @@ def q_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB has no session_window, but the semantics are exactly
     expressible; this closes the 'streaming session_window has no DuckDB
     twin' gap (NEXT.md r2 item 4)."""
-    import shutil
-    import tempfile
     import uuid
 
     from pyradiomics_spark.streaming.sessions import stream_sessionize
 
-    ev = _read(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="pyrs_stream_sess_")
-    src = os.path.join(tmp, "src")
-    os.makedirs(src)
-    shutil.copy(os.path.join(sf_dir, "events.parquet"),
-                os.path.join(src, "events.parquet"))
-    stream = (spark.readStream.schema(ev.schema).parquet(src)
+    _, stream, tmp = _event_stream(spark, sf_dir, "pyrs_stream_sess_")
+    stream = (stream
               .where(F.col("user_id") < 50)
               .withColumn("ts", F.col("ts").cast("timestamp")))
     agg = stream_sessionize(stream, "user_id", "ts", gap="30 minutes",
@@ -943,18 +928,11 @@ def q_stream_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream ≡ batch on bounded input is the exactness contract, and the
     sketch cells are integer-exact."""
     import shutil
-    import tempfile
     import uuid
 
     from pyradiomics_spark.streaming.sessions import stream_cms
 
-    ev = _read(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="pyrs_stream_cms_")
-    src = os.path.join(tmp, "src")
-    os.makedirs(src)
-    shutil.copy(os.path.join(sf_dir, "events.parquet"),
-                os.path.join(src, "events.parquet"))
-    stream = spark.readStream.schema(ev.schema).parquet(src)
+    _, stream, tmp = _event_stream(spark, sf_dir, "pyrs_stream_cms_")
     stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
     agg = stream_cms(stream, "ts", "event_type", width="1 hour",
                      watermark="1 hour", sketch_width=64, depth=2, seed=5)
@@ -1568,6 +1546,8 @@ def q_glcm_imc_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc marginal cross join — bounded at G² rows/doc, G = gray-level
     count. The ε inside the reference's log2(·+ε) shifts values by ~1e-13,
     invisible at the 6-dp gate rounding."""
+    from pyradiomics_spark.session import checkpoint
+
     lv = _doc_levels(spark, sf_dir)
     w = Window.partitionBy("doc_id").orderBy("pos")
     directed = (
@@ -1581,8 +1561,7 @@ def q_glcm_imc_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # five entropy branches (px/py/hxy/hxy1/hxy2) fan out from p —
     # materialize the aggregate-sized matrix once instead of re-running
     # the token-window lineage per branch (≤ G² rows per doc)
-    p = cnt.withColumn(
-        "p", F.col("c") / F.sum("c").over(tot)).localCheckpoint()
+    p = checkpoint(cnt.withColumn("p", F.col("c") / F.sum("c").over(tot)))
     px = p.groupBy("doc_id", "i").agg(F.sum("p").alias("px"))
     py = p.groupBy("doc_id", "j").agg(F.sum("p").alias("py"))
     hxy = p.groupBy("doc_id").agg(
@@ -1813,6 +1792,19 @@ def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return simhash_signatures_md5(docs, "doc_id", "text", bits=16).orderBy("doc_id")
 
 
+def _simhash_sig(docs: DataFrame) -> DataFrame:
+    """The 16-bit md5 simhash fingerprint table, checkpointed before the
+    C(6,4)=15 block self-joins: the 30 join branches otherwise re-plan
+    (and partially re-run) the explode+md5 signature subtree per branch —
+    a fingerprint table is tiny relative to the corpus at any scale
+    (guide §3.3 "materialising an intermediate truncates the plan")."""
+    from pyradiomics_spark.operators.dedup import simhash_signatures_md5
+    from pyradiomics_spark.session import checkpoint
+
+    return checkpoint(simhash_signatures_md5(docs, "doc_id", "text",
+                                             bits=16))
+
+
 def q_simhash_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Blocked simhash near-dup candidates (Manku WWW'07 scheme — the
     10⁹-doc scale path: C(n_blocks, n_blocks−k) wide-key equality joins
@@ -1820,17 +1812,10 @@ def q_simhash_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     pigeonhole GUARANTEES recall for Hamming ≤ k, the verified output is
     exactly the brute-force pair set — which is what the DuckDB oracle
     computes (cross join + bit_count(xor))."""
-    from pyradiomics_spark.operators.dedup import (
-        simhash_candidates, simhash_signatures_md5)
+    from pyradiomics_spark.operators.dedup import simhash_candidates
 
     docs = _read(spark, sf_dir, "documents")
-    # materialize the |docs|-row fingerprint table before the C(6,4)=15
-    # block self-joins: the 30 join branches otherwise re-plan (and
-    # partially re-run) the explode+md5 signature subtree per branch —
-    # a fingerprint table is tiny relative to the corpus at any scale
-    # (guide §3.3 "materialising an intermediate truncates the plan")
-    sig = simhash_signatures_md5(docs, "doc_id", "text",
-                                 bits=16).localCheckpoint()
+    sig = _simhash_sig(docs)
     return (
         simhash_candidates(sig, "doc_id", max_hamming=2, n_blocks=6, bits=16)
         .select("id_a", "id_b", F.col("hamming").cast("int").alias("hamming"))
@@ -1846,17 +1831,10 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: DuckDB recursive-CTE transitive closure over the identical
     brute-force pair set."""
     from pyradiomics_spark.operators.components import connected_components
-    from pyradiomics_spark.operators.dedup import (
-        simhash_candidates, simhash_signatures_md5)
+    from pyradiomics_spark.operators.dedup import simhash_candidates
 
     docs = _read(spark, sf_dir, "documents")
-    # materialize the |docs|-row fingerprint table before the C(6,4)=15
-    # block self-joins: the 30 join branches otherwise re-plan (and
-    # partially re-run) the explode+md5 signature subtree per branch —
-    # a fingerprint table is tiny relative to the corpus at any scale
-    # (guide §3.3 "materialising an intermediate truncates the plan")
-    sig = simhash_signatures_md5(docs, "doc_id", "text",
-                                 bits=16).localCheckpoint()
+    sig = _simhash_sig(docs)
     pairs = simhash_candidates(sig, "doc_id", max_hamming=2, n_blocks=6,
                                bits=16)
     comp = connected_components(pairs, all_ids=docs.select("doc_id"),
@@ -2946,18 +2924,10 @@ def q_stream_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch asof_join row. Stream ≡ batch here because each micro-batch
     joins against the full static history — the contract the sink's
     docstring pins."""
-    import shutil
-    import tempfile
-
     from pyradiomics_spark.streaming.sessions import stream_asof_sink
 
-    ev = _read(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="pyrs_stream_asof_")
-    src = os.path.join(tmp, "src")
-    os.makedirs(src)
-    shutil.copy(os.path.join(sf_dir, "events.parquet"),
-                os.path.join(src, "events.parquet"))
-    stream = (spark.readStream.schema(ev.schema).parquet(src)
+    ev, stream, tmp = _event_stream(spark, sf_dir, "pyrs_stream_asof_")
+    stream = (stream
               .where(F.col("event_type") == "purchase")
               .select("event_id", "user_id", "ts", "value"))
     signups = ev.where(F.col("event_type") == "signup").select(
@@ -3517,17 +3487,10 @@ def q_dedup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical window."""
     from pyradiomics_spark.operators.components import (
         canonical_representatives, connected_components)
-    from pyradiomics_spark.operators.dedup import (
-        simhash_candidates, simhash_signatures_md5)
+    from pyradiomics_spark.operators.dedup import simhash_candidates
 
     docs = _read(spark, sf_dir, "documents")
-    # materialize the |docs|-row fingerprint table before the C(6,4)=15
-    # block self-joins: the 30 join branches otherwise re-plan (and
-    # partially re-run) the explode+md5 signature subtree per branch —
-    # a fingerprint table is tiny relative to the corpus at any scale
-    # (guide §3.3 "materialising an intermediate truncates the plan")
-    sig = simhash_signatures_md5(docs, "doc_id", "text",
-                                 bits=16).localCheckpoint()
+    sig = _simhash_sig(docs)
     pairs = simhash_candidates(sig, "doc_id", max_hamming=2, n_blocks=6,
                                bits=16)
     comp = connected_components(pairs, all_ids=docs.select("doc_id"),
@@ -3550,20 +3513,12 @@ def q_stream_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     this single-file replay the emitted set equals the batch operator
     exactly, so the oracle is the SAME window SQL as the `scd2` gate —
     the streaming engine is the thing under test."""
-    import shutil
-    import tempfile
     import uuid
 
     from pyradiomics_spark.streaming.stateful import stream_scd2
 
-    ev = _read(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="pyrs_stream_scd2_")
-    src = os.path.join(tmp, "src")
-    os.makedirs(src)
-    shutil.copy(os.path.join(sf_dir, "events.parquet"),
-                os.path.join(src, "events.parquet"))
-    stream = (spark.readStream.schema(ev.schema).parquet(src)
-              .withColumn("ts", F.col("ts").cast("timestamp")))
+    _, stream, tmp = _event_stream(spark, sf_dir, "pyrs_stream_scd2_")
+    stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
     out = stream_scd2(stream, "user_id", "ts", "event_type", "event_id")
     name = f"stream_scd2_{uuid.uuid4().hex[:8]}"
     with _stream_shuffle_partitions(spark):
@@ -4316,19 +4271,11 @@ def q_stream_rate_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
     day window carried via applyInPandasWithState, first 2 events pass.
     Single-file availableNow replay ⇒ decisions equal the batch
     row_number twin exactly."""
-    import shutil
-    import tempfile
     import uuid
 
     from pyradiomics_spark.streaming.stateful import stream_rate_limit
 
-    ev = _read(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="pyrs_rl_gate_")
-    src = os.path.join(tmp, "src")
-    os.makedirs(src)
-    shutil.copy(os.path.join(sf_dir, "events.parquet"),
-                os.path.join(src, "events.parquet"))
-    stream = spark.readStream.schema(ev.schema).parquet(src)
+    _, stream, tmp = _event_stream(spark, sf_dir, "pyrs_rl_gate_")
     stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
     out = stream_rate_limit(stream, "user_id", "ts", "event_id",
                             limit=2, window_seconds=86400)
@@ -4419,20 +4366,12 @@ def q_stream_running_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     availableNow replay ⇒ the final emitted state equals the batch
     aggregate; the DuckDB twin replays the explicit sum/sumsq op
     tree."""
-    import shutil
-    import tempfile
     import uuid
 
     from pyradiomics_spark.streaming.stateful import running_entity_stats
 
-    ev = _read(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="pyrs_rs_gate_")
-    src = os.path.join(tmp, "src")
-    os.makedirs(src)
-    shutil.copy(os.path.join(sf_dir, "events.parquet"),
-                os.path.join(src, "events.parquet"))
-    stream = (spark.readStream.schema(ev.schema).parquet(src)
-              .withColumn("ent", F.col("user_id").cast("string")))
+    _, stream, tmp = _event_stream(spark, sf_dir, "pyrs_rs_gate_")
+    stream = stream.withColumn("ent", F.col("user_id").cast("string"))
     out = running_entity_stats(stream, "ent", "value")
     name = f"rs_{uuid.uuid4().hex[:8]}"
     with _stream_shuffle_partitions(spark):
@@ -4456,20 +4395,12 @@ def q_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     ⇒ per-conversion pairs equal the batch window bookends; the DuckDB
     twin is the IGNORE-NULLS running-bookend window filtered to
     conversions."""
-    import shutil
-    import tempfile
     import uuid
 
     from pyradiomics_spark.streaming.stateful import stream_attribution
 
-    ev = _read(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="pyrs_attr_gate_")
-    src = os.path.join(tmp, "src")
-    os.makedirs(src)
-    shutil.copy(os.path.join(sf_dir, "events.parquet"),
-                os.path.join(src, "events.parquet"))
-    stream = (spark.readStream.schema(ev.schema).parquet(src)
-              .withColumn("ts", F.col("ts").cast("timestamp")))
+    _, stream, tmp = _event_stream(spark, sf_dir, "pyrs_attr_gate_")
+    stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
     out = stream_attribution(stream, "user_id", "ts", "event_type",
                              "event_id", "purchase")
     name = f"attr_{uuid.uuid4().hex[:8]}"

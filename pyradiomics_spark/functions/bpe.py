@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pyradiomics_spark.session import checkpoint, release
+
 EOW = "</w>"
 
 
@@ -96,7 +98,6 @@ def bpe_learn(
     df: DataFrame,
     text_col: str = "text",
     n_merges: int = 10,
-    checkpoint: bool = True,
 ) -> tuple[list, DataFrame]:
     """Learn ``n_merges`` BPE merges from a document corpus. Returns
     (merge list [(s1, s2, count)...] in learned order, final vocabulary
@@ -104,12 +105,10 @@ def bpe_learn(
 
     Driver traffic is ONE row per round (the argmax pair) — the model
     lives on the driver like kmeans centroids, the data stays
-    distributed. Each round localCheckpoints the vocab (iterative
-    lineage discipline, as components/pagerank). Rounds stop early if
-    no pair remains (tiny corpora)."""
-    vocab = with_symbols(word_census(df, text_col))
-    if checkpoint:
-        vocab = vocab.localCheckpoint(eager=True)
+    distributed. Each round checkpoints the vocab and releases the
+    previous one (iterative lineage discipline, as components/pagerank).
+    Rounds stop early if no pair remains (tiny corpora)."""
+    vocab = checkpoint(with_symbols(word_census(df, text_col)))
     merges: list = []
     for _ in range(int(n_merges)):
         best = top_pairs(pair_census(vocab)).collect()
@@ -117,7 +116,6 @@ def bpe_learn(
             break
         b = best[0]
         merges.append((b.s1, b.s2, b.n))
-        vocab = apply_merge(vocab, b.s1, b.s2)
-        if checkpoint:
-            vocab = vocab.localCheckpoint(eager=True)
+        prev, vocab = vocab, checkpoint(apply_merge(vocab, b.s1, b.s2))
+        release(prev)
     return merges, vocab

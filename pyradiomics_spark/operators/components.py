@@ -15,9 +15,11 @@ per-node minimum is a window aggregate). This is the published web-scale
 answer: hash-min label propagation needs O(diameter) rounds, which on a
 10⁹-node dup graph with chain structure is unbounded.
 
-Each round localCheckpoints the edge set: iterative DataFrame algorithms
+Each round checkpoints the edge set: iterative DataFrame algorithms
 otherwise stack O(rounds) of lineage, and the convergence check would
-re-execute the whole history every round. On a real cluster prefer
+re-execute the whole history every round. Round r−1 is released once the
+convergence anti-join has read it, so a call keeps only the contraction
+and the final edge set, which its output reads. On a real cluster prefer
 ``spark.sparkContext.setCheckpointDir`` + ``.checkpoint()`` for fault
 tolerance across executor loss; localCheckpoint is the single-JVM analog.
 """
@@ -26,6 +28,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from pyradiomics_spark.session import checkpoint, release
 
 _U, _V = "__cc_u", "__cc_v"
 
@@ -107,27 +111,28 @@ def connected_components(
     # assume_distinct=True skips a full shuffle of the edge set when the
     # producer already guarantees set semantics (e.g. *_candidates
     # outputs, which are distinct by construction)
-    edges = edges.localCheckpoint()
+    edges = checkpoint(edges)
 
     contraction = None
     if precontract:
         both = edges.unionByName(edges.select(
             F.col(_V).alias(_U), F.col(_U).alias(_V)))
-        contraction = (both.groupBy(_U).agg(F.min(_V).alias("__mn"))
-                       .select(_U, F.least(F.col("__mn"),
-                                           F.col(_U)).alias("__m"))
-                       .localCheckpoint())
+        contraction = checkpoint(
+            both.groupBy(_U).agg(F.min(_V).alias("__mn"))
+            .select(_U, F.least(F.col("__mn"), F.col(_U)).alias("__m")))
         mu = contraction.select(F.col(_U).alias("__n"),
                                 F.col("__m").alias("__mu"))
-        edges = (edges
-                 .join(mu.withColumnRenamed("__n", _U)
-                       .withColumnRenamed("__mu", "__ma"), _U)
-                 .join(mu.withColumnRenamed("__n", _V)
-                       .withColumnRenamed("__mu", "__mb"), _V)
-                 .select(F.col("__ma").alias(_U), F.col("__mb").alias(_V))
-                 .where(F.col(_U) != F.col(_V))
-                 .distinct()
-                 .localCheckpoint())
+        contracted = checkpoint(
+            edges
+            .join(mu.withColumnRenamed("__n", _U)
+                  .withColumnRenamed("__mu", "__ma"), _U)
+            .join(mu.withColumnRenamed("__n", _V)
+                  .withColumnRenamed("__mu", "__mb"), _V)
+            .select(F.col("__ma").alias(_U), F.col("__mb").alias(_V))
+            .where(F.col(_U) != F.col(_V))
+            .distinct())
+        release(edges)
+        edges = contracted
 
     def _sig(df: DataFrame) -> tuple:
         """(count, order-invariant content checksum) in ONE job off the
@@ -142,7 +147,7 @@ def connected_components(
 
     sig = _sig(edges)
     for _ in range(max_rounds):
-        nxt = _small_star(_large_star(edges)).localCheckpoint()
+        nxt = checkpoint(_small_star(_large_star(edges)))
         # convergence: both sets are distinct, so equal sets ⇔ equal counts
         # + empty one-sided anti-join. One agg job per round gets count AND
         # checksum; the exact anti-join confirmation only runs once both
@@ -154,6 +159,7 @@ def connected_components(
         converged = (
             nsig == sig
             and nxt.join(edges, [_U, _V], "left_anti").limit(1).count() == 0)
+        release(edges)
         edges, sig = nxt, nsig
         if converged:
             break

@@ -14,8 +14,9 @@ shuffles are on the same keys every round, so a cluster run that
 pre-partitions ``edges`` by ``src`` (or bucket-writes it) reuses the
 exchange across all iterations. Dangling mass is a single-row aggregate
 broadcast back via crossJoin — never a driver collect. Each round
-localCheckpoints the rank vector: iterative DataFrame lineage otherwise
-grows O(iterations) and re-executes history at every action (same
+checkpoints the rank vector: iterative DataFrame lineage otherwise grows
+O(iterations) and re-executes history at every action. Superseded rounds
+are released, so a call keeps only the blocks its output reads (same
 discipline as components.connected_components).
 """
 
@@ -23,6 +24,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from pyradiomics_spark.session import checkpoint, release
 
 
 def degree_census(edges: DataFrame, src: str = "src",
@@ -45,7 +48,6 @@ def pagerank(
     src: str = "src",
     dst: str = "dst",
     rank_col: str = "rank",
-    checkpoint: bool = True,
     teleport: DataFrame | None = None,
     weight_col: str | None = None,
 ) -> DataFrame:
@@ -65,8 +67,7 @@ def pagerank(
     key; the float result is invariant to partitioning only up to
     addition order, so ranks are exact-reproducible at fixed partitioning
     and 1-ulp-stable otherwise — the oracle twin replays the identical
-    iteration count. ``checkpoint=False`` keeps pure lineage (needed when
-    the caller wants to ``explain`` the full plan).
+    iteration count.
 
     ``teleport`` personalizes the walk (TrustRank, Gyöngyi et al. 2004 —
     the seed-biased anti-spam variant; topic-sensitive PageRank is the
@@ -85,13 +86,11 @@ def pagerank(
     # the unweighted form — the existing gates stay bit-identical.
     wcols = [F.col(weight_col).cast("double").alias("__w")] if weight_col \
         else []
-    e = edges.select(F.col(src).alias("__s"), F.col(dst).alias("__d"),
-                     *wcols)
-    if checkpoint:
-        # the edge list is probed once per round — materialize it once
-        # instead of re-deriving its lineage (often a corpus scan +
-        # hashing) every iteration
-        e = e.localCheckpoint(eager=True)
+    # the edge list is probed once per round — materialize it once
+    # instead of re-deriving its lineage (often a corpus scan + hashing)
+    # every iteration
+    e = checkpoint(edges.select(F.col(src).alias("__s"),
+                                F.col(dst).alias("__d"), *wcols))
     nodes = (e.select(F.col("__s").alias("node"))
              .unionByName(e.select(F.col("__d").alias("node")))
              .distinct())
@@ -116,8 +115,7 @@ def pagerank(
                 .select("node", "__outd",
                         (F.coalesce(F.col("__w"), F.lit(0.0))
                          / F.col("__ws")).alias("__tv")))
-    if checkpoint:
-        base = base.localCheckpoint(eager=True)
+    base = checkpoint(base)
     n_total = base.agg(F.count("*").alias("__n"))
     d = float(damping)
 
@@ -152,12 +150,13 @@ def pagerank(
                                       + F.col("__dang") * F.col("__tv")))
         keep = ["node", "__outd"] + (["__tv"] if teleport is not None
                                      else [])
-        rank = (
+        prev, rank = rank, checkpoint(
             base.join(contrib, "node", "left")
             .crossJoin(F.broadcast(scal))
             .select(*keep, new_rank.alias(rank_col)))
-        if checkpoint:
-            rank = rank.localCheckpoint(eager=True)
+        release(prev)
+    release(e)
+    release(base)
     return rank.select("node", rank_col)
 
 
@@ -230,7 +229,6 @@ def kcore_peel(
     n_rounds: int,
     src: str = "src",
     dst: str = "dst",
-    checkpoint: bool = True,
 ) -> DataFrame:
     """(node, degree) after ``n_rounds`` of k-core peeling on the
     undirected simple graph: each round removes every node whose current
@@ -246,28 +244,26 @@ def kcore_peel(
     Scale shape per round: ONE degree groupBy + TWO semi-joins of the
     edge list onto the |survivors|-row degree table, keyed on the same
     endpoints every round (a cluster run pre-partitioned by endpoint
-    reuses its exchange). localCheckpoint per round caps the iterative
+    reuses its exchange). A checkpoint per round caps the iterative
     lineage exactly like pagerank/connected_components."""
     if k < 1 or n_rounds < 1:
         raise ValueError("k and n_rounds must be >= 1")
-    e = (edges
-         .select(F.least(F.col(src), F.col(dst)).alias("a"),
-                 F.greatest(F.col(src), F.col(dst)).alias("b"))
-         .where(F.col("a") != F.col("b"))
-         .distinct())
-    if checkpoint:
-        # round 0 probes the canonical edge list three times (degree
-        # census + both semi-joins) — materialize it once first
-        e = e.localCheckpoint(eager=True)
+    # round 0 probes the canonical edge list three times (degree census
+    # + both semi-joins) — materialize it once first
+    e = checkpoint(edges
+                   .select(F.least(F.col(src), F.col(dst)).alias("a"),
+                           F.greatest(F.col(src), F.col(dst)).alias("b"))
+                   .where(F.col("a") != F.col("b"))
+                   .distinct())
     for _ in range(n_rounds):
         deg = (e.select(F.col("a").alias("node"))
                .unionAll(e.select(F.col("b").alias("node")))
                .groupBy("node").agg(F.count("*").alias("deg")))
         keep = deg.where(F.col("deg") >= k).select("node")
-        e = (e.join(keep.withColumnRenamed("node", "a"), "a", "left_semi")
-             .join(keep.withColumnRenamed("node", "b"), "b", "left_semi"))
-        if checkpoint:
-            e = e.localCheckpoint(eager=True)
+        prev, e = e, checkpoint(
+            e.join(keep.withColumnRenamed("node", "a"), "a", "left_semi")
+            .join(keep.withColumnRenamed("node", "b"), "b", "left_semi"))
+        release(prev)
     return (e.select(F.col("a").alias("node"))
             .unionAll(e.select(F.col("b").alias("node")))
             .groupBy("node").agg(F.count("*").alias("degree")))
@@ -360,7 +356,6 @@ def hits(
     n_iter: int = 2,
     src: str = "src",
     dst: str = "dst",
-    checkpoint: bool = True,
 ) -> DataFrame:
     """(node, hub, auth) after ``n_iter`` synchronous rounds of
     Kleinberg's HITS (JACM '99) over the directed edge list — the
@@ -386,20 +381,17 @@ def hits(
     map-side-combined groupBys on the same keys — a cluster run that
     bucket-writes ``edges`` by either endpoint reuses its exchange
     every round. Normalizers are single-row aggregates broadcast back
-    via crossJoin (no driver collect); localCheckpoint per round caps
+    via crossJoin (no driver collect); a checkpoint per round caps
     iterative lineage exactly like `pagerank`."""
     if n_iter < 1:
         raise ValueError("n_iter must be >= 1")
-    e = edges.select(F.col(src).alias("__s"), F.col(dst).alias("__d"))
-    if checkpoint:
-        # probed twice per round (hub pass + auth pass) — materialize
-        # once instead of re-deriving the edge lineage each time
-        e = e.localCheckpoint(eager=True)
-    nodes = (e.select(F.col("__s").alias("node"))
-             .unionByName(e.select(F.col("__d").alias("node")))
-             .distinct())
-    if checkpoint:
-        nodes = nodes.localCheckpoint(eager=True)
+    # probed twice per round (hub pass + auth pass) — materialize once
+    # instead of re-deriving the edge lineage each time
+    e = checkpoint(edges.select(F.col(src).alias("__s"),
+                                F.col(dst).alias("__d")))
+    nodes = checkpoint(e.select(F.col("__s").alias("node"))
+                       .unionByName(e.select(F.col("__d").alias("node")))
+                       .distinct())
     n_total = nodes.agg(F.count("*").alias("__n"))
     hub = nodes.crossJoin(F.broadcast(n_total)).select(
         "node", (F.lit(1.0) / F.col("__n")).alias("hub"))
@@ -409,7 +401,7 @@ def hits(
         return (scores.crossJoin(F.broadcast(tot))
                 .select("node", (F.col(col) / F.col("__t")).alias(col)))
 
-    auth = None
+    auth, prev = None, hub
     for _ in range(n_iter):
         a_raw = (e.join(hub.select(F.col("node").alias("__s"), "hub"),
                         "__s")
@@ -423,16 +415,15 @@ def hits(
                         "__d")
                  .groupBy(F.col("__s").alias("node"))
                  .agg(F.sum("auth").alias("hub")))
-        hub = _norm(
+        # only the hub drives the recursion — auth's lineage is one
+        # join+groupBy past the previous hub checkpoint, so materializing
+        # it too would double the per-round I/O for nothing (the final
+        # auth, read at the output join, keeps only the previous hub)
+        release(prev)
+        prev, hub = hub, checkpoint(_norm(
             nodes.join(h_raw, "node", "left")
             .select("node", F.coalesce(F.col("hub"), F.lit(0.0))
-                    .alias("hub")), "hub")
-        if checkpoint:
-            # only the hub drives the recursion — auth's lineage is one
-            # join+groupBy past the previous hub checkpoint, so
-            # materializing it too would double the per-round I/O for
-            # nothing (the final auth is read once, at the output join)
-            hub = hub.localCheckpoint(eager=True)
+                    .alias("hub")), "hub"))
     return hub.join(auth, "node").select("node", "hub", "auth")
 
 
@@ -441,7 +432,6 @@ def label_propagation(
     n_iter: int = 3,
     src: str = "src",
     dst: str = "dst",
-    checkpoint: bool = True,
 ) -> DataFrame:
     """(node, label) after ``n_iter`` SYNCHRONOUS rounds of deterministic
     label propagation (Raghavan et al., PRE 2007) over the undirected
@@ -465,8 +455,8 @@ def label_propagation(
     ONE argmax window over census rows partitioned by node (census rows
     ≤ edge endpoints, shrinking as communities coalesce; the window
     never sees corpus-scale partitions because a node's census rows are
-    bounded by its degree). Same-key shuffles reuse one exchange;
-    localCheckpoint per round caps lineage."""
+    bounded by its degree). Same-key shuffles reuse one exchange; a
+    checkpoint per round caps lineage."""
     from pyspark.sql import Window
 
     if n_iter < 1:
@@ -476,10 +466,8 @@ def label_propagation(
                  F.greatest(F.col(src), F.col(dst)).alias("b"))
          .where(F.col("a") != F.col("b"))
          .distinct())
-    both = e.unionAll(e.select(F.col("b").alias("a"),
-                               F.col("a").alias("b")))
-    if checkpoint:
-        both = both.localCheckpoint(eager=True)
+    both = checkpoint(e.unionAll(e.select(F.col("b").alias("a"),
+                                          F.col("a").alias("b"))))
     labels = (both.select(F.col("a").alias("node")).distinct()
               .withColumn("label", F.col("node")))
     w = Window.partitionBy("node").orderBy(
@@ -490,12 +478,12 @@ def label_propagation(
                         "b")
                   .groupBy(F.col("a").alias("node"), "label")
                   .agg(F.count("*").alias("__n")))
-        labels = (census
-                  .withColumn("__r", F.row_number().over(w))
-                  .where(F.col("__r") == 1)
-                  .select("node", "label"))
-        if checkpoint:
-            labels = labels.localCheckpoint(eager=True)
+        prev, labels = labels, checkpoint(
+            census.withColumn("__r", F.row_number().over(w))
+            .where(F.col("__r") == 1)
+            .select("node", "label"))
+        release(prev)
+    release(both)
     return labels
 
 

@@ -23,9 +23,11 @@ except the ≤ num_buckets offset tables and the metrics dict.
 
 Metrics are SINGLE-PASS: each stage contributes a boolean flag column on
 one shared lineage instead of materializing a filtered frame, so all four
-stage counts come from ONE aggregation over the persisted flag table. (At
+stage counts come from ONE aggregation over the cached flag table. (At
 100 TB a ``count()`` per stage is a full job over non-materialized
-lineage — five full corpus passes for bookkeeping.)
+lineage — five full corpus passes for bookkeeping.) The whole call runs
+in one ``session.scope()``: the candidate checkpoint, the components'
+blocks and the flag cache are released on every exit.
 """
 
 from __future__ import annotations
@@ -42,6 +44,7 @@ from pyradiomics_spark.operators.dedup import (minhash_lsh_candidates,
 from pyradiomics_spark.operators.sampling import (cross_split_contamination,
                                                   pack_sequences,
                                                   split_dataset)
+from pyradiomics_spark.session import cache, checkpoint, scope
 
 _FLAGS = ("__exact", "__surv", "__kept")
 
@@ -54,6 +57,7 @@ def _check(cond: bool, msg: str) -> None:
         raise RuntimeError(f"curation invariant violated: {msg}")
 
 
+@scope()
 def curate(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -95,8 +99,8 @@ def curate(
     # it twice (docs semi-join + final pair join), and each probe would
     # otherwise re-run the whole signature/banding lineage. Candidate
     # pairs are output-sized (near the dup count), tiny vs the corpus.
-    cand = minhash_lsh_candidates(sigs, id_col, num_hashes, bands,
-                                  bucket_cap=bucket_cap).localCheckpoint()
+    cand = checkpoint(minhash_lsh_candidates(sigs, id_col, num_hashes, bands,
+                                             bucket_cap=bucket_cap))
     verified = ngram_jaccard_pairs(
         exact, id_col, text_col, shingle_n, cand).where(
         F.col("jaccard") >= jaccard_threshold)
@@ -127,20 +131,8 @@ def curate(
         F.col("__surv")
         & (F.col("quality_score") >= min_quality)
         & (F.coalesce(F.col("rep_ratio"), F.lit(0.0)) <= max_repetition))
-    flagged = split_dataset(flagged, id_col, seed=seed).persist()
-    try:
-        return _curate_from_flagged(
-            flagged, id_col, text_col, min_quality, max_repetition,
-            pack_budget, seed, out_path)
-    finally:
-        # unpersist on EVERY exit — an invariant failure or write error
-        # must not leave the flag lineage pinned in executor memory for
-        # the rest of the session
-        flagged.unpersist()
+    flagged = cache(split_dataset(flagged, id_col, seed=seed))
 
-
-def _curate_from_flagged(flagged, id_col, text_col, min_quality,
-                         max_repetition, pack_budget, seed, out_path):
     # ONE metrics job for every stage count (was: one count() per stage)
     stage = flagged.agg(
         F.count("*").alias("raw"),

@@ -5,13 +5,21 @@ re-planning, skew-join splitting, partition coalescing), Arrow enabled for
 the pandas-UDF kernel boundary, and bounded Arrow batch sizes so kernel
 groups stay memory-resident (the analog of the reference's ``voxelBatch``
 memory control, /root/reference/radiomics/base.py:214-237).
+
+``checkpoint``/``cache`` are the only places the engine pins data in the
+session; ``release`` and ``scope()`` give it back.
 """
 
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
+from contextvars import ContextVar
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+# one list of owned frames per open scope, innermost last
+_SCOPES: ContextVar[tuple] = ContextVar("pyrs_scopes", default=())
 
 
 def get_spark(
@@ -49,3 +57,45 @@ def get_spark(
         .config("spark.ui.enabled", "false")
     )
     return builder.getOrCreate()
+
+
+def _own(df: DataFrame) -> DataFrame:
+    if _SCOPES.get():
+        _SCOPES.get()[-1].append(df)
+    return df
+
+
+def checkpoint(df: DataFrame) -> DataFrame:
+    """Eager ``localCheckpoint``, owned by the innermost open ``scope()``."""
+    return _own(df.localCheckpoint(eager=True))
+
+
+def cache(df: DataFrame) -> DataFrame:
+    """Lazy ``cache()``, owned by the innermost open ``scope()``."""
+    return _own(df.cache())
+
+
+def release(df: DataFrame) -> None:
+    """Free the blocks ``df``'s cache or checkpoint pins, non-blocking; a
+    no-op for any other frame. ``unpersist()`` does nothing for a local
+    checkpoint: its blocks belong to the JVM ``LogicalRDD``'s RDD, and a
+    later read of the released frame fails."""
+    plan = df._jdf.queryExecution().logical()
+    if df.is_cached:
+        df.unpersist()
+    elif plan.nodeName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
+
+
+@contextmanager
+def scope():
+    """On exit, also on an exception, release what ``checkpoint``/``cache``
+    made while this was the innermost scope. Usable as a decorator."""
+    owned: list = []
+    token = _SCOPES.set(_SCOPES.get() + (owned,))
+    try:
+        yield
+    finally:
+        _SCOPES.reset(token)
+        for df in owned:
+            release(df)

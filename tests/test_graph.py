@@ -54,13 +54,6 @@ def test_pagerank_parallel_edges_count_twice(spark):
     assert got["b"] > got["c"]  # 2/3 of a's mass vs 1/3
 
 
-def test_pagerank_no_checkpoint_same_result(spark, edges_df):
-    a = {r.node: r["rank"]
-         for r in pagerank(edges_df, n_iter=2, checkpoint=False).collect()}
-    b = {r.node: r["rank"] for r in pagerank(edges_df, n_iter=2).collect()}
-    assert a == b
-
-
 def test_pagerank_rejects_zero_iters(edges_df):
     with pytest.raises(ValueError, match="n_iter"):
         pagerank(edges_df, n_iter=0)
@@ -488,16 +481,6 @@ def test_hits_directory_vs_source(spark):
     a = {r.node: r.auth for r in rows}
     assert max(h, key=h.get) == "dir" and a["dir"] == 0.0
     assert max(a, key=a.get) == "p2"
-
-
-def test_hits_no_checkpoint_same_result(spark, edges_df):
-    from pyradiomics_spark.operators.graph import hits
-
-    ref = {(r.node): (r.hub, r.auth)
-           for r in hits(edges_df, n_iter=2).collect()}
-    got = {(r.node): (r.hub, r.auth)
-           for r in hits(edges_df, n_iter=2, checkpoint=False).collect()}
-    assert ref == got
 
 
 def test_hits_rejects_zero_iters(edges_df):

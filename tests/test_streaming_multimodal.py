@@ -116,6 +116,30 @@ def test_stream_interval_join_matches_batch(spark, event_dir):
     assert got == want and len(got) == 6
 
 
+def test_stream_interval_join_gate_empty_result_is_typed(spark, tmp_path):
+    """With no anchor event (event_id % 97 == 0) the gate row's parquet
+    sink gets no rows; the read-back must still give an empty
+    (event_id long, iv_id long) frame, not a schema-inference error."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as e
+
+    n = 5
+    pq.write_table(pa.table({
+        "event_id": pa.array(range(1, n + 1), pa.int64()),
+        "ts": pa.array(pd.date_range("2024-01-01", periods=n, freq="h")
+                       .to_numpy(), pa.timestamp("us")),
+        "user_id": pa.array([7] * n, pa.int64()),
+        "event_type": ["view"] * n,
+        "value": [1.0] * n,
+        "props": ["{}"] * n}), tmp_path / "events.parquet")
+    out = e.q_stream_interval_join(spark, str(tmp_path))
+    assert out.count() == 0
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema] == [
+        ("event_id", "bigint"), ("iv_id", "bigint")]
+
+
 def test_image_features_deterministic(spark):
     pdf = pd.DataFrame({
         "img_id": [1, 2, 3],

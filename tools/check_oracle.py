@@ -1,6 +1,9 @@
 """Local stand-in for the driver's correctness gate: run every
 ``__spark_entry__.queries()`` entry on Spark and its ``oracle_sql()`` twin on
 DuckDB over the same parquet, compare rows/columns/values order-insensitively.
+Each query runs in one ``session.scope()``; a query that leaves persistent
+RDDs behind that it did not find prints ``LEAK <name>: n`` and counts as a
+failure.
 
 Usage: python tools/check_oracle.py [sf_dir] [query ...]
 """
@@ -96,7 +99,7 @@ def main() -> int:
     only = set(sys.argv[2:])
 
     import __spark_entry__ as e
-    from pyradiomics_spark.session import get_spark
+    from pyradiomics_spark.session import get_spark, scope
 
     spark = get_spark(app_name="oracle-check", cores=8, shuffle_partitions=16)
     con = duckdb.connect()
@@ -104,16 +107,28 @@ def main() -> int:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
+    def persistent() -> set:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
     qs = e.queries()
     oracles = e.oracle_sql()
     failures = 0
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        before = persistent()
+        error = None
         try:
-            spark_pdf = fn(spark, sf_dir).toPandas()
+            with scope():
+                spark_pdf = fn(spark, sf_dir).toPandas()
         except Exception as ex:
-            print(f"FAIL {name}: spark error {type(ex).__name__}: {ex}")
+            error = ex
+        leaked = len(persistent() - before)
+        if leaked:
+            print(f"LEAK {name}: {leaked}")
+            failures += 1
+        if error is not None:
+            print(f"FAIL {name}: spark error {type(error).__name__}: {error}")
             failures += 1
             continue
         if name not in oracles:
