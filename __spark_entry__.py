@@ -108,13 +108,12 @@ def entry(spark: SparkSession) -> DataFrame:
 # covers the OTHER text consumers at larger scale factors: serial scan
 # cost grows linearly with the file while the fan-out exchange stays
 # ~constant, so once an unsplittable text file exceeds
-# PYRS_FAN_BYTES_PER_SPLIT per split the break-even flips and every
+# _FAN_BYTES_PER_SPLIT per split the break-even flips and every
 # tokenize/regex consumer wants the fan (the round rule: config tuned
 # only to 600k-row tables may not hold at the driver's larger SF).
 _FAN_TABLES: set = {"documents", "customer"}
 _FAN_SPLIT_BYTES = 128 * 1024 * 1024  # spark.sql.files.maxPartitionBytes
-_FAN_BYTES_PER_SPLIT = int(os.environ.get(
-    "PYRS_FAN_BYTES_PER_SPLIT", 3 * 1024 * 1024))
+_FAN_BYTES_PER_SPLIT = 3 * 1024 * 1024
 
 
 def _scan_layout(path: str) -> tuple[int, int]:
@@ -134,33 +133,6 @@ def _scan_layout(path: str) -> tuple[int, int]:
         return splits, total
     except OSError:
         return 1 << 30, 0  # unknown layout: assume wide, skip the fan-out
-
-
-
-def _stream_shuffle_partitions(spark: SparkSession):
-    """Context manager pinning spark.sql.shuffle.partitions to the slot
-    count for STREAMING gate rows. Stateful streaming shuffles are not
-    AQE-coalesced (Spark disables AQE in stateful workloads), so the
-    shuffle-partition count is exactly the state-store instance count,
-    and every instance pays per-micro-batch snapshot/commit cost. One
-    state store per slot is the right shape at any scale; the 2x batch
-    oversubscription only buys AQE skew headroom, which streaming can't
-    use. PYRS_STREAM_SHUFFLE_PARTITIONS overrides (e.g. for a cluster
-    whose expected state volume wants more splits)."""
-    import contextlib
-
-    @contextlib.contextmanager
-    def _cm():
-        old = spark.conf.get("spark.sql.shuffle.partitions")
-        n = int(os.environ.get("PYRS_STREAM_SHUFFLE_PARTITIONS",
-                               spark.sparkContext.defaultParallelism))
-        spark.conf.set("spark.sql.shuffle.partitions", str(n))
-        try:
-            yield
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", old)
-
-    return _cm()
 
 
 def _read(spark: SparkSession, sf_dir: str, name: str,
@@ -676,20 +648,14 @@ def q_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _event_stream(spark: SparkSession, sf_dir: str, prefix: str) -> tuple:
-    """(events, stream, tmp) for a streaming gate row: the events table, a
-    file-source stream over a private copy of its parquet, and the fresh
-    temp dir holding that copy (the row's sink and checkpoint go there)."""
-    import shutil
-    import tempfile
-
+def _event_stream(spark: SparkSession, sf_dir: str) -> tuple:
+    """(events, stream) for a streaming gate row: the events table and a
+    file-source stream over the same parquet, read in place. The path is a
+    glob because a file source given a plain file path fails ("Option
+    'basePath' must be a directory")."""
     ev = _read(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix=prefix)
-    src = os.path.join(tmp, "src")
-    os.makedirs(src)
-    shutil.copy(os.path.join(sf_dir, "events.parquet"),
-                os.path.join(src, "events.parquet"))
-    return ev, spark.readStream.schema(ev.schema).parquet(src), tmp
+    return ev, spark.readStream.schema(ev.schema).parquet(
+        os.path.join(sf_dir, "events.parque[t]"))
 
 
 def q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -700,11 +666,10 @@ def q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin; stream ≡ batch on a bounded input is Structured Streaming's
     exactness contract, and this row makes the driver gate verify it
     cross-engine instead of only batch-parity pytest."""
-    import uuid
-
+    from pyradiomics_spark.streaming.runner import run_stream
     from pyradiomics_spark.streaming.sessions import stream_tumbling
 
-    _, stream, tmp = _event_stream(spark, sf_dir, "pyrs_stream_gate_")
+    _, stream = _event_stream(spark, sf_dir)
     # watermarks require TIMESTAMP (ltz); the parquet is ntz — cast in
     # (session tz is UTC) and cast the window start back to ntz on output
     # so the gate schema matches the batch twin and the DuckDB oracle.
@@ -712,14 +677,8 @@ def q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = stream_tumbling(
         stream, "user_id", "ts", width="1 hour", watermark="1 hour",
         agg_cols={"sum_value_raw": F.sum("value")})
-    name = f"stream_tumbling_{uuid.uuid4().hex[:8]}"
-    with _stream_shuffle_partitions(spark):
-        q = (agg.writeStream.format("memory").queryName(name)
-             .outputMode("complete").trigger(availableNow=True)
-             .option("checkpointLocation", os.path.join(tmp, "ckpt")).start())
-        q.awaitTermination()
     return (
-        spark.table(name)
+        run_stream(agg, "complete")
         .select(
             "user_id",
             F.col("window_start").cast("timestamp_ntz").alias("hour_start"),
@@ -736,23 +695,16 @@ def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     through the REAL streaming engine (file source, availableNow,
     complete-mode memory sink). Oracle replays the slide-aligned window
     assignment as time_bucket(1h) - k·1h for k in {0,1}."""
-    import uuid
-
+    from pyradiomics_spark.streaming.runner import run_stream
     from pyradiomics_spark.streaming.sessions import stream_sliding
 
-    _, stream, tmp = _event_stream(spark, sf_dir, "pyrs_stream_gate_")
+    _, stream = _event_stream(spark, sf_dir)
     stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
     agg = stream_sliding(
         stream, "user_id", "ts", width="2 hours", slide="1 hour",
         watermark="1 hour", agg_cols={"sum_value_raw": F.sum("value")})
-    name = f"stream_sliding_{uuid.uuid4().hex[:8]}"
-    with _stream_shuffle_partitions(spark):
-        q = (agg.writeStream.format("memory").queryName(name)
-             .outputMode("complete").trigger(availableNow=True)
-             .option("checkpointLocation", os.path.join(tmp, "ckpt")).start())
-        q.awaitTermination()
     return (
-        spark.table(name)
+        run_stream(agg, "complete")
         .select(
             "user_id",
             F.col("window_start").cast("timestamp_ntz")
@@ -772,8 +724,9 @@ def q_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     residual); stream-static equi-joins need no watermark state. Oracle:
     the same inequality-join SQL as the batch `interval_join` row."""
     from pyradiomics_spark.operators.intervals import interval_join
+    from pyradiomics_spark.streaming.runner import run_stream
 
-    ev, stream, tmp = _event_stream(spark, sf_dir, "pyrs_stream_gate_")
+    ev, stream = _event_stream(spark, sf_dir)
     stream = stream.select("event_id", "ts")
     anchors = ev.where(F.col("event_id") % 97 == 0).select(
         F.col("event_id").alias("iv_id"),
@@ -781,22 +734,7 @@ def q_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("ts") + F.expr("INTERVAL 2 HOURS")).alias("iv_hi"))
     out = interval_join(stream, anchors, "ts", "iv_lo", "iv_hi",
                         bucket_width=3600.0)
-    # parquet file sink, not the memory sink: this row emits 287k join
-    # rows at sf0.1 and the memory sink funnels every one through a
-    # driver collect (measured 3.5–3.8 s vs 1.2–1.7 s; append-mode only —
-    # the update/complete-mode gate rows must keep the memory sink).
-    # Executors write, the gate reads the committed files back.
-    opath = os.path.join(tmp, "out")
-    with _stream_shuffle_partitions(spark):
-        q = (out.select("event_id", "iv_id")
-             .writeStream.format("parquet")
-             .outputMode("append").trigger(availableNow=True)
-             .option("path", opath)
-             .option("checkpointLocation", os.path.join(tmp, "ckpt")).start())
-        q.awaitTermination()
-    # explicit schema: the read never infers from the sink's files, so a
-    # sink that committed no data file still reads as an empty typed frame
-    return (spark.read.schema("event_id long, iv_id long").parquet(opath)
+    return (run_stream(out.select("event_id", "iv_id"), "append")
             .orderBy("event_id", "iv_id"))
 
 
@@ -808,24 +746,17 @@ def q_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB has no session_window, but the semantics are exactly
     expressible; this closes the 'streaming session_window has no DuckDB
     twin' gap (NEXT.md r2 item 4)."""
-    import uuid
-
+    from pyradiomics_spark.streaming.runner import run_stream
     from pyradiomics_spark.streaming.sessions import stream_sessionize
 
-    _, stream, tmp = _event_stream(spark, sf_dir, "pyrs_stream_sess_")
+    _, stream = _event_stream(spark, sf_dir)
     stream = (stream
               .where(F.col("user_id") < 50)
               .withColumn("ts", F.col("ts").cast("timestamp")))
     agg = stream_sessionize(stream, "user_id", "ts", gap="30 minutes",
                             watermark="1 hour")
-    name = f"stream_sessionize_{uuid.uuid4().hex[:8]}"
-    with _stream_shuffle_partitions(spark):
-        q = (agg.writeStream.format("memory").queryName(name)
-             .outputMode("complete").trigger(availableNow=True)
-             .option("checkpointLocation", os.path.join(tmp, "ckpt")).start())
-        q.awaitTermination()
     return (
-        spark.table(name)
+        run_stream(agg, "complete")
         .select(
             "user_id",
             F.col("session_start").cast("timestamp_ntz").alias("session_start"),
@@ -927,30 +858,20 @@ def q_stream_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch SQL replaying the hour bucketing and the md5 cell hashes;
     stream ≡ batch on bounded input is the exactness contract, and the
     sketch cells are integer-exact."""
-    import shutil
-    import uuid
-
+    from pyradiomics_spark.streaming.runner import run_stream
     from pyradiomics_spark.streaming.sessions import stream_cms
 
-    _, stream, tmp = _event_stream(spark, sf_dir, "pyrs_stream_cms_")
+    _, stream = _event_stream(spark, sf_dir)
     stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
     agg = stream_cms(stream, "ts", "event_type", width="1 hour",
                      watermark="1 hour", sketch_width=64, depth=2, seed=5)
-    name = f"stream_cms_{uuid.uuid4().hex[:8]}"
-    with _stream_shuffle_partitions(spark):
-        q = (agg.writeStream.format("memory").queryName(name)
-             .outputMode("complete").trigger(availableNow=True)
-             .option("checkpointLocation", os.path.join(tmp, "ckpt")).start())
-        q.awaitTermination()
-    out = (
-        spark.table(name)
+    return (
+        run_stream(agg, "complete")
         .select(F.col("window_start").cast("timestamp_ntz")
                 .alias("window_start"),
                 F.col("d").cast("long").alias("d"), "cell", "cnt")
         .orderBy("window_start", "d", "cell")
     )
-    shutil.rmtree(tmp, ignore_errors=True)
-    return out
 
 
 def q_bloom_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2924,25 +2845,22 @@ def q_stream_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch asof_join row. Stream ≡ batch here because each micro-batch
     joins against the full static history — the contract the sink's
     docstring pins."""
+    from pyradiomics_spark.streaming.runner import run_sink
     from pyradiomics_spark.streaming.sessions import stream_asof_sink
 
-    ev, stream, tmp = _event_stream(spark, sf_dir, "pyrs_stream_asof_")
+    ev, stream = _event_stream(spark, sf_dir)
     stream = (stream
               .where(F.col("event_type") == "purchase")
               .select("event_id", "user_id", "ts", "value"))
     signups = ev.where(F.col("event_type") == "signup").select(
         "user_id", F.col("ts").alias("signup_ts"),
         F.col("value").alias("signup_value"))
-    out = os.path.join(tmp, "out")
-    with _stream_shuffle_partitions(spark):
-        q = (stream_asof_sink(
-                stream, signups, on="user_id", left_ts="ts",
-                right_ts="signup_ts", out_path=out,
-                checkpoint=os.path.join(tmp, "ckpt"))
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
+    tmp = run_sink(spark, lambda tmp: stream_asof_sink(
+        stream, signups, on="user_id", left_ts="ts", right_ts="signup_ts",
+        out_path=os.path.join(tmp, "out"),
+        checkpoint=os.path.join(tmp, "ckpt")))
     return (
-        spark.read.parquet(out)
+        spark.read.parquet(os.path.join(tmp, "out"))
         .select("event_id", "user_id", "signup_ts",
                 _rnd("signup_value", 6).alias("signup_value"))
         .orderBy("event_id")
@@ -3513,20 +3431,13 @@ def q_stream_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     this single-file replay the emitted set equals the batch operator
     exactly, so the oracle is the SAME window SQL as the `scd2` gate —
     the streaming engine is the thing under test."""
-    import uuid
-
+    from pyradiomics_spark.streaming.runner import run_stream
     from pyradiomics_spark.streaming.stateful import stream_scd2
 
-    _, stream, tmp = _event_stream(spark, sf_dir, "pyrs_stream_scd2_")
+    _, stream = _event_stream(spark, sf_dir)
     stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
     out = stream_scd2(stream, "user_id", "ts", "event_type", "event_id")
-    name = f"stream_scd2_{uuid.uuid4().hex[:8]}"
-    with _stream_shuffle_partitions(spark):
-        q = (out.writeStream.format("memory").queryName(name)
-             .outputMode("update").trigger(availableNow=True)
-             .option("checkpointLocation", os.path.join(tmp, "ckpt")).start())
-        q.awaitTermination()
-    return (spark.table(name).select(
+    return (run_stream(out, "update").select(
         F.col("ent").cast("long").alias("user_id"),
         F.col("attr").alias("event_type"),
         F.col("valid_from").cast("timestamp_ntz").alias("valid_from"),
@@ -4271,22 +4182,14 @@ def q_stream_rate_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
     day window carried via applyInPandasWithState, first 2 events pass.
     Single-file availableNow replay ⇒ decisions equal the batch
     row_number twin exactly."""
-    import uuid
-
+    from pyradiomics_spark.streaming.runner import run_stream
     from pyradiomics_spark.streaming.stateful import stream_rate_limit
 
-    _, stream, tmp = _event_stream(spark, sf_dir, "pyrs_rl_gate_")
+    _, stream = _event_stream(spark, sf_dir)
     stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
     out = stream_rate_limit(stream, "user_id", "ts", "event_id",
                             limit=2, window_seconds=86400)
-    name = f"rl_{uuid.uuid4().hex[:8]}"
-    with _stream_shuffle_partitions(spark):
-        q = (out.writeStream.format("memory").queryName(name)
-             .outputMode("append").trigger(availableNow=True)
-             .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-             .start())
-        q.awaitTermination()
-    return (spark.table(name)
+    return (run_stream(out, "append")
             .select(F.col("key").alias("user_id"),
                     F.col("tie").alias("event_id"),
                     F.col("allowed"))
@@ -4366,21 +4269,13 @@ def q_stream_running_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     availableNow replay ⇒ the final emitted state equals the batch
     aggregate; the DuckDB twin replays the explicit sum/sumsq op
     tree."""
-    import uuid
-
+    from pyradiomics_spark.streaming.runner import run_stream
     from pyradiomics_spark.streaming.stateful import running_entity_stats
 
-    _, stream, tmp = _event_stream(spark, sf_dir, "pyrs_rs_gate_")
+    _, stream = _event_stream(spark, sf_dir)
     stream = stream.withColumn("ent", F.col("user_id").cast("string"))
     out = running_entity_stats(stream, "ent", "value")
-    name = f"rs_{uuid.uuid4().hex[:8]}"
-    with _stream_shuffle_partitions(spark):
-        q = (out.writeStream.format("memory").queryName(name)
-             .outputMode("update").trigger(availableNow=True)
-             .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-             .start())
-        q.awaitTermination()
-    return (spark.table(name)
+    return (run_stream(out, "update")
             .select("entity", F.col("cnt").cast("long").alias("cnt"),
                     _rnd("mean", 6).alias("mean"),
                     _rnd("m2", 6).alias("m2"))
@@ -4395,22 +4290,14 @@ def q_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     ⇒ per-conversion pairs equal the batch window bookends; the DuckDB
     twin is the IGNORE-NULLS running-bookend window filtered to
     conversions."""
-    import uuid
-
+    from pyradiomics_spark.streaming.runner import run_stream
     from pyradiomics_spark.streaming.stateful import stream_attribution
 
-    _, stream, tmp = _event_stream(spark, sf_dir, "pyrs_attr_gate_")
+    _, stream = _event_stream(spark, sf_dir)
     stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
     out = stream_attribution(stream, "user_id", "ts", "event_type",
                              "event_id", "purchase")
-    name = f"attr_{uuid.uuid4().hex[:8]}"
-    with _stream_shuffle_partitions(spark):
-        q = (out.writeStream.format("memory").queryName(name)
-             .outputMode("append").trigger(availableNow=True)
-             .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-             .start())
-        q.awaitTermination()
-    return (spark.table(name)
+    return (run_stream(out, "append")
             .select(F.col("key").alias("user_id"),
                     F.col("tie").alias("event_id"),
                     F.coalesce(F.col("first_touch"), F.lit("(none)"))

@@ -80,7 +80,7 @@ def main() -> None:
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else None
 
-    from pyradiomics_spark.session import get_spark
+    from pyradiomics_spark.session import get_spark, scope
 
     import __spark_entry__ as e
 
@@ -168,7 +168,10 @@ def main() -> None:
         if name not in qs:
             continue
         t0 = time.time()
-        _count(qs[name](spark, sf_dir))
+        # the scope gives back each query's checkpoints, caches, streaming
+        # views and temp dirs before the next one runs
+        with scope():
+            _count(qs[name](spark, sf_dir))
         timings[name] = round(time.time() - t0, 3)
 
     # sustained extraction throughput: the sf0.1 documents table (5k rows)

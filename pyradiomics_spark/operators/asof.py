@@ -98,29 +98,6 @@ def _dedupe_right_ties(right: DataFrame, keys: list, right_ts: str,
         *keys, right_ts, *[F.col("__p")[c].alias(c) for c in right_payload])
 
 
-def asof_join_auto(
-    left: DataFrame,
-    right: DataFrame,
-    on,
-    left_ts: str,
-    right_ts: str,
-    allow_exact_matches: bool = True,
-    avg_group_rows: int | None = None,
-) -> DataFrame:
-    """Physical-strategy dispatch. Measured head-to-head (BENCH context):
-    the union+window form wins across payload widths (the right row rides
-    as one struct, so the plan does not grow with them) — one window pass,
-    whole-stage codegen, no per-group Python overhead. The
-    cogrouped merge_asof kernel only wins when per-key groups are LARGE
-    (≥ ~10k rows/key), where one Arrow pass beats many window fills; with
-    small groups its per-group pandas overhead (~10 ms × n_keys) dominates.
-    Callers that know their group sizes pass ``avg_group_rows``."""
-    if avg_group_rows is not None and avg_group_rows >= 10_000:
-        return asof_join_merge(left, right, on, left_ts, right_ts,
-                               allow_exact_matches)
-    return asof_join(left, right, on, left_ts, right_ts, allow_exact_matches)
-
-
 def asof_join(
     left: DataFrame,
     right: DataFrame,

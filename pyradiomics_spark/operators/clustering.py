@@ -127,7 +127,7 @@ def assign_cells(
     would be a ~10⁶-node expression tree (Catalyst analysis blowup, 64KB
     codegen method limit). ``auto`` dispatches on EXPR_MAX_TERMS, the same
     small/large boundary pattern as the reference's C dispatch
-    (/root/reference/radiomics/base.py:181-198) and asof_join_auto."""
+    (radiomics/base.py:181-198)."""
     from pyradiomics_spark.operators.similarity import _nullify_partial
 
     cents = np.asarray(centroids, dtype=float)

@@ -7,18 +7,20 @@ groups stay memory-resident (the analog of the reference's ``voxelBatch``
 memory control, /root/reference/radiomics/base.py:214-237).
 
 ``checkpoint``/``cache`` are the only places the engine pins data in the
-session; ``release`` and ``scope()`` give it back.
+session; ``release`` and ``scope()`` give it back. ``defer`` hands any other
+cleanup (a streaming run's memory view and temp dir) to the same scope.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 from contextlib import contextmanager
 from contextvars import ContextVar
 
 from pyspark.sql import DataFrame, SparkSession
 
-# one list of owned frames per open scope, innermost last
+# one list of owned frames and cleanups per open scope, innermost last
 _SCOPES: ContextVar[tuple] = ContextVar("pyrs_scopes", default=())
 
 
@@ -59,10 +61,10 @@ def get_spark(
     return builder.getOrCreate()
 
 
-def _own(df: DataFrame) -> DataFrame:
+def _own(x):
     if _SCOPES.get():
-        _SCOPES.get()[-1].append(df)
-    return df
+        _SCOPES.get()[-1].append(x)
+    return x
 
 
 def checkpoint(df: DataFrame) -> DataFrame:
@@ -87,15 +89,25 @@ def release(df: DataFrame) -> None:
         plan.rdd().unpersist(False)
 
 
+def defer(cleanup: Callable[[], None]) -> None:
+    """Run ``cleanup`` when the innermost open ``scope()`` exits; outside
+    any scope, never (nothing is tracked there, as with ``checkpoint``)."""
+    _own(cleanup)
+
+
 @contextmanager
 def scope():
     """On exit, also on an exception, release what ``checkpoint``/``cache``
-    made while this was the innermost scope. Usable as a decorator."""
+    made and run what ``defer`` was given while this was the innermost
+    scope. Usable as a decorator."""
     owned: list = []
     token = _SCOPES.set(_SCOPES.get() + (owned,))
     try:
         yield
     finally:
         _SCOPES.reset(token)
-        for df in owned:
-            release(df)
+        for x in owned:
+            if isinstance(x, DataFrame):
+                release(x)
+            else:
+                x()

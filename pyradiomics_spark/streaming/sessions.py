@@ -10,9 +10,12 @@ These wrappers put the batch semantics on a stream:
   extraction operator is stateless per row, so it lifts to streams as-is
   via the same mapInArrow)
 
-All return streaming DataFrames; callers attach ``writeStream`` (tests use
-``trigger(availableNow=True)`` + memory sink). The same functions accept
-batch DataFrames (minus watermark) — one code path, two execution modes.
+All return streaming DataFrames, and ``streaming.runner.run_stream`` runs
+one to completion and hands its result back as a batch frame; the output
+mode picks the sink. ``stream_asof_sink`` is the exception: it builds its
+own exactly-once ``foreachBatch`` writer, which ``runner.run_sink`` runs.
+The same functions accept batch DataFrames (minus watermark) — one code
+path, two execution modes.
 """
 
 from __future__ import annotations
@@ -167,8 +170,8 @@ def stream_training_pipeline(
     """Composed streaming training-data pipeline: watermarked content dedup
     → feature extraction — the batch pipeline's front half lifted to a
     stream with bounded state (extraction is stateless, dedup state evicts
-    past the watermark). Returns the streaming feature DataFrame; attach
-    ``writeStream``, or feed the result to ``stream_asof_sink`` for
+    past the watermark). Returns the streaming feature DataFrame; run it
+    with ``runner.run_stream``, or feed it to ``stream_asof_sink`` for
     point-in-time serving against a static snapshot. Batch DataFrames run
     the same code path (parity asserted in tests)."""
     deduped = stream_dedup_exact(
@@ -199,7 +202,7 @@ def stream_asof_sink(
     overwrites its own partition instead of appending duplicates. (A blind
     ``mode("append")`` here would only be at-least-once.)
 
-    Returns the DataStreamWriter (caller `.start()`s it).
+    Returns the DataStreamWriter; ``runner.run_sink`` runs it.
     """
     from pyradiomics_spark.operators.asof import (
         _as_list, _dedupe_right_ties, asof_join)

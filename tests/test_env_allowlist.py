@@ -1,6 +1,7 @@
-"""No hidden switches: the package reads only the deployment environment
-variables listed here. A behavior toggle belongs in ``ExtractionSettings``
-or a function parameter, where callers and tests can see it."""
+"""No hidden switches: the package and the driver entry read only the
+deployment environment variables listed here. A behavior toggle belongs in
+``ExtractionSettings`` or a function parameter, where callers and tests can
+see it."""
 
 import ast
 from pathlib import Path
@@ -16,6 +17,7 @@ ALLOWED = {
 }
 
 PKG = Path(pyradiomics_spark.__file__).parent
+ENTRY = PKG.parent / "__spark_entry__.py"
 
 
 def _is_environ(node) -> bool:
@@ -102,13 +104,21 @@ def test_scanner_sees_every_read_form():
         (9, None), (10, None)]
 
 
-def test_package_reads_only_allowlisted_env_vars():
+def _bad_reads(path: Path) -> list:
     bad = []
-    for path in sorted(PKG.rglob("*.py")):
-        for line, names in env_reads(path.read_text()):
-            where = f"{path.relative_to(PKG.parent)}:{line}"
-            if names is None:
-                bad.append(f"{where}: environment access with no literal name")
-            elif names - ALLOWED:
-                bad.append(f"{where}: {sorted(names - ALLOWED)}")
+    for line, names in env_reads(path.read_text()):
+        where = f"{path.relative_to(PKG.parent)}:{line}"
+        if names is None:
+            bad.append(f"{where}: environment access with no literal name")
+        elif names - ALLOWED:
+            bad.append(f"{where}: {sorted(names - ALLOWED)}")
+    return bad
+
+
+def test_package_reads_only_allowlisted_env_vars():
+    bad = [b for path in sorted(PKG.rglob("*.py")) for b in _bad_reads(path)]
     assert not bad, bad
+
+
+def test_entry_reads_only_allowlisted_env_vars():
+    assert not _bad_reads(ENTRY), _bad_reads(ENTRY)

@@ -1,7 +1,7 @@
-"""Scoped materialization (session.checkpoint / cache / release / scope):
-every iterative operator and the curation plan give back what they pinned,
-on a clean exit and when the body raises, and a bare call keeps only the
-blocks its returned lineage reads.
+"""Scoped materialization (session.checkpoint / cache / release / defer /
+scope): every iterative operator and the curation plan give back what they
+pinned, on a clean exit and when the body raises, and a bare call keeps only
+the blocks its returned lineage reads.
 
 Counts compare the SET of persistent RDD ids before and after, so a
 ContextCleaner sweep of an older test's blocks cannot mask a new one."""
@@ -15,7 +15,8 @@ from pyradiomics_spark.operators.graph import (hits, kcore_peel,
                                                label_propagation, pagerank)
 from pyradiomics_spark.plans import curation
 from pyradiomics_spark.plans.curation import curate
-from pyradiomics_spark.session import cache, checkpoint, release, scope
+from pyradiomics_spark.session import (cache, checkpoint, defer, release,
+                                       scope)
 
 
 def _persisted(spark) -> set:
@@ -154,3 +155,24 @@ def test_scope_releases_its_caches_and_leaves_the_callers(spark):
     assert len(_persisted(spark) - before) == 1
     release(theirs)
     assert _persisted(spark) - before == set() and not theirs.is_cached
+
+
+def test_scope_runs_deferred_cleanup_when_the_body_raises(spark):
+    ran = []
+    before = _persisted(spark)
+    with pytest.raises(RuntimeError, match="body failed"):
+        with scope():
+            ours = checkpoint(spark.range(10))
+            with scope():
+                defer(lambda: ran.append("inner"))
+            assert ran == ["inner"]
+            defer(lambda: ran.append("outer"))
+            raise RuntimeError("body failed")
+    assert ran == ["inner", "outer"]
+    assert _persisted(spark) - before == set()
+    with pytest.raises(Exception):
+        ours.count()
+    defer(lambda: ran.append("unscoped"))  # outside any scope: never runs
+    with scope():
+        pass
+    assert ran == ["inner", "outer"]

@@ -1,5 +1,5 @@
-"""Streaming sessionize (availableNow trigger, memory sink) and multimodal
-binary plumbing."""
+"""Streaming operators run through the streaming runner (availableNow,
+memory or file sink by output mode) and multimodal binary plumbing."""
 
 import shutil
 import tempfile
@@ -8,6 +8,8 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from pyradiomics_spark.session import scope
+from pyradiomics_spark.streaming.runner import run_stream
 from pyradiomics_spark.streaming.sessions import (
     stream_sessionize, stream_sliding, stream_tumbling)
 from pyradiomics_spark.multimodal.binaryops import (
@@ -29,11 +31,9 @@ def event_dir(spark):
     shutil.rmtree(d, ignore_errors=True)
 
 
-def _run_stream(spark, df, name):
-    q = (df.writeStream.format("memory").queryName(name)
-         .outputMode("complete").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    return spark.sql(f"select * from {name}").toPandas()
+def _run_stream(df, mode="complete"):
+    with scope():
+        return run_stream(df, mode).toPandas()
 
 
 def test_stream_sessionize_matches_batch(spark, event_dir):
@@ -41,7 +41,7 @@ def test_stream_sessionize_matches_batch(spark, event_dir):
     stream = spark.readStream.schema(schema).parquet(f"{event_dir}/data")
     assert stream.isStreaming
     sess = stream_sessionize(stream, "ent", "ts", gap="30 minutes")
-    out = _run_stream(spark, sess, "sess_out").sort_values(
+    out = _run_stream(sess).sort_values(
         ["ent", "session_start"]).reset_index(drop=True)
     # entity a: two sessions (00:00-00:10, 02:00-02:05); b: two singletons
     assert out[out.ent == "a"]["n_events"].tolist() == [2, 2]
@@ -57,8 +57,7 @@ def test_stream_sessionize_matches_batch(spark, event_dir):
 def test_stream_tumbling(spark, event_dir):
     schema = "ent string, ts timestamp, v double"
     stream = spark.readStream.schema(schema).parquet(f"{event_dir}/data")
-    out = _run_stream(
-        spark, stream_tumbling(stream, "ent", "ts", width="1 hour"), "tumb_out")
+    out = _run_stream(stream_tumbling(stream, "ent", "ts", width="1 hour"))
     a = out[out.ent == "a"].sort_values("window_start")
     assert a["n_events"].tolist() == [2, 2]
 
@@ -67,11 +66,9 @@ def test_stream_sliding_matches_batch(spark, event_dir):
     schema = "ent string, ts timestamp, v double"
     stream = spark.readStream.schema(schema).parquet(f"{event_dir}/data")
     out = _run_stream(
-        spark,
         stream_sliding(stream, "ent", "ts", width="2 hours",
-                       slide="1 hour", agg_cols={"sv": F.sum("v")}),
-        "slide_out").sort_values(["ent", "window_start"]).reset_index(
-            drop=True)
+                       slide="1 hour", agg_cols={"sv": F.sum("v")})
+    ).sort_values(["ent", "window_start"]).reset_index(drop=True)
     # every event lands in exactly width/slide = 2 windows
     assert out["n_events"].sum() == 2 * 6
     # a's 00:00+00:10 pair: windows starting 23:00 and 00:00 both hold 2
@@ -104,13 +101,8 @@ def test_stream_interval_join_matches_batch(spark, event_dir):
     stream = spark.readStream.schema(schema).parquet(f"{event_dir}/data")
     out = interval_join(stream, iv, "ts", "lo", "hi", 1800.0)
     assert out.isStreaming
-    import uuid
-    name = f"ivj_{uuid.uuid4().hex[:6]}"
-    q = (out.writeStream.format("memory").queryName(name)
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(120)
     got = sorted((r.ent, str(r.ts), r.iv_id)
-                 for r in spark.sql(f"select * from {name}").collect())
+                 for r in _run_stream(out, "append").itertuples())
     want = sorted((r.ent, str(r.ts), r.iv_id) for r in interval_join(
         batch, iv, "ts", "lo", "hi", 1800.0).collect())
     assert got == want and len(got) == 6
@@ -134,8 +126,9 @@ def test_stream_interval_join_gate_empty_result_is_typed(spark, tmp_path):
         "event_type": ["view"] * n,
         "value": [1.0] * n,
         "props": ["{}"] * n}), tmp_path / "events.parquet")
-    out = e.q_stream_interval_join(spark, str(tmp_path))
-    assert out.count() == 0
+    with scope():
+        out = e.q_stream_interval_join(spark, str(tmp_path))
+        assert out.count() == 0
     assert [(f.name, f.dataType.simpleString()) for f in out.schema] == [
         ("event_id", "bigint"), ("iv_id", "bigint")]
 
@@ -180,10 +173,7 @@ def test_stream_extract(spark, event_dir, tmp_path):
         stream, keys=("url", "warc_ts"),
         settings=ExtractionSettings(bin_width=1.0, feature_classes=("firstorder",)))
     assert out.isStreaming
-    q = (out.writeStream.format("memory").queryName("feat_stream")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = spark.sql("select * from feat_stream").toPandas()
+    got = _run_stream(out, "append")
     assert len(got) == spark.read.parquet(src_dir).count()
     assert "firstorder_Mean" in got.columns
     assert got["firstorder_Mean"].notna().all()
@@ -205,12 +195,7 @@ def test_stateful_running_stats(spark, tmp_path):
 
     stream = spark.readStream.schema("ent string, value double") \
         .option("maxFilesPerTrigger", 1).parquet(src)
-    out = running_entity_stats(stream)
-    q = (out.writeStream.format("memory").queryName("run_stats")
-         .outputMode("update").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = spark.sql(
-        "select * from run_stats").toPandas()
+    got = _run_stream(running_entity_stats(stream), "update")
     # final running state = the row with the largest cnt per entity
     # (cnt is monotone; positional 'last' would depend on sink row order)
     final = got.sort_values("cnt").groupby("entity").last()
@@ -244,10 +229,7 @@ def test_stream_dedup_exact(spark, tmp_path):
               .option("maxFilesPerTrigger", 1).parquet(src))
     out = stream_dedup_exact(stream, "doc_id", "ts", watermark="1 hour",
                              by_content="text")
-    q = (out.writeStream.format("memory").queryName("dedup_out")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = spark.sql("select * from dedup_out").toPandas()
+    got = _run_stream(out, "append")
     # distinct contents: alpha, beta, gamma
     assert sorted(got.text.tolist()) == ["alpha", "beta", "gamma"]
 
@@ -276,11 +258,8 @@ def test_stream_training_pipeline_matches_batch(spark, tmp_path):
     stream = (spark.readStream
               .schema("url string, warc_ts timestamp, text string")
               .option("maxFilesPerTrigger", 1).parquet(src))
-    out = stream_training_pipeline(stream, settings=settings)
-    q = (out.writeStream.format("memory").queryName("pipe_out")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = spark.sql("select * from pipe_out").toPandas()
+    got = _run_stream(stream_training_pipeline(stream, settings=settings),
+                      "append")
     assert len(got) == 3  # u2 is a content dup of u0
 
     batch = stream_training_pipeline(
@@ -405,11 +384,8 @@ def test_stream_scd2_multibatch_equals_batch(spark, tmp_path):
 
     stream = spark.readStream.schema(schema) \
         .option("maxFilesPerTrigger", 1).parquet(src)
-    out = stream_scd2(stream, "uid", "ts", "lang", "eid")
-    q = (out.writeStream.format("memory").queryName("scd2_stream")
-         .outputMode("update").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = spark.sql("select * from scd2_stream").toPandas()
+    got = _run_stream(stream_scd2(stream, "uid", "ts", "lang", "eid"),
+                      "update")
     # latest emission per (ent, valid_from): closed supersedes open —
     # prefer the row with is_current=False, then the largest n_events
     got = (got.sort_values(["is_current", "n_events"],
@@ -451,11 +427,8 @@ def test_stream_rate_limit_multibatch_quota(spark, tmp_path):
         .option("maxFilesPerTrigger", 1).parquet(src)
     out = stream_rate_limit(stream, "key", "ts", "eid",
                             limit=2, window_seconds=3600)
-    q = (out.writeStream.format("memory").queryName("rl_stream")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(120)
     got = {r.tie: r.allowed
-           for r in spark.sql("select * from rl_stream").collect()}
+           for r in _run_stream(out, "append").itertuples()}
     assert got == {0: True, 1: True, 2: False, 3: True,
                    4: False, 5: True}
 
@@ -511,11 +484,8 @@ def test_stream_attribution_multibatch_carries_bookends(spark, tmp_path):
     stream = spark.readStream.schema(schema) \
         .option("maxFilesPerTrigger", 1).parquet(src)
     out = stream_attribution(stream, "key", "ts", "et", "eid", "buy")
-    q = (out.writeStream.format("memory").queryName("attr_stream")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(120)
     got = {r.tie: (r.first_touch, r.last_touch)
-           for r in spark.sql("select * from attr_stream").collect()}
+           for r in _run_stream(out, "append").itertuples()}
     assert got == {1: ("ad", "ad"), 3: (None, None),
                    4: ("ad", "email"), 6: ("search", "search")}
 
@@ -541,11 +511,8 @@ def test_stream_attribution_single_batch_equals_batch_operator(
     df = spark.createDataFrame(rows, schema)
     df.coalesce(1).write.parquet(src)
     stream = spark.readStream.schema(schema).parquet(src)
-    out = stream_attribution(stream, "key", "ts", "et", "eid", "buy")
-    q = (out.writeStream.format("memory").queryName("attr_one_q")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = spark.sql("select * from attr_one_q").toPandas()
+    got = _run_stream(
+        stream_attribution(stream, "key", "ts", "et", "eid", "buy"), "append")
     # census the emitted pairs -> must equal the batch operator
     import collections
 

@@ -1,22 +1,25 @@
 """Local stand-in for the driver's correctness gate: run every
 ``__spark_entry__.queries()`` entry on Spark and its ``oracle_sql()`` twin on
 DuckDB over the same parquet, compare rows/columns/values order-insensitively.
-Each query runs in one ``session.scope()``; a query that leaves persistent
-RDDs behind that it did not find prints ``LEAK <name>: n`` and counts as a
-failure.
+Each query runs in one ``session.scope()``; a query that leaves anything
+behind that it did not find (persistent RDDs, temp views, ``pyrs_*`` entries
+in the system temp dir) prints ``LEAK <name>: ...`` and counts as a failure.
 
 Usage: python tools/check_oracle.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
 
+import glob
 import math
+import os
 import sys
+import tempfile
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
@@ -40,7 +43,7 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
     return df.sort_values(list(df.columns), kind="mergesort").reset_index(drop=True)
 
 
-STRICT = bool(int(__import__("os").environ.get("ORACLE_STRICT", "1")))
+STRICT = bool(int(os.environ.get("ORACLE_STRICT", "1")))
 
 
 def values_equal(a, b) -> bool:
@@ -107,8 +110,10 @@ def main() -> int:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
-    def persistent() -> set:
-        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+    def state() -> tuple:
+        return (set(spark.sparkContext._jsc.getPersistentRDDs().keySet()),
+                {t.name for t in spark.catalog.listTables() if t.isTemporary},
+                set(glob.glob(os.path.join(tempfile.gettempdir(), "pyrs_*"))))
 
     qs = e.queries()
     oracles = e.oracle_sql()
@@ -116,16 +121,18 @@ def main() -> int:
     for name, fn in qs.items():
         if only and name not in only:
             continue
-        before = persistent()
+        before = state()
         error = None
         try:
             with scope():
                 spark_pdf = fn(spark, sf_dir).toPandas()
         except Exception as ex:
             error = ex
-        leaked = len(persistent() - before)
+        leaked = [f"{len(a - b)} {what}" for what, b, a in zip(
+            ("persistent RDDs", "temp views", "pyrs_* temp entries"),
+            before, state()) if a - b]
         if leaked:
-            print(f"LEAK {name}: {leaked}")
+            print(f"LEAK {name}: " + ", ".join(leaked))
             failures += 1
         if error is not None:
             print(f"FAIL {name}: spark error {type(error).__name__}: {error}")
