@@ -50,12 +50,14 @@ def _rnd(col, n: int):
 
 
 def _ensure_package(spark: SparkSession) -> None:
-    """Ship pyradiomics_spark to executors via addPyFile — insurance for
-    harnesses whose Python workers don't inherit the repo on sys.path."""
-    sid = id(spark.sparkContext)
-    if sid in _PYFILES_SENT:
+    """Ship pyradiomics_spark to executors via addPyFile, once per Spark
+    application: the workers of a caller that has the repo on its driver
+    sys.path but not on PYTHONPATH cannot import it otherwise. ``entry``
+    and ``_read`` (every gate row's input) call it."""
+    app = spark.sparkContext.applicationId
+    if app in _PYFILES_SENT:
         return
-    _PYFILES_SENT.add(sid)
+    _PYFILES_SENT.add(app)
     try:
         import shutil
         import tempfile
@@ -137,6 +139,7 @@ def _scan_layout(path: str) -> tuple[int, int]:
 
 def _read(spark: SparkSession, sf_dir: str, name: str,
           fan: bool | None = None) -> DataFrame:
+    _ensure_package(spark)
     path = f"{sf_dir}/{name}.parquet"
     df = spark.read.parquet(path)
     splits, total = _scan_layout(path)
@@ -167,14 +170,29 @@ def _tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_TOKENS_SQL = """
-    SELECT doc_id,
-           generate_subscripts(toks, 1) - 1 AS pos,
-           unnest(toks) AS tok,
-           length(unnest(toks)) AS tok_len
-    FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
-    -- empty tokens filtered in outer query
-"""
+# SQL twin of _tokens
+_TOKENS_SQL = (
+    "SELECT doc_id, pos, tok, length(tok) AS tok_len FROM ("
+    " SELECT doc_id, generate_subscripts(toks, 1) - 1 AS pos, unnest(toks) AS tok"
+    " FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)"
+    ") WHERE tok <> ''"
+)
+
+
+def _embeddings(spark: SparkSession, sf_dir: str, alias: str = "embedding",
+                fan: bool | None = None) -> DataFrame:
+    """embeddings as (vec_id, <alias>) with the vector cast to double[]."""
+    return _read(spark, sf_dir, "embeddings", fan).select(
+        "vec_id",
+        F.transform("embedding", lambda x: x.cast("double")).alias(alias))
+
+
+# SQL twin of _embeddings (CTE emb, vector column v)
+_EMBEDDINGS_SQL = """
+            WITH emb AS (
+              SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v
+              FROM embeddings
+            )"""
 
 
 def q_fo_doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -340,27 +358,53 @@ def q_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("event_id")
 
 
+def _asof_gate(spark: SparkSession, sf_dir: str, join, **kw) -> DataFrame:
+    """The as-of gate rows' shared shape: split events into purchases and
+    signups, join each purchase to a signup of the same user with
+    ``join(purchases, signups, on="user_id", left_ts="ts",
+    right_ts="signup_ts", **kw)``, and select (event_id, user_id,
+    signup_ts, signup_value) by event_id."""
+    ev = _read(spark, sf_dir, "events")
+    purchases = ev.where(F.col("event_type") == "purchase").select(
+        "event_id", "user_id", "ts", "value")
+    signups = ev.where(F.col("event_type") == "signup").select(
+        F.col("user_id"), F.col("ts").alias("signup_ts"),
+        F.col("value").alias("signup_value"))
+    joined = join(purchases, signups, on="user_id", left_ts="ts",
+                  right_ts="signup_ts", **kw)
+    return joined.select(
+        "event_id", "user_id", F.col("signup_ts"),
+        _rnd("signup_value", 6).alias("signup_value"),
+    ).orderBy("event_id")
+
+
+# SQL twin of _asof_gate's inputs (CTEs purchases, signups)
+_ASOF_INPUTS_SQL = """
+            WITH purchases AS (
+              SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'
+            ), signups AS (
+              SELECT user_id, ts AS signup_ts, value AS signup_value
+              FROM events WHERE event_type = 'signup'
+            )"""
+
+
 def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Point-in-time as-of join (north_rule core): for each purchase event,
     the latest signup event of the same user with ts <= purchase ts."""
     from pyradiomics_spark.operators.asof import asof_join
 
-    ev = _read(spark, sf_dir, "events")
-    purchases = ev.where(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts", "value"
-    )
-    signups = ev.where(F.col("event_type") == "signup").select(
-        F.col("user_id"), F.col("ts").alias("signup_ts"),
-        F.col("value").alias("signup_value"),
-    )
-    joined = asof_join(
-        purchases, signups, on="user_id", left_ts="ts", right_ts="signup_ts"
-    )
-    return joined.select(
-        "event_id", "user_id",
-        F.col("signup_ts"),
-        _rnd("signup_value", 6).alias("signup_value"),
-    ).orderBy("event_id")
+    return _asof_gate(spark, sf_dir, asof_join)
+
+
+# oracle of asof_join, asof_join_salted and stream_asof
+_ASOF_JOIN_SQL = _ASOF_INPUTS_SQL + """
+            SELECT p.event_id, p.user_id, s.signup_ts,
+                   floor((s.signup_value) * 1e6 + 0.50000095367431640625) / 1e6 AS signup_value
+            FROM purchases p
+            ASOF LEFT JOIN signups s
+              ON p.user_id = s.user_id AND p.ts >= s.signup_ts
+            ORDER BY p.event_id
+        """
 
 
 def q_asof_join_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -369,19 +413,7 @@ def q_asof_join_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB's native forward ASOF (p.ts <= s.ts)."""
     from pyradiomics_spark.operators.asof import asof_join
 
-    ev = _read(spark, sf_dir, "events")
-    purchases = ev.where(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts", "value")
-    signups = ev.where(F.col("event_type") == "signup").select(
-        F.col("user_id"), F.col("ts").alias("signup_ts"),
-        F.col("value").alias("signup_value"))
-    joined = asof_join(
-        purchases, signups, on="user_id", left_ts="ts", right_ts="signup_ts",
-        direction="forward")
-    return joined.select(
-        "event_id", "user_id", F.col("signup_ts"),
-        _rnd("signup_value", 6).alias("signup_value"),
-    ).orderBy("event_id")
+    return _asof_gate(spark, sf_dir, asof_join, direction="forward")
 
 
 def q_asof_join_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -391,19 +423,7 @@ def q_asof_join_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ASOF joins combined with an interval-distance CASE."""
     from pyradiomics_spark.operators.asof import asof_join
 
-    ev = _read(spark, sf_dir, "events")
-    purchases = ev.where(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts", "value")
-    signups = ev.where(F.col("event_type") == "signup").select(
-        F.col("user_id"), F.col("ts").alias("signup_ts"),
-        F.col("value").alias("signup_value"))
-    joined = asof_join(
-        purchases, signups, on="user_id", left_ts="ts", right_ts="signup_ts",
-        direction="nearest")
-    return joined.select(
-        "event_id", "user_id", F.col("signup_ts"),
-        _rnd("signup_value", 6).alias("signup_value"),
-    ).orderBy("event_id")
+    return _asof_gate(spark, sf_dir, asof_join, direction="nearest")
 
 
 def q_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -589,22 +609,7 @@ def q_asof_join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     checked against the same DuckDB ASOF oracle."""
     from pyradiomics_spark.operators.salting import salted_asof_join
 
-    ev = _read(spark, sf_dir, "events")
-    purchases = ev.where(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts", "value"
-    )
-    signups = ev.where(F.col("event_type") == "signup").select(
-        F.col("user_id"), F.col("ts").alias("signup_ts"),
-        F.col("value").alias("signup_value"),
-    )
-    joined = salted_asof_join(
-        purchases, signups, on="user_id", left_ts="ts", right_ts="signup_ts",
-        buckets=4,
-    )
-    return joined.select(
-        "event_id", "user_id", F.col("signup_ts"),
-        _rnd("signup_value", 6).alias("signup_value"),
-    ).orderBy("event_id")
+    return _asof_gate(spark, sf_dir, salted_asof_join, buckets=4)
 
 
 def q_asof_join_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -646,6 +651,17 @@ def q_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("user_id", "hour_start")
     )
+
+
+# oracle of tumbling_window and stream_tumbling
+_TUMBLING_SQL = """
+            SELECT user_id,
+                   time_bucket(INTERVAL '1 hour', ts) AS hour_start,
+                   count(*) AS n_events,
+                   floor((sum(value)) * 1e6 + 0.50000095367431640625) / 1e6 AS sum_value
+            FROM events GROUP BY user_id, hour_start
+            ORDER BY user_id, hour_start
+        """
 
 
 def _event_stream(spark: SparkSession, sf_dir: str) -> tuple:
@@ -1001,6 +1017,20 @@ def q_ngtdm_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# SQL twin of operators.windows.ngtdm_window: each level's mean over its ±1
+# neighbours along pos, NULL without one (CTE terms)
+_NGTDM_TERMS_SQL = """
+            ), terms AS (
+              SELECT doc_id, level,
+                     CASE WHEN count(level) OVER w > 1
+                          THEN (sum(level) OVER w - level) / (count(level) OVER w - 1)
+                     END AS nbr_mean
+              FROM lv
+              WINDOW w AS (PARTITION BY doc_id ORDER BY pos
+                           ROWS BETWEEN 1 PRECEDING AND 1 FOLLOWING)
+            )"""
+
+
 def q_gldm_dependence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GLDM dependence counting as lag/lead windows (SURVEY §2.4)."""
     from pyradiomics_spark.operators.windows import gldm_window
@@ -1055,9 +1085,7 @@ def q_knn_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-3 ANN baseline: queries = vec_id < 3 rows."""
     from pyradiomics_spark.operators.similarity import brute_force_topk
 
-    emb = _read(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("embedding")
-    )
+    emb = _embeddings(spark, sf_dir)
     queries = emb.where(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
@@ -1075,6 +1103,37 @@ def q_lang_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _read(spark, sf_dir, "documents")
     out = detect_language(docs, "doc_id")
     return out.groupBy("lang_pred").agg(F.count("*").alias("n_docs")).orderBy("lang_pred")
+
+
+# SQL twin of functions.textstats.detect_language: per doc, the marker
+# languages ranked by hit count (CTEs markers, toks, hits, best; the prediction
+# is best.rn = 1)
+_LANG_PRED_SQL = """
+            WITH markers AS (
+              SELECT * FROM (VALUES
+                ('en','the'),('en','and'),('en','of'),('en','to'),('en','is'),
+                ('en','in'),('en','that'),('en','it'),('en','with'),('en','for'),
+                ('de','der'),('de','die'),('de','das'),('de','und'),('de','ist'),
+                ('de','nicht'),('de','mit'),('de','ein'),('de','zu'),('de','für'),
+                ('fr','le'),('fr','la'),('fr','les'),('fr','et'),('fr','est'),
+                ('fr','dans'),('fr','pour'),('fr','que'),('fr','une'),('fr','des'),
+                ('nl','de'),('nl','het'),('nl','een'),('nl','en'),('nl','van'),
+                ('nl','is'),('nl','dat'),('nl','niet'),('nl','met'),('nl','voor')
+              ) AS t(cand_lang, marker)
+            ), toks AS (
+              SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok
+              FROM documents
+            ), hits AS (
+              SELECT doc_id, cand_lang, count(*) AS h
+              FROM toks JOIN markers ON tok = marker
+              WHERE tok <> ''
+              GROUP BY doc_id, cand_lang
+            ), best AS (
+              SELECT doc_id, cand_lang,
+                     row_number() OVER (PARTITION BY doc_id
+                                        ORDER BY h DESC, cand_lang) AS rn
+              FROM hits
+            )"""
 
 
 def q_normalize_clamp(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1440,6 +1499,14 @@ def _doc_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
         "level", (F.col("tok_len") - F.min("tok_len").over(w) + 1).cast("long"))
 
 
+# SQL twin of _doc_levels (CTE lv)
+_DOC_LEVELS_SQL = """
+            WITH lv AS (
+              SELECT doc_id, pos,
+                     tok_len - min(tok_len) OVER (PARTITION BY doc_id) + 1 AS level
+              FROM (""" + _TOKENS_SQL + ")"
+
+
 def q_glcm_contrast_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FULL GLCM Contrast feature per doc, relationally: lag pairs →
     Σ p(i,j)·(i−j)². Symmetrization is a no-op for Contrast ((i−j)² is
@@ -1626,6 +1693,11 @@ def _embedding_dedup_expr(emb: DataFrame) -> DataFrame:
     )
 
 
+# the Arrow arm's bound: the driver holds the n×dim corpus and each task an
+# (Arrow batch × n) dot block, ≤ 128 MB of doubles at 4096 rows
+_EMBEDDING_DEDUP_MAX_ROWS = 4096
+
+
 def q_embedding_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-dup pairs by exact cosine ≥ 0.35 — the all-pairs
     diagnostic arm (the LSH-bucketed variant in operators.dedup is the
@@ -1641,25 +1713,30 @@ def q_embedding_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
       zip_with/aggregate expression produces (guide §4.2: hand whole
       batches to vectorized native code). ~10x less interpreted work
       than the n²/2 HOF folds.
-    * **Expression arm** (fallback): any null/ragged/NaN vector at
-      build time falls back to the pure zip_with+aggregate form, whose
-      null-propagation semantics are the contract.
+    * **Expression arm** (fallback): any null/ragged/NaN vector, or more
+      than _EMBEDDING_DEDUP_MAX_ROWS rows, falls back to the pure
+      zip_with+aggregate form, whose null-propagation semantics are the
+      contract.
+
+    The input check is one executor aggregate; the driver collects the
+    corpus only for the Arrow arm.
     """
     import numpy as np
 
-    emb = _read(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v"))
-    pdf = emb.toPandas()  # all-pairs arm: corpus must be modest anyway
-    vecs = list(pdf["v"])
-    clean = (len(pdf) > 0
-             and all(x is not None for x in vecs)
-             and len({len(x) for x in vecs}) == 1)
-    if clean:
-        M = np.stack([np.asarray(x, dtype=np.float64) for x in vecs])
-        clean = bool(np.isfinite(M).all())
-    if not clean:
+    emb = _embeddings(spark, sf_dir, "v")
+    v = F.col("v")
+    n, n_null, w_min, w_max, n_bad = emb.agg(
+        F.count("*"), F.count_if(v.isNull()),
+        F.min(F.size(v)), F.max(F.size(v)),
+        F.count_if(F.exists(v, lambda x: x.isNull() | F.isnan(x)
+                            | (F.abs(x) == float("inf")))),
+    ).first()
+    if not (0 < n <= _EMBEDDING_DEDUP_MAX_ROWS and n_null == 0
+            and w_min == w_max and n_bad == 0):
         out = _embedding_dedup_expr(emb)
     else:
+        pdf = emb.toPandas()
+        M = np.stack([np.asarray(x, dtype=np.float64) for x in pdf["v"]])
         ids_all = pdf["vec_id"].to_numpy(np.int64)
         dim = M.shape[1]
         nsq = np.zeros(len(M))
@@ -1692,10 +1769,8 @@ def q_embedding_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 yield _pd.DataFrame({"id_a": ia[r], "id_b": ids_b[c],
                                      "cosine": cos[r, c]})
 
-        out = _read(spark, sf_dir, "embeddings", fan=True).select(
-            "vec_id",
-            F.transform("embedding", lambda x: x.cast("double")).alias("v")
-        ).mapInPandas(score, "id_a long, id_b long, cosine double")
+        out = _embeddings(spark, sf_dir, "v", fan=True).mapInPandas(
+            score, "id_a long, id_b long, cosine double")
     return (out
             .select("id_a", "id_b", _rnd("cosine", 6).alias("cosine"))
             .orderBy("id_a", "id_b"))
@@ -1724,6 +1799,24 @@ def _simhash_sig(docs: DataFrame) -> DataFrame:
 
     return checkpoint(simhash_signatures_md5(docs, "doc_id", "text",
                                              bits=16))
+
+
+# SQL twin of _simhash_sig (operators.dedup.simhash_signatures_md5, 16
+# bits): per-bit signed sums over the hex digits of md5(tok) (CTEs toks, h,
+# sums), then _SIMHASH_VAL_SQL reassembles the bits
+_SIMHASH_SUMS_SQL = """toks AS (
+              SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents
+            ), h AS (
+              SELECT doc_id, md5(tok) AS h FROM toks WHERE tok <> ''
+            ), sums AS (
+              SELECT doc_id, """ + ",\n                     ".join(
+    "sum(CASE WHEN (((instr('0123456789abcdef', substring(h, "
+    f"{k // 4 + 1}, 1)) - 1) >> {k % 4}) & 1) = 1 THEN 1 ELSE -1 END) AS s{k}"
+    for k in range(16)) + """
+              FROM h GROUP BY doc_id
+            )"""
+_SIMHASH_VAL_SQL = " + ".join(
+    f"(CASE WHEN s{k} > 0 THEN {1 << k} ELSE 0 END)" for k in range(16))
 
 
 def q_simhash_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1841,6 +1934,23 @@ def q_unigram_logloss(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (out.select("doc_id", _rnd("unigram_logloss", 6)
                        .alias("unigram_logloss"))
             .orderBy("doc_id"))
+
+
+# SQL twin of textstats.unigram_logloss' corpus model: lowercased space
+# tokens and each term's probability (CTEs tk, tk2, counts, tot, probs)
+_UNIGRAM_PROBS_SQL = """
+            WITH tk AS (
+              SELECT doc_id, unnest(string_split(lower(text), ' ')) AS term
+              FROM documents
+            ), tk2 AS (
+              SELECT doc_id, term FROM tk WHERE term <> ''
+            ), counts AS (
+              SELECT term, count(*) AS tc FROM tk2 GROUP BY term
+            ), tot AS (
+              SELECT sum(tc) AS t FROM counts
+            ), probs AS (
+              SELECT term, tc / t AS p FROM counts CROSS JOIN tot
+            )"""
 
 
 def q_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1962,6 +2072,32 @@ def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
+# SQL twin of textstats.dsir_log_weights' per-term log importance ratio,
+# English target vs the raw corpus, add-one smoothed (CTEs tk, tk2, census,
+# tot, ratio)
+_DSIR_RATIO_SQL = """
+            WITH tk AS (
+              SELECT doc_id,
+                     CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS is_tgt,
+                     unnest(string_split(lower(text), ' ')) AS term
+              FROM documents
+            ), tk2 AS (
+              SELECT doc_id, is_tgt, term FROM tk WHERE term <> ''
+            ), census AS (
+              SELECT term, count(*) AS c_raw, sum(is_tgt) AS c_tgt
+              FROM tk2 GROUP BY term
+            ), tot AS (
+              SELECT sum(c_raw) AS n_raw, sum(c_tgt) AS n_tgt,
+                     count(*) AS v
+              FROM census
+            ), ratio AS (
+              SELECT term,
+                     ln((c_tgt + 1.0) / (n_tgt + 1.0 * v))
+                     - ln((c_raw + 1.0) / (n_raw + 1.0 * v)) AS lr
+              FROM census CROSS JOIN tot
+            )"""
+
+
 def q_snapshot_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Crawl-over-crawl vocabulary drift (functions/textstats.py
     snapshot_drift): JSD + top-10 probability movers between the two
@@ -1982,19 +2118,20 @@ def q_snapshot_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("term")
 
 
-def _synth_host_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _synth_host_edges(spark: SparkSession, sf_dir: str, n_hosts: int = 40,
+                      prefix: str = "h") -> DataFrame:
     """Deterministic host link graph keyed on md5 buckets of doc_id: each
-    document's host (md5 % 40) links to two md5-derived target hosts;
-    hosts in buckets >= 35 emit no out-edges, so they enter the graph as
-    pure sinks (dangling nodes — the PageRank mass-conservation path is
-    exercised, not just the join). Identical expression in the oracle
-    CTE ``b``/``e``."""
+    document's host (md5 % n_hosts) links to two md5-derived target hosts;
+    hosts in the top eighth of the buckets emit no out-edges, so they
+    enter the graph as pure sinks (dangling nodes — the PageRank
+    mass-conservation path is exercised, not just the join). Identical
+    expression in the oracle CTE ``b``/``e`` (_HOST_EDGES_SQL)."""
     d = _read(spark, sf_dir, "documents").select(
         F.col("doc_id").cast("string").alias("__k"))
 
     def bucket(col):
         return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast(
-            "long") % 40
+            "long") % n_hosts
 
     b = d.select(
         bucket(F.col("__k")).alias("sb"),
@@ -2002,13 +2139,33 @@ def _synth_host_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         bucket(F.concat(F.col("__k"), F.lit(":o2"))).alias("t2"))
 
     def host(c):
-        return F.concat(F.lit("h"), F.col(c).cast("string"))
+        return F.concat(F.lit(prefix), F.col(c).cast("string"))
 
-    e1 = b.where((F.col("sb") < 35) & (F.col("sb") != F.col("t1"))).select(
+    linked = F.col("sb") < n_hosts * 7 // 8
+    e1 = b.where(linked & (F.col("sb") != F.col("t1"))).select(
         host("sb").alias("src"), host("t1").alias("dst"))
-    e2 = b.where((F.col("sb") < 35) & (F.col("sb") != F.col("t2"))).select(
+    e2 = b.where(linked & (F.col("sb") != F.col("t2"))).select(
         host("sb").alias("src"), host("t2").alias("dst"))
     return e1.unionByName(e2)
+
+
+# SQL twin of _synth_host_edges (CTEs b, e)
+_HOST_EDGES_SQL = """
+            WITH b AS (
+              SELECT ('0x' || substr(md5(doc_id::VARCHAR), 1, 8))
+                       ::BIGINT % 40 AS sb,
+                     ('0x' || substr(md5(doc_id::VARCHAR || ':o1'), 1, 8))
+                       ::BIGINT % 40 AS t1,
+                     ('0x' || substr(md5(doc_id::VARCHAR || ':o2'), 1, 8))
+                       ::BIGINT % 40 AS t2
+              FROM documents
+            ), e AS (
+              SELECT 'h' || sb::VARCHAR AS src, 'h' || t1::VARCHAR AS dst
+              FROM b WHERE sb < 35 AND sb <> t1
+              UNION ALL
+              SELECT 'h' || sb::VARCHAR, 'h' || t2::VARCHAR
+              FROM b WHERE sb < 35 AND sb <> t2
+            ), """
 
 
 def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2074,6 +2231,19 @@ def q_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = interval_join(ev, anchors, "ts", "iv_lo", "iv_hi",
                         bucket_width=3600.0)
     return out.select("event_id", "iv_id").orderBy("event_id", "iv_id")
+
+
+# oracle of interval_join and stream_interval_join
+_INTERVAL_JOIN_SQL = """
+            WITH a AS (
+              SELECT event_id AS iv_id, ts AS lo,
+                     ts + INTERVAL 2 HOUR AS hi
+              FROM events WHERE event_id % 97 = 0
+            )
+            SELECT f.event_id, a.iv_id
+            FROM events f JOIN a ON a.lo <= f.ts AND f.ts < a.hi
+            ORDER BY f.event_id, a.iv_id
+        """
 
 
 def q_bigram_logloss(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2151,6 +2321,28 @@ def q_bpe_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(
         "s1", "s2", F.col("n").cast("long").alias("n"),
     ).orderBy("s1", "s2")
+
+
+# SQL twin of bpe.pair_census over with_symbols(word_census(...)): word
+# counts, each word's symbols with the </w> end marker, adjacent-pair counts
+# (CTEs w, s, p, c)
+_BPE_PAIRS_SQL = """
+            WITH w AS (
+              SELECT word, count(*) AS n FROM (
+                SELECT unnest(string_split(lower(text), ' ')) AS word
+                FROM documents)
+              WHERE word <> '' GROUP BY word
+            ), s AS (
+              SELECT word, n,
+                     list_append(string_split(word, ''), '</w>') AS syms
+              FROM w
+            ), p AS (
+              SELECT unnest(syms[1:len(syms) - 1]) AS s1,
+                     unnest(syms[2:len(syms)]) AS s2, n
+              FROM s
+            ), c AS (
+              SELECT s1, s2, sum(n)::BIGINT AS n FROM p GROUP BY s1, s2
+            )"""
 
 
 def q_bpe_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2772,8 +2964,7 @@ def q_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     dataset regenerate should re-check this query first if it reddens."""
     from pyradiomics_spark.operators.similarity import brute_force_topk, ivf_topk
 
-    emb = _read(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("embedding"))
+    emb = _embeddings(spark, sf_dir)
     queries = emb.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding")
     ivf = ivf_topk(emb, queries, k=5, n_cells=8, nprobe=2, dim=64).select(
@@ -2790,6 +2981,24 @@ def q_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("query_id")
     )
+
+
+# SQL twin of ivf_topk's probe: each corpus vector's nearest centroid and each
+# query's two nearest (CTEs corpus_assign, query_probe)
+_IVF_PROBE_SQL = """
+            ), corpus_assign AS (
+              SELECT vec_id, v, cell FROM (
+                SELECT e.vec_id, e.v, c.cell,
+                       row_number() OVER (PARTITION BY e.vec_id
+                         ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cell DESC) AS rn
+                FROM emb e CROSS JOIN cents c) WHERE rn = 1
+            ), query_probe AS (
+              SELECT query_id, qv, cell FROM (
+                SELECT q.query_id, q.qv, c.cell,
+                       row_number() OVER (PARTITION BY q.query_id
+                         ORDER BY list_cosine_similarity(q.qv, c.cv) DESC, c.cell DESC) AS rn
+                FROM q CROSS JOIN cents c) WHERE rn <= 2
+            )"""
 
 
 def q_assign_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2824,9 +3033,7 @@ def q_ivf_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     same ranking-margin caveat as ivf_recall applies."""
     from pyradiomics_spark.operators.similarity import _planes, ivf_topk
 
-    emb = _read(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("embedding"))
+    emb = _embeddings(spark, sf_dir)
     queries = emb.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding")
     cents = _planes(144, 64, seed="ivf-arrow-gate")
@@ -2867,6 +3074,28 @@ def q_stream_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _matrix_rows(spark: SparkSession, sf_dir: str, cls: str, *cols,
+                 angle: bool = True) -> DataFrame:
+    """extract_matrices' long-form ``cls`` cells for the docs with
+    doc_id < 200 at bin_width=1, through its zero-copy mapInArrow path:
+    (doc_id, matrix, i, j) with integer i/j, then ``cols`` (and the
+    angle), by (doc_id, i, j)."""
+    from pyradiomics_spark.config import ExtractionSettings
+    from pyradiomics_spark.operators.matrices import extract_matrices
+
+    docs = _read(spark, sf_dir, "documents").where(
+        F.col("doc_id") < 200).select("doc_id", "text")
+    out = extract_matrices(docs, keys=("doc_id",),
+                           settings=ExtractionSettings(bin_width=1.0),
+                           classes=(cls,))
+    if angle:
+        cols += (F.col("angle").cast("long").alias("angle"),)
+    return out.select(
+        "doc_id", "matrix", F.col("i").cast("long").alias("i"),
+        F.col("j").cast("long").alias("j"), *cols,
+    ).orderBy("doc_id", "i", "j")
+
+
 def q_matrix_glcm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Matrix-tier extraction surface (operators.matrices.extract_matrices,
     the P_glcm analog of reference tests/test_matrices.py) through its
@@ -2874,44 +3103,51 @@ def q_matrix_glcm(spark: SparkSession, sf_dir: str) -> DataFrame:
     GLCM cells per doc at bin_width=1. The kernel's count/total division
     and DuckDB's are the same integer inputs, so the doubles agree exactly;
     6-dp gate rounding on top."""
-    from pyradiomics_spark.config import ExtractionSettings
-    from pyradiomics_spark.operators.matrices import extract_matrices
+    return _matrix_rows(spark, sf_dir, "glcm", _rnd("value", 6).alias("p"))
 
-    docs = _read(spark, sf_dir, "documents").where(
-        F.col("doc_id") < 200).select("doc_id", "text")
-    st = ExtractionSettings(bin_width=1.0)
-    out = extract_matrices(docs, keys=("doc_id",), settings=st,
-                           classes=("glcm",))
-    return (
-        out.select("doc_id", "matrix",
-                   F.col("i").cast("long").alias("i"),
-                   F.col("j").cast("long").alias("j"),
-                   _rnd("value", 6).alias("p"),
-                   F.col("angle").cast("long").alias("angle"))
-        .orderBy("doc_id", "i", "j")
-    )
+
+# SQL twin of the symmetric GLCM at distance 1: each level's next level
+# along pos, both orders, counted per cell (CTEs pairs, sym, cnt)
+_GLCM_CELLS_SQL = """
+            ), pairs AS (
+              SELECT doc_id, level AS i,
+                     lead(level) OVER (PARTITION BY doc_id ORDER BY pos) AS j
+              FROM lv
+            ), sym AS (
+              SELECT doc_id, i, j FROM pairs WHERE j IS NOT NULL
+              UNION ALL
+              SELECT doc_id, j AS i, i AS j FROM pairs WHERE j IS NOT NULL
+            ), cnt AS (
+              SELECT doc_id, i, j, count(*) AS c FROM sym GROUP BY doc_id, i, j
+            )"""
 
 
 def q_matrix_glrlm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Matrix-tier GLRLM through extract_matrices' Arrow path: long-form
     raw run-length counts per doc at bin_width=1 — (level, run_len, count)
     cells vs a DuckDB gaps-and-islands twin. Counts are integers; exact."""
-    from pyradiomics_spark.config import ExtractionSettings
-    from pyradiomics_spark.operators.matrices import extract_matrices
+    return _matrix_rows(spark, sf_dir, "glrlm",
+                        F.col("value").alias("n_runs"))
 
-    docs = _read(spark, sf_dir, "documents").where(
-        F.col("doc_id") < 200).select("doc_id", "text")
-    st = ExtractionSettings(bin_width=1.0)
-    out = extract_matrices(docs, keys=("doc_id",), settings=st,
-                           classes=("glrlm",))
-    return (
-        out.select("doc_id", "matrix",
-                   F.col("i").cast("long").alias("i"),
-                   F.col("j").cast("long").alias("j"),
-                   F.col("value").alias("n_runs"),
-                   F.col("angle").cast("long").alias("angle"))
-        .orderBy("doc_id", "i", "j")
-    )
+
+# SQL twin of the GLRLM run table: runs of equal level along pos per doc,
+# with their lengths (CTEs flagged, runs, run_tbl)
+_RUN_TABLE_SQL = """
+            ), flagged AS (
+              SELECT doc_id, pos, level,
+                     CASE WHEN lag(level, 1) OVER w IS NULL
+                               OR lag(level, 1) OVER w <> level
+                          THEN 1 ELSE 0 END AS chg
+              FROM lv WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
+            ), runs AS (
+              SELECT doc_id, level,
+                     sum(chg) OVER (PARTITION BY doc_id ORDER BY pos
+                                    ROWS UNBOUNDED PRECEDING) AS run_id
+              FROM flagged
+            ), run_tbl AS (
+              SELECT doc_id, run_id, level, count(*) AS run_len
+              FROM runs GROUP BY doc_id, run_id, level
+            )"""
 
 
 def q_matrix_ngtdm(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2919,22 +3155,7 @@ def q_matrix_ngtdm(spark: SparkSession, sf_dir: str) -> DataFrame:
     (level, {0=n_i, 1=s_i}) cells per doc vs a DuckDB ±1-window neighbor
     twin — the same (sum−self)/(count−1) double arithmetic as the kernel,
     6-dp gate rounding on the s_i float sums."""
-    from pyradiomics_spark.config import ExtractionSettings
-    from pyradiomics_spark.operators.matrices import extract_matrices
-
-    docs = _read(spark, sf_dir, "documents").where(
-        F.col("doc_id") < 200).select("doc_id", "text")
-    st = ExtractionSettings(bin_width=1.0)
-    out = extract_matrices(docs, keys=("doc_id",), settings=st,
-                           classes=("ngtdm",))
-    return (
-        out.select("doc_id", "matrix",
-                   F.col("i").cast("long").alias("i"),
-                   F.col("j").cast("long").alias("j"),
-                   _rnd("value", 6).alias("v"),
-                   F.col("angle").cast("long").alias("angle"))
-        .orderBy("doc_id", "i", "j")
-    )
+    return _matrix_rows(spark, sf_dir, "ngtdm", _rnd("value", 6).alias("v"))
 
 
 def q_matrix_gldm(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2943,22 +3164,7 @@ def q_matrix_gldm(spark: SparkSession, sf_dir: str) -> DataFrame:
     a DuckDB lag/lead equality twin. Together with matrix_glcm /
     matrix_glrlm / matrix_ngtdm this puts every distinct matrix class
     under the cross-engine gate (GLSZM ≡ GLRLM in 1-D by construction)."""
-    from pyradiomics_spark.config import ExtractionSettings
-    from pyradiomics_spark.operators.matrices import extract_matrices
-
-    docs = _read(spark, sf_dir, "documents").where(
-        F.col("doc_id") < 200).select("doc_id", "text")
-    st = ExtractionSettings(bin_width=1.0)
-    out = extract_matrices(docs, keys=("doc_id",), settings=st,
-                           classes=("gldm",))
-    return (
-        out.select("doc_id", "matrix",
-                   F.col("i").cast("long").alias("i"),
-                   F.col("j").cast("long").alias("j"),
-                   F.col("value").alias("n_dep"),
-                   F.col("angle").cast("long").alias("angle"))
-        .orderBy("doc_id", "i", "j")
-    )
+    return _matrix_rows(spark, sf_dir, "gldm", F.col("value").alias("n_dep"))
 
 
 def q_matrix_glszm(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2969,26 +3175,13 @@ def q_matrix_glszm(spark: SparkSession, sf_dir: str) -> DataFrame:
     ZonePercentage (= Nz/Np) columns pin it cross-engine, completing the
     reference's two-tier matrix discipline for the fifth class
     (/root/reference/tests/test_matrices.py)."""
-    from pyradiomics_spark.config import ExtractionSettings
-    from pyradiomics_spark.operators.matrices import extract_matrices
-
-    docs = _read(spark, sf_dir, "documents").where(
-        F.col("doc_id") < 200).select("doc_id", "text")
-    st = ExtractionSettings(bin_width=1.0)
-    out = extract_matrices(docs, keys=("doc_id",), settings=st,
-                           classes=("glszm",))
     w = Window.partitionBy("doc_id")
     nz = F.sum("value").over(w)
     npv = F.sum(F.col("value") * F.col("j")).over(w)
-    return (
-        out.select("doc_id", "matrix",
-                   F.col("i").cast("long").alias("i"),
-                   F.col("j").cast("long").alias("j"),
-                   F.col("value").alias("n_zones"),
-                   nz.cast("long").alias("nz"),
-                   _rnd(nz / npv, 6).alias("zp"))
-        .orderBy("doc_id", "i", "j")
-    )
+    return _matrix_rows(spark, sf_dir, "glszm",
+                        F.col("value").alias("n_zones"),
+                        nz.cast("long").alias("nz"),
+                        _rnd(nz / npv, 6).alias("zp"), angle=False)
 
 
 def _payload_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3124,8 +3317,7 @@ def q_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     the identical plane literals and replays the sign pattern."""
     from pyradiomics_spark.operators.similarity import hyperplane_buckets
 
-    emb = _read(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("embedding"))
+    emb = _embeddings(spark, sf_dir)
     b = hyperplane_buckets(emb, "vec_id", "embedding", n_planes=8, dim=64)
     return b.groupBy("bucket").agg(F.count("*").alias("n_vecs")).orderBy("bucket")
 
@@ -3201,6 +3393,27 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("node")
 
 
+# SQL twin of operators.graph.triangle_count over an undirected edge CTE
+# se(na, nb) with degrees deg(node, dg): edges oriented low-to-high degree,
+# then each node's triangle count (CTEs tri, per; follows "), oe AS (")
+_TRIANGLES_SQL = """
+              SELECT CASE WHEN da.dg <= db.dg THEN se.na ELSE se.nb END AS u,
+                     CASE WHEN da.dg <= db.dg THEN se.nb ELSE se.na END AS v
+              FROM se JOIN deg da ON se.na = da.node
+                      JOIN deg db ON se.nb = db.node
+            ), tri AS (
+              SELECT x.u AS c1, x.v AS c2, y.v AS c3
+              FROM oe x JOIN oe y ON x.u = y.u AND x.v <> y.v
+              JOIN oe z ON z.u = x.v AND z.v = y.v
+            ), per AS (
+              SELECT node, count(*) AS t FROM (
+                SELECT c1 AS node FROM tri
+                UNION ALL SELECT c2 FROM tri
+                UNION ALL SELECT c3 FROM tri
+              ) GROUP BY node
+            )"""
+
+
 def q_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SCD2 history compression (operators/windows.py scd2_compress):
     each user's event-type stream collapsed to maximal unchanged runs
@@ -3218,6 +3431,30 @@ def q_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", "event_type", "valid_from", "valid_to",
         F.col("n_events").cast("long").alias("n_events"), "is_current",
     ).orderBy("user_id", "valid_from")
+
+
+# oracle of scd2 and stream_scd2
+_SCD2_SQL = """
+            WITH m AS (
+              SELECT user_id, ts, event_id, event_type,
+                     row_number() OVER w AS rn,
+                     count(*) OVER (PARTITION BY user_id) AS tot,
+                     lag(event_type) OVER w AS prev
+              FROM events
+              WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+            ), s AS (
+              SELECT * FROM m
+              WHERE rn = 1 OR prev IS DISTINCT FROM event_type
+            )
+            SELECT user_id, event_type, ts AS valid_from,
+                   lead(ts) OVER w2 AS valid_to,
+                   (coalesce(lead(rn) OVER w2, tot + 1) - rn)::BIGINT
+                     AS n_events,
+                   lead(ts) OVER w2 IS NULL AS is_current
+            FROM s
+            WINDOW w2 AS (PARTITION BY user_id ORDER BY rn)
+            ORDER BY user_id, valid_from
+        """
 
 
 def q_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3329,26 +3566,26 @@ def _synth_sparse_host_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     for the peeling/coreness gates — the 40-host graph saturates to
     near-complete by sf0.01, where k-core peeling is a no-op. Same
     construction as `_synth_host_edges`, modulus 400, sinks ≥ 350."""
-    d = _read(spark, sf_dir, "documents").select(
-        F.col("doc_id").cast("string").alias("__k"))
+    return _synth_host_edges(spark, sf_dir, n_hosts=400, prefix="g")
 
-    def bucket(col):
-        return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast(
-            "long") % 400
 
-    b = d.select(
-        bucket(F.col("__k")).alias("sb"),
-        bucket(F.concat(F.col("__k"), F.lit(":o1"))).alias("t1"),
-        bucket(F.concat(F.col("__k"), F.lit(":o2"))).alias("t2"))
-
-    def host(c):
-        return F.concat(F.lit("g"), F.col(c).cast("string"))
-
-    e1 = b.where((F.col("sb") < 350) & (F.col("sb") != F.col("t1"))).select(
-        host("sb").alias("src"), host("t1").alias("dst"))
-    e2 = b.where((F.col("sb") < 350) & (F.col("sb") != F.col("t2"))).select(
-        host("sb").alias("src"), host("t2").alias("dst"))
-    return e1.unionAll(e2)
+# SQL twin of _synth_sparse_host_edges (CTEs b, ed)
+_SPARSE_HOST_EDGES_SQL = """
+            WITH b AS (
+              SELECT ('0x' || substr(md5(doc_id::VARCHAR), 1, 8))
+                       ::BIGINT % 400 AS sb,
+                     ('0x' || substr(md5(doc_id::VARCHAR || ':o1'), 1, 8))
+                       ::BIGINT % 400 AS t1,
+                     ('0x' || substr(md5(doc_id::VARCHAR || ':o2'), 1, 8))
+                       ::BIGINT % 400 AS t2
+              FROM documents
+            ), ed AS (
+              SELECT 'g' || sb::VARCHAR AS src, 'g' || t1::VARCHAR AS dst
+              FROM b WHERE sb < 350 AND sb <> t1
+              UNION ALL
+              SELECT 'g' || sb::VARCHAR, 'g' || t2::VARCHAR
+              FROM b WHERE sb < 350 AND sb <> t2
+            ), """
 
 
 def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3713,6 +3950,37 @@ def q_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("node", "label").orderBy("node")
 
 
+# SQL twin of operators.graph.label_propagation, three rounds over the
+# undirected sparse host graph (CTEs b, ed, se, bo, l0-l3)
+_LABEL_PROP_SQL = _SPARSE_HOST_EDGES_SQL + """se AS (
+              SELECT DISTINCT least(src, dst) AS na, greatest(src, dst) AS nb
+              FROM ed WHERE src <> dst
+            ), bo AS (
+              SELECT na AS u, nb AS v FROM se
+              UNION ALL SELECT nb, na FROM se
+            ), l0 AS (
+              SELECT DISTINCT u AS node, u AS label FROM bo
+            ), l1 AS (
+              SELECT bo.u AS node, l.label, count(*) AS n1
+              FROM bo JOIN l0 l ON bo.v = l.node
+              GROUP BY bo.u, l.label
+              QUALIFY row_number() OVER (
+                PARTITION BY bo.u ORDER BY n1 DESC, l.label) = 1
+            ), l2 AS (
+              SELECT bo.u AS node, l.label, count(*) AS n2
+              FROM bo JOIN l1 l ON bo.v = l.node
+              GROUP BY bo.u, l.label
+              QUALIFY row_number() OVER (
+                PARTITION BY bo.u ORDER BY n2 DESC, l.label) = 1
+            ), l3 AS (
+              SELECT bo.u AS node, l.label, count(*) AS n3
+              FROM bo JOIN l2 l ON bo.v = l.node
+              GROUP BY bo.u, l.label
+              QUALIFY row_number() OVER (
+                PARTITION BY bo.u ORDER BY n3 DESC, l.label) = 1
+            )"""
+
+
 def q_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language distinct-token estimate via the KMV k-minimum-values
     sketch (operators/sketches.py kmv_sketch/kmv_estimate, k=256) — the
@@ -3841,6 +4109,21 @@ def q_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(
         F.coalesce(F.col("channel"), F.lit("(none)")).alias("channel"),
         "first_touch", "last_touch").orderBy("channel")
+
+
+# SQL twin of conversion_attribution's bookends: per user, the first and
+# last non-purchase event type before each event (ft, lt)
+_TOUCHES_SQL = """
+                     first_value(CASE WHEN event_type <> 'purchase'
+                                 THEN event_type END IGNORE NULLS)
+                       OVER w AS ft,
+                     last_value(CASE WHEN event_type <> 'purchase'
+                                THEN event_type END IGNORE NULLS)
+                       OVER w AS lt
+              FROM events
+              WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
+                           ROWS BETWEEN UNBOUNDED PRECEDING
+                           AND 1 PRECEDING)"""
 
 
 def q_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4537,22 +4820,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    tokens = (
-        "SELECT doc_id, pos, tok, length(tok) AS tok_len FROM ("
-        " SELECT doc_id, generate_subscripts(toks, 1) - 1 AS pos, unnest(toks) AS tok"
-        " FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)"
-        ") WHERE tok <> ''"
-    )
-    # 16-bit md5 simhash twin (see operators.dedup.simhash_signatures_md5):
-    # per-bit signed sums over hex digits of md5(tok), then bit reassembly.
-    simhash_sums = ",\n                     ".join(
-        "sum(CASE WHEN (((instr('0123456789abcdef', substring(h, "
-        f"{k // 4 + 1}, 1)) - 1) >> {k % 4}) & 1) = 1 THEN 1 ELSE -1 END) AS s{k}"
-        for k in range(16)
-    )
-    simhash_val = " + ".join(
-        f"(CASE WHEN s{k} > 0 THEN {1 << k} ELSE 0 END)" for k in range(16)
-    )
     # IVF twin: same deterministic centroids as operators.similarity.ivf_topk
     # (md5-expanded planes, L2-normalized), inlined as DOUBLE[] literals via
     # repr() (shortest-round-trip — parses back to the identical double).
@@ -4573,11 +4840,7 @@ def oracle_sql() -> dict[str, str]:
             ", ".join(repr(float(x)) for x in _pl[p]), 1 << p)
         for p in range(8)
     )
-    lsh_buckets_sql = f"""
-            WITH emb AS (
-              SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v
-              FROM embeddings
-            ), b AS (
+    lsh_buckets_sql = _EMBEDDINGS_SQL + f""", b AS (
               SELECT vec_id, {_bucket_terms} AS bucket FROM emb
             )
             SELECT bucket, count(*) AS n_vecs
@@ -4602,11 +4865,7 @@ def oracle_sql() -> dict[str, str]:
             c, ", ".join(repr(float(v)) for v in _sd[c]))
         for c in range(8)
     )
-    semdedup_sql = f"""
-            WITH emb AS (
-              SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v
-              FROM embeddings
-            ), cents AS (
+    semdedup_sql = _EMBEDDINGS_SQL + f""", cents AS (
               SELECT * FROM (VALUES
               {_sd_rows}
               ) t(cell, cv)
@@ -4807,11 +5066,7 @@ def oracle_sql() -> dict[str, str]:
             FROM grams JOIN evg ON grams.g = evg.g
             WHERE NOT ev GROUP BY grams.doc_id ORDER BY grams.doc_id
         """
-    kmeans_step_sql = f"""
-            WITH emb AS (
-              SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v
-              FROM embeddings
-            ), cents AS (
+    kmeans_step_sql = _EMBEDDINGS_SQL + f""", cents AS (
               SELECT * FROM (VALUES
               {_km_rows}
               ) t(cell, cv)
@@ -4830,29 +5085,12 @@ def oracle_sql() -> dict[str, str]:
                    count(*) AS n
             FROM ex GROUP BY cell, idx ORDER BY cell, idx
         """
-    ivf_recall_sql = f"""
-            WITH emb AS (
-              SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v
-              FROM embeddings
-            ), q AS (
+    ivf_recall_sql = _EMBEDDINGS_SQL + f""", q AS (
               SELECT vec_id AS query_id, v AS qv FROM emb WHERE vec_id < 5
             ), cents AS (
               SELECT * FROM (VALUES
               {_cent_rows}
-              ) t(cell, cv)
-            ), corpus_assign AS (
-              SELECT vec_id, v, cell FROM (
-                SELECT e.vec_id, e.v, c.cell,
-                       row_number() OVER (PARTITION BY e.vec_id
-                         ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cell DESC) AS rn
-                FROM emb e CROSS JOIN cents c) WHERE rn = 1
-            ), query_probe AS (
-              SELECT query_id, qv, cell FROM (
-                SELECT q.query_id, q.qv, c.cell,
-                       row_number() OVER (PARTITION BY q.query_id
-                         ORDER BY list_cosine_similarity(q.qv, c.cv) DESC, c.cell DESC) AS rn
-                FROM q CROSS JOIN cents c) WHERE rn <= 2
-            ), ivf AS (
+              ) t(cell, cv){_IVF_PROBE_SQL}, ivf AS (
               SELECT query_id, vec_id FROM (
                 SELECT p.query_id, a.vec_id,
                        row_number() OVER (PARTITION BY p.query_id
@@ -4935,11 +5173,7 @@ def oracle_sql() -> dict[str, str]:
             ORDER BY c.doc_id
         """
 
-    assign_arrow_sql = f"""
-            WITH emb AS (
-              SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v
-              FROM embeddings
-            ), {_md5_planes_cte("assign-arrow-gate", 144, 64)}, assign AS (
+    assign_arrow_sql = _EMBEDDINGS_SQL + f""", {_md5_planes_cte("assign-arrow-gate", 144, 64)}, assign AS (
               SELECT vec_id, cell FROM (
                 SELECT e.vec_id, c.cell,
                        row_number() OVER (PARTITION BY e.vec_id
@@ -4950,29 +5184,12 @@ def oracle_sql() -> dict[str, str]:
                    CAST(sum(vec_id) AS BIGINT) AS sum_vec_id
             FROM assign GROUP BY cell ORDER BY cell
         """
-    ivf_arrow_sql = f"""
-            WITH emb AS (
-              SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v
-              FROM embeddings
-            ), q AS (
+    ivf_arrow_sql = _EMBEDDINGS_SQL + f""", q AS (
               SELECT vec_id AS query_id, v AS qv FROM emb WHERE vec_id < 5
             ), {_md5_planes_cte("ivf-arrow-gate", 144, 64)}, cents AS (
               SELECT cell,
                      list_transform(cv, x -> x / sqrt(list_dot_product(cv, cv))) AS cv
-              FROM rawc
-            ), corpus_assign AS (
-              SELECT vec_id, v, cell FROM (
-                SELECT e.vec_id, e.v, c.cell,
-                       row_number() OVER (PARTITION BY e.vec_id
-                         ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cell DESC) AS rn
-                FROM emb e CROSS JOIN cents c) WHERE rn = 1
-            ), query_probe AS (
-              SELECT query_id, qv, cell FROM (
-                SELECT q.query_id, q.qv, c.cell,
-                       row_number() OVER (PARTITION BY q.query_id
-                         ORDER BY list_cosine_similarity(q.qv, c.cv) DESC, c.cell DESC) AS rn
-                FROM q CROSS JOIN cents c) WHERE rn <= 2
-            )
+              FROM rawc{_IVF_PROBE_SQL}
             SELECT query_id, vec_id, rank FROM (
               SELECT p.query_id, a.vec_id,
                      row_number() OVER (PARTITION BY p.query_id
@@ -4981,27 +5198,13 @@ def oracle_sql() -> dict[str, str]:
             WHERE rank <= 5 ORDER BY query_id, rank
         """
     simhash_sql = f"""
-            WITH toks AS (
-              SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents
-            ), h AS (
-              SELECT doc_id, md5(tok) AS h FROM toks WHERE tok <> ''
-            ), sums AS (
-              SELECT doc_id, {simhash_sums}
-              FROM h GROUP BY doc_id
-            )
-            SELECT doc_id, CAST({simhash_val} AS BIGINT) AS simhash
+            WITH {_SIMHASH_SUMS_SQL}
+            SELECT doc_id, CAST({_SIMHASH_VAL_SQL} AS BIGINT) AS simhash
             FROM sums ORDER BY doc_id
         """
     simhash_blocked_sql = f"""
-            WITH toks AS (
-              SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents
-            ), h AS (
-              SELECT doc_id, md5(tok) AS h FROM toks WHERE tok <> ''
-            ), sums AS (
-              SELECT doc_id, {simhash_sums}
-              FROM h GROUP BY doc_id
-            ), sig AS (
-              SELECT doc_id, CAST({simhash_val} AS BIGINT) AS simhash FROM sums
+            WITH {_SIMHASH_SUMS_SQL}, sig AS (
+              SELECT doc_id, CAST({_SIMHASH_VAL_SQL} AS BIGINT) AS simhash FROM sums
             )
             SELECT a.doc_id AS id_a, b.doc_id AS id_b,
                    CAST(bit_count(xor(a.simhash, b.simhash)) AS INTEGER) AS hamming
@@ -5010,15 +5213,8 @@ def oracle_sql() -> dict[str, str]:
             ORDER BY id_a, id_b
         """
     dedup_components_sql = f"""
-            WITH RECURSIVE toks AS (
-              SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents
-            ), h AS (
-              SELECT doc_id, md5(tok) AS h FROM toks WHERE tok <> ''
-            ), sums AS (
-              SELECT doc_id, {simhash_sums}
-              FROM h GROUP BY doc_id
-            ), sig AS (
-              SELECT doc_id, CAST({simhash_val} AS BIGINT) AS simhash FROM sums
+            WITH RECURSIVE {_SIMHASH_SUMS_SQL}, sig AS (
+              SELECT doc_id, CAST({_SIMHASH_VAL_SQL} AS BIGINT) AS simhash FROM sums
             ), edges AS (
               SELECT a.doc_id AS u, b.doc_id AS v
               FROM sig a JOIN sig b
@@ -5108,22 +5304,7 @@ def oracle_sql() -> dict[str, str]:
             FROM r3 ORDER BY token
         """
     # k-core: three unrolled peel rounds over the sparse host graph
-    _kcore_cte = ["""
-            WITH b AS (
-              SELECT ('0x' || substr(md5(doc_id::VARCHAR), 1, 8))
-                       ::BIGINT % 400 AS sb,
-                     ('0x' || substr(md5(doc_id::VARCHAR || ':o1'), 1, 8))
-                       ::BIGINT % 400 AS t1,
-                     ('0x' || substr(md5(doc_id::VARCHAR || ':o2'), 1, 8))
-                       ::BIGINT % 400 AS t2
-              FROM documents
-            ), ed AS (
-              SELECT 'g' || sb::VARCHAR AS src, 'g' || t1::VARCHAR AS dst
-              FROM b WHERE sb < 350 AND sb <> t1
-              UNION ALL
-              SELECT 'g' || sb::VARCHAR, 'g' || t2::VARCHAR
-              FROM b WHERE sb < 350 AND sb <> t2
-            ), e0 AS (
+    _kcore_cte = [_SPARSE_HOST_EDGES_SQL + """e0 AS (
               SELECT DISTINCT least(src, dst) AS na, greatest(src, dst) AS nb
               FROM ed WHERE src <> dst
             )"""]
@@ -5146,22 +5327,7 @@ def oracle_sql() -> dict[str, str]:
             ) GROUP BY node ORDER BY node
         """
     return {
-        "hits": """
-            WITH b AS (
-              SELECT ('0x' || substr(md5(doc_id::VARCHAR), 1, 8))
-                       ::BIGINT % 40 AS sb,
-                     ('0x' || substr(md5(doc_id::VARCHAR || ':o1'), 1, 8))
-                       ::BIGINT % 40 AS t1,
-                     ('0x' || substr(md5(doc_id::VARCHAR || ':o2'), 1, 8))
-                       ::BIGINT % 40 AS t2
-              FROM documents
-            ), e AS (
-              SELECT 'h' || sb::VARCHAR AS src, 'h' || t1::VARCHAR AS dst
-              FROM b WHERE sb < 35 AND sb <> t1
-              UNION ALL
-              SELECT 'h' || sb::VARCHAR, 'h' || t2::VARCHAR
-              FROM b WHERE sb < 35 AND sb <> t2
-            ), nodes AS (
+        "hits": _HOST_EDGES_SQL + """nodes AS (
               SELECT src AS node FROM e UNION SELECT dst FROM e
             ), h0 AS (
               SELECT node,
@@ -5238,17 +5404,7 @@ def oracle_sql() -> dict[str, str]:
         """,
         "stream_attribution": """
             WITH m AS (
-              SELECT user_id, event_id, event_type,
-                     first_value(CASE WHEN event_type <> 'purchase'
-                                 THEN event_type END IGNORE NULLS)
-                       OVER w AS ft,
-                     last_value(CASE WHEN event_type <> 'purchase'
-                                THEN event_type END IGNORE NULLS)
-                       OVER w AS lt
-              FROM events
-              WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-                           ROWS BETWEEN UNBOUNDED PRECEDING
-                           AND 1 PRECEDING)
+              SELECT user_id, event_id, event_type,""" + _TOUCHES_SQL + """
             )
             SELECT user_id, event_id,
                    coalesce(ft, '(none)') AS first_touch,
@@ -5615,22 +5771,7 @@ def oracle_sql() -> dict[str, str]:
                          + 0.50000095367431640625) / 1e6 AS mase
             FROM a ORDER BY user_id
         """,
-        "reciprocity": """
-            WITH b AS (
-              SELECT ('0x' || substr(md5(doc_id::VARCHAR), 1, 8))
-                       ::BIGINT % 40 AS sb,
-                     ('0x' || substr(md5(doc_id::VARCHAR || ':o1'), 1, 8))
-                       ::BIGINT % 40 AS t1,
-                     ('0x' || substr(md5(doc_id::VARCHAR || ':o2'), 1, 8))
-                       ::BIGINT % 40 AS t2
-              FROM documents
-            ), e AS (
-              SELECT 'h' || sb::VARCHAR AS src, 'h' || t1::VARCHAR AS dst
-              FROM b WHERE sb < 35 AND sb <> t1
-              UNION ALL
-              SELECT 'h' || sb::VARCHAR, 'h' || t2::VARCHAR
-              FROM b WHERE sb < 35 AND sb <> t2
-            ), d AS (
+        "reciprocity": _HOST_EDGES_SQL + """d AS (
               SELECT DISTINCT src AS s, dst AS t FROM e
               WHERE src <> dst
             ), r AS (
@@ -5688,48 +5829,7 @@ def oracle_sql() -> dict[str, str]:
                    n_hits::BIGINT AS n_hits, rank::BIGINT AS rank
             FROM top ORDER BY doc_id
         """,
-        "modularity": """
-            WITH b AS (
-              SELECT ('0x' || substr(md5(doc_id::VARCHAR), 1, 8))
-                       ::BIGINT % 400 AS sb,
-                     ('0x' || substr(md5(doc_id::VARCHAR || ':o1'), 1, 8))
-                       ::BIGINT % 400 AS t1,
-                     ('0x' || substr(md5(doc_id::VARCHAR || ':o2'), 1, 8))
-                       ::BIGINT % 400 AS t2
-              FROM documents
-            ), ed AS (
-              SELECT 'g' || sb::VARCHAR AS src, 'g' || t1::VARCHAR AS dst
-              FROM b WHERE sb < 350 AND sb <> t1
-              UNION ALL
-              SELECT 'g' || sb::VARCHAR, 'g' || t2::VARCHAR
-              FROM b WHERE sb < 350 AND sb <> t2
-            ), se AS (
-              SELECT DISTINCT least(src, dst) AS na, greatest(src, dst) AS nb
-              FROM ed WHERE src <> dst
-            ), bo AS (
-              SELECT na AS u, nb AS v FROM se
-              UNION ALL SELECT nb, na FROM se
-            ), l0 AS (
-              SELECT DISTINCT u AS node, u AS label FROM bo
-            ), l1 AS (
-              SELECT bo.u AS node, l.label, count(*) AS n1
-              FROM bo JOIN l0 l ON bo.v = l.node
-              GROUP BY bo.u, l.label
-              QUALIFY row_number() OVER (
-                PARTITION BY bo.u ORDER BY n1 DESC, l.label) = 1
-            ), l2 AS (
-              SELECT bo.u AS node, l.label, count(*) AS n2
-              FROM bo JOIN l1 l ON bo.v = l.node
-              GROUP BY bo.u, l.label
-              QUALIFY row_number() OVER (
-                PARTITION BY bo.u ORDER BY n2 DESC, l.label) = 1
-            ), l3 AS (
-              SELECT bo.u AS node, l.label, count(*) AS n3
-              FROM bo JOIN l2 l ON bo.v = l.node
-              GROUP BY bo.u, l.label
-              QUALIFY row_number() OVER (
-                PARTITION BY bo.u ORDER BY n3 DESC, l.label) = 1
-            ), m AS (
+        "modularity": _LABEL_PROP_SQL + """, m AS (
               SELECT count(*) AS m FROM se
             ), intra AS (
               SELECT la.label AS l, count(*) AS ec
@@ -5815,17 +5915,7 @@ def oracle_sql() -> dict[str, str]:
         """,
         "attribution": """
             WITH m AS (
-              SELECT user_id, event_type,
-                     first_value(CASE WHEN event_type <> 'purchase'
-                                 THEN event_type END IGNORE NULLS)
-                       OVER w AS ft,
-                     last_value(CASE WHEN event_type <> 'purchase'
-                                THEN event_type END IGNORE NULLS)
-                       OVER w AS lt
-              FROM events
-              WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-                           ROWS BETWEEN UNBOUNDED PRECEDING
-                           AND 1 PRECEDING)
+              SELECT user_id, event_type,""" + _TOUCHES_SQL + """
             ), c AS (
               SELECT * FROM m WHERE event_type = 'purchase'
             ), f AS (
@@ -5993,66 +6083,10 @@ def oracle_sql() -> dict[str, str]:
                          * 1e6 + 0.50000095367431640625) / 1e6 AS est
             FROM ag ORDER BY lang
         """,
-        "label_prop": """
-            WITH b AS (
-              SELECT ('0x' || substr(md5(doc_id::VARCHAR), 1, 8))
-                       ::BIGINT % 400 AS sb,
-                     ('0x' || substr(md5(doc_id::VARCHAR || ':o1'), 1, 8))
-                       ::BIGINT % 400 AS t1,
-                     ('0x' || substr(md5(doc_id::VARCHAR || ':o2'), 1, 8))
-                       ::BIGINT % 400 AS t2
-              FROM documents
-            ), ed AS (
-              SELECT 'g' || sb::VARCHAR AS src, 'g' || t1::VARCHAR AS dst
-              FROM b WHERE sb < 350 AND sb <> t1
-              UNION ALL
-              SELECT 'g' || sb::VARCHAR, 'g' || t2::VARCHAR
-              FROM b WHERE sb < 350 AND sb <> t2
-            ), se AS (
-              SELECT DISTINCT least(src, dst) AS na, greatest(src, dst) AS nb
-              FROM ed WHERE src <> dst
-            ), bo AS (
-              SELECT na AS u, nb AS v FROM se
-              UNION ALL SELECT nb, na FROM se
-            ), l0 AS (
-              SELECT DISTINCT u AS node, u AS label FROM bo
-            ), l1 AS (
-              SELECT bo.u AS node, l.label, count(*) AS n1
-              FROM bo JOIN l0 l ON bo.v = l.node
-              GROUP BY bo.u, l.label
-              QUALIFY row_number() OVER (
-                PARTITION BY bo.u ORDER BY n1 DESC, l.label) = 1
-            ), l2 AS (
-              SELECT bo.u AS node, l.label, count(*) AS n2
-              FROM bo JOIN l1 l ON bo.v = l.node
-              GROUP BY bo.u, l.label
-              QUALIFY row_number() OVER (
-                PARTITION BY bo.u ORDER BY n2 DESC, l.label) = 1
-            ), l3 AS (
-              SELECT bo.u AS node, l.label, count(*) AS n3
-              FROM bo JOIN l2 l ON bo.v = l.node
-              GROUP BY bo.u, l.label
-              QUALIFY row_number() OVER (
-                PARTITION BY bo.u ORDER BY n3 DESC, l.label) = 1
-            )
+        "label_prop": _LABEL_PROP_SQL + """
             SELECT node, label FROM l3 ORDER BY node
         """,
-        "triangle_count": """
-            WITH b AS (
-              SELECT ('0x' || substr(md5(doc_id::VARCHAR), 1, 8))
-                       ::BIGINT % 40 AS sb,
-                     ('0x' || substr(md5(doc_id::VARCHAR || ':o1'), 1, 8))
-                       ::BIGINT % 40 AS t1,
-                     ('0x' || substr(md5(doc_id::VARCHAR || ':o2'), 1, 8))
-                       ::BIGINT % 40 AS t2
-              FROM documents
-            ), e AS (
-              SELECT 'h' || sb::VARCHAR AS src, 'h' || t1::VARCHAR AS dst
-              FROM b WHERE sb < 35 AND sb <> t1
-              UNION ALL
-              SELECT 'h' || sb::VARCHAR, 'h' || t2::VARCHAR
-              FROM b WHERE sb < 35 AND sb <> t2
-            ), se AS (
+        "triangle_count": _HOST_EDGES_SQL + """se AS (
               SELECT DISTINCT least(src, dst) AS na, greatest(src, dst) AS nb
               FROM e WHERE src <> dst
             ), deg AS (
@@ -6061,87 +6095,26 @@ def oracle_sql() -> dict[str, str]:
               ) GROUP BY node
             ), oe AS (
               -- orient from (deg, node)-smaller to larger; na < nb already,
-              -- so the degree tie keeps na→nb
-              SELECT CASE WHEN da.dg <= db.dg THEN se.na ELSE se.nb END AS u,
-                     CASE WHEN da.dg <= db.dg THEN se.nb ELSE se.na END AS v
-              FROM se JOIN deg da ON se.na = da.node
-                      JOIN deg db ON se.nb = db.node
-            ), tri AS (
-              SELECT x.u AS c1, x.v AS c2, y.v AS c3
-              FROM oe x JOIN oe y ON x.u = y.u AND x.v <> y.v
-              JOIN oe z ON z.u = x.v AND z.v = y.v
-            ), per AS (
-              SELECT node, count(*) AS t FROM (
-                SELECT c1 AS node FROM tri
-                UNION ALL SELECT c2 FROM tri
-                UNION ALL SELECT c3 FROM tri
-              ) GROUP BY node
-            )
+              -- so the degree tie keeps na→nb""" + _TRIANGLES_SQL + """
             SELECT d.node, coalesce(per.t, 0)::BIGINT AS triangles
             FROM deg d LEFT JOIN per ON d.node = per.node
             ORDER BY d.node
         """,
-        "scd2": """
-            WITH m AS (
-              SELECT user_id, ts, event_id, event_type,
-                     row_number() OVER w AS rn,
-                     count(*) OVER (PARTITION BY user_id) AS tot,
-                     lag(event_type) OVER w AS prev
-              FROM events
-              WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-            ), s AS (
-              SELECT * FROM m
-              WHERE rn = 1 OR prev IS DISTINCT FROM event_type
-            )
-            SELECT user_id, event_type, ts AS valid_from,
-                   lead(ts) OVER w2 AS valid_to,
-                   (coalesce(lead(rn) OVER w2, tot + 1) - rn)::BIGINT
-                     AS n_events,
-                   lead(ts) OVER w2 IS NULL AS is_current
-            FROM s
-            WINDOW w2 AS (PARTITION BY user_id ORDER BY rn)
-            ORDER BY user_id, valid_from
-        """,
+        "scd2": _SCD2_SQL,
+        # the streaming SCD2 gate replays the SAME events through the real
+        # streaming engine; its emitted set equals the batch operator on a
+        # single-file replay, so it shares the batch oracle verbatim
+        "stream_scd2": _SCD2_SQL,
         "kcore": kcore_sql,
         "dedup_canonical": dedup_canonical_sql,
-        "clustering_coeff": """
-            WITH b AS (
-              SELECT ('0x' || substr(md5(doc_id::VARCHAR), 1, 8))
-                       ::BIGINT % 400 AS sb,
-                     ('0x' || substr(md5(doc_id::VARCHAR || ':o1'), 1, 8))
-                       ::BIGINT % 400 AS t1,
-                     ('0x' || substr(md5(doc_id::VARCHAR || ':o2'), 1, 8))
-                       ::BIGINT % 400 AS t2
-              FROM documents
-            ), ed AS (
-              SELECT 'g' || sb::VARCHAR AS src, 'g' || t1::VARCHAR AS dst
-              FROM b WHERE sb < 350 AND sb <> t1
-              UNION ALL
-              SELECT 'g' || sb::VARCHAR, 'g' || t2::VARCHAR
-              FROM b WHERE sb < 350 AND sb <> t2
-            ), se AS (
+        "clustering_coeff": _SPARSE_HOST_EDGES_SQL + """se AS (
               SELECT DISTINCT least(src, dst) AS na, greatest(src, dst) AS nb
               FROM ed WHERE src <> dst
             ), deg AS (
               SELECT node, count(*) AS dg FROM (
                 SELECT na AS node FROM se UNION ALL SELECT nb FROM se
               ) GROUP BY node
-            ), oe AS (
-              SELECT CASE WHEN da.dg <= db.dg THEN se.na ELSE se.nb END AS u,
-                     CASE WHEN da.dg <= db.dg THEN se.nb ELSE se.na END AS v
-              FROM se JOIN deg da ON se.na = da.node
-                      JOIN deg db ON se.nb = db.node
-            ), tri AS (
-              SELECT x.u AS c1, x.v AS c2, y.v AS c3
-              FROM oe x JOIN oe y ON x.u = y.u AND x.v <> y.v
-              JOIN oe z ON z.u = x.v AND z.v = y.v
-            ), per AS (
-              SELECT node, count(*) AS t FROM (
-                SELECT c1 AS node FROM tri
-                UNION ALL SELECT c2 FROM tri
-                UNION ALL SELECT c3 FROM tri
-              ) GROUP BY node
-            )
+            ), oe AS (""" + _TRIANGLES_SQL + """
             SELECT d.node, d.dg::BIGINT AS degree,
                    coalesce(per.t, 0)::BIGINT AS triangles,
                    floor((CASE WHEN d.dg >= 2
@@ -6178,22 +6151,7 @@ def oracle_sql() -> dict[str, str]:
             )
             SELECT path, n FROM k ORDER BY path
         """,
-        "assortativity": """
-            WITH b AS (
-              SELECT ('0x' || substr(md5(doc_id::VARCHAR), 1, 8))
-                       ::BIGINT % 400 AS sb,
-                     ('0x' || substr(md5(doc_id::VARCHAR || ':o1'), 1, 8))
-                       ::BIGINT % 400 AS t1,
-                     ('0x' || substr(md5(doc_id::VARCHAR || ':o2'), 1, 8))
-                       ::BIGINT % 400 AS t2
-              FROM documents
-            ), ed AS (
-              SELECT 'g' || sb::VARCHAR AS src, 'g' || t1::VARCHAR AS dst
-              FROM b WHERE sb < 350 AND sb <> t1
-              UNION ALL
-              SELECT 'g' || sb::VARCHAR, 'g' || t2::VARCHAR
-              FROM b WHERE sb < 350 AND sb <> t2
-            ), se AS (
+        "assortativity": _SPARSE_HOST_EDGES_SQL + """se AS (
               SELECT DISTINCT least(src, dst) AS na, greatest(src, dst) AS nb
               FROM ed WHERE src <> dst
             ), both_dir AS (
@@ -6224,32 +6182,7 @@ def oracle_sql() -> dict[str, str]:
                          + 0.50000095367431640625) / 1e6 AS r
             FROM s
         """,
-        "lang_confusion": """
-            WITH markers AS (
-              SELECT * FROM (VALUES
-                ('en','the'),('en','and'),('en','of'),('en','to'),('en','is'),
-                ('en','in'),('en','that'),('en','it'),('en','with'),('en','for'),
-                ('de','der'),('de','die'),('de','das'),('de','und'),('de','ist'),
-                ('de','nicht'),('de','mit'),('de','ein'),('de','zu'),('de','für'),
-                ('fr','le'),('fr','la'),('fr','les'),('fr','et'),('fr','est'),
-                ('fr','dans'),('fr','pour'),('fr','que'),('fr','une'),('fr','des'),
-                ('nl','de'),('nl','het'),('nl','een'),('nl','en'),('nl','van'),
-                ('nl','is'),('nl','dat'),('nl','niet'),('nl','met'),('nl','voor')
-              ) AS t(cand_lang, marker)
-            ), toks AS (
-              SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok
-              FROM documents
-            ), hits AS (
-              SELECT doc_id, cand_lang, count(*) AS h
-              FROM toks JOIN markers ON tok = marker
-              WHERE tok <> ''
-              GROUP BY doc_id, cand_lang
-            ), best AS (
-              SELECT doc_id, cand_lang,
-                     row_number() OVER (PARTITION BY doc_id
-                                        ORDER BY h DESC, cand_lang) AS rn
-              FROM hits
-            ), pred AS (
+        "lang_confusion": _LANG_PRED_SQL + """, pred AS (
               SELECT d.doc_id, d.lang,
                      coalesce(b.cand_lang, 'unk') AS lang_pred
               FROM documents d
@@ -6801,19 +6734,7 @@ def oracle_sql() -> dict[str, str]:
             FROM documents d LEFT JOIN pd USING (doc_id)
             ORDER BY d.doc_id
         """,
-        "ccnet_tiers": """
-            WITH tk AS (
-              SELECT doc_id, unnest(string_split(lower(text), ' ')) AS term
-              FROM documents
-            ), tk2 AS (
-              SELECT doc_id, term FROM tk WHERE term <> ''
-            ), counts AS (
-              SELECT term, count(*) AS tc FROM tk2 GROUP BY term
-            ), tot AS (
-              SELECT sum(tc) AS t FROM counts
-            ), probs AS (
-              SELECT term, tc / t AS p FROM counts CROSS JOIN tot
-            ), per AS (
+        "ccnet_tiers": _UNIGRAM_PROBS_SQL + """, per AS (
               SELECT d.doc_id,
                      floor(x.ull * 1e6 + 0.50000095367431640625) / 1e6 AS ll
               FROM documents d LEFT JOIN (
@@ -6961,19 +6882,7 @@ def oracle_sql() -> dict[str, str]:
             FROM documents d LEFT JOIN agg a USING (doc_id)
             ORDER BY d.doc_id
         """,
-        "unigram_logloss": """
-            WITH tk AS (
-              SELECT doc_id, unnest(string_split(lower(text), ' ')) AS term
-              FROM documents
-            ), tk2 AS (
-              SELECT doc_id, term FROM tk WHERE term <> ''
-            ), counts AS (
-              SELECT term, count(*) AS tc FROM tk2 GROUP BY term
-            ), tot AS (
-              SELECT sum(tc) AS t FROM counts
-            ), probs AS (
-              SELECT term, tc / t AS p FROM counts CROSS JOIN tot
-            ), per AS (
+        "unigram_logloss": _UNIGRAM_PROBS_SQL + """, per AS (
               SELECT doc_id, avg(-log2(p)) AS ull
               FROM tk2 JOIN probs USING (term) GROUP BY doc_id
             )
@@ -7054,7 +6963,7 @@ def oracle_sql() -> dict[str, str]:
         "pack_sequences": f"""
             WITH nt AS (
               SELECT doc_id, count(*) AS n_tokens
-              FROM ({tokens}) GROUP BY doc_id
+              FROM ({_TOKENS_SQL}) GROUP BY doc_id
             ), d AS (
               SELECT doc.doc_id, coalesce(nt.n_tokens, 0) AS n_tokens,
                      md5(doc.doc_id || ':5') AS h
@@ -7074,22 +6983,7 @@ def oracle_sql() -> dict[str, str]:
         "ivf_recall": ivf_recall_sql,
         "assign_arrow": assign_arrow_sql,
         "ivf_topk_arrow": ivf_arrow_sql,
-        "matrix_glcm": f"""
-            WITH lv AS (
-              SELECT doc_id, pos,
-                     tok_len - min(tok_len) OVER (PARTITION BY doc_id) + 1 AS level
-              FROM ({tokens}) WHERE doc_id < 200
-            ), pairs AS (
-              SELECT doc_id, level AS i,
-                     lead(level) OVER (PARTITION BY doc_id ORDER BY pos) AS j
-              FROM lv
-            ), sym AS (
-              SELECT doc_id, i, j FROM pairs WHERE j IS NOT NULL
-              UNION ALL
-              SELECT doc_id, j AS i, i AS j FROM pairs WHERE j IS NOT NULL
-            ), cnt AS (
-              SELECT doc_id, i, j, count(*) AS c FROM sym GROUP BY doc_id, i, j
-            )
+        "matrix_glcm": _DOC_LEVELS_SQL + " WHERE doc_id < 200" + _GLCM_CELLS_SQL + """
             SELECT doc_id, 'glcm' AS matrix,
                    CAST(i AS BIGINT) AS i, CAST(j AS BIGINT) AS j,
                    floor((c * 1.0 / sum(c) OVER (PARTITION BY doc_id)) * 1e6
@@ -7097,26 +6991,7 @@ def oracle_sql() -> dict[str, str]:
                    CAST(0 AS BIGINT) AS angle
             FROM cnt ORDER BY doc_id, i, j
         """,
-        "matrix_glrlm": f"""
-            WITH lv AS (
-              SELECT doc_id, pos,
-                     tok_len - min(tok_len) OVER (PARTITION BY doc_id) + 1 AS level
-              FROM ({tokens}) WHERE doc_id < 200
-            ), flagged AS (
-              SELECT doc_id, pos, level,
-                     CASE WHEN lag(level, 1) OVER w IS NULL
-                               OR lag(level, 1) OVER w <> level
-                          THEN 1 ELSE 0 END AS chg
-              FROM lv WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-            ), runs AS (
-              SELECT doc_id, level,
-                     sum(chg) OVER (PARTITION BY doc_id ORDER BY pos
-                                    ROWS UNBOUNDED PRECEDING) AS run_id
-              FROM flagged
-            ), run_tbl AS (
-              SELECT doc_id, run_id, level, count(*) AS run_len
-              FROM runs GROUP BY doc_id, run_id, level
-            )
+        "matrix_glrlm": _DOC_LEVELS_SQL + " WHERE doc_id < 200" + _RUN_TABLE_SQL + """
             SELECT doc_id, 'glrlm' AS matrix,
                    CAST(level AS BIGINT) AS i, CAST(run_len AS BIGINT) AS j,
                    CAST(count(*) AS DOUBLE) AS n_runs,
@@ -7124,11 +6999,7 @@ def oracle_sql() -> dict[str, str]:
             FROM run_tbl GROUP BY doc_id, level, run_len
             ORDER BY doc_id, i, j
         """,
-        "matrix_glszm": f"""
-            WITH lv AS (
-              SELECT doc_id, pos,
-                     tok_len - min(tok_len) OVER (PARTITION BY doc_id) + 1 AS level
-              FROM ({tokens}) WHERE doc_id < 200
+        "matrix_glszm": _DOC_LEVELS_SQL + """ WHERE doc_id < 200
             ), flagged AS (
               SELECT doc_id, pos, level,
                      CASE WHEN lag(level, 1) OVER w IS NULL
@@ -7160,11 +7031,7 @@ def oracle_sql() -> dict[str, str]:
             FROM cells c JOIN totals t ON c.doc_id = t.doc_id
             ORDER BY c.doc_id, i, j
         """,
-        "matrix_ngtdm": f"""
-            WITH lv AS (
-              SELECT doc_id, pos,
-                     tok_len - min(tok_len) OVER (PARTITION BY doc_id) + 1 AS level
-              FROM ({tokens}) WHERE doc_id < 200
+        "matrix_ngtdm": _DOC_LEVELS_SQL + """ WHERE doc_id < 200
             ), terms AS (
               SELECT doc_id, level,
                      CASE WHEN count(level) OVER w > 1
@@ -7190,11 +7057,7 @@ def oracle_sql() -> dict[str, str]:
                    CAST(0 AS BIGINT) AS angle
             FROM cells ORDER BY doc_id, i, j
         """,
-        "matrix_gldm": f"""
-            WITH lv AS (
-              SELECT doc_id, pos,
-                     tok_len - min(tok_len) OVER (PARTITION BY doc_id) + 1 AS level
-              FROM ({tokens}) WHERE doc_id < 200
+        "matrix_gldm": _DOC_LEVELS_SQL + """ WHERE doc_id < 200
             ), dep AS (
               SELECT doc_id, level,
                      1 + (CASE WHEN lag(level, 1) OVER w = level
@@ -7237,7 +7100,7 @@ def oracle_sql() -> dict[str, str]:
         "frame_sample": f"""
             WITH vids AS (
               SELECT doc_id, count(*) AS n_frames
-              FROM ({tokens}) WHERE doc_id < 200 GROUP BY doc_id
+              FROM ({_TOKENS_SQL}) WHERE doc_id < 200 GROUP BY doc_id
             )
             SELECT doc_id,
                    CAST(unnest(generate_series(0, n_frames - 1, 7)) AS BIGINT)
@@ -7438,27 +7301,7 @@ def oracle_sql() -> dict[str, str]:
         "url_normalize": url_normalize_sql,
         "url_prefix_match": url_prefix_match_sql,
         "domain_stats": domain_stats_sql,
-        "dsir_weights": """
-            WITH tk AS (
-              SELECT doc_id,
-                     CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS is_tgt,
-                     unnest(string_split(lower(text), ' ')) AS term
-              FROM documents
-            ), tk2 AS (
-              SELECT doc_id, is_tgt, term FROM tk WHERE term <> ''
-            ), census AS (
-              SELECT term, count(*) AS c_raw, sum(is_tgt) AS c_tgt
-              FROM tk2 GROUP BY term
-            ), tot AS (
-              SELECT sum(c_raw) AS n_raw, sum(c_tgt) AS n_tgt,
-                     count(*) AS v
-              FROM census
-            ), ratio AS (
-              SELECT term,
-                     ln((c_tgt + 1.0) / (n_tgt + 1.0 * v))
-                     - ln((c_raw + 1.0) / (n_raw + 1.0 * v)) AS lr
-              FROM census CROSS JOIN tot
-            ), per AS (
+        "dsir_weights": _DSIR_RATIO_SQL + """, per AS (
               SELECT doc_id, sum(lr) AS w, count(*) AS n
               FROM tk2 JOIN ratio USING (term) GROUP BY doc_id
             )
@@ -7908,44 +7751,12 @@ def oracle_sql() -> dict[str, str]:
                    nz AS nonzero_buckets
             FROM fin ORDER BY lang
         """,
-        "bpe_pairs": """
-            WITH w AS (
-              SELECT word, count(*) AS n FROM (
-                SELECT unnest(string_split(lower(text), ' ')) AS word
-                FROM documents)
-              WHERE word <> '' GROUP BY word
-            ), s AS (
-              SELECT word, n,
-                     list_append(string_split(word, ''), '</w>') AS syms
-              FROM w
-            ), p AS (
-              SELECT unnest(syms[1:len(syms) - 1]) AS s1,
-                     unnest(syms[2:len(syms)]) AS s2, n
-              FROM s
-            ), c AS (
-              SELECT s1, s2, sum(n)::BIGINT AS n FROM p GROUP BY s1, s2
-            ), k AS (
+        "bpe_pairs": _BPE_PAIRS_SQL + """, k AS (
               SELECT * FROM c ORDER BY n DESC, s1, s2 LIMIT 50
             )
             SELECT s1, s2, n FROM k ORDER BY s1, s2
         """,
-        "bpe_merge": """
-            WITH w AS (
-              SELECT word, count(*) AS n FROM (
-                SELECT unnest(string_split(lower(text), ' ')) AS word
-                FROM documents)
-              WHERE word <> '' GROUP BY word
-            ), s AS (
-              SELECT word, n,
-                     list_append(string_split(word, ''), '</w>') AS syms
-              FROM w
-            ), p AS (
-              SELECT unnest(syms[1:len(syms) - 1]) AS s1,
-                     unnest(syms[2:len(syms)]) AS s2, n
-              FROM s
-            ), c AS (
-              SELECT s1, s2, sum(n)::BIGINT AS n FROM p GROUP BY s1, s2
-            ), tp AS (
+        "bpe_merge": _BPE_PAIRS_SQL + """, tp AS (
               SELECT s1, s2 FROM c ORDER BY n DESC, s1, s2 LIMIT 1
             ), m AS (
               SELECT s.word, s.n,
@@ -8080,42 +7891,9 @@ def oracle_sql() -> dict[str, str]:
             GROUP BY user_id, window_start
             ORDER BY user_id, window_start
         """,
-        "interval_join": """
-            WITH a AS (
-              SELECT event_id AS iv_id, ts AS lo,
-                     ts + INTERVAL 2 HOUR AS hi
-              FROM events WHERE event_id % 97 = 0
-            )
-            SELECT f.event_id, a.iv_id
-            FROM events f JOIN a ON a.lo <= f.ts AND f.ts < a.hi
-            ORDER BY f.event_id, a.iv_id
-        """,
-"stream_interval_join": """
-            WITH a AS (
-              SELECT event_id AS iv_id, ts AS lo,
-                     ts + INTERVAL 2 HOUR AS hi
-              FROM events WHERE event_id % 97 = 0
-            )
-            SELECT f.event_id, a.iv_id
-            FROM events f JOIN a ON a.lo <= f.ts AND f.ts < a.hi
-            ORDER BY f.event_id, a.iv_id
-        """,
-        "pagerank": """
-            WITH b AS (
-              SELECT ('0x' || substr(md5(doc_id::VARCHAR), 1, 8))
-                       ::BIGINT % 40 AS sb,
-                     ('0x' || substr(md5(doc_id::VARCHAR || ':o1'), 1, 8))
-                       ::BIGINT % 40 AS t1,
-                     ('0x' || substr(md5(doc_id::VARCHAR || ':o2'), 1, 8))
-                       ::BIGINT % 40 AS t2
-              FROM documents
-            ), e AS (
-              SELECT 'h' || sb::VARCHAR AS src, 'h' || t1::VARCHAR AS dst
-              FROM b WHERE sb < 35 AND sb <> t1
-              UNION ALL
-              SELECT 'h' || sb::VARCHAR, 'h' || t2::VARCHAR
-              FROM b WHERE sb < 35 AND sb <> t2
-            ), nodes AS (
+        "interval_join": _INTERVAL_JOIN_SQL,
+        "stream_interval_join": _INTERVAL_JOIN_SQL,
+        "pagerank": _HOST_EDGES_SQL + """nodes AS (
               SELECT src AS node FROM e UNION SELECT dst FROM e
             ), outd AS (
               SELECT src AS node, count(*)::DOUBLE AS od FROM e GROUP BY src
@@ -8163,22 +7941,7 @@ def oracle_sql() -> dict[str, str]:
                    floor(r * 1e6 + 0.50000095367431640625) / 1e6 AS rank
             FROM r3 ORDER BY node
         """,
-        "trustrank": """
-            WITH b AS (
-              SELECT ('0x' || substr(md5(doc_id::VARCHAR), 1, 8))
-                       ::BIGINT % 40 AS sb,
-                     ('0x' || substr(md5(doc_id::VARCHAR || ':o1'), 1, 8))
-                       ::BIGINT % 40 AS t1,
-                     ('0x' || substr(md5(doc_id::VARCHAR || ':o2'), 1, 8))
-                       ::BIGINT % 40 AS t2
-              FROM documents
-            ), e AS (
-              SELECT 'h' || sb::VARCHAR AS src, 'h' || t1::VARCHAR AS dst
-              FROM b WHERE sb < 35 AND sb <> t1
-              UNION ALL
-              SELECT 'h' || sb::VARCHAR, 'h' || t2::VARCHAR
-              FROM b WHERE sb < 35 AND sb <> t2
-            ), nodes AS (
+        "trustrank": _HOST_EDGES_SQL + """nodes AS (
               SELECT src AS node FROM e UNION SELECT dst FROM e
             ), outd AS (
               SELECT src AS node, count(*)::DOUBLE AS od FROM e GROUP BY src
@@ -8227,22 +7990,7 @@ def oracle_sql() -> dict[str, str]:
                    floor(r * 1e6 + 0.50000095367431640625) / 1e6 AS rank
             FROM r3 ORDER BY node
         """,
-        "degree_census": """
-            WITH b AS (
-              SELECT ('0x' || substr(md5(doc_id::VARCHAR), 1, 8))
-                       ::BIGINT % 40 AS sb,
-                     ('0x' || substr(md5(doc_id::VARCHAR || ':o1'), 1, 8))
-                       ::BIGINT % 40 AS t1,
-                     ('0x' || substr(md5(doc_id::VARCHAR || ':o2'), 1, 8))
-                       ::BIGINT % 40 AS t2
-              FROM documents
-            ), e AS (
-              SELECT 'h' || sb::VARCHAR AS src, 'h' || t1::VARCHAR AS dst
-              FROM b WHERE sb < 35 AND sb <> t1
-              UNION ALL
-              SELECT 'h' || sb::VARCHAR, 'h' || t2::VARCHAR
-              FROM b WHERE sb < 35 AND sb <> t2
-            ), outd AS (
+        "degree_census": _HOST_EDGES_SQL + """outd AS (
               SELECT src AS node, count(*) AS out_degree FROM e GROUP BY src
             ), ind AS (
               SELECT dst AS node, count(*) AS in_degree FROM e GROUP BY dst
@@ -8414,27 +8162,7 @@ def oracle_sql() -> dict[str, str]:
                      AS value
             FROM stacked ORDER BY metric
         """,
-        "dsir_sample": """
-            WITH tk AS (
-              SELECT doc_id,
-                     CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS is_tgt,
-                     unnest(string_split(lower(text), ' ')) AS term
-              FROM documents
-            ), tk2 AS (
-              SELECT doc_id, is_tgt, term FROM tk WHERE term <> ''
-            ), census AS (
-              SELECT term, count(*) AS c_raw, sum(is_tgt) AS c_tgt
-              FROM tk2 GROUP BY term
-            ), tot AS (
-              SELECT sum(c_raw) AS n_raw, sum(c_tgt) AS n_tgt,
-                     count(*) AS v
-              FROM census
-            ), ratio AS (
-              SELECT term,
-                     ln((c_tgt + 1.0) / (n_tgt + 1.0 * v))
-                     - ln((c_raw + 1.0) / (n_raw + 1.0 * v)) AS lr
-              FROM census CROSS JOIN tot
-            ), per AS (
+        "dsir_sample": _DSIR_RATIO_SQL + """, per AS (
               SELECT doc_id, sum(lr) AS w
               FROM tk2 JOIN ratio USING (term) GROUP BY doc_id
             ), scored AS (
@@ -8599,7 +8327,7 @@ def oracle_sql() -> dict[str, str]:
                      count(*)::DOUBLE AS n_tokens,
                      min(tok_len)::DOUBLE AS min_len,
                      max(tok_len)::DOUBLE AS max_len
-              FROM ({tokens}) GROUP BY doc_id
+              FROM ({_TOKENS_SQL}) GROUP BY doc_id
             )
             SELECT doc_id, feature_name, value
             FROM wide
@@ -8610,7 +8338,7 @@ def oracle_sql() -> dict[str, str]:
         "hash_bucket": f"""
             SELECT (('0x' || substr(md5(tok), 1, 8))::BIGINT % 16 + 1) AS bucket,
                    count(*) AS n_tokens
-            FROM ({tokens})
+            FROM ({_TOKENS_SQL})
             GROUP BY bucket ORDER BY bucket
         """,
         "repetition": """
@@ -8639,14 +8367,14 @@ def oracle_sql() -> dict[str, str]:
                      (CASE WHEN lag(tok_len) OVER w >= tok_len THEN 1 ELSE 0 END
                       + CASE WHEN lead(tok_len) OVER w >= tok_len THEN 1 ELSE 0 END)
                        AS code
-              FROM ({tokens}) WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
+              FROM ({_TOKENS_SQL}) WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
             )
             SELECT d.lang, c.code, count(*) AS cnt
             FROM coded c JOIN documents d ON c.doc_id = d.doc_id
             GROUP BY d.lang, c.code ORDER BY d.lang, c.code
         """,
         "wavelet_haar": f"""
-            WITH t AS (SELECT * FROM ({tokens})), d AS (
+            WITH t AS (SELECT * FROM ({_TOKENS_SQL})), d AS (
               SELECT doc_id, tok_len,
                      lag(tok_len) OVER (PARTITION BY doc_id ORDER BY pos) AS prev
               FROM t
@@ -8679,13 +8407,13 @@ def oracle_sql() -> dict[str, str]:
                    CAST(sum(tok_len * tok_len) AS BIGINT) AS energy,
                    floor((sqrt(avg(tok_len * tok_len))) * 1e6 + 0.50000095367431640625) / 1e6 AS rms,
                    floor((var_pop(tok_len)) * 1e6 + 0.50000095367431640625) / 1e6 AS variance
-            FROM ({tokens}) GROUP BY doc_id ORDER BY doc_id
+            FROM ({_TOKENS_SQL}) GROUP BY doc_id ORDER BY doc_id
         """,
         "fo_binned_hist": f"""
             WITH lv AS (
               SELECT t.doc_id,
                      CAST(floor(tok_len / 4) - floor(min(tok_len) OVER (PARTITION BY t.doc_id) / 4) + 1 AS BIGINT) AS level
-              FROM ({tokens}) t
+              FROM ({_TOKENS_SQL}) t
             )
             SELECT d.lang, lv.level, count(*) AS cnt
             FROM lv JOIN documents d ON lv.doc_id = d.doc_id
@@ -8694,7 +8422,7 @@ def oracle_sql() -> dict[str, str]:
         "entropy_by_lang": f"""
             WITH hist AS (
               SELECT d.lang, t.tok_len, count(*) AS c
-              FROM ({tokens}) t JOIN documents d ON t.doc_id = d.doc_id
+              FROM ({_TOKENS_SQL}) t JOIN documents d ON t.doc_id = d.doc_id
               GROUP BY d.lang, t.tok_len
             ), p AS (
               SELECT lang, c / sum(c) OVER (PARTITION BY lang) AS p FROM hist
@@ -8705,7 +8433,7 @@ def oracle_sql() -> dict[str, str]:
         "glcm_pairs": f"""
             WITH lv AS (
               SELECT doc_id, pos, CAST(least(floor(tok_len / 2) + 1, 8) AS BIGINT) AS level
-              FROM ({tokens})
+              FROM ({_TOKENS_SQL})
             ), pairs AS (
               SELECT doc_id, level,
                      lead(level, 1) OVER (PARTITION BY doc_id ORDER BY pos) AS next_level
@@ -8720,22 +8448,7 @@ def oracle_sql() -> dict[str, str]:
         "glrlm_runs": f"""
             WITH lv AS (
               SELECT doc_id, pos, CAST(least(floor(tok_len / 2) + 1, 8) AS BIGINT) AS level
-              FROM ({tokens})
-            ), flagged AS (
-              SELECT doc_id, pos, level,
-                     CASE WHEN lag(level, 1) OVER w IS NULL
-                               OR lag(level, 1) OVER w <> level
-                          THEN 1 ELSE 0 END AS chg
-              FROM lv WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-            ), runs AS (
-              SELECT doc_id, level,
-                     sum(chg) OVER (PARTITION BY doc_id ORDER BY pos
-                                    ROWS UNBOUNDED PRECEDING) AS run_id
-              FROM flagged
-            ), run_tbl AS (
-              SELECT doc_id, run_id, level, count(*) AS run_len
-              FROM runs GROUP BY doc_id, run_id, level
-            )
+              FROM ({_TOKENS_SQL}){_RUN_TABLE_SQL}
             SELECT level, run_len, count(*) AS n_runs
             FROM run_tbl GROUP BY level, run_len ORDER BY level, run_len
         """,
@@ -8774,13 +8487,7 @@ def oracle_sql() -> dict[str, str]:
                                ROWS UNBOUNDED PRECEDING)) * 1e6 + 0.50000095367431640625) / 1e6 AS last_purchase_value
             FROM events ORDER BY event_id
         """,
-        "asof_join_tolerance": """
-            WITH purchases AS (
-              SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'
-            ), signups AS (
-              SELECT user_id, ts AS signup_ts, value AS signup_value
-              FROM events WHERE event_type = 'signup'
-            ), j AS (
+        "asof_join_tolerance": _ASOF_INPUTS_SQL + """, j AS (
               SELECT p.event_id, p.user_id, p.ts, s.signup_ts, s.signup_value
               FROM purchases p
               ASOF LEFT JOIN signups s
@@ -8797,41 +8504,9 @@ def oracle_sql() -> dict[str, str]:
         # streaming serve twin (stream_asof): identical semantics to the
         # batch as-of — each micro-batch joins the full static history —
         # so the oracle is the same native ASOF query
-        "stream_asof": """
-            WITH purchases AS (
-              SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'
-            ), signups AS (
-              SELECT user_id, ts AS signup_ts, value AS signup_value
-              FROM events WHERE event_type = 'signup'
-            )
-            SELECT p.event_id, p.user_id, s.signup_ts,
-                   floor((s.signup_value) * 1e6 + 0.50000095367431640625) / 1e6 AS signup_value
-            FROM purchases p
-            ASOF LEFT JOIN signups s
-              ON p.user_id = s.user_id AND p.ts >= s.signup_ts
-            ORDER BY p.event_id
-        """,
-        "asof_join": """
-            WITH purchases AS (
-              SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'
-            ), signups AS (
-              SELECT user_id, ts AS signup_ts, value AS signup_value
-              FROM events WHERE event_type = 'signup'
-            )
-            SELECT p.event_id, p.user_id, s.signup_ts,
-                   floor((s.signup_value) * 1e6 + 0.50000095367431640625) / 1e6 AS signup_value
-            FROM purchases p
-            ASOF LEFT JOIN signups s
-              ON p.user_id = s.user_id AND p.ts >= s.signup_ts
-            ORDER BY p.event_id
-        """,
-        "asof_join_forward": """
-            WITH purchases AS (
-              SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'
-            ), signups AS (
-              SELECT user_id, ts AS signup_ts, value AS signup_value
-              FROM events WHERE event_type = 'signup'
-            )
+        "stream_asof": _ASOF_JOIN_SQL,
+        "asof_join": _ASOF_JOIN_SQL,
+        "asof_join_forward": _ASOF_INPUTS_SQL + """
             SELECT p.event_id, p.user_id, s.signup_ts,
                    floor((s.signup_value) * 1e6 + 0.50000095367431640625) / 1e6 AS signup_value
             FROM purchases p
@@ -8839,20 +8514,7 @@ def oracle_sql() -> dict[str, str]:
               ON p.user_id = s.user_id AND p.ts <= s.signup_ts
             ORDER BY p.event_id
         """,
-        "asof_join_salted": """
-            WITH purchases AS (
-              SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'
-            ), signups AS (
-              SELECT user_id, ts AS signup_ts, value AS signup_value
-              FROM events WHERE event_type = 'signup'
-            )
-            SELECT p.event_id, p.user_id, s.signup_ts,
-                   floor((s.signup_value) * 1e6 + 0.50000095367431640625) / 1e6 AS signup_value
-            FROM purchases p
-            ASOF LEFT JOIN signups s
-              ON p.user_id = s.user_id AND p.ts >= s.signup_ts
-            ORDER BY p.event_id
-        """,
+        "asof_join_salted": _ASOF_JOIN_SQL,
         "stream_sessionize": """
             WITH e AS (
               SELECT user_id, ts FROM events WHERE user_id < 50
@@ -8874,22 +8536,8 @@ def oracle_sql() -> dict[str, str]:
             FROM s GROUP BY user_id, sess_id
             ORDER BY user_id, session_start
         """,
-        "stream_tumbling": """
-            SELECT user_id,
-                   time_bucket(INTERVAL '1 hour', ts) AS hour_start,
-                   count(*) AS n_events,
-                   floor((sum(value)) * 1e6 + 0.50000095367431640625) / 1e6 AS sum_value
-            FROM events GROUP BY user_id, hour_start
-            ORDER BY user_id, hour_start
-        """,
-        "tumbling_window": """
-            SELECT user_id,
-                   time_bucket(INTERVAL '1 hour', ts) AS hour_start,
-                   count(*) AS n_events,
-                   floor((sum(value)) * 1e6 + 0.50000095367431640625) / 1e6 AS sum_value
-            FROM events GROUP BY user_id, hour_start
-            ORDER BY user_id, hour_start
-        """,
+        "stream_tumbling": _TUMBLING_SQL,
+        "tumbling_window": _TUMBLING_SQL,
         "rolling_stats": """
             SELECT event_id, user_id,
                    floor((avg(value) OVER w) * 1e6 + 0.50000095367431640625) / 1e6 AS roll_mean,
@@ -8904,16 +8552,7 @@ def oracle_sql() -> dict[str, str]:
         "ngtdm_terms": f"""
             WITH lv AS (
               SELECT doc_id, pos, CAST(least(floor(tok_len / 2) + 1, 8) AS BIGINT) AS level
-              FROM ({tokens})
-            ), terms AS (
-              SELECT doc_id, level,
-                     CASE WHEN count(level) OVER w > 1
-                          THEN (sum(level) OVER w - level) / (count(level) OVER w - 1)
-                     END AS nbr_mean
-              FROM lv
-              WINDOW w AS (PARTITION BY doc_id ORDER BY pos
-                           ROWS BETWEEN 1 PRECEDING AND 1 FOLLOWING)
-            )
+              FROM ({_TOKENS_SQL}){_NGTDM_TERMS_SQL}
             SELECT level, count(*) AS n_i,
                    floor((sum(abs(level - nbr_mean))) * 1e6 + 0.50000095367431640625) / 1e6 AS s_i
             FROM terms WHERE nbr_mean IS NOT NULL
@@ -8922,7 +8561,7 @@ def oracle_sql() -> dict[str, str]:
         "gldm_dependence": f"""
             WITH lv AS (
               SELECT doc_id, pos, CAST(least(floor(tok_len / 2) + 1, 8) AS BIGINT) AS level
-              FROM ({tokens})
+              FROM ({_TOKENS_SQL})
             ), dep AS (
               SELECT doc_id, level,
                      (CASE WHEN lag(level) OVER w IS NOT NULL
@@ -8976,11 +8615,7 @@ def oracle_sql() -> dict[str, str]:
             SELECT doc_id, count(*) AS n_fingerprints
             FROM fp GROUP BY doc_id ORDER BY doc_id
         """,
-        "knn_cosine": """
-            WITH emb AS (
-              SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v
-              FROM embeddings
-            ), q AS (
+        "knn_cosine": _EMBEDDINGS_SQL + """, q AS (
               SELECT vec_id AS query_id, v AS qv FROM emb WHERE vec_id < 3
             ), scored AS (
               SELECT q.query_id, e.vec_id,
@@ -8995,32 +8630,7 @@ def oracle_sql() -> dict[str, str]:
             SELECT query_id, vec_id, floor((cos) * 1e6 + 0.50000095367431640625) / 1e6 AS cosine, rank
             FROM ranked WHERE rank <= 3 ORDER BY query_id, rank
         """,
-        "lang_detect": """
-            WITH markers AS (
-              SELECT * FROM (VALUES
-                ('en','the'),('en','and'),('en','of'),('en','to'),('en','is'),
-                ('en','in'),('en','that'),('en','it'),('en','with'),('en','for'),
-                ('de','der'),('de','die'),('de','das'),('de','und'),('de','ist'),
-                ('de','nicht'),('de','mit'),('de','ein'),('de','zu'),('de','für'),
-                ('fr','le'),('fr','la'),('fr','les'),('fr','et'),('fr','est'),
-                ('fr','dans'),('fr','pour'),('fr','que'),('fr','une'),('fr','des'),
-                ('nl','de'),('nl','het'),('nl','een'),('nl','en'),('nl','van'),
-                ('nl','is'),('nl','dat'),('nl','niet'),('nl','met'),('nl','voor')
-              ) AS t(cand_lang, marker)
-            ), toks AS (
-              SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok
-              FROM documents
-            ), hits AS (
-              SELECT doc_id, cand_lang, count(*) AS h
-              FROM toks JOIN markers ON tok = marker
-              WHERE tok <> ''
-              GROUP BY doc_id, cand_lang
-            ), best AS (
-              SELECT doc_id, cand_lang,
-                     row_number() OVER (PARTITION BY doc_id
-                                        ORDER BY h DESC, cand_lang) AS rn
-              FROM hits
-            )
+        "lang_detect": _LANG_PRED_SQL + """
             SELECT coalesce(b.cand_lang, 'unk') AS lang_pred,
                    count(*) AS n_docs
             FROM documents d
@@ -9034,7 +8644,7 @@ def oracle_sql() -> dict[str, str]:
                      CASE WHEN stddev_pop(tok_len) OVER w > 0
                           THEN (tok_len - avg(tok_len) OVER w) / (stddev_pop(tok_len) OVER w)
                           ELSE 0.0 END AS z
-              FROM ({tokens})
+              FROM ({_TOKENS_SQL})
               WINDOW w AS (PARTITION BY doc_id)
             ), c AS (
               SELECT doc_id, z, greatest(least(z, 2.0), -2.0) AS zc FROM z
@@ -9049,7 +8659,7 @@ def oracle_sql() -> dict[str, str]:
               SELECT doc_id, tok_len,
                      avg(tok_len) OVER w AS mu,
                      stddev_pop(tok_len) OVER w AS sd
-              FROM ({tokens})
+              FROM ({_TOKENS_SQL})
               WINDOW w AS (PARTITION BY doc_id)
             )
             SELECT doc_id, count(*) AS n_kept,
@@ -9062,7 +8672,7 @@ def oracle_sql() -> dict[str, str]:
             WITH s AS (
               SELECT doc_id,
                      pow(tok_len / sqrt(max(abs(tok_len)) OVER (PARTITION BY doc_id)), 2.0) AS xsq
-              FROM ({tokens})
+              FROM ({_TOKENS_SQL})
             )
             SELECT doc_id, floor((sum(xsq)) * 1e6 + 0.50000095367431640625) / 1e6 AS sum_sq,
                    floor((max(xsq)) * 1e6 + 0.50000095367431640625) / 1e6 AS max_sq
@@ -9107,7 +8717,7 @@ def oracle_sql() -> dict[str, str]:
         """,
         "seqshape": f"""
             WITH v AS (
-              SELECT doc_id, pos FROM ({tokens}) WHERE tok_len >= 3
+              SELECT doc_id, pos FROM ({_TOKENS_SQL}) WHERE tok_len >= 3
             ), runs AS (
               SELECT doc_id, pos,
                      CASE WHEN lag(pos) OVER w IS NULL
@@ -9125,7 +8735,7 @@ def oracle_sql() -> dict[str, str]:
             WITH lv AS (
               SELECT doc_id, pos,
                      CAST(tok_len - min(tok_len) OVER (PARTITION BY doc_id) + 1 AS INT) AS level
-              FROM ({tokens})
+              FROM ({_TOKENS_SQL})
             ), w AS (
               SELECT doc_id, pos,
                      list(level) OVER (PARTITION BY doc_id ORDER BY pos
@@ -9140,11 +8750,7 @@ def oracle_sql() -> dict[str, str]:
                       'sum')) * 1e6 + 0.50000095367431640625) / 1e6 + 0.0 AS roll_entropy
             FROM w WHERE doc_id < 50 ORDER BY doc_id, pos
         """,
-        "glcm_contrast_doc": f"""
-            WITH lv AS (
-              SELECT doc_id, pos,
-                     tok_len - min(tok_len) OVER (PARTITION BY doc_id) + 1 AS level
-              FROM ({tokens})
+        "glcm_contrast_doc": _DOC_LEVELS_SQL + """
             ), pairs AS (
               SELECT doc_id, level,
                      lead(level) OVER (PARTITION BY doc_id ORDER BY pos) AS nxt
@@ -9156,22 +8762,7 @@ def oracle_sql() -> dict[str, str]:
             FROM pairs WHERE nxt IS NOT NULL
             GROUP BY doc_id ORDER BY doc_id
         """,
-        "glcm_imc_doc": f"""
-            WITH lv AS (
-              SELECT doc_id, pos,
-                     tok_len - min(tok_len) OVER (PARTITION BY doc_id) + 1 AS level
-              FROM ({tokens})
-            ), pairs AS (
-              SELECT doc_id, level AS i,
-                     lead(level) OVER (PARTITION BY doc_id ORDER BY pos) AS j
-              FROM lv
-            ), sym AS (
-              SELECT doc_id, i, j FROM pairs WHERE j IS NOT NULL
-              UNION ALL
-              SELECT doc_id, j AS i, i AS j FROM pairs WHERE j IS NOT NULL
-            ), cnt AS (
-              SELECT doc_id, i, j, count(*) AS c FROM sym GROUP BY doc_id, i, j
-            ), p AS (
+        "glcm_imc_doc": _DOC_LEVELS_SQL + _GLCM_CELLS_SQL + """, p AS (
               SELECT doc_id, i, j,
                      c * 1.0 / sum(c) OVER (PARTITION BY doc_id) AS p
               FROM cnt
@@ -9210,11 +8801,7 @@ def oracle_sql() -> dict[str, str]:
             JOIN hxy2 ON hxy.doc_id = hxy2.doc_id
             ORDER BY hxy.doc_id
         """,
-        "glrlm_sre_doc": f"""
-            WITH lv AS (
-              SELECT doc_id, pos,
-                     tok_len - min(tok_len) OVER (PARTITION BY doc_id) + 1 AS level
-              FROM ({tokens})
+        "glrlm_sre_doc": _DOC_LEVELS_SQL + """
             ), flagged AS (
               SELECT doc_id, pos, level,
                      CASE WHEN lag(level) OVER w IS NULL
@@ -9234,20 +8821,7 @@ def oracle_sql() -> dict[str, str]:
                    floor((sum(1.0 / (run_len * run_len)) / count(*)) * 1e6 + 0.50000095367431640625) / 1e6 AS glrlm_sre
             FROM run_tbl GROUP BY doc_id ORDER BY doc_id
         """,
-        "ngtdm_coarseness_doc": f"""
-            WITH lv AS (
-              SELECT doc_id, pos,
-                     tok_len - min(tok_len) OVER (PARTITION BY doc_id) + 1 AS level
-              FROM ({tokens})
-            ), terms AS (
-              SELECT doc_id, level,
-                     CASE WHEN count(level) OVER w > 1
-                          THEN (sum(level) OVER w - level) / (count(level) OVER w - 1)
-                     END AS nbr_mean
-              FROM lv
-              WINDOW w AS (PARTITION BY doc_id ORDER BY pos
-                           ROWS BETWEEN 1 PRECEDING AND 1 FOLLOWING)
-            ), per_level AS (
+        "ngtdm_coarseness_doc": _DOC_LEVELS_SQL + _NGTDM_TERMS_SQL + """, per_level AS (
               SELECT doc_id, level, count(*) AS n_i,
                      sum(abs(level - nbr_mean)) AS s_i
               FROM terms WHERE nbr_mean IS NOT NULL
@@ -9265,11 +8839,7 @@ def oracle_sql() -> dict[str, str]:
                      AS ngtdm_coarseness
             FROM agg ORDER BY doc_id
         """,
-        "glszm_zp_doc": f"""
-            WITH lv AS (
-              SELECT doc_id, pos,
-                     tok_len - min(tok_len) OVER (PARTITION BY doc_id) + 1 AS level
-              FROM ({tokens})
+        "glszm_zp_doc": _DOC_LEVELS_SQL + """
             ), flagged AS (
               SELECT doc_id,
                      CASE WHEN lag(level) OVER w IS NULL
@@ -9282,11 +8852,7 @@ def oracle_sql() -> dict[str, str]:
                      AS glszm_zone_percentage
             FROM flagged GROUP BY doc_id ORDER BY doc_id
         """,
-        "gldm_sde_doc": f"""
-            WITH lv AS (
-              SELECT doc_id, pos,
-                     tok_len - min(tok_len) OVER (PARTITION BY doc_id) + 1 AS level
-              FROM ({tokens})
+        "gldm_sde_doc": _DOC_LEVELS_SQL + """
             ), dep AS (
               SELECT doc_id,
                      (CASE WHEN lag(level) OVER w IS NOT NULL
@@ -9302,11 +8868,7 @@ def oracle_sql() -> dict[str, str]:
                      AS gldm_sde
             FROM dep GROUP BY doc_id ORDER BY doc_id
         """,
-        "embedding_dedup": """
-            WITH emb AS (
-              SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v
-              FROM embeddings
-            )
+        "embedding_dedup": _EMBEDDINGS_SQL + """
             SELECT a.vec_id AS id_a, b.vec_id AS id_b,
                    floor((list_cosine_similarity(a.v, b.v)) * 1e6 + 0.50000095367431640625) / 1e6 AS cosine
             FROM emb a JOIN emb b ON a.vec_id < b.vec_id
@@ -9362,7 +8924,7 @@ def oracle_sql() -> dict[str, str]:
             WITH lv AS (
               SELECT doc_id,
                      floor(tok_len) - floor(min(tok_len) OVER (PARTITION BY doc_id)) + 1 AS level
-              FROM ({tokens})
+              FROM ({_TOKENS_SQL})
             ), hist AS (
               SELECT doc_id, level, count(*) AS c FROM lv GROUP BY doc_id, level
             ), p AS (
@@ -9396,18 +8958,7 @@ def oracle_sql() -> dict[str, str]:
                    floor((avg(CASE WHEN tok IN ('the','a','of','and','to','in','is','it')
                                   THEN 1.0 ELSE 0.0 END)) * 1e6 + 0.50000095367431640625) / 1e6 AS stopword_ratio,
                    count(DISTINCT tok) AS n_distinct_tokens
-            FROM ({tokens}) GROUP BY doc_id ORDER BY doc_id
+            FROM ({_TOKENS_SQL}) GROUP BY doc_id ORDER BY doc_id
         """,
     }
 
-
-# the streaming SCD2 gate replays the SAME events through the real
-# streaming engine; its emitted set equals the batch operator on a
-# single-file replay, so it shares the batch oracle verbatim
-_ORACLES_RAW = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    d = _ORACLES_RAW()
-    d["stream_scd2"] = d["scd2"]
-    return d

@@ -1,4 +1,4 @@
-"""Text analytics: language-ID, quality scoring, token counting, document
+"""Text analytics: language-ID, quality scoring, document
 fingerprinting — all JVM-side column expressions / relational plans
 (no Python UDFs)."""
 
@@ -18,25 +18,6 @@ LANG_MARKERS = {
 }
 
 STOPWORDS_EN = LANG_MARKERS["en"] + ["a", "an", "on", "at", "by", "as", "be"]
-
-
-def token_count(text_col, tokenizer: str = "whitespace"):
-    """Builtin token count expression."""
-    if tokenizer == "whitespace":
-        toks = F.split(text_col, " ")
-        return F.size(F.filter(toks, lambda t: t != ""))
-    if tokenizer == "bpe_regex":
-        # count of word / number / punct-run matches
-        return F.size(
-            F.filter(
-                F.split(
-                    F.regexp_replace(text_col, r"([A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]+)", "$1"),
-                    "",
-                ),
-                lambda t: F.trim(t) != "",
-            )
-        )
-    raise ValueError(tokenizer)
 
 
 def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:

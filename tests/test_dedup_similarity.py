@@ -1274,3 +1274,34 @@ def test_embedding_dedup_arrow_arm_bitwise_matches_expr(spark):
     assert new.exceptAll(old).count() == 0
     assert old.exceptAll(new).count() == 0
     assert new.count() > 0
+
+
+@pytest.mark.parametrize("case", ["clean", "null_vector", "ragged_vector",
+                                  "over_row_bound"])
+def test_embedding_dedup_arm_choice(spark, tmp_path, monkeypatch, case):
+    """The clean-input check picks the arm: clean fixed-width vectors take
+    the Arrow arm (a Python UDF in the plan); a NULL or ragged vector, or
+    more rows than the collect bound, takes the expression arm. Either
+    way the rows equal the expression arm's."""
+    import __spark_entry__ as e
+
+    rng = np.random.default_rng(3)
+    vecs = [rng.standard_normal(8).tolist() for _ in range(30)]
+    for i in range(0, 30, 3):
+        vecs[i + 1] = [x + 0.01 for x in vecs[i]]  # near-dup pairs
+    if case == "null_vector":
+        vecs[5] = None
+    elif case == "ragged_vector":
+        vecs[5] = vecs[5][:4]
+    elif case == "over_row_bound":
+        monkeypatch.setattr(e, "_EMBEDDING_DEDUP_MAX_ROWS", 10)
+    pd.DataFrame({"vec_id": np.arange(30, dtype=np.int64),
+                  "embedding": vecs, "label": 0}).to_parquet(
+        tmp_path / "embeddings.parquet")
+    out = e.q_embedding_dedup(spark, str(tmp_path))
+    udf = "MapInPandas" in out._jdf.queryExecution().analyzed().toString()
+    assert udf == (case == "clean")
+    ref = (e._embedding_dedup_expr(e._embeddings(spark, str(tmp_path), "v"))
+           .select("id_a", "id_b", e._rnd("cosine", 6).alias("cosine")))
+    assert sorted(out.collect()) == sorted(ref.collect())
+    assert out.count() >= 10

@@ -104,3 +104,39 @@ def test_spark_submit_pyfiles_end_to_end(tmp_path):
         env=env, timeout=300)
     assert r.returncode == 0, r.stderr[-3000:]
     assert "PYFILES_E2E_OK 20" in r.stdout, r.stdout[-2000:]
+
+
+def test_gate_row_ships_package_to_workers(tmp_path):
+    """A gate row with a Python UDF runs when the workers cannot import
+    the package from their own path (empty PYTHONPATH, cwd outside the
+    repo): loading the entry by path puts the repo on the driver's
+    sys.path only, so the row itself must ship the package."""
+    import pandas as pd
+
+    sf_dir = tmp_path / "sf"
+    sf_dir.mkdir()
+    pd.DataFrame({
+        "doc_id": list(range(40)),
+        "text": [" ".join(f"w{'x' * ((i * k) % 7)}" for k in range(12))
+                 for i in range(40)],
+    }).to_parquet(sf_dir / "documents.parquet")
+    entry = os.path.join(os.path.dirname(os.path.abspath(__file__)), "..",
+                         "__spark_entry__.py")
+    code = (
+        "import importlib.util\n"
+        "spec = importlib.util.spec_from_file_location('gate_entry', %r)\n"
+        "e = importlib.util.module_from_spec(spec)\n"
+        "spec.loader.exec_module(e)\n"
+        "from pyradiomics_spark.session import get_spark, scope\n"
+        "spark = get_spark(app_name='ship-check', cores=2,"
+        " shuffle_partitions=4)\n"
+        "with scope():\n"
+        "    n = e.queries()['matrix_glcm'](spark, %r).count()\n"
+        "print('GATE_ROWS', n)\n"
+        "spark.stop()\n" % (os.path.abspath(entry), str(sf_dir)))
+    r = subprocess.run([sys.executable, "-c", code], cwd=str(tmp_path),
+                       capture_output=True, text=True, timeout=600,
+                       env={**os.environ, "PYTHONPATH": ""})
+    assert r.returncode == 0, r.stderr[-3000:]
+    rows = int(r.stdout.split("GATE_ROWS")[1].split()[0])
+    assert rows > 0
