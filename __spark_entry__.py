@@ -2294,8 +2294,8 @@ def q_hot_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_jl_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Johnson-Lindenstrauss 64→8 projection (operators/decomp.py
-    jl_project): deterministic md5-parity ±1/√8 sign matrix, expr arm
-    (whole-stage codegen zip_with dot products). Long-form output
+    jl_project): deterministic md5-parity ±1/√8 sign matrix, broadcast
+    once and applied with one BLAS gemm per Arrow batch. Long-form output
     (vec_id, j, v); the DuckDB twin rebuilds the identical sign matrix
     from the same md5 derivation."""
     from pyradiomics_spark.operators.decomp import jl_project
@@ -2821,9 +2821,10 @@ def q_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One distributed Lloyd update (operators.clustering): JVM-only
-    nearest-centroid assignment (zip_with/aggregate argmin, no UDF) + ONE
-    partial-aggregated shuffle for the per-cell per-dim means. k=4
+    """One distributed Lloyd update (operators.clustering): shuffle-free
+    nearest-centroid assignment (one Arrow-batch gemm + exact top-2
+    refine) + ONE partial-aggregated shuffle for the per-cell per-dim
+    means. k=4
     deterministic md5-plane centroids; output = the updated centroid
     matrix as (cell, idx, centroid, n) rows."""
     import numpy as np
@@ -3002,21 +3003,20 @@ _IVF_PROBE_SQL = """
 
 
 def q_assign_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Nearest-centroid assignment through the broadcast-numpy ARROW arm:
-    k=144 × dim=64 = 9216 terms > EXPR_MAX_TERMS, so auto-dispatch crosses
-    the Arrow boundary (operators.clustering._assign_cells_arrow — one
-    BLAS gemm per batch, plan O(1) in k·dim). Output: per-cell membership
+    """Nearest-centroid assignment with a wide quantizer: k=144 × dim=64
+    centroids broadcast to operators.clustering.assign_cells' Arrow stage
+    (one BLAS gemm per batch, plan O(1) in k·dim). Output: per-cell membership
     count + id checksum, so ANY flipped assignment reddens the row. The
     DuckDB twin re-derives the identical md5-expanded centroids IN SQL
     (generate_series + md5, no literal blobs) and replays the argmin
-    relationally — the cross-engine gate for the scale arm."""
+    relationally — the cross-engine gate at quantizer width."""
     from pyradiomics_spark.operators.clustering import assign_cells
 
     from pyradiomics_spark.operators.similarity import _planes
 
     emb = _read(spark, sf_dir, "embeddings")
     cents = _planes(144, 64, seed="assign-arrow-gate")
-    a = assign_cells(emb, cents)  # auto → arrow at this k·dim
+    a = assign_cells(emb, cents)
     return (
         a.groupBy(F.col("cell").cast("long").alias("cell"))
         .agg(F.count("*").alias("n_vecs"),
@@ -3026,9 +3026,9 @@ def q_assign_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_ivf_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN with a TRAINED-quantizer-shaped centroid set (144 × 64 >
-    EXPR_MAX_TERMS → the coarse quantization runs on the Arrow arm, the
-    bucket-refine cosine stays JVM). Integer output (query_id, vec_id,
+    """IVF ANN with a TRAINED-quantizer-shaped centroid set (144 × 64;
+    the coarse quantization is one Arrow-batch gemm, the bucket-refine
+    cosine stays JVM). Integer output (query_id, vec_id,
     rank) keeps the row robust to engine-specific float summation; the
     same ranking-margin caveat as ivf_recall applies."""
     from pyradiomics_spark.operators.similarity import _planes, ivf_topk

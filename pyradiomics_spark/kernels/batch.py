@@ -599,8 +599,7 @@ def glcm_batch(r: Ragged, levels: np.ndarray, distances: tuple = (1,),
 # (B·G²) slot budget below which dense tensors win: dense SIMD sweeps beat
 # per-cell gathers while everything fits in ~64 MB (measured ~1.5× on the
 # G≈15 web regime), and the sparse path takes over exactly where dense
-# allocation becomes the memory cliff — the same small/large dispatch
-# shape as assign_cells' expr/arrow split.
+# allocation becomes the memory cliff.
 _GLCM_DENSE_MAX_SLOTS = 8_000_000
 
 # element budget for the sparse path's bounded temporaries (the HXY2

@@ -5,32 +5,24 @@ For each left row (entity, ts) attach the latest right row with
 right_ts <= ts (direction='backward'), never a future row — zero temporal
 leakage by construction.
 
-Two physical strategies, same semantics:
+One physical strategy — **union + window**, 100% JVM-side:
+tag and union both sides on a common schema, with the whole right row
+(payload + right ts) packed into ONE struct column (NULL on left rows);
+then one ``last(struct, ignoreNulls) over (partition by key order by ts,
+tag rows unbounded preceding .. current row)`` (``first`` over the future
+frame for 'forward', both for 'nearest'), keep left rows and expand the
+struct. The plan holds one window expression per direction whatever the
+payload width, and a matched right row's NULL payload value stays NULL (a
+per-column ``last(ignoreNulls)`` would fill it from an OLDER row while
+``right_ts`` points at the matched one). One shuffle for the window
+partitioning (plus one map-side-combined exchange for the deterministic
+tie dedupe, skippable via ``deterministic_ties=False``), whole-stage
+codegen, no Python. Tie discipline: right rows sort BEFORE left rows at
+equal ts when ``allow_exact_matches`` (tag 0 < 1), AFTER otherwise (tag
+2 > 1); right rows tying on (key, ts) collapse to the max payload tuple
+(``_dedupe_right_ties``).
 
-``asof_join``(default) — **union + window**, 100% JVM-side:
-    tag and union both sides on a common schema, with the whole right row
-    (payload + right ts) packed into ONE struct column (NULL on left rows);
-    then one ``last(struct, ignoreNulls) over (partition by key order by ts,
-    tag rows unbounded preceding .. current row)`` (``first`` over the
-    future frame for 'forward', both for 'nearest'), keep left rows and
-    expand the struct. The plan holds one window expression per direction
-    whatever the payload width, and a matched right row's NULL payload
-    value stays NULL (a per-column ``last(ignoreNulls)`` would fill it from
-    an OLDER row while ``right_ts`` points at the matched one). One shuffle
-    for the window partitioning (plus one map-side-combined exchange for
-    the deterministic tie dedupe, skippable via
-    ``deterministic_ties=False``), whole-stage codegen, no Python.
-    Tie discipline: right rows sort BEFORE left rows at equal ts when
-    ``allow_exact_matches`` (tag 0 < 1), AFTER otherwise (tag 2 > 1);
-    right rows tying on (key, ts) collapse to the max payload tuple
-    (``_dedupe_right_ties``), identically in both strategies.
-
-``asof_join_merge`` — **cogroup + pandas.merge_asof**: sort-merge kernel per
-    key group (Arrow boundary), matching the reference-era design of
-    secondary-sorted salted range partitions. Useful when per-key groups are
-    very large (one Arrow pass per group beats a long window sort).
-
-Skew: both forms shuffle by the entity key; hot hosts are handled by AQE
+Skew: the join shuffles by the entity key; hot hosts are handled by AQE
 skew handling plus the explicit ``salt_hot_keys`` helper in
 ``operators.salting`` (pre-splits the left side; right side is replicated
 per salt bucket — valid because the right timeline is needed in full in
@@ -65,10 +57,10 @@ def _orderable(dt) -> bool:
 
 def _dedupe_right_ties(right: DataFrame, keys: list, right_ts: str,
                        right_payload: list) -> DataFrame:
-    """Deterministic tie discipline shared by BOTH physical strategies:
-    among right rows with identical (key, ts), keep the MAX payload tuple
-    (lexicographic max(struct), map-side combinable — duplicates collapse
-    before the shuffle, so the extra exchange carries ≈ the distinct rows).
+    """Deterministic tie discipline: among right rows with identical
+    (key, ts), keep the MAX payload tuple (lexicographic max(struct),
+    map-side combinable — duplicates collapse before the shuffle, so the
+    extra exchange carries ≈ the distinct rows).
 
     Why not a tie-break sort key instead: a per-row hash/struct of a wide
     payload inside the window plan sends Catalyst's constraint propagation
@@ -215,62 +207,3 @@ def asof_join(
                        matched.alias(_R))
             .select(*keys, left_ts, *left_payload, f"{_R}.*"))
 
-
-def asof_join_merge(
-    left: DataFrame,
-    right: DataFrame,
-    on,
-    left_ts: str,
-    right_ts: str,
-    allow_exact_matches: bool = True,
-    direction: str = "backward",
-    deterministic_ties: bool = True,
-) -> DataFrame:
-    """Cogrouped sort-merge as-of join (pandas.merge_asof kernel)."""
-    import pandas as pd
-
-    keys = _as_list(on)
-    right_payload = [c for c in right.columns if c not in keys and c != right_ts]
-    if deterministic_ties:
-        # same deterministic tie discipline as the window strategy: collapse
-        # (key, ts) duplicates to the max payload tuple BEFORE the cogroup
-        right = _dedupe_right_ties(right, keys, right_ts, right_payload)
-    out_fields = []
-    for f in left.schema.fields:
-        out_fields.append(f"`{f.name}` {f.dataType.simpleString()}")
-    for c in [right_ts] + right_payload:
-        out_fields.append(f"`{c}` {right.schema[c].dataType.simpleString()}")
-    schema = ", ".join(out_fields)
-    left_cols = list(left.columns)
-
-    def merge(l_pdf: pd.DataFrame, r_pdf: pd.DataFrame) -> pd.DataFrame:
-        l_sorted = l_pdf.sort_values(left_ts, kind="mergesort")
-        if r_pdf.empty:
-            out = l_sorted.copy()
-            out[right_ts] = pd.NaT
-            for c in right_payload:
-                out[c] = None
-            return out[left_cols + [right_ts] + right_payload]
-        # (key, ts) is unique after _dedupe_right_ties — merge_asof's
-        # "last row at equal ts" is therefore unambiguous
-        r_sorted = (
-            r_pdf[keys + [right_ts] + right_payload]
-            .sort_values(right_ts, kind="mergesort")
-            .rename(columns={right_ts: "__rts"})
-        )
-        merged = pd.merge_asof(
-            l_sorted,
-            r_sorted.drop(columns=keys),
-            left_on=left_ts,
-            right_on="__rts",
-            direction=direction,
-            allow_exact_matches=allow_exact_matches,
-        )
-        merged = merged.rename(columns={"__rts": right_ts})
-        return merged[left_cols + [right_ts] + right_payload]
-
-    return (
-        left.groupBy(*keys)
-        .cogroup(right.groupBy(*keys))
-        .applyInPandas(merge, schema=schema)
-    )

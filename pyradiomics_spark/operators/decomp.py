@@ -9,7 +9,9 @@ partials shuffle as (i, j, value) rows — dim(dim+1)/2 rows per
 partition, independent of corpus size — and ONE groupBy sums them. The
 eigendecomposition itself is a dim×dim driver-side numpy call, exactly
 like kmeans_step's centroid update or logreg_grad_step's weight update:
-the model is tiny, the data pass is distributed.
+the model is tiny, the data pass is distributed. The fit-free
+``jl_project`` runs through the same broadcast-gemm Arrow stage as the
+similarity scorers (``similarity._append_matrix_col``).
 
 Reference scope note: pyradiomics has no decomposition stage (its only
 eigen use is the GLCM MCC feature, glcm.py getMCCFeatureValue); this is
@@ -51,7 +53,6 @@ def jl_project(
     dim: int,
     seed: str = "pyradiomics-jl",
     out_col: str = "jl",
-    method: str = "auto",
 ) -> DataFrame:
     """Johnson-Lindenstrauss random projection to ``out_dim`` dims via a
     deterministic ±1/√out_dim sign matrix — the fit-free complement to
@@ -61,52 +62,18 @@ def jl_project(
     corpus is too young to have a trained quantizer.
 
     Appends ``out_col`` (array<double>, null for null/partially-null
-    embeddings). ``expr`` evaluates the out_dim dot products as builtin
-    zip_with/aggregate expressions (whole-stage codegen) while
-    out_dim·dim stays under EXPR_MAX_TERMS; ``arrow`` broadcasts the
-    sign matrix and runs one BLAS gemm per Arrow batch (plan size O(1)
-    in out_dim·dim). ``auto`` dispatches like assign_cells."""
-    from pyradiomics_spark.operators.similarity import (
-        EXPR_MAX_TERMS, _nullify_partial, _stack_vecs)
+    embeddings). The sign matrix is broadcast and each Arrow batch is
+    projected with one BLAS gemm (plan size O(1) in out_dim·dim); the ±1
+    products are exact, and the √out_dim division comes after the sum,
+    as in the SQL twin."""
+    from pyradiomics_spark.operators.similarity import _append_matrix_col
 
     if out_dim < 1 or dim < 1:
         raise ValueError("out_dim and dim must be >= 1")
-    signs = _jl_signs(out_dim, dim, seed)
     root = float(np.sqrt(out_dim))
-    df = _nullify_partial(df, vec_col)
-    if method == "auto":
-        method = "expr" if out_dim * dim <= EXPR_MAX_TERMS else "arrow"
-    if method == "arrow":
-        bc = df.sparkSession.sparkContext.broadcast(
-            np.ascontiguousarray(signs.T / root))
-        out_schema = ", ".join(
-            f"`{f.name}` {f.dataType.simpleString()}"
-            for f in df.schema.fields) + f", {out_col} array<double>"
-
-        def run(batches):
-            st = bc.value
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                X, valid = _stack_vecs(pdf[vec_col], dim)
-                Y = X @ st
-                it = iter(list(Y))
-                pdf = pdf.copy()
-                pdf[out_col] = [
-                    next(it).tolist() if m else None for m in valid]
-                yield pdf
-
-        return df.mapInPandas(run, schema=out_schema)
-    dots = []
-    for j in range(out_dim):
-        lit_signs = F.array(*[F.lit(float(x)) for x in signs[j]])
-        dot = F.aggregate(
-            F.zip_with(F.col(vec_col), lit_signs, lambda x, s: x * s),
-            F.lit(0.0), lambda acc, v: acc + v)
-        dots.append(dot / F.lit(root))
-    return df.withColumn(
-        out_col,
-        F.when(F.col(vec_col).isNotNull(), F.array(*dots)))
+    return _append_matrix_col(
+        df, vec_col, dim, out_col, "array<double>",
+        lambda X, S: (X @ S) / root, _jl_signs(out_dim, dim, seed).T)
 
 
 def gram_moments(
@@ -132,15 +99,15 @@ def gram_moments(
     out_schema = "i int, j int, value double"
 
     def run(batches):
+        import pyarrow as pa
+
         from pyradiomics_spark.operators.similarity import _stack_vecs
 
         g = np.zeros((dim, dim))
         s = np.zeros(dim)
         n = 0
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X, _ = _stack_vecs(pdf[vec_col], dim)
+        for rb in batches:
+            X, _ = _stack_vecs(rb.column(0), dim)
             if X.shape[0] == 0:
                 continue
             g += X.T @ X
@@ -148,23 +115,19 @@ def gram_moments(
             n += X.shape[0]
         if n == 0:
             return
-        import pandas as pd
-
         iu, ju = np.triu_indices(dim)
-        rows = {"i": iu, "j": ju, "value": g[iu, ju]}
-        pdf = pd.DataFrame(rows)
+        i, j, v = [iu], [ju], [g[iu, ju]]
         if with_moments:
-            extra = pd.DataFrame({
-                "i": np.concatenate([np.full(dim, _SUM_ROW), [_CNT_ROW]]),
-                "j": np.concatenate([np.arange(dim), [_CNT_ROW]]),
-                "value": np.concatenate([s, [float(n)]]),
-            })
-            pdf = pd.concat([pdf, extra], ignore_index=True)
-        pdf["i"] = pdf["i"].astype("int32")
-        pdf["j"] = pdf["j"].astype("int32")
-        yield pdf
+            i += [np.full(dim, _SUM_ROW), [_CNT_ROW]]
+            j += [np.arange(dim), [_CNT_ROW]]
+            v += [s, [float(n)]]
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(np.concatenate(i).astype(np.int32)),
+             pa.array(np.concatenate(j).astype(np.int32)),
+             pa.array(np.concatenate(v).astype(np.float64))],
+            names=["i", "j", "value"])
 
-    partials = df.select(vec_col).mapInPandas(run, schema=out_schema)
+    partials = df.select(vec_col).mapInArrow(run, schema=out_schema)
     return partials.groupBy("i", "j").agg(F.sum("value").alias("value"))
 
 
@@ -223,9 +186,8 @@ def pca_project(
     """Project each vector onto fitted components: adds ``pc0..pc{k-1}``
     columns, ``pc_j = Σ_i (x_i − μ_i)·w_ji``. Pure JVM expression — the
     components ride into the plan as literals (k·dim literal terms; for
-    k·dim beyond a few thousand move to a broadcast-numpy mapInPandas
-    arm like operators/clustering's gemm dispatch). Null vectors project
-    to null."""
+    k·dim beyond a few thousand move to a broadcast-numpy mapInArrow
+    stage like ``jl_project``'s). Null vectors project to null."""
     comps = np.asarray(components, dtype=float)
     k, dim = comps.shape
     mu = np.zeros(dim) if mean is None else np.asarray(mean, dtype=float)

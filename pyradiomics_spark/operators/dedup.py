@@ -5,9 +5,10 @@ join) so Catalyst plans them with map-side partial aggregation and AQE —
 no Python on the hot path:
 
 * ``exact_dedup``        — content-hash groupBy (one shuffle)
-* ``minhash_signatures`` / ``minhash_lsh_candidates`` / ``minhash_dedup`` —
-  shingle → k min-hashes (ONE groupBy with k min() aggregates) → band
-  buckets → candidate pairs → optional exact-Jaccard verify
+* ``minhash_signatures`` / ``minhash_lsh_candidates`` — shingle → k
+  min-hashes (ONE groupBy with k min() aggregates) → band buckets →
+  candidate pairs (verify with ``ngram_jaccard_pairs``; the transitive
+  survivor pick is ``plans.curation``'s components → canonical step)
 * ``simhash_signatures`` / ``simhash_candidates`` — 64-bit token simhash via
   64 conditional sums; near-dup pairs via 4×16-bit band equality
   (Hamming ≤ 3 guarantee by pigeonhole)
@@ -374,32 +375,6 @@ def segment_dedup(
     )
 
 
-def minhash_dedup(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
-    threshold: float = 0.8,
-    bucket_cap: int | None = None,
-) -> DataFrame:
-    """Full near-dup pipeline: LSH candidates → exact-Jaccard verify →
-    connected survivors (min id per dup cluster via iterative min propagation
-    is overkill here: we use the standard keep-if-no-smaller-similar-id rule,
-    one anti-join). ``bucket_cap``: see minhash_lsh_candidates — set it at
-    web scale so a degenerate bucket can't go quadratic."""
-    sigs = minhash_signatures(df, id_col, text_col, num_hashes, shingle_n)
-    cand = minhash_lsh_candidates(sigs, id_col, num_hashes, bands,
-                                  bucket_cap=bucket_cap)
-    verified = ngram_jaccard_pairs(df, id_col, text_col, shingle_n, cand).where(
-        F.col("jaccard") >= threshold
-    )
-    # drop any doc that has a similar doc with a smaller id
-    losers = verified.select(F.col("id_b").alias(id_col)).distinct()
-    return df.join(losers, id_col, "left_anti")
-
-
 # ---------------------------------------------------------------- simhash
 
 def simhash_signatures(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -600,7 +575,6 @@ def semdedup(
     centroids,
     threshold: float = 0.95,
     cell_cap: int | None = None,
-    method: str = "auto",
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023 "SemDeDup: Data-efficient learning at
     web-scale through semantic deduplication"): k-means-cell-bounded
@@ -614,7 +588,7 @@ def semdedup(
     plus ``cell`` and a 0/1 ``semdedup_keep``; null embeddings keep a
     null cell and are kept.
 
-    Scale shape: assignment is shuffle-free (expr or Arrow-gemm arm);
+    Scale shape: assignment is shuffle-free (one Arrow-gemm stage);
     pair generation is an equi-self-join on the cell id — quadratic only
     within a cell, which is exactly the knob k controls (k ≈ n/target
     cell size, the paper's regime); ``cell_cap`` drops degenerate
@@ -622,7 +596,7 @@ def semdedup(
     with the same _drop_hot_buckets machinery as the LSH families."""
     from pyradiomics_spark.operators.clustering import assign_cells
 
-    assigned = assign_cells(df, centroids, vec_col, "cell", method)
+    assigned = assign_cells(df, centroids, vec_col, "cell")
     pool = assigned.select(F.col(id_col), "cell").where(
         F.col("cell").isNotNull())
     if cell_cap is not None:

@@ -406,10 +406,12 @@ def domain_mix_sample(
     Returns ``(sampled_df, rates)`` where ``rates`` maps domain →
     (availability, rate) for monitoring/logging.
 
-    Scale shape: ONE map-side-combined count agg (≤ |domains| rows to
-    the driver — domains are data sources, a bounded small set), rates
-    ride back into the plan as a literal CASE — then a pure scan-fused
-    filter. No join, no shuffle of the corpus itself.
+    Scale shape: ONE map-side-combined count agg over the target
+    domains only (an ``In`` filter runs first, so at most
+    ``len(target_shares)`` rows reach the driver whatever the domain
+    column's cardinality — hosts, URLs), rates ride back into the plan
+    as a literal CASE — then a pure scan-fused filter. No join, no
+    shuffle of the corpus itself.
     """
     if not target_shares:
         raise ValueError("target_shares must be non-empty")
@@ -419,9 +421,8 @@ def domain_mix_sample(
     shares = {k: v / tot for k, v in target_shares.items()}
     counts = {
         r[domain_col]: r["n"]
-        for r in df.groupBy(domain_col).agg(F.count("*").alias("n"))
-        .collect()
-        if r[domain_col] in shares
+        for r in df.where(F.col(domain_col).isin(list(shares)))
+        .groupBy(domain_col).agg(F.count("*").alias("n")).collect()
     }
     missing = [d for d in shares if counts.get(d, 0) == 0]
     if missing:

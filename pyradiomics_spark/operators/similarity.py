@@ -14,6 +14,11 @@
                            nearest of C centroids (one broadcast score pass),
                            then search only rows in the query's nprobe
                            nearest cells.
+
+Every scorer against a fixed matrix (planes, centroids, a projection —
+also ``clustering.assign_cells`` and ``decomp.jl_project``) has one
+physical path, ``_append_matrix_col``: the matrix is broadcast once and
+each Arrow batch is scored with BLAS, so the plan stays O(1) in its size.
 """
 
 from __future__ import annotations
@@ -25,54 +30,34 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-# k·dim (literal nodes) above which centroid/plane scoring switches from
-# the builtin-expression arm to the broadcast-numpy Arrow arm. The
-# expression arm embeds every centroid coordinate as F.lit — at curation
-# scale (k=1024+, dim=768) that is a ~10⁶-node expression tree: Catalyst
-# analysis blowup and the 64KB JVM codegen method limit long before data
-# volume matters. The analog of the reference's C-boundary dispatch
-# (/root/reference/radiomics/base.py:181-198): small problems stay in the
-# engine's native expression layer, large ones cross to the vectorized
-# kernel.
-EXPR_MAX_TERMS = 8192
-
-
-def _matmul_scores(X: np.ndarray, C: np.ndarray) -> np.ndarray:
-    """(n, k) dot-product scores via one BLAS gemm; rows with non-finite
-    entries propagate NaN (the expression arm does the same)."""
-    return X @ C.T
-
 
 def _stack_vecs(col, dim: int) -> tuple:
-    """(X float64 (n_valid, dim), valid bool mask) from a pandas column of
-    embedding lists. Null embeddings are masked out (→ null output, same
-    contract as the guarded expression arms); a ragged or wrong-width
-    vector raises a clear error instead of a cryptic BLAS/object-dtype one
-    (at 100 TB a schema-drifted shard should fail loudly, not score
-    garbage)."""
-    vals = col.tolist()
-    valid = np.array([v is not None for v in vals], dtype=bool)
-    rows = [v for v, m in zip(vals, valid) if m]
-    if not rows:
-        return np.empty((0, dim)), valid
-    widths = {len(v) for v in rows}
-    if widths != {dim}:
+    """(X float64 (n_valid, dim), valid bool mask) from an Arrow list
+    column of embeddings. Null embeddings are masked out (→ null output);
+    a ragged or wrong-width vector raises a clear error instead of a
+    cryptic BLAS one (at 100 TB a schema-drifted shard should fail loudly,
+    not score garbage)."""
+    import pyarrow.compute as pc
+
+    valid = col.is_valid().to_numpy(zero_copy_only=False)
+    widths = np.unique(pc.list_value_length(col).drop_null().to_numpy())
+    if len(widths) and widths.tolist() != [dim]:
         raise ValueError(
             f"embedding width mismatch: expected {dim}, batch has "
-            f"{sorted(widths)}")
-    return np.asarray(rows, dtype=np.float64), valid
+            f"{widths.tolist()}")
+    X = pc.list_flatten(col).to_numpy(zero_copy_only=False)
+    return X.astype(np.float64, copy=False).reshape(-1, dim), valid
 
 
 def _nullify_partial(df: DataFrame, vec_col: str) -> DataFrame:
     """Normalize a partially-null embedding (null ELEMENTS inside a
-    non-null list) to a null embedding BEFORE arm dispatch. Arrow→pandas
-    silently converts null list elements to NaN, so on the arrow arm a
-    null element would set a plane bit / tie to cell 0 while the expr
-    arm's null arithmetic yields a null dot — a cross-arm divergence
-    auto-dispatch could flip on. Folding both into the established
-    "null embedding → null output" contract keeps the arms identical and
-    keeps a schema-drifted shard from scoring garbage at 100 TB. Pure
-    codegen expression (one exists() scan per row), no shuffle."""
+    non-null list) to a null embedding before scoring. Arrow→numpy
+    silently converts null list elements to NaN, so a null element would
+    set a plane bit / tie to cell 0 where the SQL twins' null arithmetic
+    yields a null dot. Folding it into the established "null embedding →
+    null output" contract keeps a schema-drifted shard from scoring
+    garbage at 100 TB. Pure codegen expression (one exists() scan per
+    row), no shuffle."""
     c = F.col(vec_col)
     return df.withColumn(
         vec_col,
@@ -80,22 +65,66 @@ def _nullify_partial(df: DataFrame, vec_col: str) -> DataFrame:
                F.lit(None).cast(df.schema[vec_col].dataType)).otherwise(c))
 
 
-def _masked_int_col(values, valid: np.ndarray, dtype: str = "Int32"):
-    """Nullable integer pandas column: next value for each valid row, NA
-    for masked (null-embedding) rows."""
-    import pandas as pd
+def _append_matrix_col(
+    df: DataFrame,
+    vec_col: str,
+    dim: int,
+    out_col: str,
+    out_type: str,
+    fn,
+    const: np.ndarray,
+) -> DataFrame:
+    """Append ``out_col`` computed per Arrow batch from the stacked vector
+    matrix — the one scoring loop of every embedding scorer. ``const``
+    (centroids, planes, a projection) is broadcast once; ``fn(X, const)``
+    gets the batch's non-null embeddings as X float64 (n_valid, dim) and
+    returns one value (1-D) or one row (2-D) per row of X. ``out_type`` is
+    the Spark type: int, bigint, or an array of int/double. Null and
+    partially-null embeddings get a null. One MapInArrow stage, plan size
+    O(1) in the size of ``const``."""
+    import pyarrow as pa
 
-    it = iter(values)
-    return pd.array([int(next(it)) if m else None for m in valid],
-                    dtype=dtype)
+    df = _nullify_partial(df, vec_col)
+
+    bc = df.sparkSession.sparkContext.broadcast(np.ascontiguousarray(const))
+    schema = ", ".join(
+        f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields
+    ) + f", `{out_col}` {out_type}"
+    nested = out_type.startswith("array<")
+    dtype = {"int": np.int32, "bigint": np.int64, "double": np.float64}[
+        out_type[6:-1] if nested else out_type]
+    atype = pa.from_numpy_dtype(dtype)
+    if nested:
+        atype = pa.list_(atype)
+    names = df.columns + [out_col]
+    ci = df.columns.index(vec_col)
+
+    def run(batches):
+        C = bc.value
+        for rb in batches:
+            X, valid = _stack_vecs(rb.column(ci), dim)
+            if X.shape[0] == 0:
+                out = pa.nulls(len(valid), atype)
+            elif nested:
+                vals = np.asarray(fn(X, C), dtype=dtype)
+                offsets = np.zeros(len(valid) + 1, dtype=np.int32)
+                np.cumsum(valid * vals.shape[1], out=offsets[1:])
+                out = pa.ListArray.from_arrays(
+                    offsets, vals.ravel(), type=atype, mask=pa.array(~valid))
+            else:
+                full = np.zeros(len(valid), dtype=dtype)
+                full[valid] = fn(X, C)
+                out = pa.array(full, type=atype, mask=~valid)
+            yield pa.RecordBatch.from_arrays(rb.columns + [out], names=names)
+
+    return df.mapInArrow(run, schema=schema)
 
 
 def _topn_desc(scores: np.ndarray, n: int) -> np.ndarray:
     """Per-row top-n column indices by DESCENDING score, ties broken to the
-    HIGHER index — bitwise the order of ``reverse(array_sort(struct(score,
-    cell)))`` in the expression arm. Spark orders NaN as the LARGEST
-    double (numpy sorts it last): map NaN → +inf so a NaN-scored cell
-    ranks first in both arms."""
+    HIGHER index — the order of the SQL twins' ``ORDER BY score DESC,
+    cell DESC``. Spark and DuckDB order NaN as the LARGEST double (numpy
+    sorts it last): map NaN → +inf so a NaN-scored cell ranks first."""
     k = scores.shape[1]
     scores = np.where(np.isnan(scores), np.inf, scores)
     rev = np.argsort(-scores[:, ::-1], axis=1, kind="stable")[:, :n]
@@ -173,39 +202,29 @@ def _planes(n_planes: int, dim: int, seed: str = "pyradiomics-spark") -> np.ndar
     return out
 
 
-def _nearest_cells_arrow(
+def _nearest_cells(
     df: DataFrame,
     cents_normalized: np.ndarray,
     vec_col: str,
     n: int,
     out_col: str,
 ) -> DataFrame:
-    """Broadcast-numpy top-n nearest centroids by cosine (centroids
-    pre-normalized, so dot-product rank ≡ cosine rank per row). Appends
-    ``out_col``: int when n == 1, array<int> otherwise. Tie order matches
-    the expression arm (descending score, then descending cell)."""
-    bc = df.sparkSession.sparkContext.broadcast(
-        np.ascontiguousarray(cents_normalized))
-    out_schema = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields
-    ) + (f", {out_col} int" if n == 1 else f", {out_col} array<int>")
+    """Top-n nearest centroids by cosine: one BLAS gemm per Arrow batch
+    (centroids pre-normalized, so dot-product rank ≡ cosine rank per
+    row). Appends ``out_col``: int when n == 1, array<int> otherwise;
+    descending score, ties to the higher cell."""
 
-    def run(batches):
-        C = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X, valid = _stack_vecs(pdf[vec_col], C.shape[1])
-            top = _topn_desc(_matmul_scores(X, C), n)
-            pdf = pdf.copy()
-            if n == 1:
-                pdf[out_col] = _masked_int_col(top[:, 0], valid)
-            else:
-                it = iter(list(top.astype(np.int32)))
-                pdf[out_col] = [next(it) if m else None for m in valid]
-            yield pdf
+    def top(X, C):
+        s = X @ C.T
+        # a non-finite component makes every cosine NaN (±inf/inf, NaN),
+        # so all cells tie; the gemm alone gives mixed ±inf/NaN scores
+        s[~np.isfinite(X).all(axis=1)] = np.nan
+        t = _topn_desc(s, n)
+        return t[:, 0] if n == 1 else t
 
-    return df.mapInPandas(run, schema=out_schema)
+    return _append_matrix_col(
+        df, vec_col, cents_normalized.shape[1], out_col,
+        "int" if n == 1 else "array<int>", top, cents_normalized)
 
 
 def hyperplane_buckets(
@@ -215,64 +234,24 @@ def hyperplane_buckets(
     n_planes: int = 8,
     dim: int = 64,
     seed: str = "pyradiomics-spark",
-    method: str = "auto",
 ) -> DataFrame:
-    """Add an LSH ``bucket`` int column = sign pattern of n fixed planes.
-
-    Deterministic and reproducible on any executor count in BOTH arms:
-    ``expr`` evaluates the plane dot products as builtin expressions over
-    array literals (whole-stage codegen, right while n_planes·dim stays
-    small); ``arrow`` broadcasts the plane matrix and signs a BLAS gemm
-    per Arrow batch (the scale arm — plan size is O(1) in n_planes·dim).
-    ``auto`` dispatches on EXPR_MAX_TERMS.
+    """Add an LSH ``bucket`` int column = sign pattern of n fixed planes
+    (bigint past 30 planes), null for a null embedding. Deterministic and
+    reproducible on any executor count: the plane matrix is broadcast and
+    each Arrow batch is signed with one BLAS gemm — plan size O(1) in
+    n_planes·dim.
     """
-    planes = _planes(n_planes, dim, seed)
-    df = _nullify_partial(df, vec_col)
-    if method == "auto":
-        method = "expr" if n_planes * dim <= EXPR_MAX_TERMS else "arrow"
-    int_t = "int" if n_planes <= 30 else "bigint"
-    if method == "arrow":
-        import pandas as pd
+    pows = 2 ** np.arange(n_planes, dtype=np.int64)
 
-        bc = df.sparkSession.sparkContext.broadcast(
-            np.ascontiguousarray(planes))
-        pows = (2 ** np.arange(n_planes, dtype=np.int64))
-        out_schema = ", ".join(
-            f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields
-        ) + f", bucket {int_t}"
+    def bucket(X, P):
+        s = X @ P.T
+        # Spark's and DuckDB's `dot > 0` is TRUE for NaN (NaN orders
+        # greatest); numpy's is False — OR the NaN mask in
+        return ((s > 0) | np.isnan(s)) @ pows
 
-        def run(batches):
-            P = bc.value
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                X, valid = _stack_vecs(pdf[vec_col], dim)
-                s = _matmul_scores(X, P)
-                # Spark's `dot > 0` is TRUE for NaN (NaN orders greatest);
-                # numpy's is False — OR the NaN mask in so a NaN component
-                # buckets identically on both sides of the dispatch
-                bits = (s > 0) | np.isnan(s)
-                pdf = pdf.copy()
-                dtype = "Int32" if n_planes <= 30 else "Int64"
-                pdf["bucket"] = _masked_int_col(bits @ pows, valid, dtype)
-                yield pdf
-
-        return df.mapInPandas(run, schema=out_schema)
-    bucket = F.lit(0)
-    for p in range(n_planes):
-        lit_plane = F.array(*[F.lit(float(x)) for x in planes[p]])
-        dot = F.aggregate(
-            F.zip_with(F.col(vec_col), lit_plane, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        bucket = bucket + F.when(dot > 0, F.lit(2 ** p)).otherwise(0)
-    # null embedding → null bucket (unguarded, null>0 would silently fold
-    # every null vec into bucket 0 — a wrong-but-plausible answer)
-    return df.withColumn(
-        "bucket",
-        F.when(F.col(vec_col).isNull(), F.lit(None).cast(int_t))
-        .otherwise(bucket))
+    return _append_matrix_col(
+        df, vec_col, dim, "bucket", "int" if n_planes <= 30 else "bigint",
+        bucket, _planes(n_planes, dim, seed))
 
 
 def ivf_topk(
@@ -286,7 +265,6 @@ def ivf_topk(
     nprobe: int = 4,
     dim: int = 64,
     centroids: np.ndarray | None = None,
-    method: str = "auto",
 ) -> DataFrame:
     """IVF-style ANN: fixed pseudo-random centroids (deterministic, or a
     trained quantizer via ``centroids`` — e.g. clustering.kmeans_fit),
@@ -294,56 +272,22 @@ def ivf_topk(
     nearest cells. Approximate; recall rises with nprobe. Scale path: the
     per-cell join replaces the full cross product.
 
-    Coarse quantization dispatches like assign_cells: the expression arm
-    embeds centroids as literals (fine while n_cells·dim is small), the
-    ``arrow`` arm broadcasts the centroid matrix and ranks one gemm per
-    Arrow batch — production quantizers (n_cells=1024+, dim=768) would
-    otherwise build a ~10⁶-node plan. The bucket-refine cosine below is
-    per-PAIR (no literals) and stays JVM in both arms.
+    Coarse quantization broadcasts the centroid matrix and ranks one gemm
+    per Arrow batch, so a production quantizer (n_cells=1024+, dim=768)
+    keeps an O(1) plan. Null embeddings get no cell and drop out of the
+    cell join. The bucket-refine cosine below is per-PAIR (no literals)
+    and stays JVM.
     """
     if centroids is None:
         cents = _planes(n_cells, dim, seed="ivf-centroids")
     else:
         cents = np.asarray(centroids, dtype=float)
-        n_cells, dim = cents.shape
     cents = cents / np.linalg.norm(cents, axis=1, keepdims=True)
-    corpus = _nullify_partial(corpus, vec_col)
-    queries = _nullify_partial(queries, vec_col)
-    if method == "auto":
-        method = "expr" if n_cells * dim <= EXPR_MAX_TERMS else "arrow"
-
-    if method == "arrow":
-        corpus_cells = _nearest_cells_arrow(corpus, cents, vec_col, 1, "cell")
-        query_cells = (
-            _nearest_cells_arrow(queries, cents, vec_col, nprobe, "__cells")
-            .select(query_id_col, F.col(vec_col).alias("__qvec"),
-                    F.explode("__cells").alias("cell")))
-    else:
-        def nearest_cells(vec, n):
-            scores = [
-                (c, cosine_expr(vec, F.array(*[F.lit(float(x)) for x in cents[c]])))
-                for c in range(n_cells)
-            ]
-            arr = F.array(*[
-                F.struct(s.alias("score"), F.lit(c).alias("cell")) for c, s in scores
-            ])
-            top = F.slice(F.reverse(F.array_sort(arr)), 1, n)
-            return F.transform(top, lambda s: s["cell"])
-
-        # null embedding → null cell (drops out of the cell equi-join);
-        # explode of a null probe array likewise drops the query row
-        corpus_cells = corpus.withColumn(
-            "cell",
-            F.when(F.col(vec_col).isNull(), F.lit(None).cast("int"))
-            .otherwise(nearest_cells(F.col(vec_col), 1)[0])
-        )
-        query_cells = queries.withColumn(
-            "cell",
-            F.explode(F.when(F.col(vec_col).isNull(),
-                             F.lit(None).cast("array<int>"))
-                      .otherwise(nearest_cells(F.col(vec_col), nprobe)))
-        ).select(query_id_col, F.col(vec_col).alias("__qvec"), "cell")
-
+    corpus_cells = _nearest_cells(corpus, cents, vec_col, 1, "cell")
+    query_cells = (
+        _nearest_cells(queries, cents, vec_col, nprobe, "__cells")
+        .select(query_id_col, F.col(vec_col).alias("__qvec"),
+                F.explode("__cells").alias("cell")))
     scored = corpus_cells.join(F.broadcast(query_cells), "cell").withColumn(
         "cosine", cosine_expr(F.col(vec_col), F.col("__qvec"))
     )

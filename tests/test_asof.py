@@ -4,7 +4,7 @@ rows, and the zero-leakage property (FIXTURES.md ts_asof / ts_leak cases)."""
 import pandas as pd
 import pytest
 
-from pyradiomics_spark.operators.asof import asof_join, asof_join_merge
+from pyradiomics_spark.operators.asof import asof_join
 
 
 def _ts(s):
@@ -44,21 +44,19 @@ EXPECT = {
 }
 
 
-@pytest.mark.parametrize("impl", [asof_join, asof_join_merge])
-def test_asof_backward_with_ties(frames, impl):
+def test_asof_backward_with_ties(frames):
     left, right, ldf, rdf = frames
-    out = impl(ldf, rdf, on="ent", left_ts="ts", right_ts="rts").toPandas()
+    out = asof_join(ldf, rdf, on="ent", left_ts="ts", right_ts="rts").toPandas()
     assert len(out) == len(left)  # left join: all rows preserved
     got = {(r["ent"], r["lval"]): (None if pd.isna(r["rval"]) else r["rval"])
            for _, r in out.iterrows()}
     assert got == EXPECT
 
 
-@pytest.mark.parametrize("impl", [asof_join, asof_join_merge])
-def test_asof_no_exact_matches(frames, impl):
+def test_asof_no_exact_matches(frames):
     left, right, ldf, rdf = frames
-    out = impl(ldf, rdf, on="ent", left_ts="ts", right_ts="rts",
-               allow_exact_matches=False).toPandas()
+    out = asof_join(ldf, rdf, on="ent", left_ts="ts", right_ts="rts",
+                    allow_exact_matches=False).toPandas()
     got = {(r["ent"], r["lval"]): (None if pd.isna(r["rval"]) else r["rval"])
            for _, r in out.iterrows()}
     # exact tie at a@10:00 now excluded → no match for lval=1
@@ -131,7 +129,7 @@ def test_asof_plan_single_shuffle(frames):
 
 def test_asof_tie_determinism(spark):
     """Right rows sharing an exact (key, ts) resolve to the MAX payload
-    tuple, identically in both physical strategies."""
+    tuple, whatever the arrival order."""
     import numpy as np
     left = pd.DataFrame({"ent": ["a"], "ts": [_ts("2020-01-02")], "lval": [1.0]})
     right = pd.DataFrame({
@@ -142,10 +140,9 @@ def test_asof_tie_determinism(spark):
     })
     ldf = spark.createDataFrame(left)
     rdf = spark.createDataFrame(right).repartition(3)  # scramble order
-    for fn in (asof_join, asof_join_merge):
-        out = fn(ldf, rdf, on="ent", left_ts="ts", right_ts="rts").toPandas()
-        assert len(out) == 1
-        assert out.rval.iloc[0] == 9.0 and out.raux.iloc[0] == "y", fn.__name__
+    out = asof_join(ldf, rdf, on="ent", left_ts="ts", right_ts="rts").toPandas()
+    assert len(out) == 1
+    assert out.rval.iloc[0] == 9.0 and out.raux.iloc[0] == "y"
 
 
 def test_asof_tolerance(frames, spark):
@@ -163,8 +160,7 @@ def test_asof_tolerance(frames, spark):
 
 
 def test_asof_window_forward_matches_merge_and_pandas(spark, rng):
-    """Round-2: forward direction on the WINDOW strategy == merge_asof
-    forward == the cogrouped kernel, on random data."""
+    """direction='forward' == pandas merge_asof forward, on random data."""
     n_l, n_r = 300, 120
     left = pd.DataFrame({
         "ent": rng.choice(["x", "y", "z"], n_l),
@@ -178,15 +174,14 @@ def test_asof_window_forward_matches_merge_and_pandas(spark, rng):
         left.sort_values("ts"), right.sort_values("rts"),
         left_on="ts", right_on="rts", by="ent", direction="forward")
     ldf, rdf = spark.createDataFrame(left), spark.createDataFrame(right)
-    for fn, kw in ((asof_join, {"direction": "forward"}),
-                   (asof_join_merge, {"direction": "forward"})):
-        out = fn(ldf, rdf, on="ent", left_ts="ts", right_ts="rts", **kw).toPandas()
-        key = ["ent", "ts", "lval"]
-        a = expected.sort_values(key).reset_index(drop=True)
-        b = out.sort_values(key).reset_index(drop=True)
-        pd.testing.assert_series_equal(
-            a["rval"].reset_index(drop=True),
-            b["rval"].reset_index(drop=True), check_names=False)
+    out = asof_join(ldf, rdf, on="ent", left_ts="ts", right_ts="rts",
+                    direction="forward").toPandas()
+    key = ["ent", "ts", "lval"]
+    a = expected.sort_values(key).reset_index(drop=True)
+    b = out.sort_values(key).reset_index(drop=True)
+    pd.testing.assert_series_equal(
+        a["rval"].reset_index(drop=True),
+        b["rval"].reset_index(drop=True), check_names=False)
 
 
 def test_asof_window_forward_no_exact(frames):
@@ -196,19 +191,6 @@ def test_asof_window_forward_no_exact(frames):
     got = {(r["ent"], r["lval"]): (None if pd.isna(r["rval"]) else r["rval"])
            for _, r in out.iterrows()}
     assert got[("a", 1)] == 20.0   # exact tie at 10:00 excluded → 13:00 row
-
-
-def test_asof_merge_forward_direction(frames):
-    left, right, ldf, rdf = frames
-    out = asof_join_merge(ldf, rdf, on="ent", left_ts="ts", right_ts="rts",
-                          direction="forward").toPandas()
-    got = {(r["ent"], r["lval"]): (None if pd.isna(r["rval"]) else r["rval"])
-           for _, r in out.iterrows()}
-    # forward: first right row with rts >= ts
-    assert got[("a", 1)] == 10.0   # exact tie
-    assert got[("a", 2)] == 20.0   # next at 13:00
-    assert got[("a", 3)] is None   # nothing after 2024-01-02
-    assert got[("b", 4)] == 30.0
 
 
 def test_asof_nonorderable_payload_warns(spark):
@@ -239,8 +221,8 @@ def test_asof_nonorderable_payload_warns(spark):
 
 
 def test_asof_nearest_matches_pandas(spark, rng):
-    """direction='nearest' on the window strategy == merge_asof nearest ==
-    the cogrouped kernel, on random data (pins the tie → backward rule)."""
+    """direction='nearest' == pandas merge_asof nearest, on random data
+    (pins the tie → backward rule)."""
     n_l, n_r = 300, 120
     left = pd.DataFrame({
         "ent": rng.choice(["x", "y", "z"], n_l),
@@ -254,15 +236,14 @@ def test_asof_nearest_matches_pandas(spark, rng):
         left.sort_values("ts"), right.sort_values("rts"),
         left_on="ts", right_on="rts", by="ent", direction="nearest")
     ldf, rdf = spark.createDataFrame(left), spark.createDataFrame(right)
-    for fn, kw in ((asof_join, {"direction": "nearest"}),
-                   (asof_join_merge, {"direction": "nearest"})):
-        out = fn(ldf, rdf, on="ent", left_ts="ts", right_ts="rts", **kw).toPandas()
-        key = ["ent", "ts", "lval"]
-        a = expected.sort_values(key).reset_index(drop=True)
-        b = out.sort_values(key).reset_index(drop=True)
-        pd.testing.assert_series_equal(
-            a["rval"].reset_index(drop=True),
-            b["rval"].reset_index(drop=True), check_names=False)
+    out = asof_join(ldf, rdf, on="ent", left_ts="ts", right_ts="rts",
+                    direction="nearest").toPandas()
+    key = ["ent", "ts", "lval"]
+    a = expected.sort_values(key).reset_index(drop=True)
+    b = out.sort_values(key).reset_index(drop=True)
+    pd.testing.assert_series_equal(
+        a["rval"].reset_index(drop=True),
+        b["rval"].reset_index(drop=True), check_names=False)
 
 
 def test_asof_nearest_hand_cases(frames):
@@ -317,7 +298,7 @@ def test_asof_nearest_tolerance_and_no_exact_guard(frames, spark):
 def test_asof_matched_null_payload_stays_null(spark, direction, tolerance):
     """A NULL payload value of the MATCHED right row comes through as NULL —
     never filled from another right row while ``rts`` points at the match
-    (pandas.merge_asof / cogrouped-merge semantics)."""
+    (pandas.merge_asof semantics)."""
     left = pd.DataFrame({
         "ent": ["a", "a", "a"],
         "ts": [_ts("2024-01-02 12:00"), _ts("2024-01-03 12:00"),
@@ -333,17 +314,14 @@ def test_asof_matched_null_payload_stays_null(spark, direction, tolerance):
     kw = {} if tolerance is None else {"tolerance": pd.Timedelta(seconds=tolerance)}
     expected = pd.merge_asof(left, right, left_on="ts", right_on="rts",
                              by="ent", direction=direction, **kw)
-    impls = [asof_join] if tolerance is not None else [asof_join, asof_join_merge]
     cols = ["lval", "rts", "v", "w"]
     want = expected[cols].sort_values("lval").reset_index(drop=True)
     assert want["v"].isna().sum() >= 2   # the case is really exercised
-    for fn in impls:
-        extra = {} if tolerance is None else {"tolerance_seconds": tolerance}
-        got = fn(ldf, rdf, on="ent", left_ts="ts", right_ts="rts",
-                 direction=direction, **extra).toPandas()
-        got = got[cols].sort_values("lval").reset_index(drop=True)
-        pd.testing.assert_frame_equal(got, want, check_dtype=False,
-                                      obj=fn.__name__)
+    extra = {} if tolerance is None else {"tolerance_seconds": tolerance}
+    got = asof_join(ldf, rdf, on="ent", left_ts="ts", right_ts="rts",
+                    direction=direction, **extra).toPandas()
+    got = got[cols].sort_values("lval").reset_index(drop=True)
+    pd.testing.assert_frame_equal(got, want, check_dtype=False)
 
 
 @pytest.mark.parametrize("direction", ["backward", "forward", "nearest"])

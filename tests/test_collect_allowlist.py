@@ -29,7 +29,7 @@ ALLOWED = {
     ("operators/matrices.py", "extract_matrices.run_arrow"):
         (1, "Arrow: pyarrow Array.take inside the worker, not a Spark action"),
     ("operators/sampling.py", "domain_mix_sample"):
-        (1, "one count per distinct domain value"),
+        (1, "one count per target domain: In filter before the agg"),
     ("operators/sampling.py", "rank_normalize"):
         (2, "one aggregate row, then one count per quantile bucket"),
     ("operators/sketches.py", "hll_estimate"):

@@ -124,12 +124,11 @@ def test_jl_project_matches_numpy_and_arms_agree(spark):
     S = _jl_signs(4, 16)
     want = (vecs.astype(np.float64) @ S.T) / np.sqrt(4.0)
 
-    for method in ("expr", "arrow"):
-        got = {r.vec_id: r.jl for r in jl_project(
-            df, "embedding", out_dim=4, dim=16, method=method).collect()}
-        assert got[99] is None
-        for i in range(20):
-            np.testing.assert_allclose(got[i], want[i], rtol=1e-9)
+    got = {r.vec_id: r.jl for r in jl_project(
+        df, "embedding", out_dim=4, dim=16).collect()}
+    assert got[99] is None
+    for i in range(20):
+        np.testing.assert_allclose(got[i], want[i], rtol=1e-9)
 
     # pairwise-distance preservation in aggregate (JL contract, loose)
     d_in = np.linalg.norm(vecs[:, None] - vecs[None, :], axis=2)
@@ -139,7 +138,3 @@ def test_jl_project_matches_numpy_and_arms_agree(spark):
     ratio = d_out[mask] / d_in[mask]
     assert 0.2 < ratio.mean() < 2.0
 
-    # auto dispatch: tiny k*dim -> expr (plan has no mapInPandas scan)
-    plan = jl_project(df, "embedding", out_dim=4, dim=16)._jdf \
-        .queryExecution().executedPlan().toString()
-    assert "FlatMapGroupsInPandas" not in plan and "MapInPandas" not in plan

@@ -305,6 +305,35 @@ def test_domain_mix_drops_unlisted_and_validates(spark, ids):
         domain_mix_sample(df, "doc_id", "domain", {"web": 0.5, "nope": 0.5})
 
 
+def test_domain_mix_collect_bounded_by_share_keys(spark, ids, monkeypatch):
+    """A domain column with one distinct value per row (hosts, URLs)
+    still brings at most len(target_shares) count rows to the driver:
+    the target-domain In filter sits under the aggregate."""
+    from pyradiomics_spark.operators.sampling import domain_mix_sample
+
+    df = ids.withColumn(
+        "domain", F.concat(F.lit("host"), F.col("doc_id").cast("string")))
+    seen = []
+    frame = type(df)
+    collect = frame.collect
+
+    def spy(self):
+        rows = collect(self)
+        seen.append((len(rows), self._jdf.queryExecution().optimizedPlan()
+                     .toString()))
+        return rows
+
+    monkeypatch.setattr(frame, "collect", spy)
+    out, rates = domain_mix_sample(
+        df, "doc_id", "domain", {"host1": 0.5, "host2": 0.5})
+    monkeypatch.undo()
+    assert [n for n, _ in seen] == [2]
+    plan = seen[0][1]
+    assert plan.index("Aggregate") < plan.index(" IN (host1,host2)")
+    assert rates == {"host1": (1, 1.0), "host2": (1, 1.0)}
+    assert sorted(r.domain for r in out.collect()) == ["host1", "host2"]
+
+
 def test_domain_mix_deterministic_subset(spark, ids):
     from pyradiomics_spark.operators.sampling import domain_mix_sample
 

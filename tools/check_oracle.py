@@ -4,6 +4,9 @@ DuckDB over the same parquet, compare rows/columns/values order-insensitively.
 Each query runs in one ``session.scope()``; a query that leaves anything
 behind that it did not find (persistent RDDs, temp views, ``pyrs_*`` entries
 in the system temp dir) prints ``LEAK <name>: ...`` and counts as a failure.
+A query whose optimized plan holds ``n`` windows with no PARTITION BY (each
+moves its whole input onto one task) prints ``SERIAL-WINDOW <name>: n`` on
+stderr; that is informational, not a failure, and leaves stdout unchanged.
 
 Usage: python tools/check_oracle.py [sf_dir] [query ...]
 """
@@ -97,6 +100,19 @@ def compare(name: str, spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame) -> lis
     return problems
 
 
+def serial_windows(df) -> int:
+    """Window operators with an empty partition spec in ``df``'s optimized
+    logical plan (windows behind a checkpoint are not seen)."""
+    stack, n = [df._jdf.queryExecution().optimizedPlan()], 0
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "Window" and node.partitionSpec().isEmpty():
+            n += 1
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return n
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -125,7 +141,11 @@ def main() -> int:
         error = None
         try:
             with scope():
-                spark_pdf = fn(spark, sf_dir).toPandas()
+                df = fn(spark, sf_dir)
+                serial = serial_windows(df)
+                if serial:
+                    print(f"SERIAL-WINDOW {name}: {serial}", file=sys.stderr)
+                spark_pdf = df.toPandas()
         except Exception as ex:
             error = ex
         leaked = [f"{len(a - b)} {what}" for what, b, a in zip(
