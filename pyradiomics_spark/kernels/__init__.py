@@ -2,8 +2,9 @@
 
 These are the per-doc compute cores: the ground truth that the batched
 kernels (``kernels/batch.py``, run inside the mapInArrow extraction
-operators) are parity-tested against, and the per-doc matrix builders
-``extract_matrices`` and ``rolling_texture`` call.
+operators ``extract_features`` and ``voxel_feature_maps``) are
+parity-tested against, and the per-doc matrix builders
+``extract_matrices`` calls.
 They are the analog of the reference's C
 extensions (/root/reference/radiomics/src/cmatrices.c) + per-class numpy
 feature getters — reimplemented from the published formulas, not translated.

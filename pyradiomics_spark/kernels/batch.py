@@ -16,6 +16,14 @@ feature is a vectorized reduction over padded per-batch tensors:
   interpolation indexing (pure arithmetic on a batch-sorted array) and the
   GLCM MCC eigendecomposition (compacted per doc, like the reference).
 
+One feature algebra per texture family: GLCM builds its co-occurrence
+counts as a dense (B, G, G) tensor or, past ``_GLCM_DENSE_MAX_SLOTS``, as
+sparse cells, and each arm only derives its primitives (mass, marginals,
+p(x±y), entropies, MCC submatrices) for the one shared reduction
+``_glcm_reduce``; GLSZM and GLDM bind the GLRLM reductions
+(``_rlm_features``) to their own feature names; every neighbour-pair
+kernel takes its same-doc/valid pairs from ``_adjacent``.
+
 Supported settings envelope (round 2): the FULL validated settings surface —
 FBW (any width, FP-exact digitize parity) and FBN discretization, normalize
 (±nσ clamp), resegmentation masks (absolute/relative/sigma), symmetric and
@@ -29,6 +37,8 @@ tests/test_batch_kernels.py over the golden fixture corpus.
 
 from __future__ import annotations
 
+import copy
+
 import numpy as np
 
 from pyradiomics_spark.config import EPS
@@ -40,24 +50,15 @@ class Ragged:
     """Concatenated per-doc arrays + offsets."""
 
     def __init__(self, arrays):
-        self.lens = np.array([a.size for a in arrays], dtype=np.int64)
-        self.B = len(arrays)
-        self.starts = np.zeros(self.B, dtype=np.int64)
-        np.cumsum(self.lens[:-1], out=self.starts[1:])
-        self.x = (np.concatenate(arrays) if arrays else np.empty(0))
-        self.doc = np.repeat(np.arange(self.B), self.lens)
-        self.nonempty = self.lens > 0
-        # reduceat over NONEMPTY docs only (their starts are strictly
-        # increasing and < size; empty docs occupy no positions, so the
-        # nonempty segments are exact) — clamping empty starts instead
-        # would truncate the segment before a trailing empty doc
-        self._ne_starts = self.starts[self.nonempty]
+        vars(self).update(vars(Ragged.from_concat(
+            np.concatenate(arrays) if arrays else np.empty(0),
+            [a.size for a in arrays])))
 
     @classmethod
-    def from_concat(cls, x: np.ndarray, lens: np.ndarray) -> "Ragged":
+    def from_concat(cls, x: np.ndarray, lens) -> "Ragged":
         """Build directly from an already-concatenated value array + per-doc
         lengths (the Arrow string-buffer fast path: no per-doc python
-        arrays are ever materialized)."""
+        arrays are ever materialized). The one place the layout is set."""
         r = object.__new__(cls)
         r.lens = np.asarray(lens, dtype=np.int64)
         r.B = r.lens.size
@@ -66,35 +67,24 @@ class Ragged:
         r.x = np.asarray(x)
         r.doc = np.repeat(np.arange(r.B), r.lens)
         r.nonempty = r.lens > 0
+        # reduceat over NONEMPTY docs only (their starts are strictly
+        # increasing and < size; empty docs occupy no positions, so the
+        # nonempty segments are exact) — clamping empty starts instead
+        # would truncate the segment before a trailing empty doc
         r._ne_starts = r.starts[r.nonempty]
         return r
 
     def with_x(self, new_x: np.ndarray) -> "Ragged":
         """Same layout, different values (for derived image types)."""
-        clone = object.__new__(Ragged)
-        clone.lens = self.lens
-        clone.B = self.B
-        clone.starts = self.starts
+        clone = copy.copy(self)
         clone.x = new_x
-        clone.doc = self.doc
-        clone.nonempty = self.nonempty
-        clone._ne_starts = self._ne_starts
         return clone
 
     def masked(self, valid: np.ndarray) -> "Ragged":
         """Ragged of only the valid positions (per-doc ROI compaction);
         same doc count, shorter segments."""
-        clone = object.__new__(Ragged)
-        clone.B = self.B
-        clone.lens = np.bincount(
-            self.doc[valid], minlength=self.B).astype(np.int64)
-        clone.starts = np.zeros(self.B, dtype=np.int64)
-        np.cumsum(clone.lens[:-1], out=clone.starts[1:])
-        clone.x = self.x[valid]
-        clone.doc = self.doc[valid]
-        clone.nonempty = clone.lens > 0
-        clone._ne_starts = clone.starts[clone.nonempty]
-        return clone
+        return Ragged.from_concat(
+            self.x[valid], np.bincount(self.doc[valid], minlength=self.B))
 
     def reduceat(self, arr, ufunc=np.add):
         """Per-doc reduction of a concat-aligned array (0 for empty docs)."""
@@ -112,6 +102,18 @@ class Ragged:
 
     def segmin(self, arr):
         return self.reduceat(arr, np.minimum)
+
+
+def _adjacent(r: Ragged, dist: int,
+              valid: np.ndarray | None = None) -> np.ndarray:
+    """(n − dist,) mask of the position pairs (p, p + dist) that are
+    neighbours: both in the same doc and, under a mask, both valid
+    (masked positions break adjacency like out-of-ROI voxels,
+    cmatrices.c:4-92 bounds/mask checks). Empty when n ≤ dist."""
+    same = r.doc[:-dist] == r.doc[dist:]
+    if valid is not None:
+        same &= valid[:-dist] & valid[dist:]
+    return same
 
 
 def discretize_batch(r: Ragged, bin_width: float,
@@ -259,13 +261,11 @@ def lbp_batch(r: Ragged, radius: int = 1) -> np.ndarray:
     """functions.intensity.lbp_transform vectorized: per-position count of
     same-doc neighbors in ±radius with value >= the center."""
     x = r.x
-    n = x.size
-    out = np.zeros(n)
+    out = np.zeros(x.size)
     for d in range(1, radius + 1):
-        if n > d:
-            same = r.doc[:-d] == r.doc[d:]
-            out[:-d] += same & (x[d:] >= x[:-d])
-            out[d:] += same & (x[:-d] >= x[d:])
+        same = _adjacent(r, d)
+        out[:-d] += same & (x[d:] >= x[:-d])
+        out[d:] += same & (x[:-d] >= x[d:])
     return out
 
 
@@ -386,7 +386,7 @@ def transform_batch(r: Ragged, kind: str, settings=None) -> np.ndarray:
         if n > 1:
             left_ok = np.zeros(n, bool)
             right_ok = np.zeros(n, bool)
-            same = r.doc[:-1] == r.doc[1:]
+            same = _adjacent(r, 1)
             left_ok[1:] = same
             right_ok[:-1] = same
             xl = np.roll(x, 1)
@@ -549,35 +549,16 @@ def glcm_batch(r: Ragged, levels: np.ndarray, distances: tuple = (1,),
             w = np.ones(len(distances))
         else:
             w = np.exp(-np.asarray(distances, dtype=np.float64) ** 2)
-        if r.B * (G * G) <= _GLCM_DENSE_MAX_SLOTS:
-            P = None
-            for wi, d in zip(w, distances):
-                Pd = _glcm_raw(r, levels, int(d), G, valid)
-                if symmetric:
-                    Pd = Pd + Pd.transpose(0, 2, 1)
-                P = wi * Pd if P is None else P + wi * Pd
-            return _glcm_features_dense(r, levels, P, G, valid,
-                                        present=present)
-        parts_c, parts_v = [], []
-        for wi, d in zip(w, distances):
-            codes, cnts = _glcm_cells(r, levels, int(d), G, valid)
-            if symmetric:
-                codes, cnts = _sym_cells(codes, cnts, G)
-            parts_c.append(codes)
-            parts_v.append(wi * cnts)
-        codes, cnts = _merge_cells(np.concatenate(parts_c),
-                                   np.concatenate(parts_v))
-        return _glcm_features_from_counts(r, levels, codes, cnts, G, valid,
-                                          present=present)
+        return _glcm_angle(r, levels, G, valid, symmetric, present,
+                           distances, w)
     if len(distances) == 1:
-        return _glcm_one_distance(r, levels, int(distances[0]),
-                                  symmetric=symmetric, valid=valid,
-                                  present=present)
+        return _glcm_angle(r, levels, G, valid, symmetric, present,
+                           distances, (1.0,))
     # multi-angle: per-angle features with empty angles as NaN, then nanmean
     # (delete-empty-angles-then-mean, glcm.py:187-198)
     per_angle = [
-        _glcm_one_distance(r, levels, int(d), mask_empty=True,
-                           symmetric=symmetric, valid=valid, present=present)
+        _glcm_angle(r, levels, G, valid, symmetric, present, (d,), (1.0,),
+                    mask_empty=True)
         for d in distances
     ]
     import warnings
@@ -624,18 +605,10 @@ def _glcm_raw(r: Ragged, levels: np.ndarray, dist: int, G: int,
 def _glcm_pairs(r: Ragged, levels: np.ndarray, dist: int,
                 valid: np.ndarray | None) -> tuple:
     """Directed pair endpoints at one distance: (doc, i0, j0) index
-    arrays; pairs need both ends in the same doc AND valid (masked
-    positions break adjacency like out-of-ROI voxels, cmatrices.c:4-92
-    bounds/mask checks)."""
-    n = levels.size
-    if n > dist:
-        same = r.doc[:-dist] == r.doc[dist:]
-        if valid is not None:
-            same = same & valid[:-dist] & valid[dist:]
-        return (r.doc[:-dist][same], levels[:-dist][same] - 1,
-                levels[dist:][same] - 1)
-    z = np.empty(0, dtype=np.int64)
-    return z, z, z
+    arrays over the adjacent pairs (``_adjacent``)."""
+    same = _adjacent(r, dist, valid)
+    return (r.doc[:-dist][same], levels[:-dist][same] - 1,
+            levels[dist:][same] - 1)
 
 
 def _glcm_cells(r: Ragged, levels: np.ndarray, dist: int, G: int,
@@ -664,118 +637,117 @@ def _merge_cells(codes: np.ndarray, counts: np.ndarray) -> tuple:
                           minlength=u.size).astype(np.float64)
 
 
-def _glcm_one_distance(r: Ragged, levels: np.ndarray, dist: int,
-                       mask_empty: bool = False, symmetric: bool = True,
-                       valid: np.ndarray | None = None,
-                       present: np.ndarray | None = None) -> dict:
-    G = max(int(levels.max()) if levels.size else 1, 1)
+def _glcm_angle(r: Ragged, levels: np.ndarray, G: int,
+                valid: np.ndarray | None, symmetric: bool,
+                present: np.ndarray, distances, weights,
+                mask_empty: bool = False) -> dict:
+    """One feature pass over the weighted sum of the per-distance count
+    matrices, built as a dense (B, G, G) tensor up to
+    _GLCM_DENSE_MAX_SLOTS and as sparse cells beyond it; both arms feed
+    the one feature reduction, ``_glcm_reduce``."""
     if r.B * (G * G) <= _GLCM_DENSE_MAX_SLOTS:
-        P = _glcm_raw(r, levels, dist, G, valid)
-        if symmetric:
-            P = P + P.transpose(0, 2, 1)
-        return _glcm_features_dense(r, levels, P, G, valid,
-                                    mask_empty=mask_empty, present=present)
-    codes, cnts = _glcm_cells(r, levels, dist, G, valid)
-    if symmetric:
-        codes, cnts = _sym_cells(codes, cnts, G)
-    return _glcm_features_from_counts(r, levels, codes, cnts, G, valid,
-                                      mask_empty=mask_empty, present=present)
+        P = None
+        for wi, d in zip(weights, distances):
+            Pd = _glcm_raw(r, levels, int(d), G, valid)
+            if symmetric:
+                Pd = Pd + Pd.transpose(0, 2, 1)
+            Pd *= wi
+            P = Pd if P is None else P + Pd
+        parts = _glcm_dense_parts(P, G)
+    else:
+        cells = []
+        for wi, d in zip(weights, distances):
+            codes, cnts = _glcm_cells(r, levels, int(d), G, valid)
+            if symmetric:
+                codes, cnts = _sym_cells(codes, cnts, G)
+            cells.append((codes, wi * cnts))
+        codes, cnts = cells[0] if len(cells) == 1 else _merge_cells(
+            np.concatenate([c for c, _ in cells]),
+            np.concatenate([v for _, v in cells]))
+        parts = _glcm_sparse_parts(codes, cnts, r.B, G)
+    return _glcm_reduce(r, levels, G, present, mask_empty, **parts)
 
 
-def _glcm_features_from_counts(r: Ragged, levels: np.ndarray,
-                               codes: np.ndarray, cnts: np.ndarray,
-                               G: int, valid: np.ndarray | None,
-                               mask_empty: bool = False,
-                               present: np.ndarray | None = None) -> dict:
-    """Every GLCM reduction from SPARSE observed cells (codes =
+def _glcm_dense_parts(P: np.ndarray, G: int) -> dict:
+    """``_glcm_reduce``'s per-representation inputs from the DENSE
+    (B, G, G) count tensor."""
+    B = P.shape[0]
+    mass = P.sum(axis=(1, 2))
+    P = P / np.where(mass > 0, mass, np.nan)[:, None, None]
+    gl = np.arange(1, G + 1, dtype=np.float64)
+    px = P.sum(axis=2)                      # (B,G)
+    py = P.sum(axis=1)
+
+    # p(x+y) / p(x−y) via dense projection matrices (G², K)
+    gsum = (gl[:, None] + gl[None, :]).ravel()
+    gdiff = np.abs(gl[:, None] - gl[None, :]).ravel()
+    Msum = np.zeros((G * G, 2 * G - 1))
+    Msum[np.arange(G * G), (gsum - 2).astype(int)] = 1.0
+    Mdiff = np.zeros((G * G, G))
+    Mdiff[np.arange(G * G), gdiff.astype(int)] = 1.0
+    Pf = P.reshape(B, G * G)
+
+    pxy = px[:, :, None] * py[:, None, :]
+    # ONE log pass shared by HXY1/HXY2 (the log2 over B·G² is the
+    # expensive part; EPS placement itself can't factor through the
+    # marginals, see NEXT.md)
+    log_pxy = np.log2(pxy + EPS)
+
+    def corm(dx, dy):
+        # Σ_ij P dx_i dy_j = dx·(P @ dy) per doc — batched BLAS matvec
+        return np.einsum("bi,bi->b", dx, np.matmul(P, dy[:, :, None])[:, :, 0])
+
+    def mcc_stacks(docs, pats, inv):
+        for p in range(pats.shape[0]):
+            sel = docs[inv == p]
+            pres = np.flatnonzero(pats[p])
+            yield P[np.ix_(sel, pres, pres)], sel
+
+    return dict(
+        mass=mass, px=px, py=py,
+        p_add=Pf @ Msum,                    # (B, 2G-1), k value = idx+2
+        p_sub=Pf @ Mdiff,                   # (B, G),   k value = idx
+        hxy=-np.sum(P * np.log2(P + EPS), axis=(1, 2)),
+        # Σ_ij P·i·j = gl·(P @ gl): a BLAS batched matvec + a (B,G) dot
+        # instead of a einsum C-loop over the full tensor
+        autoc=(P @ gl) @ gl,
+        jener=np.sum(P * P, axis=(1, 2)),
+        hxy1=-np.sum(P * log_pxy, axis=(1, 2)),
+        hxy2=-np.sum(pxy * log_pxy, axis=(1, 2)),
+        maxprob=P.reshape(B, -1).max(axis=1),
+        corm=corm, mcc_stacks=mcc_stacks)
+
+
+def _glcm_sparse_parts(codes: np.ndarray, cnts: np.ndarray, B: int,
+                       G: int) -> dict:
+    """``_glcm_reduce``'s inputs from SPARSE observed cells (codes =
     doc·G² + i·G + j, counts): O(cells) work and memory — no (B,G,G)
     tensor is ever materialized except the per-pattern MCC submatrices.
-    Pair-less docs (no cells) would silently read as all-zero through the
-    gathers, so every quantity the dense algebra turned NaN for them is
-    NaN-fixed explicitly right after construction — downstream flows,
-    guards, and mask_empty semantics are unchanged."""
-    B = r.B
+    Pair-less docs (no cells) read as all-zero here; ``_glcm_reduce``
+    turns them NaN like the dense algebra."""
     cb, rem = np.divmod(codes, G * G)
     ci, cj = np.divmod(rem, G)
     mass = np.bincount(cb, weights=cnts, minlength=B).astype(np.float64)
-    norm = np.where(mass > 0, mass, np.nan)
-    empty = ~(mass > 0)
-    cv = cnts / norm[cb]   # cells exist ⇒ their doc's mass > 0
+    cv = cnts / np.where(mass > 0, mass, np.nan)[cb]
+
+    def per_doc(w):
+        return np.bincount(cb, weights=w, minlength=B).astype(np.float64)
+
+    def per_level(k, K):
+        return np.bincount(cb * K + k, weights=cv, minlength=B * K
+                           ).astype(np.float64).reshape(B, K)
 
     gl = np.arange(1, G + 1, dtype=np.float64)
-    ng = r.segmax(levels.astype(np.float64))  # per-doc max level (B,)
-    ng = np.maximum(ng, 1)
+    px = per_level(ci, G)
+    py = per_level(cj, G)
+    maxprob = np.zeros(B)
+    np.maximum.at(maxprob, cb, cv)
 
-    px = np.bincount(cb * G + ci, weights=cv, minlength=B * G
-                     ).astype(np.float64).reshape(B, G)
-    py = np.bincount(cb * G + cj, weights=cv, minlength=B * G
-                     ).astype(np.float64).reshape(B, G)
-    px[empty] = np.nan
-    py[empty] = np.nan
-    # moments from MARGINALS where algebra allows — Σ_ij P·f(i) ≡ Σ_g px·f(g)
-    ux = px @ gl
-    uy = py @ gl
-
-    # p(x+y) / p(x−y) straight from the cells: k = (i+j) / |i−j|
-    Ksum = 2 * G - 1
-    p_add = np.bincount(cb * Ksum + (ci + cj), weights=cv,
-                        minlength=B * Ksum).astype(np.float64).reshape(B, Ksum)
-    p_sub = np.bincount(cb * G + np.abs(ci - cj), weights=cv,
-                        minlength=B * G).astype(np.float64).reshape(B, G)
-    p_add[empty] = np.nan
-    p_sub[empty] = np.nan
-    k_sum = np.arange(2, 2 * G + 1, dtype=np.float64)
-    k_diff = np.arange(0, G, dtype=np.float64)
-
-    HXY = -np.bincount(cb, weights=cv * np.log2(cv + EPS),
-                       minlength=B).astype(np.float64)
-    HXY[empty] = np.nan
-
-    # cluster moments over p(x+y): Σ_ij P·g(i+j) ≡ Σ_k p_add·g(k)
-    dsum = k_sum[None, :] - ux[:, None] - uy[:, None]   # (B, 2G-1)
-    dsum2 = dsum * dsum
-    ctend = np.sum(p_add * dsum2, axis=1)
-    cshade = np.sum(p_add * dsum2 * dsum, axis=1)
-    cprom = np.sum(p_add * dsum2 * dsum2, axis=1)
-    contrast = p_sub @ (k_diff * k_diff)                # Σ_ij P·(i−j)²
-    autoc = np.bincount(cb, weights=cv * gl[ci] * gl[cj],
-                        minlength=B).astype(np.float64)
-    autoc[empty] = np.nan
-
-    dx = gl[None, :] - ux[:, None]                      # (B,G)
-    dy = gl[None, :] - uy[:, None]
-    sumsq = np.sum(px * dx * dx, axis=1)                # ≡ Σ P (i−ux)² = σx²
-    sigx = np.sqrt(sumsq)
-    sigy = np.sqrt(np.sum(py * dy * dy, axis=1))
-    # Σ P (i−ux)(j−uy) from CENTERED products (same form as the per-doc
-    # kernel, glcm.py:158) — the algebraic shortcut autoc − ux·uy is exact
-    # but catastrophically cancels for near-flat high-G docs where
-    # σx·σy ≈ 0; the centered cell gather buys full precision there
-    corm = np.bincount(cb, weights=cv * dx[cb, ci] * dy[cb, cj],
-                       minlength=B).astype(np.float64)
-    corm[empty] = np.nan
-    with np.errstate(invalid="ignore"):
-        corr = corm / (sigx * sigy + EPS)
-    corr = np.where(sigx * sigy == 0, 1.0, corr)
-
-    diffavg = p_sub @ k_diff
-    diffent = -np.sum(p_sub * np.log2(p_sub + EPS), axis=1)
-    diffvar = np.sum(p_sub * (k_diff[None, :] - diffavg[:, None]) ** 2, axis=1)
-    jener = np.bincount(cb, weights=cv * cv, minlength=B).astype(np.float64)
-    jener[empty] = np.nan
-
-    HX = -np.sum(px * np.log2(px + EPS), axis=1)
-    HY = -np.sum(py * np.log2(py + EPS), axis=1)
-    HXY1 = -np.bincount(
-        cb, weights=cv * np.log2(px[cb, ci] * py[cb, cj] + EPS),
-        minlength=B).astype(np.float64)
-    HXY1[empty] = np.nan
     # HXY2 = −Σ pxᵢ·pyⱼ·log2(pxᵢ·pyⱼ+EPS) needs the full marginal product
     # grid, but only cells with BOTH marginals positive contribute (a zero
     # marginal makes the term an exact ±0.0) — gather the in-doc cross
     # pairs of positive-marginal levels instead of the (B,G,G) pxy tensor.
-    # Pair-less docs have all-NaN marginals (px>0 False) → no pairs; their
-    # dense value is NaN, restored explicitly below.
+    # Pair-less docs have no positive marginal → no pairs.
     xb, xg = np.nonzero(px > 0)
     yb, yg = np.nonzero(py > 0)
     mx = np.bincount(xb, minlength=B)
@@ -791,7 +763,7 @@ def _glcm_features_from_counts(r: Ragged, levels: np.ndarray,
     # many present levels — exactly the regime this sparse path serves —
     # so the pair temporaries are built a bounded slice of docs at a time
     # (the arithmetic is per-doc; chunking is result-exact)
-    HXY2 = np.zeros(B)
+    hxy2 = np.zeros(B)
     cum = np.cumsum(npxy)
     lo = 0
     while lo < B:
@@ -807,71 +779,21 @@ def _glcm_features_from_counts(r: Ragged, levels: np.ndarray,
             myd = my[docp]
             prod = (pxv_all[sx[docp] + tt // myd]
                     * pyv_all[sy[docp] + tt % myd])
-            HXY2[lo:hi] = -np.bincount(
+            hxy2[lo:hi] = -np.bincount(
                 docp - lo, weights=prod * np.log2(prod + EPS),
                 minlength=hi - lo)
         lo = hi
-    HXY2[~(mass > 0)] = np.nan
-    div = np.fmax(HX, HY)
-    with np.errstate(invalid="ignore"):
-        imc1 = np.where(div != 0, (HXY - HXY1) / np.where(div != 0, div, 1.0), 0.0)
-        imc2 = np.sqrt(np.maximum(1 - np.exp(-2.0 * (HXY2 - HXY)), 0.0))
-    imc2 = np.where(HXY2 == HXY, 0.0, imc2)
 
-    idm = np.sum(p_sub / (1 + k_diff[None, :] ** 2), axis=1)
-    idmn = np.sum(p_sub / (1 + k_diff[None, :] ** 2 / (ng ** 2)[:, None]), axis=1)
-    idcol = np.sum(p_sub / (1 + k_diff[None, :]), axis=1)
-    idn = np.sum(p_sub / (1 + k_diff[None, :] / ng[:, None]), axis=1)
-    with np.errstate(divide="ignore"):
-        invvar = np.sum(p_sub[:, 1:] / k_diff[None, 1:] ** 2, axis=1)
-    # reference: with a single PRESENT level every k ≥ 1 cell of p(x−y) is an
-    # exact 0 (all mass sits at k=0, even when that mass is the NaN of a
-    # pairless doc), so the k=1.. sum is 0.0 — but p_sub rows of pairless
-    # docs are NaN here (the explicit empty fixup, matching the dense
-    # path's NaN smear). Guard on present-level count, not ng==1 (FBN can
-    # put a flat doc at a mid bin).
-    present_early = (present if present is not None
-                     else _present_counts(r, levels, G, valid) > 0)
-    n_pres_early = present_early.sum(axis=1)
-    invvar = np.where(n_pres_early <= 1, 0.0, invvar)
-    maxprob = np.zeros(B)
-    np.maximum.at(maxprob, cb, cv)
-    maxprob[empty] = np.nan
-    sumavg = p_add @ k_sum
-    sument = -np.sum(p_add * np.log2(p_add + EPS), axis=1)
-    # sumsq ≡ σx² — computed above from the px marginal
+    def corm(dx, dy):
+        return per_doc(cv * dx[cb, ci] * dy[cb, cj])
 
-    # MCC: eigen on the compacted present-level submatrix. Docs are grouped
-    # by their EXACT present-level pattern (np.unique over the (B, G) bool
-    # mask) and each group runs ONE stacked eigvals — a web corpus has very
-    # few distinct patterns, so this stays O(#patterns) eig calls even when
-    # levels are non-contiguous (e.g. a vocabulary with no 2-char tokens
-    # leaves a hole at level 2 in EVERY doc; the previous contiguous-only
-    # grouping degraded to a per-doc python loop there, ~60 µs × B).
-    mcc = np.full(B, 1.0)
-    present = present_early
-    n_pres = n_pres_early
-    finite = np.isfinite(mass) & (mass > 0)
-
-    def _mcc_from_stack(Ps: np.ndarray) -> np.ndarray:
-        pxa = Ps.sum(axis=2)
-        pya = Ps.sum(axis=1)
-        R = Ps / (pxa[:, :, None] * pya[:, None, :] + EPS)
-        Q = np.einsum("bik,bjk->bij", R, Ps)
-        ev = np.linalg.eigvals(Q)
-        ev.sort(axis=1)
-        return np.real(np.sqrt(ev[:, -2]))
-
-    eligible = (n_pres >= 2) & finite
-    if eligible.any():
-        idx_all = np.flatnonzero(eligible)
-        pats, inv = np.unique(present[idx_all], axis=0, return_inverse=True)
+    def mcc_stacks(docs, pats, inv):
         # group-local dense submatrices scattered straight from the sparse
         # cells — the only densification anywhere in the GLCM path, sized
         # (group docs × present levels²), never (B, G, G). Cells and docs
         # are bucketed by group with one stable argsort each.
         grp_of_doc = np.full(B, -1, dtype=np.int64)
-        grp_of_doc[idx_all] = inv
+        grp_of_doc[docs] = inv
         cell_grp = grp_of_doc[cb]
         corder = np.argsort(cell_grp, kind="stable")
         cbounds = np.searchsorted(cell_grp[corder],
@@ -880,28 +802,8 @@ def _glcm_features_from_counts(r: Ragged, levels: np.ndarray,
         dbounds = np.searchsorted(inv[dorder], np.arange(pats.shape[0] + 1))
         doc_pos = np.empty(B, dtype=np.int64)
         lvl_pos = np.empty(G, dtype=np.int64)
-        # eigvals needs matrices of ONE size per call, not one PATTERN:
-        # float image types (wavelet/LoG) make nearly every doc its own
-        # pattern, and 1772 per-pattern eigvals calls were ~180 µs each of
-        # mostly numpy fixed overhead. Scatter per pattern (that part needs
-        # the exact level positions), but POOL the stacks by matrix size
-        # and eig each pool once, flushing at the memory budget.
-        pending: dict = {}
-        pend_elems: dict = {}
-
-        def _flush(m: int) -> None:
-            blocks = pending.pop(m, [])
-            pend_elems.pop(m, None)
-            if not blocks:
-                return
-            Ps = blocks[0][0] if len(blocks) == 1 else np.concatenate(
-                [b[0] for b in blocks])
-            sels = blocks[0][1] if len(blocks) == 1 else np.concatenate(
-                [b[1] for b in blocks])
-            mcc[sels] = _mcc_from_stack(Ps)
-
         for p in range(pats.shape[0]):
-            sel = idx_all[dorder[dbounds[p]:dbounds[p + 1]]]
+            sel = docs[dorder[dbounds[p]:dbounds[p + 1]]]
             pres = np.flatnonzero(pats[p])
             cs = corder[cbounds[p]:cbounds[p + 1]]
             lvl_pos[pres] = np.arange(pres.size)
@@ -921,77 +823,48 @@ def _glcm_features_from_counts(r: Ragged, levels: np.ndarray,
                 Ps = np.zeros((ssel.size, m, m))
                 Ps[doc_pos[cb[csl]], lvl_pos[ci[csl]], lvl_pos[cj[csl]]] = \
                     cv[csl]
-                pending.setdefault(m, []).append((Ps, ssel))
-                pend_elems[m] = pend_elems.get(m, 0) + Ps.size
-                if pend_elems[m] >= _GLCM_PAIR_BUDGET:
-                    _flush(m)
-        for m in list(pending):
-            _flush(m)
-    # pairless docs can't have ≥2 present levels at distance 1, but keep the
-    # per-doc NaN semantics for that (dead-in-practice) corner
-    mcc[~finite & (n_pres >= 2)] = np.nan
+                yield Ps, ssel
 
-    out = {
-        "Autocorrelation": autoc, "JointAverage": ux,
-        "ClusterProminence": cprom, "ClusterShade": cshade,
-        "ClusterTendency": ctend, "Contrast": contrast,
-        "Correlation": corr, "DifferenceAverage": diffavg,
-        "DifferenceEntropy": diffent, "DifferenceVariance": diffvar,
-        "JointEnergy": jener, "JointEntropy": HXY,
-        "Imc1": imc1, "Imc2": imc2, "Idm": idm, "MCC": mcc,
-        "Idmn": idmn, "Id": idcol, "Idn": idn, "InverseVariance": invvar,
-        "MaximumProbability": maxprob, "SumAverage": sumavg,
-        "SumEntropy": sument, "SumSquares": sumsq,
-    }
-    # multi-angle only: pair-less docs at this distance → the whole angle
-    # is NaN so the nanmean skips it (delete-empty-angle semantics); the
-    # guards above gave MCC=1 / Imc=0 / invvar=0 which would wrongly
-    # survive the nanmean. Single-angle keeps those per-doc guard values.
+    Ksum = 2 * G - 1
+    return dict(
+        mass=mass, px=px, py=py,
+        # p(x+y) / p(x−y) straight from the cells: k = (i+j) / |i−j|
+        p_add=per_level(ci + cj, Ksum), p_sub=per_level(np.abs(ci - cj), G),
+        hxy=-per_doc(cv * np.log2(cv + EPS)),
+        autoc=per_doc(cv * gl[ci] * gl[cj]),
+        jener=per_doc(cv * cv),
+        hxy1=-per_doc(cv * np.log2(px[cb, ci] * py[cb, cj] + EPS)),
+        hxy2=hxy2, maxprob=maxprob, corm=corm, mcc_stacks=mcc_stacks)
+
+
+def _glcm_reduce(r: Ragged, levels: np.ndarray, G: int,
+                 present: np.ndarray, mask_empty: bool, *, mass, px, py,
+                 p_add, p_sub, hxy, autoc, jener, hxy1, hxy2, maxprob,
+                 corm, mcc_stacks) -> dict:
+    """The 24 GLCM features, their guards and the empty-angle mask from
+    one arm's primitives: per-doc pair mass, the normalized marginals
+    px/py (B, G), p(x+y) (B, 2G−1) and p(x−y) (B, G), the joint entropy,
+    autocorrelation, joint energy, HXY1/HXY2 and maximum probability
+    (B,), plus two callbacks into the arm's own representation —
+    ``corm(dx, dy)`` for the centered cross moment and
+    ``mcc_stacks(docs, pats, inv)`` yielding (submatrix stack, docs)
+    blocks for the MCC eigenproblem."""
     empty = ~(mass > 0)
-    if mask_empty and empty.any():
-        for k in out:
-            v = np.asarray(out[k], dtype=np.float64).copy()
-            v[empty] = np.nan
-            out[k] = v
-    return out
-
-
-def _glcm_features_dense(r: Ragged, levels: np.ndarray, P: np.ndarray,
-                               G: int, valid: np.ndarray | None,
-                               mask_empty: bool = False,
-                               present: np.ndarray | None = None) -> dict:
-    B = r.B
-    mass = P.sum(axis=(1, 2))
-    norm = np.where(mass > 0, mass, np.nan)
-    P = P / norm[:, None, None]
-
+    if empty.any():
+        # pair-less docs: the dense arm's 0/0 normalization already made
+        # every primitive NaN; the sparse arm's gathers read zeros
+        for a in (px, py, p_add, p_sub, hxy, autoc, jener, hxy1, hxy2,
+                  maxprob):
+            a[empty] = np.nan
     gl = np.arange(1, G + 1, dtype=np.float64)
-    ng = r.segmax(levels.astype(np.float64))  # per-doc max level (B,)
-    ng = np.maximum(ng, 1)
-
-    px = P.sum(axis=2)                      # (B,G)
-    py = P.sum(axis=1)
+    ng = np.maximum(r.segmax(levels.astype(np.float64)), 1)  # per-doc max
     # moments from MARGINALS where algebra allows — Σ_ij P·f(i) ≡ Σ_g px·f(g)
-    # exactly; avoids a pile of (B,G,G) tensor sweeps (≈40% of this
-    # function's wall on a 15k-doc batch)
+    # exactly; avoids a pile of (B,G,G) tensor sweeps (≈40% of the dense
+    # arm's wall on a 15k-doc batch)
     ux = px @ gl
     uy = py @ gl
-
-    # p(x+y) / p(x−y) via dense projection matrices (G², K)
-    gsum = (gl[:, None] + gl[None, :]).ravel()
-    gdiff = np.abs(gl[:, None] - gl[None, :]).ravel()
-    Ksum = 2 * G - 1
-    Msum = np.zeros((G * G, Ksum))
-    Msum[np.arange(G * G), (gsum - 2).astype(int)] = 1.0
-    Mdiff = np.zeros((G * G, G))
-    Mdiff[np.arange(G * G), gdiff.astype(int)] = 1.0
-    Pf = P.reshape(B, G * G)
-    p_add = Pf @ Msum                       # (B, 2G-1), k value = idx+2
-    p_sub = Pf @ Mdiff                      # (B, G),   k value = idx
     k_sum = np.arange(2, 2 * G + 1, dtype=np.float64)
     k_diff = np.arange(0, G, dtype=np.float64)
-
-    HXY = -np.sum(P * np.log2(P + EPS), axis=(1, 2))
 
     # cluster moments over p(x+y): Σ_ij P·g(i+j) ≡ Σ_k p_add·g(k)
     dsum = k_sum[None, :] - ux[:, None] - uy[:, None]   # (B, 2G-1)
@@ -1000,10 +873,6 @@ def _glcm_features_dense(r: Ragged, levels: np.ndarray, P: np.ndarray,
     cshade = np.sum(p_add * dsum2 * dsum, axis=1)
     cprom = np.sum(p_add * dsum2 * dsum2, axis=1)
     contrast = p_sub @ (k_diff * k_diff)                # Σ_ij P·(i−j)²
-    # autoc = Σ_ij P·i·j = gl·(P @ gl): a BLAS batched matvec + a (B,G)
-    # dot instead of a einsum C-loop over the full tensor
-    Pgl = P @ gl                                        # (B,G)
-    autoc = Pgl @ gl
 
     dx = gl[None, :] - ux[:, None]                      # (B,G)
     dy = gl[None, :] - uy[:, None]
@@ -1013,34 +882,23 @@ def _glcm_features_dense(r: Ragged, levels: np.ndarray, P: np.ndarray,
     # Σ P (i−ux)(j−uy) from CENTERED products (same form as the per-doc
     # kernel, glcm.py:158) — the algebraic shortcut autoc − ux·uy is exact
     # but catastrophically cancels for near-flat high-G docs where
-    # σx·σy ≈ 0; one (B,G,G) einsum buys full precision there
-    # Σ_ij P dx_i dy_j = dx·(P @ dy) per doc — batched BLAS matvec (the
-    # centered form is kept for the cancellation reason above; only the
-    # contraction engine changes)
-    corm = np.einsum("bi,bi->b", dx, np.matmul(P, dy[:, :, None])[:, :, 0])
+    # σx·σy ≈ 0; the arm's centered contraction buys full precision there
+    cm = np.where(empty, np.nan, corm(dx, dy))
     with np.errstate(invalid="ignore"):
-        corr = corm / (sigx * sigy + EPS)
+        corr = cm / (sigx * sigy + EPS)
     corr = np.where(sigx * sigy == 0, 1.0, corr)
 
     diffavg = p_sub @ k_diff
     diffent = -np.sum(p_sub * np.log2(p_sub + EPS), axis=1)
     diffvar = np.sum(p_sub * (k_diff[None, :] - diffavg[:, None]) ** 2, axis=1)
-    jener = np.sum(P * P, axis=(1, 2))
 
     HX = -np.sum(px * np.log2(px + EPS), axis=1)
     HY = -np.sum(py * np.log2(py + EPS), axis=1)
-    pxy = px[:, :, None] * py[:, None, :]
-    # ONE log pass shared by HXY1/HXY2 (was two — the log2 over B·G² is
-    # the expensive part; EPS placement itself can't factor through the
-    # marginals, see NEXT.md)
-    log_pxy = np.log2(pxy + EPS)
-    HXY1 = -np.sum(P * log_pxy, axis=(1, 2))
-    HXY2 = -np.sum(pxy * log_pxy, axis=(1, 2))
     div = np.fmax(HX, HY)
     with np.errstate(invalid="ignore"):
-        imc1 = np.where(div != 0, (HXY - HXY1) / np.where(div != 0, div, 1.0), 0.0)
-        imc2 = np.sqrt(np.maximum(1 - np.exp(-2.0 * (HXY2 - HXY)), 0.0))
-    imc2 = np.where(HXY2 == HXY, 0.0, imc2)
+        imc1 = np.where(div != 0, (hxy - hxy1) / np.where(div != 0, div, 1.0), 0.0)
+        imc2 = np.sqrt(np.maximum(1 - np.exp(-2.0 * (hxy2 - hxy)), 0.0))
+    imc2 = np.where(hxy2 == hxy, 0.0, imc2)
 
     idm = np.sum(p_sub / (1 + k_diff[None, :] ** 2), axis=1)
     idmn = np.sum(p_sub / (1 + k_diff[None, :] ** 2 / (ng ** 2)[:, None]), axis=1)
@@ -1051,49 +909,14 @@ def _glcm_features_dense(r: Ragged, levels: np.ndarray, P: np.ndarray,
     # reference: with a single PRESENT level every k ≥ 1 cell of p(x−y) is an
     # exact 0 (all mass sits at k=0, even when that mass is the NaN of a
     # pairless doc), so the k=1.. sum is 0.0 — per-doc bincount keeps those
-    # zeros but the dense matmul here smears the NaN across all k. Guard on
+    # zeros but a pairless doc's p(x−y) row is all-NaN here. Guard on
     # present-level count, not ng==1 (FBN can put a flat doc at a mid bin).
-    present_early = (present if present is not None
-                     else _present_counts(r, levels, G, valid) > 0)
-    n_pres_early = present_early.sum(axis=1)
-    invvar = np.where(n_pres_early <= 1, 0.0, invvar)
-    maxprob = P.reshape(B, -1).max(axis=1)
+    n_pres = present.sum(axis=1)
+    invvar = np.where(n_pres <= 1, 0.0, invvar)
     sumavg = p_add @ k_sum
     sument = -np.sum(p_add * np.log2(p_add + EPS), axis=1)
-    # sumsq ≡ σx² — computed above from the px marginal
-
-    # MCC: eigen on the compacted present-level submatrix. Docs are grouped
-    # by their EXACT present-level pattern (np.unique over the (B, G) bool
-    # mask) and each group runs ONE stacked eigvals — a web corpus has very
-    # few distinct patterns, so this stays O(#patterns) eig calls even when
-    # levels are non-contiguous (e.g. a vocabulary with no 2-char tokens
-    # leaves a hole at level 2 in EVERY doc; the previous contiguous-only
-    # grouping degraded to a per-doc python loop there, ~60 µs × B).
-    mcc = np.full(B, 1.0)
-    present = present_early
-    n_pres = n_pres_early
-    finite = np.isfinite(mass) & (mass > 0)
-
-    def _mcc_from_stack(Ps: np.ndarray) -> np.ndarray:
-        pxa = Ps.sum(axis=2)
-        pya = Ps.sum(axis=1)
-        R = Ps / (pxa[:, :, None] * pya[:, None, :] + EPS)
-        Q = np.einsum("bik,bjk->bij", R, Ps)
-        ev = np.linalg.eigvals(Q)
-        ev.sort(axis=1)
-        return np.real(np.sqrt(ev[:, -2]))
-
-    eligible = (n_pres >= 2) & finite
-    if eligible.any():
-        idx_all = np.flatnonzero(eligible)
-        pats, inv = np.unique(present[idx_all], axis=0, return_inverse=True)
-        for p in range(pats.shape[0]):
-            sel = idx_all[inv == p]
-            pres = np.flatnonzero(pats[p])
-            mcc[sel] = _mcc_from_stack(P[np.ix_(sel, pres, pres)])
-    # pairless docs can't have ≥2 present levels at distance 1, but keep the
-    # per-doc NaN semantics for that (dead-in-practice) corner
-    mcc[~finite & (n_pres >= 2)] = np.nan
+    mcc = _glcm_mcc(present, n_pres, np.isfinite(mass) & (mass > 0),
+                    mcc_stacks)
 
     out = {
         "Autocorrelation": autoc, "JointAverage": ux,
@@ -1101,7 +924,7 @@ def _glcm_features_dense(r: Ragged, levels: np.ndarray, P: np.ndarray,
         "ClusterTendency": ctend, "Contrast": contrast,
         "Correlation": corr, "DifferenceAverage": diffavg,
         "DifferenceEntropy": diffent, "DifferenceVariance": diffvar,
-        "JointEnergy": jener, "JointEntropy": HXY,
+        "JointEnergy": jener, "JointEntropy": hxy,
         "Imc1": imc1, "Imc2": imc2, "Idm": idm, "MCC": mcc,
         "Idmn": idmn, "Id": idcol, "Idn": idn, "InverseVariance": invvar,
         "MaximumProbability": maxprob, "SumAverage": sumavg,
@@ -1111,13 +934,68 @@ def _glcm_features_dense(r: Ragged, levels: np.ndarray, P: np.ndarray,
     # is NaN so the nanmean skips it (delete-empty-angle semantics); the
     # guards above gave MCC=1 / Imc=0 / invvar=0 which would wrongly
     # survive the nanmean. Single-angle keeps those per-doc guard values.
-    empty = ~(mass > 0)
     if mask_empty and empty.any():
         for k in out:
             v = np.asarray(out[k], dtype=np.float64).copy()
             v[empty] = np.nan
             out[k] = v
     return out
+
+
+def _mcc_from_stack(Ps: np.ndarray) -> np.ndarray:
+    """MCC of a (n, m, m) stack of normalized co-occurrence submatrices:
+    √ of the second-largest eigenvalue of Q = (P / px·pyᵀ) Pᵀ."""
+    pxa = Ps.sum(axis=2)
+    pya = Ps.sum(axis=1)
+    R = Ps / (pxa[:, :, None] * pya[:, None, :] + EPS)
+    Q = np.einsum("bik,bjk->bij", R, Ps)
+    ev = np.linalg.eigvals(Q)
+    ev.sort(axis=1)
+    return np.real(np.sqrt(ev[:, -2]))
+
+
+def _glcm_mcc(present: np.ndarray, n_pres: np.ndarray, finite: np.ndarray,
+              mcc_stacks) -> np.ndarray:
+    """MCC: eigen on the compacted present-level submatrix. Docs are
+    grouped by their EXACT present-level pattern (np.unique over the
+    (B, G) bool mask), so a web corpus with few distinct patterns stays
+    O(#patterns) stacks even when levels are non-contiguous (e.g. a
+    vocabulary with no 2-char tokens leaves a hole at level 2 in EVERY
+    doc). eigvals needs matrices of ONE size per call, not one PATTERN:
+    float image types (wavelet/LoG) make nearly every doc its own pattern,
+    and per-pattern eigvals calls were ~180 µs each of mostly numpy fixed
+    overhead — so the arm's stacks are POOLED by matrix size and each pool
+    is eig'd once, flushing at the memory budget."""
+    mcc = np.full(present.shape[0], 1.0)
+    eligible = (n_pres >= 2) & finite
+    if eligible.any():
+        docs = np.flatnonzero(eligible)
+        pats, inv = np.unique(present[docs], axis=0, return_inverse=True)
+        pools: dict = {}
+        pool_elems: dict = {}
+
+        def flush(m: int) -> None:
+            blocks = pools.pop(m)
+            pool_elems.pop(m)
+            if len(blocks) == 1:
+                Ps, sels = blocks[0]
+            else:
+                Ps = np.concatenate([b[0] for b in blocks])
+                sels = np.concatenate([b[1] for b in blocks])
+            mcc[sels] = _mcc_from_stack(Ps)
+
+        for Ps, sel in mcc_stacks(docs, pats, inv):
+            m = Ps.shape[1]
+            pools.setdefault(m, []).append((Ps, sel))
+            pool_elems[m] = pool_elems.get(m, 0) + Ps.size
+            if pool_elems[m] >= _GLCM_PAIR_BUDGET:
+                flush(m)
+        for m in list(pools):
+            flush(m)
+    # pairless docs can't have ≥2 present levels at distance 1, but keep the
+    # per-doc NaN semantics for that (dead-in-practice) corner
+    mcc[~finite & (n_pres >= 2)] = np.nan
+    return mcc
 
 
 # -------------------------------------------------- runs (GLRLM + GLSZM)
@@ -1148,8 +1026,11 @@ def _runs_batch(r: Ragged, levels: np.ndarray, valid: np.ndarray | None = None):
     return r.doc[starts], levels[starts], lens.astype(np.int64)
 
 
-def _rlm_features(P, iv, jv, kind: str) -> dict:
-    """Shared GLRLM/GLSZM reductions over (B, Gi, Gj) count tensors."""
+def _rlm_features(P, iv, jv) -> dict:
+    """GLRLM reductions over a (B, Gi, Gj) count tensor with level values
+    ``iv`` and run-length values ``jv``. GLSZM (the identical 1-D matrix)
+    and GLDM (the dependence matrix) bind them to their own names through
+    ``_RLM_TO_SZM`` / ``_RLM_TO_GLDM``."""
     nr = P.sum(axis=(1, 2))
     nr_safe = np.where(nr > 0, nr, np.nan)
     pr = P.sum(axis=1)  # (B, J)
@@ -1187,30 +1068,17 @@ def _rlm_features(P, iv, jv, kind: str) -> dict:
     lrl = (R / iv2[None, :]).sum(axis=1) / nr_safe
     lrh = (R * iv2[None, :]).sum(axis=1) / nr_safe
 
-    if kind == "glrlm":
-        return {
-            "ShortRunEmphasis": sre, "LongRunEmphasis": lre,
-            "GrayLevelNonUniformity": gln, "GrayLevelNonUniformityNormalized": glnn,
-            "RunLengthNonUniformity": rln, "RunLengthNonUniformityNormalized": rlnn,
-            "RunPercentage": rp, "GrayLevelVariance": glv, "RunVariance": rv,
-            "RunEntropy": re, "LowGrayLevelRunEmphasis": lgl,
-            "HighGrayLevelRunEmphasis": hgl,
-            "ShortRunLowGrayLevelEmphasis": srl,
-            "ShortRunHighGrayLevelEmphasis": srh,
-            "LongRunLowGrayLevelEmphasis": lrl,
-            "LongRunHighGrayLevelEmphasis": lrh,
-        }
     return {
-        "SmallAreaEmphasis": sre, "LargeAreaEmphasis": lre,
+        "ShortRunEmphasis": sre, "LongRunEmphasis": lre,
         "GrayLevelNonUniformity": gln, "GrayLevelNonUniformityNormalized": glnn,
-        "SizeZoneNonUniformity": rln, "SizeZoneNonUniformityNormalized": rlnn,
-        "ZonePercentage": rp, "GrayLevelVariance": glv, "ZoneVariance": rv,
-        "ZoneEntropy": re, "LowGrayLevelZoneEmphasis": lgl,
-        "HighGrayLevelZoneEmphasis": hgl,
-        "SmallAreaLowGrayLevelEmphasis": srl,
-        "SmallAreaHighGrayLevelEmphasis": srh,
-        "LargeAreaLowGrayLevelEmphasis": lrl,
-        "LargeAreaHighGrayLevelEmphasis": lrh,
+        "RunLengthNonUniformity": rln, "RunLengthNonUniformityNormalized": rlnn,
+        "RunPercentage": rp, "GrayLevelVariance": glv, "RunVariance": rv,
+        "RunEntropy": re, "LowGrayLevelRunEmphasis": lgl,
+        "HighGrayLevelRunEmphasis": hgl,
+        "ShortRunLowGrayLevelEmphasis": srl,
+        "ShortRunHighGrayLevelEmphasis": srh,
+        "LongRunLowGrayLevelEmphasis": lrl,
+        "LongRunHighGrayLevelEmphasis": lrh,
     }
 
 
@@ -1233,7 +1101,7 @@ def runs_batch_features(r: Ragged, levels: np.ndarray,
     # only the feature NAMES differ (kernels/glszm.py docstring). Compute
     # the reductions once and bind both name sets, instead of sweeping
     # the (B, G, J) tensor twice.
-    glrlm = _rlm_features(P, iv, jv, "glrlm")
+    glrlm = _rlm_features(P, iv, jv)
     glszm = {_RLM_TO_SZM[k]: v for k, v in glrlm.items()}
     return glrlm, glszm
 
@@ -1271,14 +1139,11 @@ def ngtdm_batch(r: Ragged, levels: np.ndarray, distances: tuple = (1,),
     nbr_cnt = np.zeros(n)
     for d in distances:
         d = int(d)
-        if n > d:
-            same = r.doc[:-d] == r.doc[d:]
-            if valid is not None:
-                same = same & valid[:-d] & valid[d:]
-            nbr_sum[:-d] += np.where(same, lv[d:], 0.0)
-            nbr_cnt[:-d] += same
-            nbr_sum[d:] += np.where(same, lv[:-d], 0.0)
-            nbr_cnt[d:] += same
+        same = _adjacent(r, d, valid)
+        nbr_sum[:-d] += np.where(same, lv[d:], 0.0)
+        nbr_cnt[:-d] += same
+        nbr_sum[d:] += np.where(same, lv[:-d], 0.0)
+        nbr_cnt[d:] += same
     counted = nbr_cnt > 0
     if valid is not None:
         counted = counted & valid
@@ -1400,59 +1265,48 @@ def ngtdm_batch(r: Ragged, levels: np.ndarray, distances: tuple = (1,),
 
 def gldm_batch(r: Ragged, levels: np.ndarray, alpha: float = 0.0,
                distances: tuple = (1,), valid: np.ndarray | None = None) -> dict:
+    """GLDM from the (B, G, D) dependence matrix: P[b, g, d] counts doc b's
+    positions at level g with d dependent neighbours (|Δlevel| ≤ alpha at
+    any of the distances, both sides), reduced by ``_rlm_features`` with
+    dependence d ↔ j = d + 1."""
     B = r.B
     G = max(int(levels.max()) if levels.size else 1, 1)
-    n = levels.size
-    dep = np.zeros(n, dtype=np.int64)
+    dep = np.zeros(levels.size, dtype=np.int64)
     for d in distances:
         d = int(d)
-        if n > d:
-            same = r.doc[:-d] == r.doc[d:]
-            if valid is not None:
-                same = same & valid[:-d] & valid[d:]
-            ok = same & (np.abs(levels[:-d] - levels[d:]) <= alpha)
-            dep[:-d] += ok
-            dep[d:] += ok
+        ok = _adjacent(r, d, valid) & (np.abs(levels[:-d] - levels[d:]) <= alpha)
+        dep[:-d] += ok
+        dep[d:] += ok
     D = 2 * len(distances) + 1  # dep ∈ {0..2·Nd}
     flat_idx = r.doc * G * D + np.maximum(levels - 1, 0) * D + dep
     if valid is not None:
         flat_idx = flat_idx[valid]
     P = np.bincount(flat_idx, minlength=B * G * D).reshape(
         B, G, D).astype(np.float64)
-    iv = np.arange(1, G + 1, dtype=np.float64)
-    jv = np.arange(1, D + 1, dtype=np.float64)  # dep d ↔ j = d+1
+    f = _rlm_features(P, np.arange(1, G + 1, dtype=np.float64),
+                      np.arange(1, D + 1, dtype=np.float64))
+    return {name: f[k] for k, name in _RLM_TO_GLDM.items()}
 
-    nz = P.sum(axis=(1, 2))
-    nz_safe = np.where(nz > 0, nz, np.nan)
-    pd_ = P.sum(axis=1)
-    pg = P.sum(axis=2)
-    jv2 = jv ** 2
-    iv2 = iv ** 2
 
-    out = {
-        "SmallDependenceEmphasis": (pd_ / jv2[None, :]).sum(axis=1) / nz_safe,
-        "LargeDependenceEmphasis": (pd_ * jv2[None, :]).sum(axis=1) / nz_safe,
-        "GrayLevelNonUniformity": (pg ** 2).sum(axis=1) / nz_safe,
-        "DependenceNonUniformity": (pd_ ** 2).sum(axis=1) / nz_safe,
-        "DependenceNonUniformityNormalized": (pd_ ** 2).sum(axis=1) / nz_safe ** 2,
-    }
-    pg_n = pg / nz_safe[:, None]
-    u_i = (pg_n * iv[None, :]).sum(axis=1)
-    out["GrayLevelVariance"] = (pg_n * (iv[None, :] - u_i[:, None]) ** 2).sum(axis=1)
-    pd_n = pd_ / nz_safe[:, None]
-    u_j = (pd_n * jv[None, :]).sum(axis=1)
-    out["DependenceVariance"] = (pd_n * (jv[None, :] - u_j[:, None]) ** 2).sum(axis=1)
-    Pn = P / nz_safe[:, None, None]
-    out["DependenceEntropy"] = -np.sum(Pn * np.log2(Pn + EPS), axis=(1, 2))
-    out["LowGrayLevelEmphasis"] = (pg / iv2[None, :]).sum(axis=1) / nz_safe
-    out["HighGrayLevelEmphasis"] = (pg * iv2[None, :]).sum(axis=1) / nz_safe
-    ii = iv2[None, :, None]
-    jj = jv2[None, None, :]
-    out["SmallDependenceLowGrayLevelEmphasis"] = (P / (ii * jj)).sum(axis=(1, 2)) / nz_safe
-    out["SmallDependenceHighGrayLevelEmphasis"] = (P * ii / jj).sum(axis=(1, 2)) / nz_safe
-    out["LargeDependenceLowGrayLevelEmphasis"] = (P * jj / ii).sum(axis=(1, 2)) / nz_safe
-    out["LargeDependenceHighGrayLevelEmphasis"] = (P * ii * jj).sum(axis=(1, 2)) / nz_safe
-    return out
+#: GLRLM → GLDM feature names for the 14 GLDM features (dependence counts
+#: in the run-length slot; GLDM has no normalized gray-level
+#: non-uniformity or percentage feature)
+_RLM_TO_GLDM = {
+    "ShortRunEmphasis": "SmallDependenceEmphasis",
+    "LongRunEmphasis": "LargeDependenceEmphasis",
+    "GrayLevelNonUniformity": "GrayLevelNonUniformity",
+    "RunLengthNonUniformity": "DependenceNonUniformity",
+    "RunLengthNonUniformityNormalized": "DependenceNonUniformityNormalized",
+    "GrayLevelVariance": "GrayLevelVariance",
+    "RunVariance": "DependenceVariance",
+    "RunEntropy": "DependenceEntropy",
+    "LowGrayLevelRunEmphasis": "LowGrayLevelEmphasis",
+    "HighGrayLevelRunEmphasis": "HighGrayLevelEmphasis",
+    "ShortRunLowGrayLevelEmphasis": "SmallDependenceLowGrayLevelEmphasis",
+    "ShortRunHighGrayLevelEmphasis": "SmallDependenceHighGrayLevelEmphasis",
+    "LongRunLowGrayLevelEmphasis": "LargeDependenceLowGrayLevelEmphasis",
+    "LongRunHighGrayLevelEmphasis": "LargeDependenceHighGrayLevelEmphasis",
+}
 
 
 # -------------------------------------------------------------- seqshape

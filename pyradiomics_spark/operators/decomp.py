@@ -85,7 +85,9 @@ def gram_moments(
     """Corpus second moments in ONE distributed pass: rows
     ``(i, j, value)`` with the upper triangle (i ≤ j) of Σ x xᵀ, plus —
     when ``with_moments`` — column sums as ``(-1, j, Σx_j)`` and the
-    valid-row count as ``(-2, -2, n)``. Null vectors are skipped; a
+    valid-row count as ``(-2, -2, n)``. Null vectors are skipped, and so
+    are partially-null ones (a null element nulls the vector first,
+    ``similarity._nullify_partial``, as in the scorers); a
     ragged/wrong-width vector fails loudly (``_stack_vecs`` contract).
 
     Scale shape: per-batch partials are one BLAS gemm each; every
@@ -96,6 +98,8 @@ def gram_moments(
     level differences from a single-pass serial sum (absorbed by the
     gate's 1e-6 rounding).
     """
+    from pyradiomics_spark.operators.similarity import _nullify_partial
+
     out_schema = "i int, j int, value double"
 
     def run(batches):
@@ -127,7 +131,8 @@ def gram_moments(
              pa.array(np.concatenate(v).astype(np.float64))],
             names=["i", "j", "value"])
 
-    partials = df.select(vec_col).mapInArrow(run, schema=out_schema)
+    partials = _nullify_partial(df.select(vec_col), vec_col).mapInArrow(
+        run, schema=out_schema)
     return partials.groupBy("i", "j").agg(F.sum("value").alias("value"))
 
 

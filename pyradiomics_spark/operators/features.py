@@ -188,14 +188,9 @@ def _extract_from_ragged(r0, settings: ExtractionSettings,
     → transform whole sequence → discretize ROI → kernels.
     """
     from pyradiomics_spark.kernels.batch import (
-        discretize_batch, firstorder_batch, glcm_batch,
-        gldm_batch, ngtdm_batch, normalize_batch, resegment_batch,
-        runs_batch_features, seqshape_batch, transform_batch)
+        discretize_batch, resegment_batch, seqshape_batch, transform_batch)
 
-    if settings.normalize and r0.x.size:
-        r0 = r0.with_x(normalize_batch(
-            r0, settings.normalize_scale, settings.remove_outliers))
-
+    r0 = _normalized(r0, settings)
     valid = None
     if settings.resegment_range is not None and r0.x.size:
         valid = resegment_batch(
@@ -207,25 +202,13 @@ def _extract_from_ragged(r0, settings: ExtractionSettings,
     r = r0 if image_type == "original" else r0.with_x(
         transform_batch(r0, image_type, settings))
 
-    # FBW gray-level-range guard (web-scale garbage docs): a single huge
-    # "token" under a small bin width would make the global 1..G grid — and
-    # the B×G×G texture tensors — executor-OOM-sized. Flag such docs, mask
-    # their positions out of every kernel, and NaN their features for this
-    # image type (mirrors the per-doc path).
-    over_cap = np.zeros(r0.B, dtype=bool)
-    if settings.bin_count is None and r.x.size:
-        fl = np.floor(r.x / settings.bin_width)
-        if valid is None:
-            fmn, fmx = r.segmin(fl), r.segmax(fl)
-        else:
-            fmn = r.segmin(np.where(valid, fl, np.inf))
-            fmx = r.segmax(np.where(valid, fl, -np.inf))
-        with np.errstate(invalid="ignore"):
-            over_cap = (fmx - fmn + 1) > settings.max_gray_levels
-        over_cap &= np.asarray(n_valid) > 0
-        if over_cap.any():
-            drop = over_cap[r.doc]
-            valid = ~drop if valid is None else (valid & ~drop)
+    # over the gray-level cap: mask the doc's positions out of every
+    # kernel and NaN its features for this image type (mirrors the
+    # per-doc path)
+    over_cap = _over_cap(r, settings, valid)
+    if over_cap.any():
+        drop = over_cap[r.doc]
+        valid = ~drop if valid is None else (valid & ~drop)
 
     rv = r if valid is None else r.masked(valid)
     levels_v = discretize_batch(rv, settings.bin_width, settings.bin_count)
@@ -240,29 +223,8 @@ def _extract_from_ragged(r0, settings: ExtractionSettings,
         "diag_n_valid": n_valid,
     }
     want = set(settings.feature_classes)
-    if "firstorder" in want:
-        for f, v in firstorder_batch(rv, levels_v, settings.voxel_array_shift).items():
-            cols[f"firstorder_{f}"] = v
-    if "glcm" in want:
-        for f, v in glcm_batch(r, levels_full, settings.distances,
-                               settings.symmetrical_glcm,
-                               settings.weighting_norm, valid).items():
-            cols[f"glcm_{f}"] = v
-    if "glrlm" in want or "glszm" in want:
-        rl, sz = runs_batch_features(r, levels_full, valid)
-        if "glrlm" in want:
-            for f, v in rl.items():
-                cols[f"glrlm_{f}"] = v
-        if "glszm" in want:
-            for f, v in sz.items():
-                cols[f"glszm_{f}"] = v
-    if "ngtdm" in want:
-        for f, v in ngtdm_batch(r, levels_full, settings.distances, valid).items():
-            cols[f"ngtdm_{f}"] = v
-    if "gldm" in want:
-        for f, v in gldm_batch(r, levels_full, settings.gldm_a,
-                               settings.distances, valid).items():
-            cols[f"gldm_{f}"] = v
+    cols.update(_class_features(settings, want, r, levels_full, valid,
+                                rv, levels_v))
     if "seqshape" in want and image_type != "original":
         # shape analog is emitted only on the original image type
         for f in SEQSHAPE_FEATURES:
@@ -281,6 +243,78 @@ def _extract_from_ragged(r0, settings: ExtractionSettings,
             v = np.asarray(v, dtype=np.float64).copy()
             v[nan_docs] = np.nan
             cols[c] = v
+    return cols
+
+
+def _normalized(r0, settings: ExtractionSettings):
+    """The batch z-normalized when ``settings.normalize`` is set — the
+    first step of the pipeline, before resegmentation and transforms."""
+    from pyradiomics_spark.kernels.batch import normalize_batch
+
+    if not (settings.normalize and r0.x.size):
+        return r0
+    return r0.with_x(normalize_batch(
+        r0, settings.normalize_scale, settings.remove_outliers))
+
+
+def _over_cap(r, settings: ExtractionSettings,
+              valid: np.ndarray | None = None) -> np.ndarray:
+    """(B,) FBW gray-level-range guard (web-scale garbage docs): True
+    where a doc's valid positions span more than ``max_gray_levels``
+    bins, since a single huge "token" under a small bin width would make
+    the global 1..G grid — and the B×G×G texture tensors —
+    executor-OOM-sized. Never set under FBN."""
+    if settings.bin_count is not None or r.x.size == 0:
+        return np.zeros(r.B, dtype=bool)
+    fl = np.floor(r.x / settings.bin_width)
+    if valid is None:
+        fmn, fmx = r.segmin(fl), r.segmax(fl)
+    else:
+        fmn = r.segmin(np.where(valid, fl, np.inf))
+        fmx = r.segmax(np.where(valid, fl, -np.inf))
+    with np.errstate(invalid="ignore"):
+        return (fmx - fmn + 1) > settings.max_gray_levels
+
+
+def _class_features(settings: ExtractionSettings, want, r, levels,
+                    valid: np.ndarray | None = None, rv=None,
+                    levels_v: np.ndarray | None = None) -> dict:
+    """{"<class>_<feature>": (B,) array} for the firstorder and texture
+    classes in ``want`` — the one class→kernel dispatch of
+    ``extract_features`` and ``voxel_feature_maps``. Texture kernels read
+    ``levels`` on r's full layout (0 at positions masked out by
+    ``valid``); firstorder reads the ROI-compacted ``rv``/``levels_v``
+    (r/levels when nothing is masked)."""
+    from pyradiomics_spark.kernels.batch import (
+        firstorder_batch, glcm_batch, gldm_batch, ngtdm_batch,
+        runs_batch_features)
+
+    if valid is None:
+        rv, levels_v = r, levels
+    cols: dict = {}
+
+    def put(cls, feats):
+        for f, v in feats.items():
+            cols[f"{cls}_{f}"] = v
+
+    if "firstorder" in want:
+        put("firstorder", firstorder_batch(rv, levels_v,
+                                           settings.voxel_array_shift))
+    if "glcm" in want:
+        put("glcm", glcm_batch(r, levels, settings.distances,
+                               settings.symmetrical_glcm,
+                               settings.weighting_norm, valid))
+    if "glrlm" in want or "glszm" in want:
+        rl, sz = runs_batch_features(r, levels, valid)
+        if "glrlm" in want:
+            put("glrlm", rl)
+        if "glszm" in want:
+            put("glszm", sz)
+    if "ngtdm" in want:
+        put("ngtdm", ngtdm_batch(r, levels, settings.distances, valid))
+    if "gldm" in want:
+        put("gldm", gldm_batch(r, levels, settings.gldm_a,
+                               settings.distances, valid))
     return cols
 
 

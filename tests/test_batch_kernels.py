@@ -316,10 +316,11 @@ def test_glcm_high_g_sparse_build():
 
 
 def test_glcm_sparse_path_matches_dense_path(monkeypatch):
-    """Force the sparse cell path on a small-G corpus and require bitwise
-    agreement of every feature with the dense-tensor path (both consume
-    the identical normalized cell values; only the reduction layout
-    differs)."""
+    """Force the sparse cell path on a small-G corpus and require
+    agreement of every feature with the dense-tensor path (both arms feed
+    the same normalized cell values to one shared feature reduction; only
+    the primitive layout differs) — for the per-angle nanmean, the
+    distance-weighted merged cells, and a directed GLCM."""
     from pyradiomics_spark.kernels import batch as B
 
     rng = np.random.default_rng(11)
@@ -329,10 +330,12 @@ def test_glcm_sparse_path_matches_dense_path(monkeypatch):
     arrays[4] = np.array([9], dtype=np.int64)
     r = B.Ragged([a.astype(np.float64) for a in arrays])
     levels = np.concatenate(arrays)
-    dense = B.glcm_batch(r, levels, distances=(1, 2))
+    cases = ({}, {"weighting_norm": "infinity"}, {"symmetric": False})
+    dense = [B.glcm_batch(r, levels, distances=(1, 2), **kw) for kw in cases]
     monkeypatch.setattr(B, "_GLCM_DENSE_MAX_SLOTS", 0)
-    sparse = B.glcm_batch(r, levels, distances=(1, 2))
-    for k in dense:
-        dv, sv = np.asarray(dense[k]), np.asarray(sparse[k])
-        ok = np.isclose(dv, sv, rtol=1e-9, atol=1e-12) | (np.isnan(dv) & np.isnan(sv))
-        assert ok.all(), (k, dv[~ok][:3], sv[~ok][:3])
+    sparse = [B.glcm_batch(r, levels, distances=(1, 2), **kw) for kw in cases]
+    for kw, d, s in zip(cases, dense, sparse):
+        for k in d:
+            dv, sv = np.asarray(d[k]), np.asarray(s[k])
+            ok = np.isclose(dv, sv, rtol=1e-9, atol=1e-12) | (np.isnan(dv) & np.isnan(sv))
+            assert ok.all(), (kw, k, dv[~ok][:3], sv[~ok][:3])

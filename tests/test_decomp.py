@@ -60,6 +60,18 @@ def test_gram_partitioning_invariant(spark, vdf):
         assert a[key] == pytest.approx(b[key], rel=1e-12)
 
 
+def test_gram_skips_partially_null_vectors(spark):
+    """A vector with a null element is not counted and leaves the sums
+    finite (it is nulled first, like the scorers' inputs)."""
+    df = spark.createDataFrame([([1.0, 2.0],), ([3.0, None],), ([1.0, 1.0],)],
+                               "embedding array<double>")
+    got = {(r.i, r.j): r.value
+           for r in gram_moments(df, "embedding", 2).collect()}
+    assert got[(-2, -2)] == 2
+    assert got == {(0, 0): 2.0, (0, 1): 3.0, (1, 1): 5.0,
+                   (-1, 0): 2.0, (-1, 1): 3.0, (-2, -2): 2.0}
+
+
 def test_pca_fit_matches_numpy_eigh(spark, vdf, vecs):
     comps, vals, mu, n = pca_fit(vdf, "embedding", DIM, k=3)
     assert n == len(vecs)

@@ -1,68 +1,19 @@
-"""Voxel-mode (per-position) feature maps: numpy kernel vs the fully
-relational collect_list-window form, plus edge truncation semantics."""
+"""Voxel-mode (per-position) feature maps: the batched maps vs the per-doc
+kernels over every ±r window, chunking invariance, and settings
+validation."""
 
 import numpy as np
 import pandas as pd
 import pytest
 
 from pyradiomics_spark.config import ExtractionSettings
-from pyradiomics_spark.operators.voxel import rolling_texture, _rolling_maps
-
-
-def test_rolling_maps_brute():
-    levels = np.array([1, 2, 1, 3, 3, 1])
-    ent, uni, con = _rolling_maps(levels, radius=1)
-    # pos 0 window [1,2]: p=.5/.5 → entropy 1, uniformity .5, contrast mean((2-1)²)=1
-    assert ent[0] == pytest.approx(1.0, abs=1e-9)
-    assert uni[0] == pytest.approx(0.5)
-    assert con[0] == pytest.approx(1.0)
-    # pos 4 window [3,3,1]: p=2/3,1/3
-    p = np.array([2 / 3, 1 / 3])
-    assert ent[4] == pytest.approx(float(-(p * np.log2(p)).sum()), abs=1e-6)
-    # flat window → entropy 0, uniformity 1
-    flat_ent, flat_uni, _ = _rolling_maps(np.array([5, 5, 5]), radius=1)
-    assert flat_uni[1] == 1.0
-    assert flat_ent[1] == pytest.approx(0.0, abs=1e-9)
-
-
-def test_rolling_texture_matches_relational(spark):
-    from pyspark.sql import functions as F, Window
-
-    pdf = pd.DataFrame({
-        "doc_id": [1] * 6 + [2] * 3,
-        "text": ["a bb a ccc ccc a".replace(" ", " ")] * 6 + ["dd dd e"] * 3})
-    # one row per doc is the real shape:
-    pdf = pdf.drop_duplicates("doc_id").reset_index(drop=True)
-    df = spark.createDataFrame(pdf)
-    out = rolling_texture(
-        df, keys=("doc_id",), radius=2,
-        settings=ExtractionSettings(bin_width=1.0)).toPandas()
-
-    # relational twin: explode tokens → collect_list window → HOF entropy
-    t = df.select(
-        "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "tok")
-    ).where(F.col("tok") != "").withColumn("tok_len", F.length("tok"))
-    w = Window.partitionBy("doc_id")
-    lv = t.withColumn(
-        "level", (F.col("tok_len") - F.min("tok_len").over(w) + 1).cast("int"))
-    frame = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(-2, 2)
-    with_lst = lv.withColumn("lst", F.collect_list("level").over(frame))
-    n = F.size("lst")
-    p_of = lambda v: F.size(F.filter(F.col("lst"), lambda x: x == v)) / n  # noqa: E731
-    ent = -F.aggregate(
-        F.transform(F.array_distinct("lst"), lambda v: p_of(v) * F.log2(p_of(v))),
-        F.lit(0.0), lambda acc, x: acc + x)
-    rel = with_lst.select("doc_id", "pos", ent.alias("rel_entropy")).toPandas()
-
-    m = out.merge(rel, on=["doc_id", "pos"])
-    assert len(m) == len(out) > 0
-    np.testing.assert_allclose(
-        m["roll_entropy"].to_numpy(), m["rel_entropy"].to_numpy(), atol=1e-9)
 
 
 def test_voxel_feature_maps_match_per_window_kernels(spark):
     """voxel_feature_maps == the per-doc kernels applied to each ±r window
-    of the doc-globally discretized sequence (binImage-once semantics)."""
+    of the doc-globally discretized sequence (binImage-once semantics),
+    on raw and on z-normalized (``settings.normalize``) intensities."""
+    from pyradiomics_spark.functions.intensity import normalize
     from pyradiomics_spark.functions.text import text_to_intensity
     from pyradiomics_spark.kernels import (
         discretize, firstorder_features, glcm_features, glrlm_features,
@@ -75,38 +26,41 @@ def test_voxel_feature_maps_match_per_window_kernels(spark):
         "warc_ts": pd.to_datetime(["2024-01-01"] * len(texts)),
         "text": texts})
     df = spark.createDataFrame(pdf)
-    settings = ExtractionSettings(bin_width=1.0)
     radius = 1
-    out = voxel_feature_maps(
-        df, keys=("url", "warc_ts"), radius=radius, settings=settings
-    ).toPandas().set_index(["url", "pos"]).sort_index()
-
-    checked = 0
-    for i, text in enumerate(texts):
-        vals = text_to_intensity(text).astype(np.float64)
-        levels = discretize(vals, 1.0)
-        for p in range(vals.size):
-            lo, hi = max(0, p - radius), min(vals.size, p + radius + 1)
-            wv, wl = vals[lo:hi], levels[lo:hi]
-            row = out.loc[(f"u{i}", p)]
-            fo = firstorder_features(wv, discretized=wl)
-            glcm = glcm_features(wl)
-            glrlm = glrlm_features(wl)
-            glszm = glszm_features(wl)
-            ngtdm = ngtdm_features(wl)
-            gldm = gldm_features(wl)
-            for cls, feats in (("firstorder", fo), ("glcm", glcm),
-                               ("glrlm", glrlm), ("glszm", glszm),
-                               ("ngtdm", ngtdm), ("gldm", gldm)):
-                for f, expect in feats.items():
-                    got = row[f"{cls}_{f}"]
-                    if np.isnan(expect):
-                        assert np.isnan(got), (i, p, cls, f, got)
-                    else:
-                        assert got == pytest.approx(expect, rel=1e-9, abs=1e-12), (
-                            i, p, cls, f)
-                    checked += 1
-    assert checked > 1000
+    for settings in (ExtractionSettings(bin_width=1.0),
+                     ExtractionSettings(bin_width=0.25, normalize=True,
+                                        normalize_scale=2.0)):
+        out = voxel_feature_maps(
+            df, keys=("url", "warc_ts"), radius=radius, settings=settings
+        ).toPandas().set_index(["url", "pos"]).sort_index()
+        checked = 0
+        for i, text in enumerate(texts):
+            vals = text_to_intensity(text).astype(np.float64)
+            if settings.normalize:
+                vals = normalize(vals, settings.normalize_scale,
+                                 settings.remove_outliers)
+            levels = discretize(vals, settings.bin_width)
+            for p in range(vals.size):
+                lo, hi = max(0, p - radius), min(vals.size, p + radius + 1)
+                wv, wl = vals[lo:hi], levels[lo:hi]
+                row = out.loc[(f"u{i}", p)]
+                for cls, feats in (
+                        ("firstorder", firstorder_features(wv, discretized=wl)),
+                        ("glcm", glcm_features(wl)),
+                        ("glrlm", glrlm_features(wl)),
+                        ("glszm", glszm_features(wl)),
+                        ("ngtdm", ngtdm_features(wl)),
+                        ("gldm", gldm_features(wl))):
+                    for f, expect in feats.items():
+                        got = row[f"{cls}_{f}"]
+                        if np.isnan(expect):
+                            assert np.isnan(got), (i, p, cls, f, got)
+                        else:
+                            assert got == pytest.approx(
+                                expect, rel=1e-9, abs=1e-12), (
+                                settings.normalize, i, p, cls, f)
+                        checked += 1
+        assert checked > 1000
 
 
 def test_voxel_feature_maps_chunked_equals_unchunked(spark):
@@ -132,6 +86,12 @@ def test_voxel_feature_maps_chunked_equals_unchunked(spark):
 
 
 def test_voxel_batch_and_start_level_validation():
+    from pyradiomics_spark.operators.voxel import voxel_feature_maps
+
+    with pytest.raises(ValueError, match="resegment_range"):
+        # raised before the plan is built: voxel maps have no masked windows
+        voxel_feature_maps(
+            None, settings=ExtractionSettings(resegment_range=(1.0, 5.0)))
     with pytest.raises(ValueError):
         ExtractionSettings(voxel_batch=-1)
     with pytest.raises(ValueError):
