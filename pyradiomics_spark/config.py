@@ -111,13 +111,6 @@ class ExtractionSettings:
     wavelet: str = "coif1"             # haar | db1..20 | sym2..12 | coif1..5
     wavelet_start_level: int = 0       # à trous cascade offset
 
-    # --- voxel mode (base.py:202-221 voxelBatch) ---
-    # Max pseudo-docs (windows) per batched-kernel call in voxel mode.
-    # 0 = adaptive: sized so the largest kernel grid (GLCM's n×G×G float64)
-    # stays under ~64 MB per tensor. The reference chunks kernel voxels the
-    # same way (voxelBatch, base.py:214-221) to bound peak memory.
-    voxel_batch: int = 0
-
     # --- tokenizer / intensity derivation (our engine's "image load") ---
     tokenizer: str = "whitespace"      # whitespace | bpe_regex
     intensity_mode: str = "token_len"  # token_len | hash_bucket
@@ -163,8 +156,6 @@ class ExtractionSettings:
             # doubles — an unbounded start level is a memory bomb from YAML
             # (mirrors the 1..8 level cap is_valid_image_type enforces)
             raise ValueError("wavelet_start_level must be in 0..8")
-        if self.voxel_batch < 0:
-            raise ValueError("voxel_batch must be >= 0 (0 = adaptive)")
 
     def to_dict(self) -> dict:
         return asdict(self)

@@ -153,10 +153,31 @@ def batch_text_to_intensity(
     mode: str = "token_len",
     buckets: int = 64,
 ) -> list:
-    """Per-doc intensity arrays for a whole Arrow batch at once.
+    """Per-doc intensity arrays for a list of docs at once: the whitespace
+    tokenizer with token_len intensities runs the byte tokenizer
+    (``_tokenize_bytes``) once over the docs packed into one Arrow string
+    array; other tokenizers/modes fall back wholesale to the per-doc
+    path. Parity is pinned per-doc in tests/test_text.py.
+    """
+    if tokenizer != "whitespace" or mode != "token_len":
+        return [text_to_intensity(t or "", tokenizer, mode, buckets)
+                for t in texts]
+    if not len(texts):
+        return []
+    import pyarrow as pa
 
-    Fast path (whitespace tokenizer + token_len): ONE byte-level numpy
-    pass over the UTF-8-concatenated batch — whitespace mask → paired
+    tok_len, counts = _tokenize_bytes(
+        *_arrow_bytes(pa.array(texts, type=pa.string())), lambda i: texts[i])
+    return np.split(tok_len, np.cumsum(counts)[:-1])
+
+
+def _tokenize_bytes(a: np.ndarray, starts: np.ndarray, doc_text=None):
+    """(tok_len, counts) of the whitespace tokenizer with token_len
+    intensities over docs packed back to back in the UTF-8 buffer ``a``
+    (int64 doc byte offsets ``starts``, size n_docs+1, starts[-1] ==
+    a.size).
+
+    ONE byte-level numpy pass over the batch — whitespace mask → paired
     token start/end runs — instead of a Python len() per token (the decode
     was ~1/3 of kernel wall at ~280 ns/token; this is ~10 numpy ops per
     BATCH). Byte semantics are exact for arbitrary UTF-8: multi-byte
@@ -166,45 +187,13 @@ def batch_text_to_intensity(
     U+00A0, U+1680, U+2000–200A, U+2028/29/2F, U+205F, U+3000 — separators
     for str.split() that the byte mask can't see): a vectorized scan for
     their UTF-8 lead pairs routes only the (rare) docs containing a
-    suspect sequence to the per-doc path — conservatively, since e.g.
-    \\xe2\\x80 also prefixes dashes. Other tokenizers/modes fall back
-    wholesale. Parity is pinned per-doc in tests/test_text.py.
+    suspect sequence to the per-doc path, ``text_to_intensity(doc_text(i))``
+    — conservatively, since e.g. \\xe2\\x80 also prefixes dashes. With no
+    ``doc_text`` a batch holding a suspect returns None.
     """
-    if tokenizer != "whitespace" or mode != "token_len":
-        return [text_to_intensity(t or "", tokenizer, mode, buckets)
-                for t in texts]
-    out: list = [None] * len(texts)
-    enc = [(t or "").encode("utf-8") for t in texts]
-    lens = np.fromiter((len(b) for b in enc), np.int64, len(enc))
-    starts = np.zeros(lens.size + 1, dtype=np.int64)
-    np.cumsum(lens, out=starts[1:])
-    a = np.frombuffer(b"".join(enc), dtype=np.uint8)
+    n = starts.size - 1
     if a.size == 0:
-        empty = np.zeros(0, dtype=np.int64)
-        return [empty] * len(texts)
-    tok_len, counts, sus_pos = _token_lens_from_bytes(a, starts)
-    slow_docs = (set(np.searchsorted(starts, sus_pos, side="right") - 1)
-                 if sus_pos.size else ())
-    bounds = np.zeros(lens.size, dtype=np.int64)
-    np.cumsum(counts[:-1], out=bounds[1:])
-    for i in range(len(texts)):
-        if i in slow_docs:
-            out[i] = text_to_intensity(texts[i] or "")
-        else:
-            lo = bounds[i]
-            out[i] = tok_len[lo:lo + counts[i]]
-    return out
-
-
-def _token_lens_from_bytes(a: np.ndarray, starts: np.ndarray):
-    """Core byte-level tokenizer over a concatenated UTF-8 buffer.
-
-    ``a``: uint8 buffer of all docs back-to-back; ``starts``: int64 doc
-    byte offsets (size n_docs+1, starts[-1] == a.size). Returns
-    (tok_len [int64, all tokens in order], counts [tokens per doc],
-    sus_pos [byte positions of possible unicode-whitespace sequences —
-    docs containing one need the per-doc python fallback]).
-    """
+        return np.empty(0, dtype=np.int64), np.zeros(n, dtype=np.int64)
     # unicode-ws suspect scan restricted to multi-byte lead bytes (≥ 0xC2):
     # one full pass + tiny index ops instead of eight full boolean sweeps
     hi_pos = np.nonzero(a >= 0xC2)[0]
@@ -236,20 +225,30 @@ def _token_lens_from_bytes(a: np.ndarray, starts: np.ndarray):
     tok_len = np.nonzero(tok_end)[0] - s_pos + 1
     # tokens-per-doc: one searchsorted over the (small) doc-starts array
     counts = np.diff(np.searchsorted(s_pos, starts))
-    return tok_len, counts, sus_pos
+    if not sus_pos.size:
+        return tok_len, counts
+    if doc_text is None:
+        return None
+    # splice each suspect doc's per-doc token lengths over its byte ones
+    bounds = np.zeros(n + 1, dtype=np.int64)
+    np.cumsum(counts, out=bounds[1:])
+    pieces, prev = [], 0
+    for i in np.unique(np.searchsorted(starts, sus_pos, side="right") - 1):
+        fix = text_to_intensity(doc_text(i) or "")
+        pieces += [tok_len[bounds[prev]:bounds[i]], fix]
+        counts[i] = fix.size
+        prev = i + 1
+    pieces.append(tok_len[bounds[prev]:])
+    return np.concatenate(pieces), counts
 
 
-def arrow_token_lens(text_array):
-    """ZERO-COPY decode of a pyarrow string array straight from its Arrow
-    buffers (validity, offsets, UTF-8 data) — no python strings are ever
-    materialized; the value buffer IS the concatenated corpus the
-    byte-level tokenizer wants. Returns (tok_len_concat int64, counts
-    int64 per doc) or None when the batch needs the python path (a
-    unicode-whitespace suspect sequence is present — rare, and correctness
-    beats zero-copy there).
-
-    Null docs decode as empty (0 tokens), matching ``text or ""``.
-    """
+def _arrow_bytes(text_array):
+    """(a, starts) for ``_tokenize_bytes`` straight from a pyarrow string
+    array's buffers (validity, offsets, UTF-8 data) — ZERO-COPY: no python
+    strings are ever materialized; the value buffer IS the concatenated
+    corpus the byte-level tokenizer wants. None for a non-string type.
+    Null docs are filled with "" first (an Arrow copy only when a null is
+    present), so they become zero-length segments, matching ``text or ""``."""
     import pyarrow as pa
 
     arr = text_array
@@ -261,53 +260,44 @@ def arrow_token_lens(text_array):
         off_dtype = np.int32
     else:
         return None
+    if arr.null_count:
+        arr = arr.fill_null("")
     n = len(arr)
-    if n == 0:
-        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
-    validity, offsets_buf, data_buf = arr.buffers()
+    _, offsets_buf, data_buf = arr.buffers()
+    if n == 0 or data_buf is None:  # empty column
+        return np.empty(0, dtype=np.uint8), np.zeros(n + 1, dtype=np.int64)
     offsets = np.frombuffer(offsets_buf, dtype=off_dtype,
                             count=n + 1, offset=arr.offset * np.dtype(off_dtype).itemsize
                             ).astype(np.int64)
-    if data_buf is None:  # all-null column
-        return np.empty(0, dtype=np.int64), np.zeros(n, dtype=np.int64)
     data = np.frombuffer(data_buf, dtype=np.uint8)
-    lo, hi = offsets[0], offsets[-1]
-    a = data[lo:hi]
-    starts = offsets - lo
-    if arr.null_count:
-        # rebuild the buffer without the null docs' (undefined) bytes:
-        # cheapest correct handling — null rows become zero-length segments
-        valid = np.asarray(arr.is_valid(), dtype=bool)
-        lens = np.where(valid, np.diff(starts), 0)
-        starts2 = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(lens, out=starts2[1:])
-        keep = np.ones(a.size, dtype=bool)
-        for i in np.nonzero(~valid)[0]:
-            keep[starts[i]:starts[i + 1]] = False
-        a = a[keep]
-        starts = starts2
-    if a.size == 0:
-        return np.empty(0, dtype=np.int64), np.zeros(n, dtype=np.int64)
-    tok_len, counts, sus_pos = _token_lens_from_bytes(a, starts)
-    if sus_pos.size:
-        return None
-    return tok_len, counts
+    return data[offsets[0]:offsets[-1]], offsets - offsets[0]
+
+
+def arrow_token_lens(text_array):
+    """Zero-copy decode of a pyarrow string array (``_arrow_bytes``):
+    (tok_len_concat int64, counts int64 per doc), or None when the batch
+    needs a per-doc decode (a unicode-whitespace suspect sequence is
+    present, or the type is not a string). Null docs decode as empty.
+    """
+    packed = _arrow_bytes(text_array)
+    return None if packed is None else _tokenize_bytes(*packed)
 
 
 def arrow_intensity(text_array, settings) -> Ragged:
     """Float64 intensity sequences of one Arrow batch of docs — the single
     decode every extraction operator runs before its batched kernels.
 
-    Default settings (whitespace tokenizer, token_len) decode zero-copy
-    through ``arrow_token_lens``. A batch holding a unicode-whitespace
-    suspect, and every other tokenizer or intensity mode, goes through
-    ``batch_text_to_intensity``, where only the suspect docs leave the byte
-    tokenizer. Null docs decode as empty.
+    Default settings (whitespace tokenizer, token_len) tokenize the Arrow
+    buffers once, zero-copy (``_arrow_bytes``); only docs holding a
+    unicode-whitespace suspect are decoded to python strings, one by one.
+    Every other tokenizer or intensity mode, and non-string Arrow types,
+    take ``batch_text_to_intensity``. Null docs decode as empty.
     """
     if settings.tokenizer == "whitespace" and settings.intensity_mode == "token_len":
-        parsed = arrow_token_lens(text_array)
-        if parsed is not None:
-            tok_len, counts = parsed
+        packed = _arrow_bytes(text_array)
+        if packed is not None:
+            tok_len, counts = _tokenize_bytes(
+                *packed, lambda i: text_array[int(i)].as_py())
             return Ragged.from_concat(tok_len.astype(np.float64), counts)
     arrays = batch_text_to_intensity(
         text_array.to_pylist(), settings.tokenizer, settings.intensity_mode,

@@ -1,10 +1,10 @@
 """Pure-numpy feature kernels.
 
 These are the per-doc compute cores: the ground truth that the batched
-kernels (``kernels/batch.py``, run inside the mapInArrow extraction
-operators ``extract_features`` and ``voxel_feature_maps``) are
+kernels (``kernels/batch.py``, run inside the one mapInArrow extraction
+stage by ``extract_features`` and ``voxel_feature_maps``) are
 parity-tested against, and the per-doc matrix builders
-``extract_matrices`` calls.
+``extract_matrices`` calls on that stage's prepared levels and ROI mask.
 They are the analog of the reference's C
 extensions (/root/reference/radiomics/src/cmatrices.c) + per-class numpy
 feature getters — reimplemented from the published formulas, not translated.

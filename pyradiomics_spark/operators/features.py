@@ -12,14 +12,20 @@ scan → MapInArrow stage for every tokenizer and intensity setting. The
 reference's 1-case-per-process Pool (scripts/__init__.py:393-416) maps to
 Spark task parallelism over parquet splits.
 
+That stage (``_arrow_stage``) and the preparation step (``_prepare``) are
+shared: ``extract_features``, ``voxel.voxel_feature_maps`` and
+``matrices.extract_matrices`` are each an output-field list plus a
+per-batch function, so all three read the same levels and ROI mask.
+
 Pipeline per case (order mirrors featureextractor.execute):
 normalize → (resegment mask from original intensities) → per image type:
-transform → per feature class: discretize → kernel features.
+transform → gray-level cap → discretize → per feature class: kernel
+features.
 """
 
 from __future__ import annotations
 
-from typing import Iterable
+from typing import Callable, NamedTuple
 
 import numpy as np
 
@@ -42,6 +48,7 @@ from pyradiomics_spark.kernels import (
     glszm_features,
     ngtdm_features,
 )
+from pyradiomics_spark.kernels.batch import Ragged
 from pyradiomics_spark.kernels.firstorder import FIRSTORDER_FEATURES
 from pyradiomics_spark.kernels.glcm import GLCM_FEATURES
 from pyradiomics_spark.kernels.gldm import GLDM_FEATURES
@@ -169,28 +176,29 @@ def _extract_one(values: np.ndarray, settings: ExtractionSettings) -> dict:
     return out
 
 
-def _extract_batch(texts, settings: ExtractionSettings, image_type: str = "original") -> dict:
-    """``extract_features``' decode + kernel stage for a list of docs:
-    {column: (B,) array} including diagnostics."""
-    import pyarrow as pa
+class _Prepared(NamedTuple):
+    """One decoded batch after ``_prepare``."""
+    r: Ragged                  # the image type's intensities
+    valid: np.ndarray | None   # ROI mask: resegmented and under the cap
+    n_valid: np.ndarray        # (B,) resegmented ROI size
+    nan_docs: np.ndarray       # (B,) ROI too small or over the cap
+    rv: Ragged                 # r compacted to the ROI (r when unmasked)
+    levels_v: np.ndarray       # gray levels of rv
+    levels: np.ndarray         # levels on r's layout, 0 where masked
 
-    r0 = arrow_intensity(pa.array(texts, type=pa.string()), settings)
-    return _extract_from_ragged(r0, settings, image_type)
 
-
-def _extract_from_ragged(r0, settings: ExtractionSettings,
-                         image_type: str = "original") -> dict:
-    """All features of one image type for a decoded batch
-    (kernels.batch). Returns {column: (B,) array} including diagnostics.
-
-    Pipeline order mirrors _extract_one / featureextractor.execute:
-    normalize → resegment mask (from post-normalize ORIGINAL intensities)
-    → transform whole sequence → discretize ROI → kernels.
-    """
+def _prepare(r0, settings: ExtractionSettings,
+             image_type: str = "original") -> _Prepared:
+    """The one preparation step of every extraction operator, in the
+    order of _extract_one / featureextractor.execute: normalize →
+    resegment mask (from post-normalize ORIGINAL intensities) → transform
+    whole sequence → gray-level cap → discretize ROI."""
     from pyradiomics_spark.kernels.batch import (
-        discretize_batch, resegment_batch, seqshape_batch, transform_batch)
+        discretize_batch, normalize_batch, resegment_batch, transform_batch)
 
-    r0 = _normalized(r0, settings)
+    if settings.normalize and r0.x.size:
+        r0 = r0.with_x(normalize_batch(
+            r0, settings.normalize_scale, settings.remove_outliers))
     valid = None
     if settings.resegment_range is not None and r0.x.size:
         valid = resegment_batch(
@@ -213,48 +221,45 @@ def _extract_from_ragged(r0, settings: ExtractionSettings,
     rv = r if valid is None else r.masked(valid)
     levels_v = discretize_batch(rv, settings.bin_width, settings.bin_count)
     if valid is None:
-        levels_full = levels_v
+        levels = levels_v
     else:
-        levels_full = np.zeros(r.x.size, dtype=np.int64)
-        levels_full[valid] = levels_v
-
-    cols: dict = {
-        "diag_n_tokens": r.lens.astype(np.int64),
-        "diag_n_valid": n_valid,
-    }
-    want = set(settings.feature_classes)
-    cols.update(_class_features(settings, want, r, levels_full, valid,
-                                rv, levels_v))
-    if "seqshape" in want and image_type != "original":
-        # shape analog is emitted only on the original image type
-        for f in SEQSHAPE_FEATURES:
-            cols[f"seqshape_{f}"] = np.full(r.B, np.nan)
-    elif "seqshape" in want:
-        for f, v in seqshape_batch(r0, valid).items():
-            cols[f"seqshape_{f}"] = v
-
+        levels = np.zeros(r.x.size, dtype=np.int64)
+        levels[valid] = levels_v
     # per-doc semantics: ROI below minimum size (whole row) or over the
     # gray-level cap (this image type) → NaN features
     nan_docs = (n_valid < max(settings.minimum_roi_size, 1)) | over_cap
-    if nan_docs.any():
+    return _Prepared(r, valid, n_valid, nan_docs, rv, levels_v, levels)
+
+
+def _extract_from_ragged(r0, settings: ExtractionSettings,
+                         image_type: str = "original") -> dict:
+    """All features of one image type for a decoded batch
+    (kernels.batch). Returns {column: (B,) array} including diagnostics."""
+    from pyradiomics_spark.kernels.batch import seqshape_batch
+
+    p = _prepare(r0, settings, image_type)
+    cols: dict = {
+        "diag_n_tokens": p.r.lens.astype(np.int64),
+        "diag_n_valid": p.n_valid,
+    }
+    want = set(settings.feature_classes)
+    cols.update(_class_features(settings, want, p.r, p.levels, p.valid,
+                                p.rv, p.levels_v))
+    if "seqshape" in want and image_type != "original":
+        # shape analog is emitted only on the original image type
+        for f in SEQSHAPE_FEATURES:
+            cols[f"seqshape_{f}"] = np.full(p.r.B, np.nan)
+    elif "seqshape" in want:
+        for f, v in seqshape_batch(p.r, p.valid).items():
+            cols[f"seqshape_{f}"] = v
+    if p.nan_docs.any():
         for c, v in cols.items():
             if c.startswith("diag_"):
                 continue
             v = np.asarray(v, dtype=np.float64).copy()
-            v[nan_docs] = np.nan
+            v[p.nan_docs] = np.nan
             cols[c] = v
     return cols
-
-
-def _normalized(r0, settings: ExtractionSettings):
-    """The batch z-normalized when ``settings.normalize`` is set — the
-    first step of the pipeline, before resegmentation and transforms."""
-    from pyradiomics_spark.kernels.batch import normalize_batch
-
-    if not (settings.normalize and r0.x.size):
-        return r0
-    return r0.with_x(normalize_batch(
-        r0, settings.normalize_scale, settings.remove_outliers))
 
 
 def _over_cap(r, settings: ExtractionSettings,
@@ -318,31 +323,27 @@ def _class_features(settings: ExtractionSettings, want, r, levels,
     return cols
 
 
-def extraction_schema(df: DataFrame, keys: Iterable, settings: ExtractionSettings) -> str:
-    key_fields = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    parts = [f"`{k}` {key_fields[k]}" for k in keys]
-    parts += ["image_type string", "diag_n_tokens int", "diag_n_valid int"]
-    parts += [f"`{c}` double" for c in feature_columns(settings)]
-    return ", ".join(parts)
+def _arrow_stage(df: DataFrame, keys, text_col: str,
+                 settings: ExtractionSettings, fields: list,
+                 per_batch: Callable) -> DataFrame:
+    """The one extraction stage of ``extract_features``,
+    ``voxel_feature_maps`` and ``extract_matrices``: a mapInArrow over
+    (keys…, text) that decodes each Arrow batch once
+    (``functions.text.arrow_intensity``) and assembles what
+    ``per_batch(r0)`` yields. ``fields`` are the (name, "string" | "int"
+    | "double") output columns after the keys. Each yield is
+    ``(rows, cols)``: ``rows`` the input-row index of every output row
+    (None: one output row per input row), keys carried by Arrow ``take``;
+    ``cols`` {name: (n,) array, or one str for a constant string}.
 
-
-def extract_features(
-    df: DataFrame,
-    keys: tuple = ("url", "warc_ts"),
-    text_col: str = "text",
-    settings: ExtractionSettings | None = None,
-) -> DataFrame:
-    """Wide feature table: one output row per input row per image type.
-
-    Shuffle-free on inputs with enough splits: one mapInArrow over the
-    scan, whatever the tokenizer or intensity mode. Column pruning matters
-    — we select only keys + text before the Arrow boundary.
+    Column pruning matters — only keys + text cross the Arrow boundary.
     """
-    if settings is None:
-        settings = ExtractionSettings()
     keys = tuple(keys)
-    cols = list(keys) + [text_col]
-    src = df.select(*cols)
+    key_types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
+    schema = ", ".join([f"`{k}` {key_types[k]}" for k in keys]
+                       + [f"`{n}` {t}" for n, t in fields])
+    names = list(keys) + [n for n, _ in fields]
+    src = df.select(*keys, text_col)
     # kernel-bound stage: if the scan has fewer splits than the cluster has
     # slots (tiny files / single parquet row group), fan out first — one
     # cheap shuffle of (keys, text) buys full task parallelism. Big inputs
@@ -355,42 +356,57 @@ def extract_features(
         # thousands of tiny files into a handful of partitions, and
         # skipping the repartition there silently serializes the kernel
         # stage). The src.rdd conversion is one bounded driver-side plan
-        # walk per extract_features call — correctness over that cost.
+        # walk per extraction call — correctness over that cost.
         if src.rdd.getNumPartitions() < slots:
             # 1×slots measured fastest for the batched kernel (bigger
             # batches amortize; AQE handles stragglers at real scale)
             src = src.repartition(slots)
-    schema = extraction_schema(df, keys, settings)
-    fcols = feature_columns(settings)
-    image_types = settings.image_types
-
-    out_cols = list(keys) + ["image_type", "diag_n_tokens", "diag_n_valid"] + fcols
-    ti = len(keys)  # src column order: keys…, text
+    nk = len(keys)  # src column order: keys…, text
 
     def run_arrow(batches):
         import pyarrow as pa
 
+        types = {"string": pa.string(), "int": pa.int32(),
+                 "double": pa.float64()}
         for rb in batches:
-            r0 = arrow_intensity(rb.column(ti), settings)
-            n = rb.num_rows
-            for it in image_types:
-                cols = _extract_from_ragged(r0, settings, image_type=it)
-                arrays = [rb.column(i) for i in range(ti)]
-                arrays.append(pa.array([it] * n, type=pa.string()))
-                arrays.append(pa.array(
-                    np.asarray(cols["diag_n_tokens"], dtype=np.int32)))
-                arrays.append(pa.array(
-                    np.asarray(cols["diag_n_valid"], dtype=np.int32)))
-                for c in fcols:
-                    v = cols.get(c)
-                    if v is None:
-                        arrays.append(pa.array(np.full(n, np.nan)))
-                    else:
-                        arrays.append(pa.array(
-                            np.asarray(v, dtype=np.float64)))
-                yield pa.RecordBatch.from_arrays(arrays, names=out_cols)
+            for rows, cols in per_batch(arrow_intensity(rb.column(nk),
+                                                        settings)):
+                n = rb.num_rows if rows is None else rows.size
+                take = None if rows is None else pa.array(rows, pa.int64())
+                arrays = [rb.column(i) if take is None
+                          else rb.column(i).take(take) for i in range(nk)]
+                for name, t in fields:
+                    v = cols[name]
+                    arrays.append(pa.array([v] * n if isinstance(v, str)
+                                           else v, type=types[t]))
+                yield pa.RecordBatch.from_arrays(arrays, names=names)
 
     return src.mapInArrow(run_arrow, schema=schema)
+
+
+def extract_features(
+    df: DataFrame,
+    keys: tuple = ("url", "warc_ts"),
+    text_col: str = "text",
+    settings: ExtractionSettings | None = None,
+) -> DataFrame:
+    """Wide feature table: one output row per input row per image type.
+
+    Shuffle-free on inputs with enough splits: one mapInArrow over the
+    scan (``_arrow_stage``), whatever the tokenizer or intensity mode.
+    """
+    if settings is None:
+        settings = ExtractionSettings()
+    fields = ([("image_type", "string"), ("diag_n_tokens", "int"),
+               ("diag_n_valid", "int")]
+              + [(c, "double") for c in feature_columns(settings)])
+
+    def per_batch(r0):
+        for it in settings.image_types:
+            yield None, {"image_type": it,
+                         **_extract_from_ragged(r0, settings, it)}
+
+    return _arrow_stage(df, keys, text_col, settings, fields, per_batch)
 
 
 def pivot_wide(

@@ -3,12 +3,14 @@
 every position, features over the kernel neighborhood rowsBetween(−r, +r),
 truncated at sequence edges (masked kernel, base.py:99-111).
 
-``voxel_feature_maps`` runs every window through the batched kernels
-inside one mapInArrow stage, fed by the same per-batch decode,
-normalization, gray-level cap and class→kernel dispatch as
-``extract_features`` (``operators.features``), and chunked like the
-reference's ``voxelBatch`` (base.py:214-237). First-order rolling stats
-as pure window functions are ``operators.windows.rolling_firstorder``.
+``voxel_feature_maps`` is an output-field list plus a per-batch function
+on extraction's one stage (``features._arrow_stage``: decode, fan-out, key
+``take``, RecordBatch assembly) and one preparation step
+(``features._prepare``: normalization, transform, gray-level cap,
+discretization); every window runs through the batched kernels of the
+shared class→kernel dispatch, chunked like the reference's ``voxelBatch``
+(base.py:214-237). First-order rolling stats as pure window functions are
+``operators.windows.rolling_firstorder``.
 """
 
 from __future__ import annotations
@@ -18,7 +20,9 @@ import numpy as np
 from pyspark.sql import DataFrame
 
 from pyradiomics_spark.config import ExtractionSettings
-from pyradiomics_spark.functions.text import arrow_intensity
+from pyradiomics_spark.kernels.batch import Ragged
+from pyradiomics_spark.operators.features import (
+    CLASS_FEATURES, _arrow_stage, _class_features, _prepare)
 
 
 def voxel_feature_maps(
@@ -44,18 +48,14 @@ def voxel_feature_maps(
     Normalization (``settings.normalize``) applies per document before
     the filter, as in whole-document extraction; a resegmentation range
     raises ``ValueError`` (no masked-window support). Docs over the
-    gray-level cap (``features._over_cap``) are skipped: voxel maps of
-    garbage docs have no training value, and the doc's segment-mode row
-    carries the NaN signal.
+    gray-level cap (``settings.max_gray_levels``) are skipped: voxel maps
+    of garbage docs have no training value, and the doc's segment-mode
+    row carries the NaN signal.
 
     Cost model: ~(2·radius+1)× the data volume of whole-doc extraction —
-    inherent to voxel mode; still shuffle-free and Arrow-batched.
+    inherent to voxel mode; still Arrow-batched, and shuffle-free on inputs
+    with enough splits.
     """
-    from pyradiomics_spark.kernels.batch import (
-        Ragged, discretize_batch, transform_batch)
-    from pyradiomics_spark.operators.features import (
-        CLASS_FEATURES, _class_features, _normalized, _over_cap)
-
     if settings is None:
         settings = ExtractionSettings(bin_width=1.0)
     if settings.resegment_range is not None:
@@ -63,52 +63,35 @@ def voxel_feature_maps(
                          "resegment_range (no masked-window kernels)")
     classes = [c for c in settings.feature_classes if c != "seqshape"]
     fcols = [f"{cls}_{f}" for cls in classes for f in CLASS_FEATURES[cls]]
-    keys = tuple(keys)
-    key_fields = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}"
-        for f in df.schema.fields if f.name in keys)
-    schema = (f"{key_fields}, image_type string, pos int, "
-              + ", ".join(f"`{c}` double" for c in fcols))
-    src = df.select(*keys, text_col)
+    fields = ([("image_type", "string"), ("pos", "int")]
+              + [(c, "double") for c in fcols])
 
-    def core(r0: "Ragged"):
-        """(d_lens, out_pos, cols) for one decoded batch, or None when no
-        doc survives."""
-        r0 = _normalized(r0, settings)
-        r_img = r0 if image_type == "original" else r0.with_x(
-            transform_batch(r0, image_type, settings))
-        keep = ~_over_cap(r_img, settings)
-        rk = r_img if bool(keep.all()) else r_img.masked(keep[r_img.doc])
-        if rk.x.size == 0:
-            return None
-        conc_img = rk.x
-        conc_lvl = discretize_batch(
-            rk, settings.bin_width, settings.bin_count)
+    def per_batch(r0: Ragged):
+        """One (input row per position, cols) pair for a decoded batch,
+        nothing when no doc survives. Over-cap docs are empty in rv."""
+        prep = _prepare(r0, settings, image_type)
+        rk, conc_lvl = prep.rv, prep.levels_v
+        N = rk.x.size
+        if N == 0:
+            return
         # vectorized window construction: every ±radius window becomes
         # one pseudo-doc via a single fancy-indexed gather — no
         # per-position python loop (that costs tens of millions of
         # interpreter iterations per executor at corpus scale)
-        d_lens = rk.lens
-        d_starts = rk.starts
-        ddoc = rk.doc
-        N = conc_img.size
-        i_in = np.arange(N) - d_starts[ddoc]
+        i_in = np.arange(N) - rk.starts[rk.doc]
         lo = np.maximum(i_in - radius, 0)
-        hi = np.minimum(i_in + radius + 1, d_lens[ddoc])
+        hi = np.minimum(i_in + radius + 1, rk.lens[rk.doc])
         wlen = (hi - lo).astype(np.int64)
-        out_pos = i_in
 
         # voxelBatch analog (base.py:202-221): the batched texture
         # kernels materialize (n_windows × G × G) float64 grids, so an
         # unchunked Arrow batch of ordinary web docs (10k rows × 100s
         # of tokens × G up to 128) would allocate tens of GB. Slice the
-        # window set so the largest per-chunk grid stays bounded; the
-        # kernels are pure per-pseudo-doc so chunking is result-exact.
+        # window set so the largest per-chunk grid stays bounded (~64 MB
+        # per GLCM tensor); the kernels are pure per-pseudo-doc so
+        # chunking is result-exact.
         g_batch = max(int(conc_lvl.max()), 1)
-        if settings.voxel_batch > 0:
-            chunk = settings.voxel_batch
-        else:  # adaptive: ~64 MB per GLCM tensor
-            chunk = max(256, (64 << 20) // (g_batch * g_batch * 8))
+        chunk = max(256, (64 << 20) // (g_batch * g_batch * 8))
         want = set(classes)
 
         parts: list[dict] = []
@@ -119,37 +102,13 @@ def voxel_feature_maps(
             # (2·radius+1)× expanded copy to the chunk, not the batch)
             p_out = np.repeat(np.arange(a, b), w)
             off = np.arange(p_out.size) - np.repeat(np.cumsum(w) - w, w)
-            srcix = d_starts[ddoc[p_out]] + lo[p_out] + off
-            rw = Ragged.from_concat(conc_img[srcix], w)
+            srcix = rk.starts[rk.doc[p_out]] + lo[p_out] + off
+            rw = Ragged.from_concat(rk.x[srcix], w)
             parts.append(_class_features(settings, want, rw,
                                          conc_lvl[srcix]))
         cols = ({k: np.concatenate([p[k] for p in parts])
                  for k in parts[0]} if len(parts) > 1 else parts[0])
-        return d_lens, out_pos, cols
+        yield (np.repeat(np.arange(rk.B), rk.lens),
+               {"image_type": image_type, "pos": i_in, **cols})
 
-    nk = len(keys)  # src column order: keys…, text
-    names = list(keys) + ["image_type", "pos"] + fcols
-
-    def run_arrow(batches):
-        """Token arrays decoded from the Arrow batch in, RecordBatches from
-        numpy out; keys repeated per token position via Arrow take."""
-        import pyarrow as pa
-
-        for rb in batches:
-            res = core(arrow_intensity(rb.column(nk), settings))
-            if res is None:
-                continue
-            d_lens, out_pos, cols = res
-            rep = pa.array(np.repeat(np.arange(rb.num_rows), d_lens))
-            arrays = [rb.column(i).take(rep) for i in range(nk)]
-            n_out = out_pos.size
-            arrays.append(pa.array([image_type] * n_out, type=pa.string()))
-            arrays.append(pa.array(out_pos.astype(np.int32)))
-            for c in fcols:
-                v = cols.get(c)
-                arrays.append(pa.array(
-                    np.full(n_out, np.nan) if v is None
-                    else np.asarray(v, dtype=np.float64)))
-            yield pa.RecordBatch.from_arrays(arrays, names=names)
-
-    return src.mapInArrow(run_arrow, schema=schema)
+    return _arrow_stage(df, keys, text_col, settings, fields, per_batch)

@@ -6,9 +6,10 @@ These wrappers put the batch semantics on a stream:
 * ``watermarked``         — event-time watermark (late-data bound)
 * ``stream_sessionize``   — native ``session_window`` gap sessions
 * ``stream_tumbling``     — tumbling window aggregate
-* ``stream_extract``      — per-microbatch feature extraction (the
-  extraction operator is stateless per row, so it lifts to streams as-is
-  via the same mapInArrow)
+* ``stream_training_pipeline`` — watermarked content dedup, then
+  ``operators.features.extract_features`` per micro-batch (extraction is
+  stateless per row, so it lifts to streams as-is via the same
+  mapInArrow)
 
 All return streaming DataFrames, and ``streaming.runner.run_stream`` runs
 one to completion and hands its result back as a batch frame; the output
@@ -114,13 +115,6 @@ def stream_sliding(
     )
 
 
-def stream_extract(df: DataFrame, keys, text_col: str = "text", settings=None) -> DataFrame:
-    """Feature extraction on a stream: stateless mapInArrow lifts directly."""
-    from pyradiomics_spark.operators.features import extract_features
-
-    return extract_features(df, tuple(keys), text_col, settings)
-
-
 def stream_dedup_exact(
     df: DataFrame,
     key_cols,
@@ -174,10 +168,12 @@ def stream_training_pipeline(
     with ``runner.run_stream``, or feed it to ``stream_asof_sink`` for
     point-in-time serving against a static snapshot. Batch DataFrames run
     the same code path (parity asserted in tests)."""
+    from pyradiomics_spark.operators.features import extract_features
+
     deduped = stream_dedup_exact(
         pages_stream, list(keys), ts_col, watermark=watermark,
         by_content=text_col)
-    return stream_extract(deduped, keys, text_col, settings)
+    return extract_features(deduped, keys, text_col, settings)
 
 
 def stream_asof_sink(

@@ -7,8 +7,18 @@ import pytest
 
 from pyradiomics_spark.config import ExtractionSettings
 from pyradiomics_spark.operators.features import (
-    _extract_one, _extract_batch, feature_columns)
-from pyradiomics_spark.functions.text import text_to_intensity
+    _extract_from_ragged, _extract_one, feature_columns)
+from pyradiomics_spark.functions.text import arrow_intensity, text_to_intensity
+
+
+def _extract_batch(texts, settings: ExtractionSettings,
+                   image_type: str = "original") -> dict:
+    """``extract_features``' decode + kernel stage for a list of docs:
+    {column: (B,) array} including diagnostics."""
+    import pyarrow as pa
+
+    r0 = arrow_intensity(pa.array(texts, type=pa.string()), settings)
+    return _extract_from_ragged(r0, settings, image_type)
 
 
 def _texts():

@@ -24,10 +24,10 @@ ALLOWED = {
         (1, "one aggregate row per round"),
     ("operators/decomp.py", "pca_fit"):
         (1, "gram moments: dim × dim rows"),
+    ("operators/features.py", "_arrow_stage.run_arrow"):
+        (1, "Arrow: pyarrow Array.take inside the worker, not a Spark action"),
     ("operators/leakage.py", "audit_cut"):
         (1, "one aggregate row"),
-    ("operators/matrices.py", "extract_matrices.run_arrow"):
-        (1, "Arrow: pyarrow Array.take inside the worker, not a Spark action"),
     ("operators/sampling.py", "domain_mix_sample"):
         (1, "one count per target domain: In filter before the agg"),
     ("operators/sampling.py", "rank_normalize"):
@@ -36,8 +36,6 @@ ALLOWED = {
         (1, "at most 2**p registers"),
     ("operators/training.py", "logreg_grad_step"):
         (1, "one aggregate row"),
-    ("operators/voxel.py", "voxel_feature_maps.run_arrow"):
-        (1, "Arrow: pyarrow Array.take inside the worker, not a Spark action"),
     ("plans/curation.py", "curate"):
         (2, "two aggregate rows (flag counts, packing totals)"),
     ("sources/sinks.py", "recompute_affected_partitions"):

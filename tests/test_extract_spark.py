@@ -134,6 +134,24 @@ _MIXED_ROWS = [("u1", "aa bbb c dddd ee fff aa bbb"),
                ("u6", "中文 文本 测试。 ok fine again")]
 
 
+_CELL_KEY = ["url", "matrix", "i", "j", "angle"]
+
+
+def _per_doc_cells(docs, st) -> pd.DataFrame:
+    """The per-doc reference of extract_matrices: ``_matrix_arrays`` over
+    each (url, levels, valid mask) of ``docs``, sorted by _CELL_KEY."""
+    from pyradiomics_spark.operators.matrices import (
+        MATRIX_CLASSES, _matrix_arrays)
+
+    parts = [pd.DataFrame({"url": u, "matrix": cls, "i": iv, "j": jv,
+                           "value": vv, "angle": av.astype(np.int32)})
+             for u, levels, valid in docs
+             for cls, iv, jv, vv, av in _matrix_arrays(
+                 levels, st, MATRIX_CLASSES, valid)]
+    return (pd.concat(parts).sort_values(_CELL_KEY)
+            .reset_index(drop=True))
+
+
 @pytest.mark.parametrize("name", list(_SETTINGS))
 def test_matrices_and_voxel_match_per_doc(spark, name):
     """extract_matrices and voxel_feature_maps run one mapInArrow arm for
@@ -143,8 +161,7 @@ def test_matrices_and_voxel_match_per_doc(spark, name):
     from pyradiomics_spark.kernels import (
         discretize, firstorder_features, glcm_features, gldm_features,
         glrlm_features, glszm_features, ngtdm_features)
-    from pyradiomics_spark.operators.matrices import (
-        MATRIX_CLASSES, _cell_blocks, extract_matrices)
+    from pyradiomics_spark.operators.matrices import extract_matrices
     from pyradiomics_spark.operators.voxel import voxel_feature_maps
 
     st = _SETTINGS[name]
@@ -160,12 +177,10 @@ def test_matrices_and_voxel_match_per_doc(spark, name):
     for plan in (_plan(mat), _plan(vox), _plan(feat)):
         assert "MapInArrow" in plan and "MapInPandas" not in plan
 
-    d, m, iv, jv, vv, av = _cell_blocks(vals, st, MATRIX_CLASSES)
-    want = pd.DataFrame({"url": urls[d], "matrix": m, "i": iv, "j": jv,
-                         "value": vv, "angle": av})
-    key = ["url", "matrix", "i", "j", "angle"]
-    got = mat.toPandas().sort_values(key).reset_index(drop=True)
-    want = want.sort_values(key).reset_index(drop=True)
+    want = _per_doc_cells(
+        [(u, discretize(v, st.bin_width), None) for u, v in zip(urls, vals)
+         if v.size], st)
+    got = mat.toPandas().sort_values(_CELL_KEY).reset_index(drop=True)
     assert len(got) > 0
     pd.testing.assert_frame_equal(got, want)
 
@@ -195,6 +210,54 @@ def test_matrices_and_voxel_match_per_doc(spark, name):
                             expect, rel=1e-9, abs=1e-12), (u, p, cls, f)
                     checked += 1
     assert checked > 1000
+
+
+def test_matrices_follow_normalize_and_resegment(spark):
+    """extract_matrices builds its cells from the levels and ROI mask the
+    features use: z-normalized intensities under ``normalize``, the
+    resegmentation mask under ``resegment_range``, and no cells for a doc
+    over the gray-level cap."""
+    from pyradiomics_spark.functions.intensity import normalize
+    from pyradiomics_spark.operators.matrices import extract_matrices
+
+    x = np.array([1, 2, 5, 3, 3, 8], dtype=np.float64)
+    rows = [("u1", " ".join("a" * int(n) for n in x)),
+            ("u2", "a " + "b" * 300)]
+    df = _one_batch(spark, rows)
+    inside = (x >= 2) & (x <= 4)
+    masked = np.zeros(x.size, dtype=np.int64)
+    masked[inside] = discretize(x[inside], 1.0)
+    cases = [
+        (ExtractionSettings(bin_width=1.0),
+         [("u1", discretize(x, 1.0), None)]),
+        (ExtractionSettings(bin_width=0.5, normalize=True),
+         [("u1", discretize(normalize(x, 1.0, None), 0.5), None),
+          ("u2", discretize(normalize(np.array([1.0, 300.0]), 1.0, None),
+                            0.5), None)]),
+        (ExtractionSettings(bin_width=1.0, resegment_range=(2, 4)),
+         [("u1", masked, inside)]),
+    ]
+    for st, docs in cases:
+        got = extract_matrices(df, keys=("url",), settings=st).toPandas()
+        got = got.sort_values(_CELL_KEY).reset_index(drop=True)
+        pd.testing.assert_frame_equal(got, _per_doc_cells(docs, st))
+
+
+def test_extraction_stage_fans_out_a_single_split(spark):
+    """All three extraction operators run their kernel stage on
+    defaultParallelism partitions when the input has one split."""
+    from pyradiomics_spark.operators.matrices import extract_matrices
+    from pyradiomics_spark.operators.voxel import voxel_feature_maps
+
+    slots = spark.sparkContext.defaultParallelism
+    df = spark.createDataFrame(
+        [(f"u{i}", "aa bbb c dddd") for i in range(8)],
+        "url string, text string").coalesce(1)
+    assert df.rdd.getNumPartitions() == 1
+    for out in (extract_features(df, keys=("url",)),
+                voxel_feature_maps(df, keys=("url",)),
+                extract_matrices(df, keys=("url",))):
+        assert out.rdd.getNumPartitions() == slots
 
 
 def test_pivot_wide_counts_and_fill(spark):

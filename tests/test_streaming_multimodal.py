@@ -163,13 +163,13 @@ def test_stream_extract(spark, event_dir, tmp_path):
     """Feature extraction lifts to streams unchanged (stateless mapInArrow)."""
     import pandas as pd
     from pyradiomics_spark.config import ExtractionSettings
-    from pyradiomics_spark.streaming.sessions import stream_extract
+    from pyradiomics_spark.operators.features import extract_features
     from pyradiomics_spark.sources.pages import pages_pdf, PAGES_SCHEMA
 
     src_dir = str(tmp_path / "pages_stream")
     spark.createDataFrame(pages_pdf(4), schema=PAGES_SCHEMA).write.parquet(src_dir)
     stream = spark.readStream.schema(PAGES_SCHEMA).parquet(src_dir)
-    out = stream_extract(
+    out = extract_features(
         stream, keys=("url", "warc_ts"),
         settings=ExtractionSettings(bin_width=1.0, feature_classes=("firstorder",)))
     assert out.isStreaming

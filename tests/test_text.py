@@ -156,6 +156,34 @@ def test_batch_text_to_intensity_unicode_whitespace_exhaustive():
         assert np.array_equal(g, text_to_intensity(t)), repr(t)
 
 
+def test_arrow_intensity_decodes_only_suspect_docs_per_doc():
+    """arrow_intensity tokenizes the Arrow buffers once and re-decodes
+    only the unicode-whitespace suspects: equal to the per-doc path with
+    suspects first, last and adjacent, nulls, and a sliced large_string
+    array; arrow_token_lens still gives None for a batch with a suspect."""
+    import pyarrow as pa
+
+    from pyradiomics_spark.config import ExtractionSettings
+    from pyradiomics_spark.functions.text import (
+        arrow_intensity, arrow_token_lens, text_to_intensity)
+
+    texts = ["nbsp\xa0first doc", "plain words here", None,
+             "em\u2003space\u3000ideo", "\x85next line x", "",
+             "dash\u2013kept as a token", "last\u2028sep"]
+    st = ExtractionSettings()
+    for arr in (pa.array(texts, type=pa.string()),
+                pa.array(["skip me"] + texts, type=pa.large_string())[1:]):
+        r = arrow_intensity(arr, st)
+        assert r.B == len(texts)
+        for i, t in enumerate(texts):
+            got = r.x[r.starts[i]:r.starts[i] + r.lens[i]]
+            assert np.array_equal(got, text_to_intensity(t or "")), repr(t)
+        assert arrow_token_lens(arr) is None
+    clean = pa.array(["a bb", None, "ccc"], type=pa.string())
+    tok_len, counts = arrow_token_lens(clean)
+    assert tok_len.tolist() == [1, 2, 3] and counts.tolist() == [2, 0, 1]
+
+
 def test_mad_outliers_grouped(spark):
     from pyradiomics_spark.functions.textstats import mad_outliers
 

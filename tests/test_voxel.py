@@ -1,6 +1,6 @@
 """Voxel-mode (per-position) feature maps: the batched maps vs the per-doc
-kernels over every ±r window, chunking invariance, and settings
-validation."""
+kernels over every ±r window, across adaptive kernel chunks, and
+settings validation."""
 
 import numpy as np
 import pandas as pd
@@ -9,15 +9,44 @@ import pytest
 from pyradiomics_spark.config import ExtractionSettings
 
 
+def _check_windows(out, url, vals, levels, radius, abs_tol=1e-12) -> int:
+    """Assert every position's row of ``out`` equals the per-doc kernels
+    over its ±radius window of ``vals``/``levels`` (rel 1e-9, abs
+    ``abs_tol``); returns the number of feature values checked."""
+    from pyradiomics_spark.kernels import (
+        firstorder_features, glcm_features, glrlm_features,
+        glszm_features, gldm_features, ngtdm_features)
+
+    checked = 0
+    for p in range(vals.size):
+        lo, hi = max(0, p - radius), min(vals.size, p + radius + 1)
+        wv, wl = vals[lo:hi], levels[lo:hi]
+        row = out.loc[(url, p)]
+        for cls, feats in (
+                ("firstorder", firstorder_features(wv, discretized=wl)),
+                ("glcm", glcm_features(wl)),
+                ("glrlm", glrlm_features(wl)),
+                ("glszm", glszm_features(wl)),
+                ("ngtdm", ngtdm_features(wl)),
+                ("gldm", gldm_features(wl))):
+            for f, expect in feats.items():
+                got = row[f"{cls}_{f}"]
+                if np.isnan(expect):
+                    assert np.isnan(got), (url, p, cls, f, got)
+                else:
+                    assert got == pytest.approx(
+                        expect, rel=1e-9, abs=abs_tol), (url, p, cls, f)
+                checked += 1
+    return checked
+
+
 def test_voxel_feature_maps_match_per_window_kernels(spark):
     """voxel_feature_maps == the per-doc kernels applied to each ±r window
     of the doc-globally discretized sequence (binImage-once semantics),
     on raw and on z-normalized (``settings.normalize``) intensities."""
     from pyradiomics_spark.functions.intensity import normalize
     from pyradiomics_spark.functions.text import text_to_intensity
-    from pyradiomics_spark.kernels import (
-        discretize, firstorder_features, glcm_features, glrlm_features,
-        glszm_features, gldm_features, ngtdm_features)
+    from pyradiomics_spark.kernels import discretize
     from pyradiomics_spark.operators.voxel import voxel_feature_maps
 
     texts = ["aa bbb c dddd ee fff g", "xxxx yy z", "mm mm mm"]
@@ -40,49 +69,31 @@ def test_voxel_feature_maps_match_per_window_kernels(spark):
                 vals = normalize(vals, settings.normalize_scale,
                                  settings.remove_outliers)
             levels = discretize(vals, settings.bin_width)
-            for p in range(vals.size):
-                lo, hi = max(0, p - radius), min(vals.size, p + radius + 1)
-                wv, wl = vals[lo:hi], levels[lo:hi]
-                row = out.loc[(f"u{i}", p)]
-                for cls, feats in (
-                        ("firstorder", firstorder_features(wv, discretized=wl)),
-                        ("glcm", glcm_features(wl)),
-                        ("glrlm", glrlm_features(wl)),
-                        ("glszm", glszm_features(wl)),
-                        ("ngtdm", ngtdm_features(wl)),
-                        ("gldm", gldm_features(wl))):
-                    for f, expect in feats.items():
-                        got = row[f"{cls}_{f}"]
-                        if np.isnan(expect):
-                            assert np.isnan(got), (i, p, cls, f, got)
-                        else:
-                            assert got == pytest.approx(
-                                expect, rel=1e-9, abs=1e-12), (
-                                settings.normalize, i, p, cls, f)
-                        checked += 1
+            checked += _check_windows(out, f"u{i}", vals, levels, radius)
         assert checked > 1000
 
 
-def test_voxel_feature_maps_chunked_equals_unchunked(spark):
-    """voxelBatch analog (base.py:202-221): a tiny voxel_batch that forces
-    many kernel slices must produce byte-identical maps to one big call."""
+def test_voxel_feature_maps_across_adaptive_chunks(spark):
+    """A doc spanning 128 gray levels (adaptive chunk: 512 windows) and
+    700 positions runs through more than one kernel chunk; every window,
+    those at the chunk seams included, equals the per-window kernels."""
+    from pyradiomics_spark.kernels import discretize
     from pyradiomics_spark.operators.voxel import voxel_feature_maps
 
-    texts = ["aa bbb c dddd ee fff g hh iii", "xxxx yy z qq rrr", "mm mm mm"]
-    pdf = pd.DataFrame({
-        "url": [f"u{i}" for i in range(len(texts))],
-        "warc_ts": pd.to_datetime(["2024-01-01"] * len(texts)),
-        "text": texts})
-    df = spark.createDataFrame(pdf)
-    big = voxel_feature_maps(
+    lens = np.random.default_rng(3).integers(1, 129, 700)
+    lens[:2] = (1, 128)
+    df = spark.createDataFrame(pd.DataFrame({
+        "url": ["u0"], "warc_ts": pd.to_datetime(["2024-01-01"]),
+        "text": [" ".join("a" * n for n in lens)]}))
+    out = voxel_feature_maps(
         df, radius=2, settings=ExtractionSettings(bin_width=1.0)
-    ).toPandas().sort_values(["url", "pos"]).reset_index(drop=True)
-    small = voxel_feature_maps(
-        df, radius=2,
-        settings=ExtractionSettings(bin_width=1.0, voxel_batch=3)
-    ).toPandas().sort_values(["url", "pos"]).reset_index(drop=True)
-    assert len(big) == len(small) > 0
-    pd.testing.assert_frame_equal(big, small)
+    ).toPandas().set_index(["url", "pos"]).sort_index()
+    assert len(out) == lens.size
+    vals = lens.astype(np.float64)
+    # levels up to 128 make ClusterShade's third-moment terms ~128³, so a
+    # value that cancels to zero carries rounding noise of ~1e-12·128³
+    assert _check_windows(out, "u0", vals, discretize(vals, 1.0), 2,
+                          abs_tol=1e-12 * 128 ** 3) > 50000
 
 
 def test_voxel_batch_and_start_level_validation():
@@ -93,8 +104,6 @@ def test_voxel_batch_and_start_level_validation():
         voxel_feature_maps(
             None, settings=ExtractionSettings(resegment_range=(1.0, 5.0)))
     with pytest.raises(ValueError):
-        ExtractionSettings(voxel_batch=-1)
-    with pytest.raises(ValueError):
         # unbounded start level is an a-trous memory bomb
         ExtractionSettings(wavelet_start_level=40)
-    ExtractionSettings(wavelet_start_level=8, voxel_batch=1024)  # ok
+    ExtractionSettings(wavelet_start_level=8)  # ok
