@@ -294,26 +294,12 @@ def q_glrlm_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionize (north_rule window op): 30-min gap on events;
     per user session count + mean session length."""
+    from pyradiomics_spark.operators.windows import session_bounds
+
     ev = _read(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts")
-    gap = ev.withColumn(
-        "new_sess",
-        F.when(
-            F.lag("ts", 1).over(w).isNull()
-            | (
-                F.col("ts").cast("timestamp").cast("double")
-                - F.lag("ts", 1).over(w).cast("timestamp").cast("double")
-                > 1800
-            ),
-            1,
-        ).otherwise(0),
-    )
-    sess = gap.withColumn(
-        "session_id", F.sum("new_sess").over(w.rowsBetween(Window.unboundedPreceding, 0))
-    )
-    per_sess = sess.groupBy("user_id", "session_id").agg(F.count("*").alias("n_events"))
     return (
-        per_sess.groupBy("user_id")
+        session_bounds(ev, "user_id", "ts", 1800)
+        .groupBy("user_id")
         .agg(
             F.count("*").alias("n_sessions"),
             _rnd(F.avg("n_events"), 6).alias("avg_events_per_session"),
@@ -325,36 +311,31 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
     """lag/lead window op: per-user event value deltas (north_rule)."""
+    from pyradiomics_spark.operators.windows import with_lag_lead
+
     ev = _read(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    out = ev.select(
+    return with_lag_lead(ev, "user_id", ["ts", "event_id"], "value").select(
         "event_id",
         "user_id",
-        _rnd(F.col("value") - F.lag("value", 1).over(w), 6).alias("delta_prev"),
-        _rnd(F.lead("value", 1).over(w) - F.col("value"), 6).alias("delta_next"),
-    )
-    return out.orderBy("event_id")
+        _rnd(F.col("value") - F.col("value_lag1"), 6).alias("delta_prev"),
+        _rnd(F.col("value_lead1") - F.col("value"), 6).alias("delta_next"),
+    ).orderBy("event_id")
 
 
 def q_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Forward-fill (north_rule): null out non-purchase values, then
-    last(ignoreNulls) over the past-only frame — leakage-safe by frame."""
+    ``windows.ffill`` over the past-only frame — leakage-safe by frame."""
+    from pyradiomics_spark.operators.windows import ffill
+
     ev = _read(spark, sf_dir, "events")
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
     masked = ev.withColumn(
         "purchase_value",
         F.when(F.col("event_type") == "purchase", F.col("value")),
     )
-    return masked.select(
+    return ffill(masked, "user_id", ["ts", "event_id"], "purchase_value").select(
         "event_id",
         "user_id",
-        _rnd(F.last("purchase_value", ignorenulls=True).over(w), 6).alias(
-            "last_purchase_value"
-        ),
+        _rnd("purchase_value", 6).alias("last_purchase_value"),
     ).orderBy("event_id")
 
 
@@ -577,10 +558,11 @@ def q_top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup via content hash (training-data op): keep min doc_id per
     distinct text; report survivors count per lang."""
+    from pyradiomics_spark.operators.dedup import exact_dedup
+
     docs = _read(spark, sf_dir, "documents")
-    keep = docs.groupBy("text").agg(F.min("doc_id").alias("doc_id"))
     return (
-        keep.join(docs.select("doc_id", "lang"), "doc_id")
+        exact_dedup(docs, "doc_id", "text")
         .groupBy("lang")
         .agg(F.count("*").alias("n_unique_docs"))
         .orderBy("lang")
@@ -638,19 +620,26 @@ def q_asof_join_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling 1-hour window aggregate (streaming-shape op in batch)."""
+    """Tumbling 1-hour window aggregate: ``stream_tumbling`` in batch mode
+    (no watermark on a batch frame)."""
+    from pyradiomics_spark.streaming.sessions import stream_tumbling
+
     ev = _read(spark, sf_dir, "events")
-    return (
-        ev.groupBy(
-            F.col("user_id"),
-            F.window(F.col("ts"), "1 hour").start.alias("hour_start"),
-        )
-        .agg(
-            F.count("*").alias("n_events"),
-            _rnd(F.sum("value"), 6).alias("sum_value"),
-        )
-        .orderBy("user_id", "hour_start")
-    )
+    return _tumbling_rows(stream_tumbling(
+        ev, "user_id", "ts", width="1 hour",
+        agg_cols={"sum_value_raw": F.sum("value")}))
+
+
+def _tumbling_rows(agg: DataFrame) -> DataFrame:
+    """The tumbling gate rows' projection of a ``stream_tumbling``
+    aggregate: window start as TIMESTAMP_NTZ ``hour_start``, the rounded
+    ``sum_value``, by (user_id, hour_start)."""
+    return agg.select(
+        "user_id",
+        F.col("window_start").cast("timestamp_ntz").alias("hour_start"),
+        "n_events",
+        _rnd("sum_value_raw", 6).alias("sum_value"),
+    ).orderBy("user_id", "hour_start")
 
 
 # oracle of tumbling_window and stream_tumbling
@@ -693,16 +682,7 @@ def q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = stream_tumbling(
         stream, "user_id", "ts", width="1 hour", watermark="1 hour",
         agg_cols={"sum_value_raw": F.sum("value")})
-    return (
-        run_stream(agg, "complete")
-        .select(
-            "user_id",
-            F.col("window_start").cast("timestamp_ntz").alias("hour_start"),
-            "n_events",
-            _rnd("sum_value_raw", 6).alias("sum_value"),
-        )
-        .orderBy("user_id", "hour_start")
-    )
+    return _tumbling_rows(run_stream(agg, "complete"))
 
 
 def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1065,17 +1045,12 @@ def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Winnowing fingerprints (rolling min over k-gram hashes) with md5
-    hashing for oracle parity; counts distinct fingerprints per doc."""
-    docs = _read(spark, sf_dir, "documents")
-    from pyradiomics_spark.operators.dedup import word_ngrams
+    """Winnowing fingerprints (rolling min over md5 k-gram hashes, 5-grams
+    in windows of 4); counts distinct fingerprints per doc."""
+    from pyradiomics_spark.functions.textstats import winnowing_fingerprints
 
-    grams = word_ngrams(F.col("text"), 5)
-    g = docs.select("doc_id", F.posexplode(grams).alias("pos", "g")).withColumn(
-        "gh", F.md5("g")
-    )
-    w = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(0, 3)
-    fp = g.withColumn("winmin", F.min("gh").over(w)).select("doc_id", "winmin").distinct()
+    docs = _read(spark, sf_dir, "documents")
+    fp = winnowing_fingerprints(docs, "doc_id", kgram=5, window=4)
     return fp.groupBy("doc_id").agg(
         F.count("*").alias("n_fingerprints")
     ).orderBy("doc_id")
@@ -1204,18 +1179,14 @@ def q_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_bfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Backward-fill (future-looking; excluded from feature cuts): next
     signup value per user at each event."""
+    from pyradiomics_spark.operators.windows import bfill
+
     ev = _read(spark, sf_dir, "events")
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(0, Window.unboundedFollowing)
-    )
     masked = ev.withColumn(
         "signup_value", F.when(F.col("event_type") == "signup", F.col("value")))
-    return masked.select(
+    return bfill(masked, "user_id", ["ts", "event_id"], "signup_value").select(
         "event_id", "user_id",
-        _rnd(F.first("signup_value", ignorenulls=True).over(w), 6).alias(
-            "next_signup_value"),
+        _rnd("signup_value", 6).alias("next_signup_value"),
     ).orderBy("event_id")
 
 

@@ -199,11 +199,13 @@ def winnowing_fingerprints(
     """Winnowing (rolling-hash) fingerprints: hash every k-gram of tokens,
     keep the min hash of each sliding window of ``window`` consecutive
     k-grams (distinct). Relational: explode k-grams → window min → distinct.
-    The standard local document fingerprint for plagiarism/near-dup."""
+    The standard local document fingerprint for plagiarism/near-dup. The
+    hash is md5 (a hex string, the lexicographic min) so an SQL engine
+    replays the fingerprints exactly (the gate's ``winnowing`` row)."""
     grams = word_ngrams(F.col(text_col), kgram)
     g = df.select(
         F.col(id_col), F.posexplode(grams).alias("pos", "gram")
-    ).withColumn("gh", F.xxhash64("gram"))
+    ).withColumn("gh", F.md5("gram"))
     w = Window.partitionBy(id_col).orderBy("pos").rowsBetween(0, window - 1)
     return (
         g.withColumn("winmin", F.min("gh").over(w))

@@ -76,7 +76,6 @@ def connected_components(
     max_rounds: int = 30,
     all_ids: DataFrame | None = None,
     assume_distinct: bool = False,
-    precontract: bool = True,
 ) -> DataFrame:
     """(id, component) for every node in ``pairs`` — component = the
     minimum node id reachable (the canonical dedup representative).
@@ -85,16 +84,15 @@ def connected_components(
     nodes with no pair become singleton components of themselves — pass
     the full corpus id set so the output covers every document.
 
-    ``precontract`` (default on): one hash-min contraction before the
-    star rounds — every node maps to m(u) = min(N(u) ∪ {u}) via a
-    map-side-combined groupBy, edges relabel to (m(u), m(v)), and the
-    star loop runs on the contracted graph (near-dup graphs are
-    cliquey, so this one cheap pass collapses most of the edge volume:
-    measured 540k → ~7k edges at sf0.1 before round 0 ever runs). The
-    final label composes comp(u) = comp'(m(u)); since the component's
-    global minimum g always has m(g) = g, the contracted minimum is the
-    true minimum and the output is identical (verified exceptAll-equal
-    both ways and vs the recursive-CTE oracle).
+    One hash-min contraction runs before the star rounds: every node
+    maps to m(u) = min(N(u) ∪ {u}) via a map-side-combined groupBy,
+    edges relabel to (m(u), m(v)), and the star loop runs on the
+    contracted graph (near-dup graphs are cliquey, so this one cheap
+    pass collapses most of the edge volume: measured 540k → ~7k edges
+    at sf0.1 before round 0 ever runs). The final label composes
+    comp(u) = comp'(m(u)); since the component's global minimum g always
+    has m(g) = g, the contracted minimum is the true minimum (checked
+    against union-find and the recursive-CTE oracle).
 
     Iterative: runs Spark actions during construction (convergence check
     per round) — this is the documented exception to lazy plan building;
@@ -113,26 +111,24 @@ def connected_components(
     # outputs, which are distinct by construction)
     edges = checkpoint(edges)
 
-    contraction = None
-    if precontract:
-        both = edges.unionByName(edges.select(
-            F.col(_V).alias(_U), F.col(_U).alias(_V)))
-        contraction = checkpoint(
-            both.groupBy(_U).agg(F.min(_V).alias("__mn"))
-            .select(_U, F.least(F.col("__mn"), F.col(_U)).alias("__m")))
-        mu = contraction.select(F.col(_U).alias("__n"),
-                                F.col("__m").alias("__mu"))
-        contracted = checkpoint(
-            edges
-            .join(mu.withColumnRenamed("__n", _U)
-                  .withColumnRenamed("__mu", "__ma"), _U)
-            .join(mu.withColumnRenamed("__n", _V)
-                  .withColumnRenamed("__mu", "__mb"), _V)
-            .select(F.col("__ma").alias(_U), F.col("__mb").alias(_V))
-            .where(F.col(_U) != F.col(_V))
-            .distinct())
-        release(edges)
-        edges = contracted
+    both = edges.unionByName(edges.select(
+        F.col(_V).alias(_U), F.col(_U).alias(_V)))
+    contraction = checkpoint(
+        both.groupBy(_U).agg(F.min(_V).alias("__mn"))
+        .select(_U, F.least(F.col("__mn"), F.col(_U)).alias("__m")))
+    mu = contraction.select(F.col(_U).alias("__n"),
+                            F.col("__m").alias("__mu"))
+    contracted = checkpoint(
+        edges
+        .join(mu.withColumnRenamed("__n", _U)
+              .withColumnRenamed("__mu", "__ma"), _U)
+        .join(mu.withColumnRenamed("__n", _V)
+              .withColumnRenamed("__mu", "__mb"), _V)
+        .select(F.col("__ma").alias(_U), F.col("__mb").alias(_V))
+        .where(F.col(_U) != F.col(_V))
+        .distinct())
+    release(edges)
+    edges = contracted
 
     def _sig(df: DataFrame) -> tuple:
         """(count, order-invariant content checksum) in ONE job off the
@@ -172,16 +168,15 @@ def connected_components(
     roots = edges.select(F.col(_V).alias("id")).distinct().join(
         labels.select("id"), "id", "left_anti"
     ).withColumn("component", F.col("id"))
-    out = labels.unionByName(roots)
-    if contraction is not None:
-        # compose through the contraction: comp(u) = comp'(m(u));
-        # a representative absent from the contracted graph had its
-        # whole component collapse onto it, so it is its own minimum
-        out = (contraction
-               .join(out.withColumnRenamed("id", "__m"), "__m", "left")
-               .select(F.col(_U).alias("id"),
-                       F.coalesce("component", F.col("__m"))
-                       .alias("component")))
+    # compose through the contraction: comp(u) = comp'(m(u));
+    # a representative absent from the contracted graph had its
+    # whole component collapse onto it, so it is its own minimum
+    out = (contraction
+           .join(labels.unionByName(roots).withColumnRenamed("id", "__m"),
+                 "__m", "left")
+           .select(F.col(_U).alias("id"),
+                   F.coalesce("component", F.col("__m"))
+                   .alias("component")))
     if all_ids is not None:
         idc = all_ids.columns[0]
         singles = (
@@ -190,21 +185,6 @@ def connected_components(
             .withColumn("component", F.col("id")))
         out = out.unionByName(singles)
     return out
-
-
-def dedup_by_components(
-    df: DataFrame,
-    pairs: DataFrame,
-    id_col: str,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-) -> DataFrame:
-    """Keep exactly ONE representative (the minimum id) per near-dup
-    cluster — transitive-safe, unlike pairwise loser-dropping."""
-    comp = connected_components(pairs, id_a, id_b)
-    losers = comp.where(F.col("id") != F.col("component")).select(
-        F.col("id").alias(id_col))
-    return df.join(losers, id_col, "left_anti")
 
 
 def canonical_representatives(

@@ -4,7 +4,8 @@ All four families are expressed RELATIONALLY (explode → hash → groupBy →
 join) so Catalyst plans them with map-side partial aggregation and AQE —
 no Python on the hot path:
 
-* ``exact_dedup``        — content-hash groupBy (one shuffle)
+* ``exact_dedup``        — content-hash groupBy (one shuffle; the gate's
+  ``dedup_exact`` row runs it)
 * ``minhash_signatures`` / ``minhash_lsh_candidates`` — shingle → k
   min-hashes (ONE groupBy with k min() aggregates) → band buckets →
   candidate pairs (verify with ``ngram_jaccard_pairs``; the transitive
@@ -18,6 +19,8 @@ no Python on the hot path:
   with other docs (gram census + AQE-splittable many-to-one join)
 
 Every word n-gram in the package comes from ``word_ngrams`` (one regex).
+The candidate generators' ``bucket_cap`` drops over-cap buckets before
+their self-join (``_drop_hot_buckets``); nothing reports the dropped set.
 
 Determinism: every hash is ``xxhash64`` with an integer seed column baked
 into the input — reproducible across runs/executors/cluster sizes.
@@ -94,8 +97,8 @@ def minhash_signatures(
 
 
 def _drop_hot_buckets(rows: DataFrame, key_cols: list[str],
-                      bucket_cap: int) -> tuple[DataFrame, DataFrame]:
-    """(rows minus over-cap buckets, dropped-bucket metric table).
+                      bucket_cap: int) -> DataFrame:
+    """``rows`` minus the rows of over-cap buckets.
 
     A self-join on a bucket key is quadratic in bucket membership, so ONE
     degenerate hot bucket — mass-produced boilerplate that survives exact
@@ -106,18 +109,14 @@ def _drop_hot_buckets(rows: DataFrame, key_cols: list[str],
 
     Cost shape: the membership count is a map-side-combinable groupBy,
     the surviving hot set is tiny (≤ total/cap buckets) and broadcast
-    anti-joined — the big table takes no extra shuffle. The metric table
-    (key cols + ``n_members``) is returned instead of eagerly counted so
-    plan construction never runs an action; sink it or ``.count()`` it
-    for monitoring."""
+    anti-joined — the big table takes no extra shuffle."""
     hot = (
         rows.groupBy(*key_cols)
         .agg(F.count("*").alias("n_members"))
         .where(F.col("n_members") > bucket_cap)
     )
-    kept = rows.join(
+    return rows.join(
         F.broadcast(hot.select(*key_cols)), key_cols, "left_anti")
-    return kept, hot
 
 
 def minhash_lsh_candidates(
@@ -129,11 +128,10 @@ def minhash_lsh_candidates(
     ``bucket_cap``: drop bands whose bucket membership exceeds the cap
     BEFORE the self-join (see _drop_hot_buckets) — at web scale a single
     boilerplate bucket would otherwise explode quadratically. None (the
-    default) keeps every bucket; use lsh_hot_buckets for the dropped-
-    bucket monitoring table."""
+    default) keeps every bucket."""
     banded = _lsh_banded(signatures, id_col, num_hashes, bands)
     if bucket_cap is not None:
-        banded, _ = _drop_hot_buckets(banded, ["band", "bh"], bucket_cap)
+        banded = _drop_hot_buckets(banded, ["band", "bh"], bucket_cap)
     a = banded.alias("a")
     b = banded.alias("b")
     return (
@@ -164,19 +162,6 @@ def _lsh_banded(signatures: DataFrame, id_col: str, num_hashes: int,
     return signatures.select(
         F.col(id_col), F.explode(F.array(*band_cols)).alias("b")
     ).select(id_col, F.col("b.band").alias("band"), F.col("b.bh").alias("bh"))
-
-
-def lsh_hot_buckets(
-    signatures: DataFrame, id_col: str, num_hashes: int = 32, bands: int = 8,
-    bucket_cap: int = 10_000,
-) -> DataFrame:
-    """Monitoring table for minhash_lsh_candidates' bucket cap: the
-    (band, bh, n_members) rows that a matching bucket_cap would drop.
-    Run/sink this alongside the candidate job — silent truncation at
-    scale must be observable, not inferred."""
-    banded = _lsh_banded(signatures, id_col, num_hashes, bands)
-    _, hot = _drop_hot_buckets(banded, ["band", "bh"], bucket_cap)
-    return hot
 
 
 def ngram_jaccard_pairs(
@@ -495,7 +480,7 @@ def simhash_candidates(
     self-joins quadratically; a cap drops over-cap block-key buckets
     before the join (see _drop_hot_buckets — capped docs stay findable
     through their other block combinations unless hot in all of them).
-    None keeps every bucket; simhash_hot_buckets is the monitoring table.
+    None keeps every bucket.
     """
     if n_blocks is None:
         n_blocks = max_hamming + 1
@@ -515,7 +500,7 @@ def simhash_candidates(
         if bucket_cap is not None:
             keyed = signatures.withColumn(
                 "__bk", _block_key(F.col("simhash"), combo, los, widths))
-            tbl, _ = _drop_hot_buckets(keyed, ["__bk"], bucket_cap)
+            tbl = _drop_hot_buckets(keyed, ["__bk"], bucket_cap)
             tbl = tbl.drop("__bk")
         a = tbl.alias("a")
         b = tbl.alias("b")
@@ -539,31 +524,6 @@ def simhash_candidates(
         )
         pairs = p if pairs is None else pairs.unionByName(p)
     return pairs.distinct()
-
-
-def simhash_hot_buckets(
-    signatures: DataFrame, id_col: str, max_hamming: int = 3,
-    n_blocks: int | None = None, bits: int = 64, bucket_cap: int = 10_000,
-) -> DataFrame:
-    """Monitoring table for simhash_candidates' bucket cap: one row per
-    (block-combination, key) bucket a matching bucket_cap would drop,
-    with its membership. Columns (combo:string, bk:long, n_members)."""
-    if n_blocks is None:
-        n_blocks = max_hamming + 1
-    from itertools import combinations
-
-    los, widths = _block_bounds(n_blocks, bits)
-    agree = n_blocks - max_hamming
-    out = None
-    for combo in combinations(range(n_blocks), agree):
-        keyed = signatures.withColumn(
-            "__bk", _block_key(F.col("simhash"), combo, los, widths))
-        _, hot = _drop_hot_buckets(keyed, ["__bk"], bucket_cap)
-        hot = hot.select(
-            F.lit("+".join(map(str, combo))).alias("combo"),
-            F.col("__bk").alias("bk"), "n_members")
-        out = hot if out is None else out.unionByName(hot)
-    return out
 
 
 # ---------------------------------------------------------------- embeddings
@@ -600,7 +560,7 @@ def semdedup(
     pool = assigned.select(F.col(id_col), "cell").where(
         F.col("cell").isNotNull())
     if cell_cap is not None:
-        pool, _ = _drop_hot_buckets(pool, ["cell"], cell_cap)
+        pool = _drop_hot_buckets(pool, ["cell"], cell_cap)
     a, b = pool.alias("a"), pool.alias("b")
     cand = a.join(
         b,
@@ -652,7 +612,7 @@ def embedding_cosine_pairs(
             # an embedding cluster denser than the cap (boilerplate whose
             # vectors collapse to one LSH cell) would self-join
             # quadratically — same hazard, same cap as minhash/simhash
-            bucketed, _ = _drop_hot_buckets(bucketed, ["bucket"], bucket_cap)
+            bucketed = _drop_hot_buckets(bucketed, ["bucket"], bucket_cap)
         a = bucketed.alias("a")
         b = bucketed.alias("b")
         candidates = (
@@ -727,7 +687,7 @@ def incremental_dedup(
         minhash_signatures(old_df, id_col, text_col, num_hashes, shingle_n),
         id_col, num_hashes, bands)
     if bucket_cap is not None:
-        old_bands, _ = _drop_hot_buckets(old_bands, ["band", "bh"], bucket_cap)
+        old_bands = _drop_hot_buckets(old_bands, ["band", "bh"], bucket_cap)
     old_keys = (old_bands.select("band", "bh").distinct()
                 .withColumn("__seen_n", F.lit(1)))
     new_bands = _lsh_banded(

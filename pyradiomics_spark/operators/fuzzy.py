@@ -26,8 +26,7 @@ the variant key → distinct pairs → JVM-side levenshtein verify. The
 variant key is skew-prone exactly like an LSH band bucket (very short
 strings collapse to few variants), so the same ``bucket_cap`` treatment
 as dedup._drop_hot_buckets applies: over-cap variant buckets are
-broadcast-anti-joined away BEFORE the self-join and surfaced in a
-monitoring table.
+broadcast-anti-joined away BEFORE the self-join.
 """
 
 from __future__ import annotations
@@ -92,7 +91,7 @@ def edit_join(
     variants = words.select(
         "w", F.explode(_deletion_variants("w", max_dist)).alias("v"))
     if bucket_cap is not None:
-        variants, _ = _drop_hot_buckets(variants, ["v"], bucket_cap)
+        variants = _drop_hot_buckets(variants, ["v"], bucket_cap)
     # join on the 64-bit hash of the variant, not the string: the
     # candidate shuffle moves 8-byte longs instead of ~L-byte strings
     # and the equi-join compares longs (guide §2.3 "narrower types").
@@ -115,15 +114,3 @@ def edit_join(
             .where(F.levenshtein("w1", "w2", max_dist) >= 0)
             .withColumn("dist", F.levenshtein("w1", "w2")))
 
-
-def edit_hot_buckets(
-    df: DataFrame, col: str, bucket_cap: int
-) -> DataFrame:
-    """Monitoring twin of ``edit_join(bucket_cap=...)``: the deletion-
-    variant buckets that exceed the cap, with membership counts."""
-    words = df.select(F.col(col).alias("w")).where(
-        F.col("w").isNotNull() & (F.col("w") != "")).distinct()
-    variants = words.select(
-        "w", F.explode(_deletion_variants("w")).alias("v"))
-    _, hot = _drop_hot_buckets(variants, ["v"], bucket_cap)
-    return hot

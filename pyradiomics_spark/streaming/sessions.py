@@ -5,7 +5,10 @@ These wrappers put the batch semantics on a stream:
 
 * ``watermarked``         — event-time watermark (late-data bound)
 * ``stream_sessionize``   — native ``session_window`` gap sessions
-* ``stream_tumbling``     — tumbling window aggregate
+* ``stream_tumbling`` / ``stream_sliding`` — tumbling / hopping window
+  aggregate (one shared watermark → groupBy → n_events + extras shape
+  with ``stream_sessionize``; the gate's batch ``tumbling_window`` row
+  runs ``stream_tumbling`` too)
 * ``stream_training_pipeline`` — watermarked content dedup, then
   ``operators.features.extract_features`` per micro-batch (extraction is
   stateless per row, so it lifts to streams as-is via the same
@@ -29,6 +32,24 @@ def watermarked(df: DataFrame, ts_col: str, delay: str = "1 hour") -> DataFrame:
     return df.withWatermark(ts_col, delay) if df.isStreaming else df
 
 
+def _windowed_agg(df: DataFrame, entity_col: str, ts_col: str,
+                  watermark: str, agg_cols: dict | None, window,
+                  bounds: dict) -> DataFrame:
+    """The windowed aggregates' one shape: watermark ``df`` on ``ts_col``,
+    group by (entity, ``window``), aggregate ``n_events`` plus
+    ``agg_cols``. Columns: entity, each ``bounds`` name (from the window
+    struct field it maps to), n_events, then the ``agg_cols`` names."""
+    aggs = {"n_events": F.count("*"), **(agg_cols or {})}
+    return (
+        watermarked(df, ts_col, watermark)
+        .groupBy(F.col(entity_col), window)
+        .agg(*[col.alias(name) for name, col in aggs.items()])
+        .select(entity_col,
+                *[F.col(field).alias(name) for name, field in bounds.items()],
+                *aggs)
+    )
+
+
 def stream_sessionize(
     df: DataFrame,
     entity_col: str,
@@ -41,21 +62,11 @@ def stream_sessionize(
 
     Returns per-session rows: entity, session start/end, n_events (+extras).
     """
-    src = watermarked(df, ts_col, watermark)
-    aggs = [F.count("*").alias("n_events")]
-    for name, col in (agg_cols or {}).items():
-        aggs.append(col.alias(name))
-    agg_names = ["n_events"] + list((agg_cols or {}).keys())
-    return (
-        src.groupBy(F.col(entity_col), F.session_window(F.col(ts_col), gap))
-        .agg(*aggs)
-        .select(
-            entity_col,
-            F.col("session_window.start").alias("session_start"),
-            F.col("session_window.end").alias("session_end"),
-            *[F.col(n) for n in agg_names],
-        )
-    )
+    return _windowed_agg(
+        df, entity_col, ts_col, watermark, agg_cols,
+        F.session_window(F.col(ts_col), gap),
+        {"session_start": "session_window.start",
+         "session_end": "session_window.end"})
 
 
 def stream_tumbling(
@@ -66,20 +77,11 @@ def stream_tumbling(
     watermark: str = "1 hour",
     agg_cols: dict | None = None,
 ) -> DataFrame:
-    src = watermarked(df, ts_col, watermark)
-    aggs = [F.count("*").alias("n_events")]
-    for name, col in (agg_cols or {}).items():
-        aggs.append(col.alias(name))
-    agg_names = ["n_events"] + list((agg_cols or {}).keys())
-    return (
-        src.groupBy(F.col(entity_col), F.window(F.col(ts_col), width))
-        .agg(*aggs)
-        .select(
-            entity_col,
-            F.col("window.start").alias("window_start"),
-            *[F.col(n) for n in agg_names],
-        )
-    )
+    """Tumbling window aggregate: per entity and ``width``-wide
+    epoch-aligned window, n_events plus ``agg_cols``."""
+    return _windowed_agg(
+        df, entity_col, ts_col, watermark, agg_cols,
+        F.window(F.col(ts_col), width), {"window_start": "window.start"})
 
 
 def stream_sliding(
@@ -98,21 +100,10 @@ def stream_sliding(
     the watermark; the replication factor is the window overlap, not the
     corpus (Spark's native window(ts, width, slide) generates the
     assignments JVM-side, no explode materialized in Python)."""
-    src = watermarked(df, ts_col, watermark)
-    aggs = [F.count("*").alias("n_events")]
-    for name, col in (agg_cols or {}).items():
-        aggs.append(col.alias(name))
-    agg_names = ["n_events"] + list((agg_cols or {}).keys())
-    return (
-        src.groupBy(F.col(entity_col),
-                    F.window(F.col(ts_col), width, slide))
-        .agg(*aggs)
-        .select(
-            entity_col,
-            F.col("window.start").alias("window_start"),
-            *[F.col(n) for n in agg_names],
-        )
-    )
+    return _windowed_agg(
+        df, entity_col, ts_col, watermark, agg_cols,
+        F.window(F.col(ts_col), width, slide),
+        {"window_start": "window.start"})
 
 
 def stream_dedup_exact(

@@ -6,8 +6,7 @@ import random
 
 import pytest
 
-from pyradiomics_spark.operators.components import (
-    connected_components, dedup_by_components)
+from pyradiomics_spark.operators.components import connected_components
 
 
 def _union_find_truth(edges):
@@ -48,17 +47,6 @@ def test_components_all_ids_singletons(spark):
     got = {r.id: r.component
            for r in connected_components(df, all_ids=ids).collect()}
     assert got == {1: 1, 2: 1, 7: 7}
-
-
-def test_dedup_by_components_transitive(spark):
-    """Chain a-b-c: component dedup keeps ONE doc; pairwise loser-dropping
-    would keep a leaf too."""
-    docs = spark.createDataFrame(
-        [(1, "x"), (2, "y"), (3, "z"), (9, "w")], "id long, text string")
-    pairs = spark.createDataFrame([(1, 2), (2, 3)], "id_a long, id_b long")
-    kept = sorted(r.id for r in
-                  dedup_by_components(docs, pairs, "id").collect())
-    assert kept == [1, 9]
 
 
 def test_components_nonconvergence_raises(spark):
