@@ -195,19 +195,36 @@ _EMBEDDINGS_SQL = """
             )"""
 
 
+def _doc_features(spark: SparkSession, sf_dir: str, cls: str) -> DataFrame:
+    """``extract_features`` over documents for one feature class at
+    bin_width=1 (one gray level per token length), by doc_id, on the
+    oracles' row set: docs with tokens, and for glcm and ngtdm (built from
+    neighbour pairs) docs with at least two."""
+    from pyradiomics_spark.config import ExtractionSettings
+    from pyradiomics_spark.operators.features import extract_features
+
+    min_tokens = 2 if cls in ("glcm", "ngtdm") else 1
+    return extract_features(
+        _read(spark, sf_dir, "documents"), ("doc_id",), "text",
+        ExtractionSettings(bin_width=1.0, feature_classes=(cls,)),
+    ).where(F.col("diag_n_tokens") >= min_tokens).orderBy("doc_id")
+
+
 def q_fo_doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First-order aggregates per document (SURVEY §2.4.1 builtin subset)."""
-    t = _tokens(spark, sf_dir)
-    return t.groupBy("doc_id").agg(
-        F.count("*").alias("n_tokens"),
-        F.min("tok_len").alias("min_len"),
-        F.max("tok_len").alias("max_len"),
-        F.sum("tok_len").alias("sum_len"),
-        _rnd(F.avg("tok_len"), 6).alias("mean_len"),
-        F.sum(F.col("tok_len") * F.col("tok_len")).alias("energy"),
-        _rnd(F.sqrt(F.avg(F.col("tok_len") * F.col("tok_len"))), 6).alias("rms"),
-        _rnd(F.var_pop("tok_len"), 6).alias("variance"),
-    ).orderBy("doc_id")
+    """First-order aggregates per document (SURVEY §2.4.1 builtin subset),
+    projected from the firstorder class; the token sum is Mean · n."""
+    f = _doc_features(spark, sf_dir, "firstorder")
+    n = F.col("diag_n_tokens")
+    return f.select(
+        "doc_id",
+        n.cast("long").alias("n_tokens"),
+        F.col("firstorder_Minimum").cast("int").alias("min_len"),
+        F.col("firstorder_Maximum").cast("int").alias("max_len"),
+        F.round(F.col("firstorder_Mean") * n).cast("long").alias("sum_len"),
+        _rnd("firstorder_Mean", 6).alias("mean_len"),
+        F.col("firstorder_Energy").cast("long").alias("energy"),
+        _rnd("firstorder_RootMeanSquared", 6).alias("rms"),
+        _rnd("firstorder_Variance", 6).alias("variance"))
 
 
 def q_fo_binned_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -523,20 +540,12 @@ def q_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_fo_entropy_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document histogram entropy + uniformity of binned token lengths —
-    the firstorder Entropy/Uniformity formulas as relational aggregates."""
-    t = _tokens(spark, sf_dir)
-    w = Window.partitionBy("doc_id")
-    lv = t.withColumn(
-        "level",
-        F.floor(F.col("tok_len")) - F.floor(F.min("tok_len").over(w)) + 1)
-    hist = lv.groupBy("doc_id", "level").agg(F.count("*").alias("c"))
-    tot = Window.partitionBy("doc_id")
-    p = hist.withColumn("p", F.col("c") / F.sum("c").over(tot))
-    return p.groupBy("doc_id").agg(
-        (_rnd(-F.sum(F.col("p") * F.log2("p")), 6) + F.lit(0.0)).alias("entropy"),
-        _rnd(F.sum(F.col("p") * F.col("p")), 6).alias("uniformity"),
-    ).orderBy("doc_id")
+    """Per-document histogram entropy + uniformity of binned token lengths:
+    the firstorder class's Entropy and Uniformity."""
+    return _doc_features(spark, sf_dir, "firstorder").select(
+        "doc_id",
+        (_rnd("firstorder_Entropy", 6) + F.lit(0.0)).alias("entropy"),
+        _rnd("firstorder_Uniformity", 6).alias("uniformity"))
 
 
 def q_top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1461,16 +1470,8 @@ def q_seqshape(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-def _doc_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-doc 1-based gray levels with bin_width=1 (level = len − min + 1),
-    matching kernels.binning.discretize exactly on the integer grid."""
-    t = _tokens(spark, sf_dir)
-    w = Window.partitionBy("doc_id")
-    return t.withColumn(
-        "level", (F.col("tok_len") - F.min("tok_len").over(w) + 1).cast("long"))
-
-
-# SQL twin of _doc_levels (CTE lv)
+# per-doc 1-based gray levels at bin_width=1 (level = len − min + 1) as
+# CTE lv: the start of the texture-feature and matrix oracles
 _DOC_LEVELS_SQL = """
             WITH lv AS (
               SELECT doc_id, pos,
@@ -1479,147 +1480,45 @@ _DOC_LEVELS_SQL = """
 
 
 def q_glcm_contrast_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FULL GLCM Contrast feature per doc, relationally: lag pairs →
-    Σ p(i,j)·(i−j)². Symmetrization is a no-op for Contrast ((i−j)² is
-    symmetric), so the directed normalized matrix gives the same value as
-    the kernel's symmetric one — cross-checked in tests/test_relational_features.py."""
-    lv = _doc_levels(spark, sf_dir)
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    pairs = lv.withColumn("nxt", F.lead("level", 1).over(w)).where(
-        F.col("nxt").isNotNull())
-    return pairs.groupBy("doc_id").agg(
-        _rnd(F.sum((F.col("level") - F.col("nxt")) ** 2) / F.count("*"), 6).alias("glcm_contrast")
-    ).orderBy("doc_id")
+    """GLCM Contrast per doc from the glcm class."""
+    return _doc_features(spark, sf_dir, "glcm").select(
+        "doc_id", _rnd("glcm_Contrast", 6).alias("glcm_contrast"))
 
 
 def q_glcm_imc_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FULL GLCM Imc1/Imc2 per doc, relationally — the closed-form
-    information-measure features (reference radiomics/glcm.py:555-647):
-
-      Imc1 = (HXY − HXY1) / max(HX, HY)   (0 when max(HX,HY) == 0)
-      Imc2 = sqrt(1 − exp(−2(HXY2 − HXY)))  (0 when HXY2 <= HXY)
-
-    over the SYMMETRIC normalized co-occurrence matrix (directed lag pairs
-    unioned with their transpose, matching the kernel's symmetric=True).
-    HXY2 needs the full px×py grid (including zero-P cells), hence the
-    per-doc marginal cross join — bounded at G² rows/doc, G = gray-level
-    count. The ε inside the reference's log2(·+ε) shifts values by ~1e-13,
-    invisible at the 6-dp gate rounding."""
-    from pyradiomics_spark.session import checkpoint
-
-    lv = _doc_levels(spark, sf_dir)
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    directed = (
-        lv.withColumn("nxt", F.lead("level", 1).over(w))
-        .where(F.col("nxt").isNotNull())
-        .select("doc_id", F.col("level").alias("i"), F.col("nxt").alias("j")))
-    sym = directed.unionByName(
-        directed.select("doc_id", F.col("j").alias("i"), F.col("i").alias("j")))
-    cnt = sym.groupBy("doc_id", "i", "j").agg(F.count("*").alias("c"))
-    tot = Window.partitionBy("doc_id")
-    # five entropy branches (px/py/hxy/hxy1/hxy2) fan out from p —
-    # materialize the aggregate-sized matrix once instead of re-running
-    # the token-window lineage per branch (≤ G² rows per doc)
-    p = checkpoint(cnt.withColumn("p", F.col("c") / F.sum("c").over(tot)))
-    px = p.groupBy("doc_id", "i").agg(F.sum("p").alias("px"))
-    py = p.groupBy("doc_id", "j").agg(F.sum("p").alias("py"))
-    hxy = p.groupBy("doc_id").agg(
-        (-F.sum(F.col("p") * F.log2("p"))).alias("hxy"))
-    hxy1 = (
-        p.join(px, ["doc_id", "i"]).join(py, ["doc_id", "j"])
-        .groupBy("doc_id")
-        .agg((-F.sum(F.col("p") * F.log2(F.col("px") * F.col("py"))))
-             .alias("hxy1")))
-    hx = px.groupBy("doc_id").agg(
-        (-F.sum(F.col("px") * F.log2("px"))).alias("hx"))
-    hy = py.groupBy("doc_id").agg(
-        (-F.sum(F.col("py") * F.log2("py"))).alias("hy"))
-    hxy2 = px.join(py, "doc_id").groupBy("doc_id").agg(
-        (-F.sum(F.col("px") * F.col("py")
-                * F.log2(F.col("px") * F.col("py")))).alias("hxy2"))
-    m = (hxy.join(hxy1, "doc_id").join(hx, "doc_id")
-         .join(hy, "doc_id").join(hxy2, "doc_id"))
-    div = F.greatest("hx", "hy")
-    imc1 = F.when(div == 0, F.lit(0.0)).otherwise(
-        (F.col("hxy") - F.col("hxy1")) / div)
-    imc2 = F.when(F.col("hxy2") <= F.col("hxy"), F.lit(0.0)).otherwise(
-        F.sqrt(1.0 - F.exp(-2.0 * (F.col("hxy2") - F.col("hxy")))))
-    return m.select(
-        "doc_id",
-        _rnd(imc1, 6).alias("glcm_imc1"),
-        _rnd(imc2, 6).alias("glcm_imc2"),
-    ).orderBy("doc_id")
+    """GLCM Imc1/Imc2 per doc from the glcm class: the closed-form
+    information-measure features (reference radiomics/glcm.py:555-647)."""
+    return _doc_features(spark, sf_dir, "glcm").select(
+        "doc_id", _rnd("glcm_Imc1", 6).alias("glcm_imc1"),
+        _rnd("glcm_Imc2", 6).alias("glcm_imc2"))
 
 
 def q_glrlm_sre_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FULL GLRLM ShortRunEmphasis per doc, relationally: sessionize runs →
-    Σ pr(j)/j² / Nr."""
-    lv = _doc_levels(spark, sf_dir)
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    flagged = lv.withColumn(
-        "chg",
-        F.when(F.lag("level", 1).over(w).isNull()
-               | (F.lag("level", 1).over(w) != F.col("level")), 1).otherwise(0))
-    runs = flagged.withColumn(
-        "run_id", F.sum("chg").over(w.rowsBetween(Window.unboundedPreceding, 0)))
-    run_tbl = runs.groupBy("doc_id", "run_id").agg(F.count("*").alias("run_len"))
-    return run_tbl.groupBy("doc_id").agg(
-        _rnd(F.sum(1.0 / (F.col("run_len") * F.col("run_len"))) / F.count("*"), 6).alias("glrlm_sre")
-    ).orderBy("doc_id")
+    """GLRLM ShortRunEmphasis per doc from the glrlm class."""
+    return _doc_features(spark, sf_dir, "glrlm").select(
+        "doc_id", _rnd("glrlm_ShortRunEmphasis", 6).alias("glrlm_sre"))
 
 
 def q_ngtdm_coarseness_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FULL NGTDM Coarseness per doc, relationally: neighbor-mean windows →
-    n_i/s_i per level → 1/Σ pᵢsᵢ (1e6 for homogeneous docs,
-    ngtdm.py:149-150)."""
-    lv = _doc_levels(spark, sf_dir)
-    wf = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(-1, 1)
-    terms = lv.withColumn(
-        "nbr_mean",
-        F.when(F.count("level").over(wf) > 1,
-               (F.sum("level").over(wf) - F.col("level"))
-               / (F.count("level").over(wf) - 1)))
-    per_level = terms.where(F.col("nbr_mean").isNotNull()).groupBy(
-        "doc_id", "level").agg(
-        F.count("*").alias("n_i"),
-        F.sum(F.abs(F.col("level") - F.col("nbr_mean"))).alias("s_i"))
-    tot = Window.partitionBy("doc_id")
-    per_doc = per_level.withColumn(
-        "nvp", F.sum("n_i").over(tot)
-    ).groupBy("doc_id").agg(
-        F.sum(F.col("n_i") / F.col("nvp") * F.col("s_i")).alias("denom"))
-    return per_doc.select(
-        "doc_id",
-        _rnd(F.when(F.col("denom") != 0, 1.0 / F.col("denom")).otherwise(1e6), 6).alias("ngtdm_coarseness"),
-    ).orderBy("doc_id")
+    """NGTDM Coarseness per doc from the ngtdm class (1e6 for homogeneous
+    docs, ngtdm.py:149-150)."""
+    return _doc_features(spark, sf_dir, "ngtdm").select(
+        "doc_id", _rnd("ngtdm_Coarseness", 6).alias("ngtdm_coarseness"))
 
 
 def q_glszm_zp_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FULL GLSZM ZonePercentage per doc, relationally: zones ≡ 1-D runs,
-    ZP = Nz / Np (glszm.py:232-247)."""
-    lv = _doc_levels(spark, sf_dir)
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    flagged = lv.withColumn(
-        "chg",
-        F.when(F.lag("level", 1).over(w).isNull()
-               | (F.lag("level", 1).over(w) != F.col("level")), 1).otherwise(0))
-    return flagged.groupBy("doc_id").agg(
-        _rnd(F.sum("chg") / F.count("*"), 6).alias("glszm_zone_percentage")
-    ).orderBy("doc_id")
+    """GLSZM ZonePercentage per doc from the glszm class (zones ≡ 1-D
+    runs, ZP = Nz / Np, glszm.py:232-247)."""
+    return _doc_features(spark, sf_dir, "glszm").select(
+        "doc_id",
+        _rnd("glszm_ZonePercentage", 6).alias("glszm_zone_percentage"))
 
 
 def q_gldm_sde_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FULL GLDM SmallDependenceEmphasis per doc, relationally:
-    dep = #neighbors with |Δlevel| ≤ 0 → SDE = Σ pd(j)/j² / Nz, j = dep+1
+    """GLDM SmallDependenceEmphasis per doc from the gldm class at α=0
     (gldm.py:138-152)."""
-    from pyradiomics_spark.operators.windows import gldm_window
-
-    lv = _doc_levels(spark, sf_dir)
-    dep = gldm_window(lv, "doc_id", "pos", "level", radius=1, alpha=0.0)
-    j = F.col("dependence") + 1
-    return dep.groupBy("doc_id").agg(
-        _rnd(F.sum(1.0 / (j * j)) / F.count("*"), 6).alias("gldm_sde")
-    ).orderBy("doc_id")
+    return _doc_features(spark, sf_dir, "gldm").select(
+        "doc_id", _rnd("gldm_SmallDependenceEmphasis", 6).alias("gldm_sde"))
 
 
 def q_voxel_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -144,7 +144,9 @@ def main() -> int:
                 df = fn(spark, sf_dir)
                 serial = serial_windows(df)
                 if serial:
-                    print(f"SERIAL-WINDOW {name}: {serial}", file=sys.stderr)
+                    # on a line of its own: Spark's console progress bar
+                    # leaves stderr mid-line (carriage returns, no newline)
+                    print(f"\nSERIAL-WINDOW {name}: {serial}", file=sys.stderr)
                 spark_pdf = df.toPandas()
         except Exception as ex:
             error = ex
