@@ -7,7 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from pyradiomics_spark.operators.dedup import word_ngrams
+from pyradiomics_spark.operators.dedup import tokens, word_ngrams
 
 #: tiny stopword marker profiles for the n-gram/stopword language heuristic
 LANG_MARKERS = {
@@ -18,20 +18,21 @@ LANG_MARKERS = {
 }
 
 STOPWORDS_EN = LANG_MARKERS["en"] + ["a", "an", "on", "at", "by", "as", "be"]
+#: one match per space-delimited token that is a stopword up to ASCII case
+#: (no non-ASCII char lower()s into a stopword letter, so (?i) suffices)
+_STOP_RE = "(?i)(?<![^ ])(?:" + "|".join(STOPWORDS_EN) + ")(?![^ ])"
 
 
 def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Quality-scoring columns: length, token stats, stopword/punct/digit
-    ratios, mean word length, uppercase ratio. Pure expressions."""
+    ratios, mean word length, uppercase ratio. Compiled expressions only."""
     t = F.col(text_col)
-    toks = F.filter(F.split(t, " "), lambda x: x != "")
-    n_tok = F.size(toks)
+    n_tok = F.size(tokens(t))
     n_chars = F.length(t)
-    stop_arr = F.array(*[F.lit(s) for s in STOPWORDS_EN])
-    n_stop = F.size(F.filter(toks, lambda x: F.array_contains(stop_arr, F.lower(x))))
-    n_punct = n_chars - F.length(F.regexp_replace(t, r"[^\w\s]", ""))
-    n_digit = n_chars - F.length(F.regexp_replace(t, r"[0-9]", ""))
-    n_upper = n_chars - F.length(F.regexp_replace(t, r"[A-Z]", ""))
+    n_stop = F.regexp_count(t, F.lit(_STOP_RE))
+    n_punct = F.regexp_count(t, F.lit(r"[^\w\s]"))
+    n_digit = F.regexp_count(t, F.lit(r"[0-9]"))
+    n_upper = F.regexp_count(t, F.lit(r"[A-Z]"))
     return (
         df.withColumn("n_chars_q", n_chars)
         .withColumn("n_tokens", n_tok)
@@ -92,8 +93,7 @@ def gopher_quality_filter(
     no shuffle, no join, no UDF; a straight map that fuses into the scan
     stage and pushes column pruning down to the parquet reader."""
     t = F.col(text_col)
-    toks = F.filter(F.split(t, " "), lambda x: x != "")
-    n_words = F.size(toks)
+    n_words = F.size(tokens(t))
     word_chars = F.length(t) - (n_words - 1)  # single-spaced char count
     mean_wl = F.when(n_words > 0, word_chars / n_words)
     n_hash = F.length(t) - F.length(F.replace(t, F.lit("#"), F.lit("")))
@@ -101,10 +101,11 @@ def gopher_quality_filter(
         F.length(t) - F.length(F.replace(t, F.lit("..."), F.lit("")))
     ) / F.lit(3)
     symbol_ratio = F.when(n_words > 0, (n_hash + n_ellipsis) / n_words)
-    n_alpha = F.size(F.filter(toks, lambda x: x.rlike("[A-Za-z]")))
+    # one match per token holding a letter: anchored at the token start
+    n_alpha = F.regexp_count(t, F.lit("(?<![^ ])[^ A-Za-z]*[A-Za-z]"))
     alpha_ratio = F.when(n_words > 0, n_alpha / n_words)
     req = F.array(*[F.lit(w) for w in GOPHER_REQUIRED_WORDS])
-    n_req = F.size(F.array_intersect(F.transform(toks, F.lower), req))
+    n_req = F.size(F.array_intersect(F.split(F.lower(t), " "), req))
     dup5 = repetition_ratio(t, n=5)
 
     # null metrics (empty doc) must FAIL the rule, not propagate null
@@ -151,8 +152,7 @@ def repetition_ratio(text_col, n: int = 3):
     expressions (``word_ngrams`` → array_distinct), no UDF; exact DuckDB
     twin in the `repetition` gate query. The gram array is built once:
     ``total`` comes from the token count, not from a second gram array."""
-    toks = F.filter(F.split(text_col, " "), lambda t: t != "")
-    total = F.greatest(F.size(toks) - (n - 1), F.lit(0))
+    total = F.greatest(F.size(tokens(text_col)) - (n - 1), F.lit(0))
     grams = word_ngrams(text_col, n, drop_empty=True)
     return F.when(
         total > 0, 1.0 - F.size(F.array_distinct(grams)) / total
@@ -786,9 +786,7 @@ def bigram_logloss(
     a broadcast 1-row vocab total; docs then probe the probability table
     on (w1, w2) — hot transitions skew only the AQE-splittable probe
     side — and one per-doc mean agg. No Python."""
-    toks = F.array_compact(F.transform(
-        F.split(F.lower(F.col(text_col)), " "),
-        lambda x: F.when(x != "", x)))
+    toks = tokens(F.lower(F.col(text_col)))
     pairs = df.select(
         F.col(id_col),
         F.explode(F.arrays_zip(
@@ -831,9 +829,7 @@ def pmi_pairs(
     ``bigram_logloss``, one census groupBy per order, a |bigrams|⨝|vocab|
     equi-join twice (never corpus rows), broadcast 1-row total, and a
     k-bounded TakeOrderedAndProject — no global sort materializes."""
-    toks = F.array_compact(F.transform(
-        F.split(F.lower(F.col(text_col)), " "),
-        lambda x: F.when(x != "", x)))
+    toks = tokens(F.lower(F.col(text_col)))
     pairs = df.select(
         F.explode(F.arrays_zip(
             F.slice(toks, 1, F.greatest(F.size(toks) - 1, F.lit(0))),
@@ -1050,9 +1046,7 @@ def textrank_keywords(
     term is exactly zero and rank stays comparable across crawls."""
     from pyradiomics_spark.operators.graph import pagerank
 
-    toks = F.array_compact(F.transform(
-        F.split(F.lower(F.col(text_col)), " "),
-        lambda x: F.when(x != "", x)))
+    toks = tokens(F.lower(F.col(text_col)))
     pairs = df.select(
         F.explode(F.arrays_zip(
             F.slice(toks, 1, F.greatest(F.size(toks) - 1, F.lit(0))),
@@ -1202,9 +1196,7 @@ def skipgram_pairs(
     ``min_count`` prunes the hapax tail at the aggregate."""
     if window < 1:
         raise ValueError("window must be >= 1")
-    toks = F.array_compact(F.transform(
-        F.split(F.lower(F.col(text_col)), " "),
-        lambda x: F.when(x != "", x)))
+    toks = tokens(F.lower(F.col(text_col)))
     base = df.select(toks.alias("__t"))
     parts = []
     for d in range(1, window + 1):

@@ -49,6 +49,12 @@ def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 # ---------------------------------------------------------------- minhash
 
+def tokens(text):
+    """Non-empty tokens of ``split(text, " ")`` in order — a compiled
+    ``array_remove``, not an interpreted ``filter`` lambda."""
+    return F.array_remove(F.split(text, " "), "")
+
+
 def word_ngrams(text, n: int, drop_empty: bool = False):
     """Word n-grams of the string column ``text`` in token order: element
     i is ``" ".join(toks[i:i+n])`` with ``toks = split(text, " ")``, or
@@ -305,7 +311,7 @@ def segment_dedup(
     segment — never a count-over-window, which would buffer every
     occurrence of a hot segment in one partition); reassembly is ONE
     per-doc groupBy. No windows, no all-pairs, no Python."""
-    toks = F.filter(F.split(F.col(text_col), " "), lambda x: x != "")
+    toks = tokens(F.col(text_col))
     n_seg = F.ceil(F.size(toks) / F.lit(seg_tokens)).cast("int")
     segs_arr = F.when(
         F.size(toks) > 0,
@@ -734,7 +740,7 @@ def host_boilerplate_strip(
     a template-heavy host can own millions of boilerplate keys at crawl
     scale. Reassembly is the same single per-doc groupBy as
     segment_dedup. No windows, no Python."""
-    toks = F.filter(F.split(F.col(text_col), " "), lambda x: x != "")
+    toks = tokens(F.col(text_col))
     n_seg = F.ceil(F.size(toks) / F.lit(seg_tokens)).cast("int")
     segs_arr = F.when(
         F.size(toks) > 0,

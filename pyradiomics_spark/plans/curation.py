@@ -145,11 +145,9 @@ def curate(
     # 5. pack the train split into fixed context windows
     kept = flagged.where("__kept").drop(*_FLAGS)
     train = kept.where(F.col("split") == "train")
-    packed = pack_sequences(
-        train.withColumn("__n_tok",
-                         F.size(F.filter(F.split(F.col(text_col), " "),
-                                         lambda x: x != ""))),
-        id_col, "__n_tok", budget=pack_budget, seed=seed)
+    # quality_features' n_tokens was counted on __qtext == text (kept ⇒ __surv)
+    packed = pack_sequences(train.withColumn("__n_tok", F.col("n_tokens")),
+                            id_col, "__n_tok", budget=pack_budget, seed=seed)
     # one job for count + token totals + layout extent (was two)
     totals = packed.agg(
         F.count("*").alias("n"),

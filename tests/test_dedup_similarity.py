@@ -1,6 +1,7 @@
 """Dedup + similarity operators vs brute-force python oracles."""
 
 import hashlib
+import re
 
 import numpy as np
 import pandas as pd
@@ -185,12 +186,74 @@ def test_ivf_topk_reasonable_recall(spark, rng):
     assert hits >= 3  # high recall with nprobe=half the cells
 
 
-def test_quality_features(docs):
+QUALITY_EDGE = [
+    "", None, " leading", "trailing ", "double  space  the", "a\tb c\nd the",
+    "The AND the and", "an and a an", "foo_bar baz_qux!", "12 345 6x7 to",
+    "é ß café", "emoji 😀 here.", "İs it", "\u212a k K", "ΟΔΟΣ ΟΔΟΣ ΟΔΟΣ",
+    "the cat the cat the cat", "Be THAT with, HAVE of... #to x1 1",
+]
+
+
+def _quality_reference(s):
+    """Pure-Python twin of quality_features + repetition_ratio and of the
+    gopher token metrics (tokens = non-empty split(" "), ASCII regex
+    classes as in Java without UNICODE_CHARACTER_CLASS)."""
+    from pyradiomics_spark.functions.textstats import (
+        GOPHER_REQUIRED_WORDS, STOPWORDS_EN)
+    toks = [x for x in s.split(" ") if x]
+    n_tok, n_chars = len(toks), len(s)
+    n_stop = sum(x.lower() in STOPWORDS_EN for x in toks)
+    n_punct = len(re.findall(r"[^\w\s]", s, re.ASCII))
+    n_digit = len(re.findall("[0-9]", s))
+    grams = [" ".join(toks[i:i + 3]) for i in range(n_tok - 2)]
+    return {
+        "n_chars_q": n_chars, "n_tokens": n_tok,
+        "mean_word_len": (n_chars - (n_tok - 1)) / n_tok if n_tok else None,
+        "stopword_ratio": n_stop / n_tok if n_tok else None,
+        "punct_ratio": n_punct / n_chars if n_chars else None,
+        "digit_ratio": n_digit / n_chars if n_chars else None,
+        "upper_ratio": (len(re.findall("[A-Z]", s)) / n_chars
+                        if n_chars else None),
+        "quality_score": 0.0 if not n_tok else min(1.0, max(
+            0.0, 0.5 + 0.5 * min(n_tok / 100.0, 1.0)
+            - n_punct / max(n_chars, 1) - n_digit / max(n_chars, 1))),
+        "rep": 1.0 - len(set(grams)) / len(grams) if grams else 0.0,
+        "n_words": n_tok,
+        "alpha_word_ratio": (sum(bool(re.search("[A-Za-z]", x))
+                                 for x in toks) / n_tok if n_tok else None),
+        "n_required_words": len(
+            {x.lower() for x in toks} & set(GOPHER_REQUIRED_WORDS)),
+    }
+
+
+def test_quality_features(spark, docs):
     out = quality_features(docs).toPandas()
     r = out[out.doc_id == 0].iloc[0]
     assert r["n_tokens"] == 9
     assert r["stopword_ratio"] == pytest.approx(2 / 9)  # two 'the'
     assert 0 <= r["quality_score"] <= 1
+
+    # every quality column, repetition_ratio and the gopher token metrics
+    # against the Python twin on whitespace, case and non-ASCII edges
+    from pyradiomics_spark.functions.textstats import (gopher_quality_filter,
+                                                       repetition_ratio)
+    df = spark.createDataFrame(list(enumerate(QUALITY_EDGE)),
+                               "doc_id int, text string")
+    got = {r.doc_id: r for r in gopher_quality_filter(df).select(
+        "doc_id", "n_words", "alpha_word_ratio", "n_required_words").join(
+        quality_features(df).withColumn(
+            "rep", repetition_ratio(F.col("text"))), "doc_id").collect()}
+    for i, s in enumerate(QUALITY_EDGE):
+        row = got[i].asDict()
+        if s is None:  # NULL text: NULL counts and ratios, 0.0 repetition
+            assert row["n_tokens"] is None and row["stopword_ratio"] is None
+            assert row["n_words"] is None and row["rep"] == 0.0
+            continue
+        for col, want in _quality_reference(s).items():
+            if col == "quality_score":
+                assert row[col] == pytest.approx(want, abs=1e-6), (s, col)
+            else:
+                assert row[col] == want, (s, col, row[col], want)
 
 
 def test_detect_language(docs):

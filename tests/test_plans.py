@@ -365,3 +365,21 @@ def test_weighted_stratified_bounded_rank_window(spark):
     plan = _plan(df)
     # physical window partition spec carries the stratum column
     assert "lang" in plan and "row_number" in plan
+
+
+def test_text_statistics_have_no_interpreted_lambdas(spark):
+    """Curation's per-doc token statistics are compiled builtins: Spark
+    evaluates filter/transform/aggregate lambdas through the
+    CodegenFallback interpreter, so none may reach the optimized plan."""
+    from pyspark.sql import functions as F
+
+    from pyradiomics_spark.functions.textstats import (gopher_quality_filter,
+                                                       quality_features,
+                                                       repetition_ratio)
+
+    df = spark.createDataFrame([(1, "the cat sat")], "doc_id int, text string")
+    for q in (quality_features(df).withColumn(
+                  "r", repetition_ratio(F.col("text"))),
+              gopher_quality_filter(df)):
+        plan = q._jdf.queryExecution().optimizedPlan().toString()
+        assert "lambdafunction" not in plan.lower()
