@@ -195,19 +195,26 @@ _EMBEDDINGS_SQL = """
             )"""
 
 
-def _doc_features(spark: SparkSession, sf_dir: str, cls: str) -> DataFrame:
+def _doc_features(spark: SparkSession, sf_dir: str, cls: str,
+                  **overrides) -> DataFrame:
     """``extract_features`` over documents for one feature class at
-    bin_width=1 (one gray level per token length), by doc_id, on the
-    oracles' row set: docs with tokens, and for glcm and ngtdm (built from
-    neighbour pairs) docs with at least two."""
+    bin_width=1 unless ``overrides`` set other ``ExtractionSettings``, by
+    doc_id, on the oracles' row set: docs whose ROI holds a token, and for
+    glcm and ngtdm (built from neighbour pairs) at least two."""
     from pyradiomics_spark.config import ExtractionSettings
     from pyradiomics_spark.operators.features import extract_features
 
-    min_tokens = 2 if cls in ("glcm", "ngtdm") else 1
+    settings = ExtractionSettings(
+        **{"bin_width": 1.0, "feature_classes": (cls,), **overrides})
+    min_valid = 2 if cls in ("glcm", "ngtdm") else 1
     return extract_features(
-        _read(spark, sf_dir, "documents"), ("doc_id",), "text",
-        ExtractionSettings(bin_width=1.0, feature_classes=(cls,)),
-    ).where(F.col("diag_n_tokens") >= min_tokens).orderBy("doc_id")
+        _read(spark, sf_dir, "documents"), ("doc_id",), "text", settings,
+    ).where(F.col("diag_n_valid") >= min_valid).orderBy("doc_id")
+
+
+# a bin this wide keeps every doc under the gray-level cap, for the rows
+# whose outputs read no gray levels (seqshape, Mean, Maximum, Energy)
+_WIDE_BIN = 1e6
 
 
 def q_fo_doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1141,36 +1148,23 @@ def q_normalize_clamp(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_resegment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Resegmentation: re-filter ROI by group-derived sigma thresholds
-    (imageoperations.py:657-742, mode='sigma'): keep tokens within
-    mean ± 1σ per doc; report retained count + mean."""
-    t = _tokens(spark, sf_dir)
-    w = Window.partitionBy("doc_id")
-    b = t.withColumn("mu", F.avg("tok_len").over(w)).withColumn(
-        "sd", F.stddev_pop("tok_len").over(w))
-    kept = b.where(
-        (F.col("tok_len") >= F.col("mu") - F.col("sd"))
-        & (F.col("tok_len") <= F.col("mu") + F.col("sd")))
-    return kept.groupBy("doc_id").agg(
-        F.count("*").alias("n_kept"),
-        _rnd(F.avg("tok_len"), 6).alias("mean_kept"),
-    ).orderBy("doc_id")
+    """Resegmentation (imageoperations.py:657-742, mode='sigma'): count and
+    firstorder Mean of the tokens within mean ± 1σ per doc."""
+    f = _doc_features(spark, sf_dir, "firstorder", bin_width=_WIDE_BIN,
+                      resegment_range=(-1.0, 1.0), resegment_mode="sigma")
+    return f.select(
+        "doc_id", F.col("diag_n_valid").cast("long").alias("n_kept"),
+        _rnd("firstorder_Mean", 6).alias("mean_kept"))
 
 
 def q_square_rescale(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Globally-rescaled square intensity transform
-    (imageoperations.py:973-994: x' = (x/√max|x|)², max preserved) as pure
-    SQL — per-doc global max via window."""
-    t = _tokens(spark, sf_dir)
-    w = Window.partitionBy("doc_id")
-    sq = t.withColumn("mx", F.max(F.abs(F.col("tok_len"))).over(w)).withColumn(
-        "xsq",
-        F.pow(F.col("tok_len") / F.sqrt(F.col("mx")), F.lit(2.0)),
-    )
-    return sq.groupBy("doc_id").agg(
-        _rnd(F.sum("xsq"), 6).alias("sum_sq"),
-        _rnd(F.max("xsq"), 6).alias("max_sq"),  # == max intensity
-    ).orderBy("doc_id")
+    """Globally-rescaled square image type (imageoperations.py:973-994:
+    x' = (x/√max|x|)², max preserved): firstorder Mean · n and Maximum."""
+    f = _doc_features(spark, sf_dir, "firstorder", bin_width=_WIDE_BIN,
+                      image_types=("square",))
+    sum_sq = F.col("firstorder_Mean") * F.col("diag_n_valid")
+    return f.select("doc_id", _rnd(sum_sq, 6).alias("sum_sq"),
+                    _rnd("firstorder_Maximum", 6).alias("max_sq"))
 
 
 def q_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1446,28 +1440,16 @@ def q_union_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_seqshape(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sequence-shape descriptors (1-D shape-class analog) relationally:
-    ROI = tokens with length ≥ 3; span, compactness, run count via
-    gaps-and-islands over valid positions."""
-    t = _tokens(spark, sf_dir)
-    v = t.where(F.col("tok_len") >= 3)
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    runs = v.withColumn(
-        "chg",
-        F.when(
-            F.lag("pos", 1).over(w).isNull()
-            | (F.col("pos") - F.lag("pos", 1).over(w) > 1),
-            1,
-        ).otherwise(0),
-    )
-    return runs.groupBy("doc_id").agg(
-        F.count("*").alias("n_valid"),
-        F.min("pos").alias("span_start"),
-        F.max("pos").alias("span_end"),
-        _rnd(F.count("*") / (F.max("pos") - F.min("pos") + 1), 6).alias(
-            "compactness"),
-        F.sum("chg").alias("n_runs"),
-    ).orderBy("doc_id")
+    """Sequence-shape descriptors (1-D shape-class analog) of the seqshape
+    class over the ROI of tokens with length ≥ 3."""
+    f = _doc_features(spark, sf_dir, "seqshape", bin_width=_WIDE_BIN,
+                      resegment_range=(3, None))
+    return f.select(
+        "doc_id", F.col("diag_n_valid").cast("long").alias("n_valid"),
+        F.col("seqshape_SpanStart").cast("int").alias("span_start"),
+        F.col("seqshape_SpanEnd").cast("int").alias("span_end"),
+        _rnd("seqshape_Compactness", 6).alias("compactness"),
+        F.col("seqshape_NRuns").cast("long").alias("n_runs"))
 
 
 # per-doc 1-based gray levels at bin_width=1 (level = len − min + 1) as
@@ -1522,24 +1504,17 @@ def q_gldm_sde_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_voxel_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Voxel-mode analog (per-position feature map, base.py:200-245): rolling
-    histogram entropy over a ±2 token window, fully relational —
-    collect_list window + higher-order functions (no Python)."""
-    t = _tokens(spark, sf_dir)
-    w = Window.partitionBy("doc_id")
-    lv = t.withColumn(
-        "level", (F.col("tok_len") - F.min("tok_len").over(w) + 1).cast("int"))
-    frame = (
-        Window.partitionBy("doc_id").orderBy("pos").rowsBetween(-2, 2))
-    with_lst = lv.withColumn("lst", F.collect_list("level").over(frame))
-    n = F.size("lst")
-    p_of = lambda v: F.size(F.filter(F.col("lst"), lambda x: x == v)) / n  # noqa: E731
-    ent = -F.aggregate(
-        F.transform(F.array_distinct("lst"), lambda v: p_of(v) * F.log2(p_of(v))),
-        F.lit(0.0), lambda acc, x: acc + x)
-    out = with_lst.select(
-        "doc_id", "pos", (_rnd(ent, 6) + F.lit(0.0)).alias("roll_entropy"))
-    return out.where(F.col("doc_id") < 50).orderBy("doc_id", "pos")
+    """Voxel-mode analog (per-position feature map, base.py:200-245):
+    firstorder Entropy over each ±2 token window of voxel_feature_maps."""
+    from pyradiomics_spark.config import ExtractionSettings
+    from pyradiomics_spark.operators.voxel import voxel_feature_maps
+
+    docs = _read(spark, sf_dir, "documents").where(F.col("doc_id") < 50)
+    settings = ExtractionSettings(bin_width=1.0, feature_classes=("firstorder",))
+    maps = voxel_feature_maps(docs, ("doc_id",), "text", radius=2, settings=settings)
+    entropy = _rnd("firstorder_Entropy", 6) + F.lit(0.0)
+    return maps.select("doc_id", "pos", entropy.alias("roll_entropy")).orderBy(
+        "doc_id", "pos")
 
 
 def _embedding_dedup_expr(emb: DataFrame) -> DataFrame:
@@ -3136,19 +3111,18 @@ def q_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_melt(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Wide→long melt via builtin stack (operators.features.melt_features
-    form) — the long-format feature serving layout; DuckDB twin is UNPIVOT."""
-    t = _tokens(spark, sf_dir)
-    wide = t.groupBy("doc_id").agg(
-        F.count("*").cast("double").alias("n_tokens"),
-        F.min("tok_len").cast("double").alias("min_len"),
-        F.max("tok_len").cast("double").alias("max_len"),
-    )
-    long = wide.selectExpr(
-        "doc_id",
-        "stack(3, 'n_tokens', n_tokens, 'min_len', min_len, 'max_len', max_len)"
-        " as (feature_name, value)")
-    return long.where(F.col("doc_id") < 100).orderBy("doc_id", "feature_name")
+    """Wide→long melt (operators.features.melt_features, builtin stack) of
+    firstorder token counts and lengths; DuckDB twin is UNPIVOT."""
+    from pyradiomics_spark.operators.features import melt_features
+
+    f = _doc_features(spark, sf_dir, "firstorder", bin_width=_WIDE_BIN)
+    wide = f.where(F.col("doc_id") < 100).select(
+        "doc_id", "image_type",
+        F.col("diag_n_tokens").cast("double").alias("n_tokens"),
+        F.col("firstorder_Minimum").alias("min_len"),
+        F.col("firstorder_Maximum").alias("max_len"))
+    return melt_features(wide, ("doc_id",)).drop("image_type").orderBy(
+        "doc_id", "feature_name")
 
 
 def q_hash_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3213,36 +3187,12 @@ def q_lbp_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_wavelet_haar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Haar SWT detail-subband energy per doc, fully relational and EXACTLY
-    equal to kernels' swt1(x,'haar') detail energy (wrap padding included):
-    Σ_{n≥1} (x[n]−x[n−1])²/2, plus the circular boundary term
-    (x[0]−x[N−1])²/2 only when N is even (odd docs wrap-pad with x[0], so
-    their cropped boundary detail is 0). Parity vs the numpy kernel is
-    asserted in tests/test_wavelets.py."""
-    t = _tokens(spark, sf_dir)
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    d = t.withColumn("prev", F.lag("tok_len").over(w))
-    inner = d.where(F.col("prev").isNotNull()).groupBy("doc_id").agg(
-        (F.sum((F.col("tok_len") - F.col("prev")) ** 2) / 2.0).alias("inner_e"))
-    ends = t.groupBy("doc_id").agg(
-        F.count("*").alias("n"),
-        F.min_by("tok_len", "pos").alias("first_len"),
-        F.max_by("tok_len", "pos").alias("last_len"),
-    )
-    return (
-        ends.join(inner, "doc_id", "left")
-        .select(
-            "doc_id",
-            _rnd(
-                F.coalesce(F.col("inner_e"), F.lit(0.0))
-                + F.when(F.col("n") % 2 == 0,
-                         (F.col("first_len") - F.col("last_len")) ** 2 / 2.0)
-                .otherwise(0.0),
-                6,
-            ).alias("haar_detail_energy"),
-        )
-        .orderBy("doc_id")
-    )
+    """Haar SWT detail-subband energy per doc: firstorder Energy of image
+    type wavelet-H (kernels' swt1(x, 'haar') with wrap padding)."""
+    f = _doc_features(spark, sf_dir, "firstorder", bin_width=_WIDE_BIN,
+                      image_types=("wavelet-H",), wavelet="haar")
+    return f.select(
+        "doc_id", _rnd("firstorder_Energy", 6).alias("haar_detail_energy"))
 
 
 # --------------------------------------------------------------------------

@@ -47,7 +47,7 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
         .withColumn(
             "quality_score",
             F.round(
-                F.when(n_tok <= 0, 0.0).otherwise(
+                F.when(F.coalesce(n_tok, F.lit(0)) <= 0, 0.0).otherwise(
                     F.greatest(
                         F.lit(0.0),
                         F.least(

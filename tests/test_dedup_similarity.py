@@ -248,6 +248,7 @@ def test_quality_features(spark, docs):
         if s is None:  # NULL text: NULL counts and ratios, 0.0 repetition
             assert row["n_tokens"] is None and row["stopword_ratio"] is None
             assert row["n_words"] is None and row["rep"] == 0.0
+            assert row["quality_score"] == 0.0  # scored like empty text
             continue
         for col, want in _quality_reference(s).items():
             if col == "quality_score":

@@ -115,8 +115,10 @@ def test_swt_level2_atrous_semantics(rng):
 
 @pytest.mark.parametrize("n", [1, 2, 3, 8, 17, 40])
 def test_wavelet_haar_relational_formula(n, rng):
-    """The q_wavelet_haar oracle formula (interior lag terms + even-length
-    circular boundary term) == the kernel's swt1 haar detail energy."""
+    """The wavelet_haar oracle's SQL formula (interior lag terms +
+    even-length circular boundary term) == the kernel's swt1 haar detail
+    energy, which the row itself reads as firstorder Energy of image type
+    wavelet-H."""
     x = rng.integers(1, 12, size=n).astype(float)
     _, d = swt1(x, "haar")
     kernel_e = float(d @ d)
